@@ -52,7 +52,8 @@ def start_session(root: RunRoot, cores: int):
     """The engine's own session factory on ``local[cores]``, with every
     on-disk location pointed into the run root."""
     # the factory's 16g default is sized for the catalog sweep; these
-    # inputs need far less, and the host's memory is shared
+    # inputs need far less, and on 16g one replay run held 11.8 GB
+    # resident against 4.0 GB on 2g (README.md)
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
     paths = [str(CHECKOUT), os.environ.get("PYTHONPATH", "")]
     os.environ["PYTHONPATH"] = os.pathsep.join(p for p in paths if p)

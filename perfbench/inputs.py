@@ -86,71 +86,76 @@ def paced_bursts(spark, n_seconds: int, seed: int) -> tuple[list[list[str]], dic
 
 
 # -- catalog tables ----------------------------------------------------------
+# Every shape below was measured on the sf0.01 fixture tables (500
+# documents, 500 embeddings, 15,000 orders); perfbench/README.md lists
+# the measurements. The fixtures hold the same shares at sf0.1.
 
+# the fixture corpus's whole vocabulary, each word about equally frequent
 _WORDS = (
     "a the data table row column key value part line order customer agg join "
     "scan sort hash merge filter group window batch stream query spark vector "
     "fast slow big small"
 ).split()
+_WORDS_PER_DOC = (10, 99)  # uniform, inclusive
+# near-duplicates: another document's text with " dup" appended; the
+# fixtures hold no exact duplicates
+_NEAR_DUP_SHARE = 0.05
 _LANGS = ("en", "zh", "es", "de", "fr")
-_LANG_P = (0.44, 0.14, 0.14, 0.14, 0.14)
+_LANG_P = (0.436, 0.150, 0.146, 0.140, 0.128)
+_N_SOURCES = 20  # source is src{doc_id % 20}
+# unit-normalized isotropic Gaussian vectors; the label carries no
+# signal (nearest-neighbour label agreement 0.096 against 0.1 by chance)
+_DIM, _N_LABELS = 64, 10
+_ORDER_DAY0, _ORDER_DAYS = dt.datetime(1995, 1, 1), 2405
+_PRICE_RANGE = (1_000.0, 500_000.0)
 
 
 def write_tables(out_dir: Path, seed: int, n_docs: int, n_vecs: int, n_orders: int) -> None:
-    """``documents``, ``embeddings`` and ``orders`` parquet files shaped
-    like the catalog's fixture tables. A few documents are exact or
-    one-word-edited copies of earlier ones, so the dedup kernels find
-    real duplicates."""
+    """``documents``, ``embeddings`` and ``orders`` parquet files with the
+    fixture tables' measured shapes."""
     rng = np.random.default_rng(seed)
     out_dir.mkdir(parents=True, exist_ok=True)
 
-    texts: list[str] = []
-    for i in range(n_docs):
-        r = rng.random()
-        if i > 10 and r < 0.03:
-            texts.append(texts[int(rng.integers(0, i))])
-        elif i > 10 and r < 0.08:
-            words = texts[int(rng.integers(0, i))].split()
-            words[int(rng.integers(0, len(words)))] = _WORDS[int(rng.integers(0, len(_WORDS)))]
-            texts.append(" ".join(words))
-        else:
-            n = int(rng.integers(8, 100))
-            texts.append(" ".join(_WORDS[j] for j in rng.integers(0, len(_WORDS), n)))
+    lo, hi = _WORDS_PER_DOC
+    texts = [
+        " ".join(_WORDS[j] for j in rng.integers(0, len(_WORDS), rng.integers(lo, hi + 1)))
+        for _ in range(n_docs)
+    ]
+    # in order, so a copy can be of an earlier copy, as in the fixtures
+    for i in rng.choice(n_docs, round(_NEAR_DUP_SHARE * n_docs), replace=False):
+        j = int(rng.integers(0, n_docs - 1))
+        texts[i] = texts[j + (j >= i)] + " dup"
     pq.write_table(
         pa.table({
             "doc_id": pa.array(np.arange(n_docs), pa.int64()),
             "text": texts,
             "lang": [_LANGS[j] for j in rng.choice(len(_LANGS), n_docs, p=_LANG_P)],
-            "source": [f"src{i % 20}" for i in range(n_docs)],
+            "source": [f"src{i % _N_SOURCES}" for i in range(n_docs)],
             "n_chars": pa.array([len(t) for t in texts], pa.int64()),
         }),
         out_dir / "documents.parquet",
     )
 
-    dim, n_labels = 64, 10
-    centers = rng.normal(size=(n_labels, dim))
-    labels = rng.integers(0, n_labels, n_vecs)
-    vecs = centers[labels] + 1.5 * rng.normal(size=(n_vecs, dim))
+    vecs = rng.normal(size=(n_vecs, _DIM))
     vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
     pq.write_table(
         pa.table({
             "vec_id": pa.array(np.arange(n_vecs), pa.int64()),
             "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
-            "label": pa.array(labels, pa.int32()),
+            "label": pa.array(rng.integers(0, _N_LABELS, n_vecs), pa.int32()),
         }),
         out_dir / "embeddings.parquet",
     )
 
-    day0 = dt.datetime(1992, 1, 1)
-    days = rng.integers(0, 2400, n_orders)
+    days = rng.integers(0, _ORDER_DAYS, n_orders)
     pq.write_table(
         pa.table({
             "o_orderkey": pa.array(np.arange(n_orders), pa.int64()),
-            "o_custkey": pa.array(rng.integers(1, max(2, n_orders // 10), n_orders), pa.int64()),
+            "o_custkey": pa.array(rng.integers(0, max(1, n_orders // 10), n_orders), pa.int64()),
             "o_orderstatus": [("F", "O", "P")[j] for j in rng.integers(0, 3, n_orders)],
-            "o_totalprice": np.round(rng.uniform(900.0, 500_000.0, n_orders), 2),
+            "o_totalprice": np.round(rng.uniform(*_PRICE_RANGE, n_orders), 2),
             "o_orderdate": pa.array(
-                [day0 + dt.timedelta(days=int(d)) for d in days], pa.timestamp("us")
+                [_ORDER_DAY0 + dt.timedelta(days=int(d)) for d in days], pa.timestamp("us")
             ),
             "o_orderpriority": [
                 ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")[j]

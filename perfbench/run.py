@@ -57,6 +57,7 @@ class Context:
         self.root, self.tracer = root, tracer
         self.setup: dict[str, float] = {}
         self.spark = None
+        self.cal_end: float | None = None
 
     def scale(self, n: int) -> int:
         return n if self.size == "full" else max(1, n // 25)
@@ -65,6 +66,12 @@ class Context:
         t0 = time.perf_counter()
         self.spark = start_session(self.root, cores)
         return time.perf_counter() - t0
+
+    def end_calibration(self) -> None:
+        """The closing host-noise reading, on the run's own session. A
+        workload that restarts the session takes it before the restart."""
+        if self.cal_end is None:
+            self.cal_end = calibration_s(self.spark)
 
     def restart_session(self, cores: int):
         self.spark.stop()
@@ -117,14 +124,17 @@ def main(argv=None) -> int:
             with tracer.span("workload", workload=args.workload):
                 result = _workloads()[args.workload](ctx)
             log("workload done")
-            cal_end = calibration_s(ctx.spark)
+            ctx.end_calibration()
     except Exception:
         traceback.print_exc()
         return 1
     finally:
-        if ctx.spark is not None:
-            stop_spark(ctx.spark)
-        root.close()
+        # the run root goes even when Spark cannot be stopped cleanly
+        try:
+            if ctx.spark is not None:
+                stop_spark(ctx.spark)
+        finally:
+            root.close()
 
     values = dict(result.get("layers", {}) if args.trace else result["e2e"])
     values["setup_s"] = ctx.setup["session_s"] + ctx.setup["inputs_s"] + ctx.setup["warmup_s"]
@@ -147,7 +157,7 @@ def main(argv=None) -> int:
         "seed": args.seed,
         "cores": ctx.cores,
         "calibration_start_s": cal_start,
-        "calibration_end_s": cal_end,
+        "calibration_end_s": ctx.cal_end,
         "failed_ratio": result["failed"] / result["attempted"],
         "peak_rss_mb": rss.peak_mb,
         "setup_phases_s": ctx.setup,
