@@ -41,8 +41,7 @@ def _workloads():
     return {
         "telemetry_paced": telemetry.run_paced,
         "telemetry_replay": telemetry.run_replay,
-        "catalog_read": lambda ctx: catalog.run_batch(ctx, catalog.CATALOG_READ),
-        "lakehouse_commits": lambda ctx: catalog.run_batch(ctx, catalog.LAKEHOUSE_COMMITS),
+        "catalog_batch": catalog.run_batch,
     }
 
 

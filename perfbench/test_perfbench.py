@@ -65,7 +65,7 @@ def test_per_layer_metrics():
     assert Path(ROOT / diag["trace_file"]).is_file()
 
 
-@pytest.mark.parametrize("workload", ["telemetry_replay", "lakehouse_commits"])
+@pytest.mark.parametrize("workload", ["telemetry_replay", "catalog_batch"])
 def test_dropped_record_is_a_failure(workload):
     result, diag = _result(_run(workload, "--inject-drop"))
     assert not result["correct"]
