@@ -999,7 +999,7 @@ class TxTable:
         inserted rows from a high-watermark counter carried in table
         meta (``identity_next``, bumped via the committing record's
         ``meta_update`` — so allocation is exactly as atomic as the
-        write itself, and the OCC retry loops re-allocate when a
+        write itself, and OCC retries (``_transact``) re-allocate when a
         concurrent writer moved the watermark). ``always=True``
         (GENERATED ALWAYS) refuses incoming frames that carry the
         column; ``always=False`` (BY DEFAULT) accepts explicit values
@@ -1251,7 +1251,7 @@ class TxTable:
         ≤ n_buckets rows collected) plus a per-bucket window
         row_number over the same partitioning ``_stage`` is about to
         repartition by; no global sort, no driver-side row data. OCC
-        retry loops compare ``_identity_counters`` before reusing
+        attempts compare ``_identity_counters`` before reusing
         staged files — a concurrent allocation forces re-fill +
         restage (the rebucket-race convention)."""
         specs = meta.get("identity_cols") or {}
@@ -1269,8 +1269,8 @@ class TxTable:
         # for the same frame class)
         df = df.localCheckpoint(eager=False)
         if counters is None:
-            # FRESH watermark read (not the caller's loop-top meta
-            # snapshot): the OCC loops read meta before _replay, so a
+            # FRESH watermark read (not the caller's attempt-top meta
+            # snapshot): OCC attempts read meta before _replay, so a
             # concurrent allocation landing between those reads would
             # be invisible there yet INCLUDED in the version this
             # commit races for. A fresh read taken here — after the
@@ -1311,7 +1311,7 @@ class TxTable:
             # column from the FRESH counters while the caller's specs
             # still carry it — allocate from 0 and let the schema
             # guard's retired-name refusal surface the race loudly
-            # instead of a KeyError escaping the retry loop
+            # instead of a KeyError escaping the commit
             c0 = int(counters.get(c, 0))
             # combined per-bucket shift: cumulative NULL count of all
             # lower buckets MINUS this bucket's non-NULL count (the
@@ -1413,7 +1413,8 @@ class TxTable:
         lost files (and fail if read — the honest answer); its change
         feed is EMPTY by definition, since the removed rows are
         unrecoverable (`_changes_for` special-cases the op)."""
-        for _ in range(max_retries):
+
+        def attempt():
             base_v, live_map, _, _ = self._replay()
             missing = sorted(
                 p for p, e in live_map.items()
@@ -1424,19 +1425,16 @@ class TxTable:
                 )
             )
             if dry_run or not missing:
-                return missing
-            try:
-                self._commit(base_v + 1, {
-                    "version": base_v + 1,
-                    "op": "fsck",
-                    "add": [],
-                    "remove": missing,
-                    "note": f"fsck dropped {len(missing)} missing",
-                })
-                return missing
-            except ConcurrentWriteError as exc:
-                last = exc
-        raise last
+                return None, missing
+            return {
+                "version": base_v + 1,
+                "op": "fsck",
+                "add": [],
+                "remove": missing,
+                "note": f"fsck dropped {len(missing)} missing",
+            }, missing
+
+        return self._transact(attempt, max_retries)
 
     def upgrade_protocol(
         self,
@@ -1474,22 +1472,24 @@ class TxTable:
                 f"({self.READER_VERSION}, {self.WRITER_VERSION}) and "
                 "cannot require more than it supports"
             )
-        last: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
-            v = self.latest_version()
-            try:
-                self._commit(v + 1, {
-                    "version": v + 1,
-                    "op": "upgrade_protocol",
-                    "add": [], "remove": [],
-                    "meta_update": {"protocol": new},
-                    "note": f"protocol -> {new}",
-                })
-                self._proto = None
-                return v + 1
-            except ConcurrentWriteError as exc:
-                last = exc
-        raise last  # type: ignore[misc]
+        v = self._meta_commit(
+            "upgrade_protocol", max_retries,
+            meta_update={"protocol": new}, note=f"protocol -> {new}",
+        )
+        self._proto = None
+        return v
+
+    def _meta_commit(self, op: str, max_retries: int, **fields) -> int:
+        """A metadata-only commit (no file added or removed) at the
+        next version; returns that version."""
+
+        def attempt():
+            v = self.latest_version() + 1
+            return {
+                "version": v, "op": op, "add": [], "remove": [], **fields
+            }, v
+
+        return self._transact(attempt, max_retries)
 
     def set_properties(self, props: dict, max_retries: int = 5) -> int:
         """``ALTER TABLE ... SET TBLPROPERTIES`` — a metadata-only
@@ -1505,22 +1505,12 @@ class TxTable:
                 f"set_properties: {sorted(bad)} are structural — use "
                 "the dedicated DDL (rebucket/add_constraint/...)"
             )
-        last: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
-            v = self.latest_version()
-            try:
-                self._commit(v + 1, {
-                    "version": v + 1,
-                    "op": "set_properties",
-                    "add": [], "remove": [],
-                    "meta_update": dict(props),
-                    "note": f"set {sorted(props)}",
-                })
-                self._auto_compact_cfg = None
-                return v + 1
-            except ConcurrentWriteError as exc:
-                last = exc
-        raise last  # type: ignore[misc]
+        v = self._meta_commit(
+            "set_properties", max_retries,
+            meta_update=dict(props), note=f"set {sorted(props)}",
+        )
+        self._auto_compact_cfg = None
+        return v
 
     def unset_properties(self, names, max_retries: int = 5) -> int:
         """``ALTER TABLE ... UNSET TBLPROPERTIES`` — removes free
@@ -1532,22 +1522,12 @@ class TxTable:
             raise ValueError(
                 f"unset_properties: {sorted(bad)} are structural"
             )
-        last: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
-            v = self.latest_version()
-            try:
-                self._commit(v + 1, {
-                    "version": v + 1,
-                    "op": "unset_properties",
-                    "add": [], "remove": [],
-                    "meta_unset": names,
-                    "note": f"unset {sorted(names)}",
-                })
-                self._auto_compact_cfg = None
-                return v + 1
-            except ConcurrentWriteError as exc:
-                last = exc
-        raise last  # type: ignore[misc]
+        v = self._meta_commit(
+            "unset_properties", max_retries,
+            meta_unset=names, note=f"unset {sorted(names)}",
+        )
+        self._auto_compact_cfg = None
+        return v
 
     def _after_data_commit(self, version: int) -> int:
         """Post-commit hook on the high-frequency write paths (append
@@ -1597,27 +1577,60 @@ class TxTable:
                 pass  # advisory: next write retries the cleanup
         return version
 
-    def _commit(self, version: int, record: dict) -> None:
-        """The ONE post-create commit path: the atomic log link plus
-        the auto-checkpoint cadence. A failed checkpoint never fails
-        the committed write — the checkpoint is DERIVED data (a pure
-        function of the version); losing one costs replay time until
-        the next interval commit retries, nothing else."""
-        self._check_protocol("write")
-        _atomic_commit(self.table_dir, version, record)
-        # the interval is create-time-immutable (never in a
-        # meta_update patch), so one meta read per handle suffices —
-        # a per-commit meta replay just to read a constant would tax
-        # every write
-        ci = getattr(self, "_ckpt_iv", None)
-        if ci is None:
-            ci = int(self.meta.get("checkpoint_interval") or 0)
-            self._ckpt_iv = ci
-        if ci and version % ci == 0:
+    def _transact(self, attempt, max_retries: int = 5):
+        """The ONE post-create commit path, and the one optimistic
+        retry loop. ``attempt()`` reads a fresh snapshot and returns
+        ``(record, result)``: ``record`` is the commit for version
+        ``record["version"]`` (snapshot + 1), or None to return
+        ``result`` with no commit (nothing to do). Each attempt passes
+        the write-protocol check, then publishes the record with the
+        atomic log link; losing the version race
+        (:class:`ConcurrentWriteError`) calls ``attempt()`` again
+        against the winner's snapshot — any files a lost attempt
+        staged stay orphaned until vacuum — and after ``max_retries``
+        lost races the last ConcurrentWriteError is re-raised
+        unchanged. Every other exception (validation, constraint,
+        protocol) propagates at once. Post-commit hooks
+        (``_after_data_commit``, per-handle cache resets) stay with
+        the callers.
+
+        A won commit then runs the auto-checkpoint cadence. A failed
+        checkpoint never fails the committed write — the checkpoint is
+        DERIVED data (a pure function of the version); losing one costs
+        replay time until the next interval commit retries, nothing
+        else.
+
+        The only other ``_atomic_commit`` callers are the bootstrap
+        commits that cannot conflict: :meth:`create` (v1) and
+        :meth:`clone_to` / :meth:`convert_from_parquet` (v2 of a table
+        they just created)."""
+        if max_retries < 1:
+            raise ValueError("max_retries must be >= 1")
+        for _ in range(max_retries):
+            record, result = attempt()
+            if record is None:
+                return result
+            self._check_protocol("write")
             try:
-                self.checkpoint()
-            except (OSError, ValueError):
-                pass
+                _atomic_commit(self.table_dir, record["version"], record)
+            except ConcurrentWriteError as exc:
+                last = exc
+                continue
+            # the interval is create-time-immutable (never in a
+            # meta_update patch), so one meta read per handle suffices
+            # — a per-commit meta replay just to read a constant would
+            # tax every write
+            ci = getattr(self, "_ckpt_iv", None)
+            if ci is None:
+                ci = int(self.meta.get("checkpoint_interval") or 0)
+                self._ckpt_iv = ci
+            if ci and record["version"] % ci == 0:
+                try:
+                    self.checkpoint()
+                except (OSError, ValueError):
+                    pass
+            return result
+        raise last
 
     # -- snapshots ---------------------------------------------------
 
@@ -2128,7 +2141,6 @@ class TxTable:
         meta (CHECK constraints) is NOT reverted — Delta's RESTORE
         position: data rolls back, table properties stay.
         """
-        last_err: ConcurrentWriteError | None = None
         _SCHEMA_META = (
             # identity_cols reverts WITH the schema (a restore across a
             # drop re-exposes the column, so its allocation rule must
@@ -2139,7 +2151,8 @@ class TxTable:
             "n_buckets", "column_mapping", "dropped_cols",
             "generated_cols", "identity_cols",
         )
-        for _ in range(max_retries):
+
+        def attempt():
             # one replay yields files, schema AND dv state — the
             # _snapshot() convenience would replay the log a second
             # time just to discard the vectors this needs
@@ -2252,13 +2265,9 @@ class TxTable:
                         "tables"
                     )
                 record["cdf_files"] = self._stage_cdf(base_v + 1, record)
-            try:
-                self._commit(base_v + 1, record)
-                return base_v + 1
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                continue
-        raise last_err  # type: ignore[misc]
+            return record, base_v + 1
+
+        return self._transact(attempt, max_retries)
 
     def history(self) -> DataFrame:
         """DESCRIBE HISTORY — one row per commit, newest first:
@@ -2318,8 +2327,9 @@ class TxTable:
         physically carry it — refusing is the Delta position absent
         column-mapping physical ids."""
         cols = tuple(cols)
-        while True:
-            # Validation runs INSIDE the retry loop against fresh meta:
+
+        def attempt():
+            # Validation runs INSIDE each attempt against fresh meta:
             # a concurrent commit (e.g. another drop_columns retiring a
             # different generated column, or add_constraint) must be
             # re-checked on retry, or the losing writer would commit a
@@ -2400,11 +2410,9 @@ class TxTable:
                 "meta_update": meta_update,
                 "note": f"drop columns {sorted(cols)}",
             }
-            try:
-                self._commit(v + 1, record)
-                return v + 1
-            except ConcurrentWriteError:
-                continue  # metadata-only: recompute and retry
+            return record, v + 1
+
+        return self._transact(attempt)
 
     def add_columns(
         self, cols: dict[str, str], max_retries: int = 5
@@ -2435,8 +2443,8 @@ class TxTable:
             raise ValueError(
                 f"add_columns: unparseable column spec {cols!r}: {exc}"
             ) from exc
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
+
+        def attempt():
             v, _, snap_schema = self._snapshot()
             if snap_schema is None:
                 raise ValueError(
@@ -2485,13 +2493,9 @@ class TxTable:
                 ).json(),
                 "note": f"add columns {sorted(cols)}",
             }
-            try:
-                self._commit(v + 1, record)
-                return v + 1
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                continue
-        raise last_err  # type: ignore[misc]
+            return record, v + 1
+
+        return self._transact(attempt, max_retries)
 
     def rename_column(
         self, old: str, new: str, max_retries: int = 5
@@ -2516,12 +2520,8 @@ class TxTable:
         columns with one parquet name."""
         if old == new:
             raise ValueError("rename_column: old and new are the same")
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
-            # fresh meta per attempt — same concurrent-retry discipline
-            # (and the same bounded ``max_retries`` convention) as
-            # every other mutating op; metadata-only, but unbounded
-            # spinning under pathological contention is still wrong
+
+        def attempt():
             meta = self.meta
             protected = set(meta["key_cols"]) | {meta["order_col"]}
             protected |= set(meta.get("bloom_cols") or ())
@@ -2588,13 +2588,9 @@ class TxTable:
                 "meta_update": {"column_mapping": mapping},
                 "note": f"rename column {old} -> {new}",
             }
-            try:
-                self._commit(v + 1, record)
-                return v + 1
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                continue  # metadata-only: recompute and retry
-        raise last_err  # type: ignore[misc]
+            return record, v + 1
+
+        return self._transact(attempt, max_retries)
 
     def version_at_timestamp(self, ts: float) -> int:
         """TIMESTAMP AS OF resolution: the newest version whose
@@ -3168,7 +3164,10 @@ class TxTable:
         lakehouse quality gate, enforced at the storage boundary
         instead of in every producer). The EXISTING table must already
         satisfy the constraint — adding a rule the data violates would
-        make every later rewrite of old rows fail.
+        make every later rewrite of old rows fail. Both the row check
+        and the rule map are taken at the attempt's snapshot, so a
+        retry re-validates rows a concurrent writer appended and keeps
+        rules a concurrent writer added.
         """
         hit = [
             c
@@ -3182,46 +3181,45 @@ class TxTable:
                 "allocation, so the rule would reject every insert; "
                 "identity values are library-guaranteed unique instead"
             )
-        try:
-            bad = (
-                self.read()
-                .filter(f"NOT (({expr}) <=> TRUE)")
-                .limit(1)
-                .collect()
-            )
-        except ValueError:
-            bad = []  # empty table with no schema yet: nothing to violate
-        if bad:
-            raise ConstraintViolation(
-                f"existing rows violate {name} ({expr}): e.g. {bad[0]}"
-            )
-        cur = self.constraints()
-        cur[name] = expr
-        return self._commit_constraints(cur)
+
+        def edit(cur: dict, v: int) -> None:
+            try:
+                bad = (
+                    self.read(version=v)
+                    .filter(f"NOT (({expr}) <=> TRUE)")
+                    .limit(1)
+                    .collect()
+                )
+            except ValueError:
+                bad = []  # empty table with no schema yet: nothing to violate
+            if bad:
+                raise ConstraintViolation(
+                    f"existing rows violate {name} ({expr}): e.g. {bad[0]}"
+                )
+            cur[name] = expr
+
+        return self._commit_constraints(edit)
 
     def drop_constraint(self, name: str) -> int:
-        cur = self.constraints()
-        cur.pop(name, None)
-        return self._commit_constraints(cur)
+        return self._commit_constraints(lambda cur, v: cur.pop(name, None))
 
-    def _commit_constraints(self, constraints: dict[str, str]) -> int:
-        while True:
-            v = self.latest_version() + 1
-            try:
-                _atomic_commit(
-                    self.table_dir,
-                    v,
-                    {
-                        "version": v,
-                        "op": "set_constraints",
-                        "add": [],
-                        "remove": [],
-                        "constraints": constraints,
-                    },
-                )
-                return v
-            except ConcurrentWriteError:
-                continue
+    def _commit_constraints(self, edit) -> int:
+        """Commit the rule map as of a fresh snapshot ``v`` after
+        ``edit(rules, v)`` changed it in place (or raised)."""
+
+        def attempt():
+            v = self.latest_version()
+            cur = self.constraints(v)
+            edit(cur, v)
+            return {
+                "version": v + 1,
+                "op": "set_constraints",
+                "add": [],
+                "remove": [],
+                "constraints": cur,
+            }, v + 1
+
+        return self._transact(attempt)
 
     def _check_constraints(self, df: DataFrame, what: str) -> None:
         """Reject ``df`` if any row fails any current constraint. The
@@ -3783,8 +3781,8 @@ class TxTable:
             self._with_generated(df, "merge_upsert"), "merge_upsert"
         )
         self._check_constraints(df, "merge_upsert batch")
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
+
+        def attempt():
             # meta and bucketing re-derived PER ATTEMPT: a rebucket()
             # landing between attempts changes n_buckets, and a retry
             # that kept the old bucket ids would mislabel its files
@@ -3897,15 +3895,9 @@ class TxTable:
                 record["txn"] = txn
             if m.get("cdf"):
                 record["cdf_files"] = self._stage_cdf(base_v + 1, record)
-            try:
-                self._commit(base_v + 1, record)
-                return self._after_data_commit(base_v + 1)
-            except ConcurrentWriteError as exc:
-                # lost the race: our staged files stay orphaned (vacuum
-                # reclaims them); recompute against the winner's snapshot
-                last_err = exc
-                continue
-        raise last_err  # type: ignore[misc]
+            return record, base_v + 1
+
+        return self._after_data_commit(self._transact(attempt, max_retries))
 
     def merge_into(
         self,
@@ -4235,8 +4227,8 @@ class TxTable:
             j for j, cl in enumerate(ins_clauses)
             if cl["values"] is not None
         ]
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
+
+        def attempt():
             # constraints are checked on the RESULT below (the only
             # rows that get written) — source rows that never land
             # (deletes, condition-gated) may carry any values, the
@@ -4436,13 +4428,9 @@ class TxTable:
                 record["txn"] = txn
             if m.get("cdf"):
                 record["cdf_files"] = self._stage_cdf(base_v + 1, record)
-            try:
-                self._commit(base_v + 1, record)
-                return self._after_data_commit(base_v + 1)
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                continue
-        raise last_err  # type: ignore[misc]
+            return record, base_v + 1
+
+        return self._after_data_commit(self._transact(attempt, max_retries))
 
     @staticmethod
     def _merge_clause_plan(
@@ -4596,8 +4584,8 @@ class TxTable:
             op_col
         )
         self._check_constraints(upserts, "apply_cdc batch")
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
+
+        def attempt():
             m = self.meta
             incoming = self._with_bucket(df.withColumnRenamed(op_col, "_op"))
             base_v, live_map, snap_schema, dvs = self._replay()
@@ -4708,13 +4696,9 @@ class TxTable:
                 record["txn"] = txn
             if m.get("cdf"):
                 record["cdf_files"] = self._stage_cdf(base_v + 1, record)
-            try:
-                self._commit(base_v + 1, record)
-                return base_v + 1
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                continue
-        raise last_err  # type: ignore[misc]
+            return record, base_v + 1
+
+        return self._transact(attempt, max_retries)
 
     def append(self, df: DataFrame, txn: dict | None = None,
                max_retries: int = 5, merge_schema: bool = False,
@@ -4743,8 +4727,9 @@ class TxTable:
         bucketed = self._with_bucket(df)
         filled, id_upd = self._fill_identity(bucketed, m0, used_ctr)
         staged = self._stage(filled)  # position-independent: stage once
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
+
+        def attempt():
+            nonlocal staged_n, used_ctr, filled, id_upd, staged
             # Schema and constraints are re-derived from the LATEST
             # snapshot on every attempt: an append racing a concurrent
             # merge_upsert(merge_schema=True) must not re-commit a
@@ -4797,13 +4782,9 @@ class TxTable:
                 record["txn"] = txn
             if _record_extra:
                 record.update(_record_extra)
-            try:
-                self._commit(v + 1, record)
-                return self._after_data_commit(v + 1)
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                continue
-        raise last_err  # type: ignore[misc]
+            return record, v + 1
+
+        return self._after_data_commit(self._transact(attempt, max_retries))
 
     def copied_files(self) -> set[str]:
         """Absolute source paths every earlier :meth:`copy_into`
@@ -5025,12 +5006,12 @@ class TxTable:
         stop-the-world table migration."""
         if n_buckets < 1:
             raise ValueError("rebucket: n_buckets must be >= 1")
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
+
+        def attempt():
             base_v, live_map, schema_json, dvs = self._replay()
             live = list(live_map.values())
             if self.meta["n_buckets"] == n_buckets:
-                return base_v  # already there — no-op, no commit
+                return None, base_v  # already there — no-op, no commit
             df = self._open_files(
                 live, schema_json, dvs
             ).drop("_bucket") if live else None
@@ -5056,13 +5037,9 @@ class TxTable:
                 "schema_json": schema_json,
                 "meta_update": {"n_buckets": int(n_buckets)},
             }
-            try:
-                self._commit(base_v + 1, record)
-                return base_v + 1
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                continue
-        raise last_err  # type: ignore[misc]
+            return record, base_v + 1
+
+        return self._transact(attempt, max_retries)
 
     def compact(
         self,
@@ -5133,14 +5110,13 @@ class TxTable:
                     _size_memo[p] = 0
             return _size_memo[p]
 
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
+        def attempt():
             base_v, live_map, schema_json, dvs = self._replay()
             live = self._scope_entries(
                 list(live_map.values()), where, schema_json
             )
             if not live:
-                return base_v
+                return None, base_v
             bins: list[tuple[int, list[dict]]] | None = None
             adopt: list[dict] = []
             if target_bytes is not None:
@@ -5181,7 +5157,7 @@ class TxTable:
                         or any(e["path"] in dvs for e in b[1])
                     )
                 if not bins and not adopt:
-                    return base_v  # every bucket already compact
+                    return None, base_v  # every bucket already compact
                 touched = [e for _, es in bins for e in es] + adopt
             elif small_file_rows is None:
                 touched = live
@@ -5203,7 +5179,7 @@ class TxTable:
                     ):
                         touched.extend(cand)
                 if not touched:
-                    return base_v  # nothing fragmented — no-op commit
+                    return None, base_v  # nothing fragmented — no-op commit
             # DV-aware read: compaction MATERIALIZES deletion vectors —
             # the rewritten files hold only surviving rows and the
             # replay drops the vectors with the removed files
@@ -5264,13 +5240,9 @@ class TxTable:
             }
             if target_bytes is not None:
                 record["note"] = f"binpack target_bytes={int(target_bytes)}"
-            try:
-                self._commit(base_v + 1, record)
-                return base_v + 1
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                continue
-        raise last_err  # type: ignore[misc]
+            return record, base_v + 1
+
+        return self._transact(attempt, max_retries)
 
     def _scope_entries(
         self, live: list[dict], where: str | None, schema_json: str | None
@@ -5407,14 +5379,14 @@ class TxTable:
         """
         if not cols:
             raise ValueError("optimize_zorder needs at least one column")
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
+
+        def attempt():
             base_v, live_map, schema_json, dvs = self._replay()
             live = self._scope_entries(
                 list(live_map.values()), where, schema_json
             )
             if not live:
-                return base_v
+                return None, base_v
             df = self._with_bucket(
                 self._open_files(
                     live, schema_json, dvs
@@ -5466,13 +5438,9 @@ class TxTable:
                 "remove": [e["path"] for e in live],
                 "schema_json": schema_json,
             }
-            try:
-                self._commit(base_v + 1, record)
-                return base_v + 1
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                continue
-        raise last_err  # type: ignore[misc]
+            return record, base_v + 1
+
+        return self._transact(attempt, max_retries)
 
     def delete_where(
         self,
@@ -5523,8 +5491,8 @@ class TxTable:
             prune = _map_stat_keys(
                 prune, self.meta.get("column_mapping") or {}
             )
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
+
+        def attempt():
             base_v, live_map, schema_json, dvs = self._replay()
             live = list(live_map.values())
             cand = (
@@ -5533,7 +5501,7 @@ class TxTable:
                 else list(live)
             )
             if not cand:
-                return base_v, 0
+                return None, (base_v, 0)
             cand_paths = [e["path"] for e in cand]
             by_sfx = {_path_sfx(p): p for p in cand_paths}
             # only the merge_on_read suffix->path INVERSION needs
@@ -5564,7 +5532,7 @@ class TxTable:
                     .collect()
                 )
                 if not pos:
-                    return base_v, 0
+                    return None, (base_v, 0)
                 if len(pos) <= max_dv_rows:
                     delta: dict[str, list[int]] = {}
                     for r in pos:
@@ -5588,12 +5556,7 @@ class TxTable:
                         record["cdf_files"] = self._stage_cdf(
                             base_v + 1, record
                         )
-                    try:
-                        self._commit(base_v + 1, record)
-                        return base_v + 1, len(pos)
-                    except ConcurrentWriteError as exc:
-                        last_err = exc
-                        continue
+                    return record, (base_v + 1, len(pos))
                 # too many positions for a vector — rewrite instead
             # ONE aggregate over the find-scan yields both the touched
             # file set AND the delete count (its per-file sum) — the
@@ -5610,7 +5573,7 @@ class TxTable:
                 e for e in cand if _path_sfx(e["path"]) in hit_files
             ]
             if not touched:
-                return base_v, 0
+                return None, (base_v, 0)
             t_scan = self._open_files(
                 touched, schema_json, dvs
             )
@@ -5637,13 +5600,9 @@ class TxTable:
             }
             if self.meta.get("cdf"):
                 record["cdf_files"] = self._stage_cdf(base_v + 1, record)
-            try:
-                self._commit(base_v + 1, record)
-                return base_v + 1, n_del
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                continue
-        raise last_err  # type: ignore[misc]
+            return record, (base_v + 1, n_del)
+
+        return self._transact(attempt, max_retries)
 
     def replace_where(
         self,
@@ -5687,7 +5646,7 @@ class TxTable:
             # incoming rows are INSERTS for identity/row-tracking
             # purposes — the replaced slice's old rows leave with their
             # ids (replaceWhere is delete+insert, Delta's position);
-            # staging under the SAME (meta, counters) the retry loop
+            # staging under the SAME (meta, counters) each attempt
             # validates against keeps the check and the staged bytes
             # coherent (no spurious restage, no extra replay)
             filled, id_upd = self._fill_identity(
@@ -5727,8 +5686,9 @@ class TxTable:
         staged_n = m0["n_buckets"]
         used_ctr = self._identity_counters(m0)
         incoming, id_upd = stage_and_guard(m0, used_ctr)
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
+
+        def attempt():
+            nonlocal staged_n, used_ctr, incoming, id_upd
             # constraints re-checked per attempt: an add_constraint
             # landing between attempts must gate this write (append's
             # convention)
@@ -5798,13 +5758,9 @@ class TxTable:
                 record["meta_update"] = id_upd
             if self.meta.get("cdf"):
                 record["cdf_files"] = self._stage_cdf(base_v + 1, record)
-            try:
-                self._commit(base_v + 1, record)
-                return base_v + 1
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                continue
-        raise last_err  # type: ignore[misc]
+            return record, base_v + 1
+
+        return self._transact(attempt, max_retries)
 
     def update_where(
         self,
@@ -5894,8 +5850,8 @@ class TxTable:
             prune = _map_stat_keys(
                 prune, self.meta.get("column_mapping") or {}
             )
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
+
+        def attempt():
             base_v, live_map, schema_json, dvs = self._replay()
             live = list(live_map.values())
             cand = (
@@ -5904,7 +5860,7 @@ class TxTable:
                 else list(live)
             )
             if not cand:
-                return base_v, 0
+                return None, (base_v, 0)
             by_sfx = {_path_sfx(e["path"]): e["path"] for e in cand}
             if mode == "merge_on_read" and len(by_sfx) != len(cand):
                 raise ValueError(
@@ -5925,7 +5881,7 @@ class TxTable:
                     .collect()
                 )
                 if not pos:
-                    return base_v, 0
+                    return None, (base_v, 0)
                 if len(pos) <= max_dv_rows:
                     delta: dict[str, list[int]] = {}
                     for r in pos:
@@ -5971,12 +5927,7 @@ class TxTable:
                         record["cdf_files"] = self._stage_cdf(
                             base_v + 1, record
                         )
-                    try:
-                        self._commit(base_v + 1, record)
-                        return base_v + 1, len(pos)
-                    except ConcurrentWriteError as exc:
-                        last_err = exc
-                        continue
+                    return record, (base_v + 1, len(pos))
                 # too many positions for a vector — rewrite instead
             # ONE aggregate yields the touched files AND the update
             # count (its per-file sum) — the delete_where fusion; the
@@ -5993,7 +5944,7 @@ class TxTable:
                 e for e in cand if _path_sfx(e["path"]) in hit_files
             ]
             if not touched:
-                return base_v, 0
+                return None, (base_v, 0)
             t_scan = self._open_files(
                 touched, schema_json, dvs
             )
@@ -6031,13 +5982,9 @@ class TxTable:
             }
             if self.meta.get("cdf"):
                 record["cdf_files"] = self._stage_cdf(base_v + 1, record)
-            try:
-                self._commit(base_v + 1, record)
-                return base_v + 1, n_upd
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                continue
-        raise last_err  # type: ignore[misc]
+            return record, (base_v + 1, n_upd)
+
+        return self._transact(attempt, max_retries)
 
     # -- exactly-once streaming ------------------------------------
 

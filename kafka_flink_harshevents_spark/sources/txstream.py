@@ -1237,10 +1237,7 @@ class TxLogBatchWriter(DataSourceArrowWriter):
         # atomic link), which is exactly why it can be spark-free.
         import shutil
 
-        from kafka_flink_harshevents_spark.sources.txlog import (
-            ConcurrentWriteError,
-            TxTable,
-        )
+        from kafka_flink_harshevents_spark.sources.txlog import TxTable
 
         entries = [
             e for m in messages if m is not None for e in m.entries
@@ -1255,8 +1252,8 @@ class TxLogBatchWriter(DataSourceArrowWriter):
                 ignore_errors=True,
             )
             return
-        last_err = None
-        for _ in range(5):
+
+        def attempt():
             v, _, snap_schema = t._snapshot()
             schema_rec = t._schema_union_json(
                 self.schema, snap_schema, self.merge_schema,
@@ -1297,16 +1294,12 @@ class TxLogBatchWriter(DataSourceArrowWriter):
             }
             if self.txn is not None:
                 record["txn"] = self.txn
-            try:
-                # the shared commit path: atomic link + the table's
-                # auto-checkpoint cadence (checkpoint() is log-only, so
-                # it runs fine in this spark-less commit worker)
-                t._commit(v + 1, record)
-                return
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                continue
-        raise last_err
+            return record, None
+
+        # the shared commit path: atomic link + the table's
+        # auto-checkpoint cadence (checkpoint() is log-only, so it runs
+        # fine in this spark-less commit worker)
+        t._transact(attempt)
 
     def abort(self, messages) -> None:
         import shutil

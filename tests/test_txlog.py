@@ -4555,7 +4555,7 @@ def test_rename_column_bounded_retries(spark, tmp_path, monkeypatch):
     """rename_column follows the max_retries convention of every other
     mutating op: a lost race retries against fresh meta and succeeds;
     permanent contention raises ConcurrentWriteError instead of
-    spinning forever."""
+    spinning forever — and so do drop_columns and add_constraint."""
     import kafka_flink_harshevents_spark.sources.txlog as txmod
 
     t = _mk(spark, tmp_path, n_buckets=2)
@@ -4577,14 +4577,76 @@ def test_rename_column_bounded_retries(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(txmod, "_atomic_commit", real_commit)
     assert {r["k"]: r["val"] for r in t.read().collect()} == {1: 10, 2: 20}
 
+    attempts: list[str] = []
+
     def always_lose(table_dir, version, record):
-        if record.get("op") == "rename_column":
-            raise ConcurrentWriteError("synthetic contention")
+        op = record.get("op")
+        if op in ("rename_column", "drop_columns", "set_constraints"):
+            attempts.append(op)
+            # give up after 50 so an unbounded loop fails, not hangs
+            if len(attempts) <= 50:
+                raise ConcurrentWriteError("synthetic contention")
         return real_commit(table_dir, version, record)
 
     monkeypatch.setattr(txmod, "_atomic_commit", always_lose)
     with pytest.raises(ConcurrentWriteError):
         t.rename_column("val", "cents", max_retries=3)
+    assert attempts == ["rename_column"] * 3
+    # drop_columns and add_constraint take no max_retries: they use
+    # the default bound of 5 and leave the table as it was
+    schema0, cons0 = t.read().schema, t.constraints()
+    for op, call in (
+        ("drop_columns", lambda: t.drop_columns(("val",))),
+        ("set_constraints", lambda: t.add_constraint("pos", "val > 0")),
+    ):
+        attempts.clear()
+        with pytest.raises(ConcurrentWriteError):
+            call()
+        assert attempts == [op] * 5
+        assert t.read().schema == schema0
+        assert t.constraints() == cons0
+
+
+def test_one_commit_retry_path():
+    """Every post-create commit goes through ``TxTable._transact``: the
+    log link is called only there and in the three bootstrap commits,
+    and only ``_transact`` (the retry) and ``_after_data_commit`` (the
+    advisory compaction) catch ConcurrentWriteError. A new write path
+    that grows its own retry loop fails here."""
+    import ast
+
+    import kafka_flink_harshevents_spark.sources.txlog as txmod
+
+    links, catches = [], []
+
+    def visit(node, owner):
+        for child in ast.iter_child_nodes(node):
+            own = owner
+            if owner is None and isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                own = child.name  # the module function or method
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Name)
+                and child.func.id == "_atomic_commit"
+            ):
+                links.append(own)
+            if isinstance(child, ast.ExceptHandler) and child.type and any(
+                isinstance(n, ast.Name) and n.id == "ConcurrentWriteError"
+                for n in ast.walk(child.type)
+            ):
+                catches.append(own)
+            visit(child, own)
+
+    src_dir = os.path.dirname(txmod.__file__)
+    for name in ("txlog.py", "txstream.py"):
+        with open(os.path.join(src_dir, name)) as f:
+            visit(ast.parse(f.read()), None)
+    assert sorted(links) == [
+        "_transact", "clone_to", "convert_from_parquet", "create",
+    ]
+    assert sorted(catches) == ["_after_data_commit", "_transact"]
 
 
 def test_restore_cdf_refuses_across_type_widening(spark, tmp_path):
@@ -5242,6 +5304,54 @@ def test_replace_where_rechecks_constraints_on_retry(
     monkeypatch.setattr(txmod, "_atomic_commit", real_commit)
     # the table is untouched: the losing replace never committed
     assert {r["k"]: r["v"] for r in t.read().collect()} == {1: 10}
+
+
+def test_constraint_commits_reread_on_retry(spark, tmp_path, monkeypatch):
+    """add_constraint re-reads the rule map and re-validates the rows at
+    each attempt's snapshot: a retry after a lost race keeps the rule a
+    concurrent writer added, and refuses a rule a concurrently appended
+    row already violates."""
+    import kafka_flink_harshevents_spark.sources.txlog as txmod
+    from kafka_flink_harshevents_spark.sources.txlog import (
+        ConstraintViolation,
+    )
+
+    real_commit = txmod._atomic_commit
+
+    def race_first(concurrent):
+        raced = {"done": False}
+
+        def inject(table_dir, version, record):
+            if not raced["done"] and record.get("op") == "set_constraints":
+                raced["done"] = True
+                concurrent()  # another handle wins this version
+            return real_commit(table_dir, version, record)
+
+        monkeypatch.setattr(txmod, "_atomic_commit", inject)
+
+    # (a) a concurrent add_constraint("b") must survive our retry
+    t = _mk(spark, tmp_path, n_buckets=2)
+    t.append(spark.createDataFrame(
+        [(1, 10, 1)], "k long, v long, ver long"))
+    race_first(lambda: TxTable(spark, t.table_dir).add_constraint(
+        "b", "v < 100"))
+    t.add_constraint("a", "v > 0")
+    monkeypatch.setattr(txmod, "_atomic_commit", real_commit)
+    assert t.constraints() == {"a": "v > 0", "b": "v < 100"}
+
+    # (b) a concurrently appended violating row must refuse the rule
+    t2 = TxTable.create(
+        spark, str(tmp_path / "t2"), key_cols=("k",), order_col="ver",
+        n_buckets=2,
+    )
+    t2.append(spark.createDataFrame(
+        [(1, 10, 1)], "k long, v long, ver long"))
+    race_first(lambda: TxTable(spark, t2.table_dir).append(
+        spark.createDataFrame([(2, -5, 1)], "k long, v long, ver long")))
+    with pytest.raises(ConstraintViolation):
+        t2.add_constraint("pos", "v > 0")
+    monkeypatch.setattr(txmod, "_atomic_commit", real_commit)
+    assert "pos" not in t2.constraints()
 
 
 def test_rename_mapping_survives_checkpoint(spark, tmp_path):
@@ -7929,6 +8039,10 @@ def test_protocol_guard_and_upgrade(spark, tmp_path):
         t2.append(spark.createDataFrame(
             [("b", 2, 2)], "k string, v long, ver long"
         ))
+    with pytest.raises(ValueError, match="protocol version 9"):
+        t2.add_constraint("v_pos", "v > 0")
+    with pytest.raises(ValueError, match="protocol version 9"):
+        t2.drop_constraint("v_pos")
     # one-way door: an upgrade below current is refused even by a
     # hypothetical capable engine
     t3 = TxTable(spark, t.table_dir)
