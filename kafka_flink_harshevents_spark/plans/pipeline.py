@@ -98,8 +98,7 @@ def run_streaming_pipeline(
         TELEMETRY_TOPIC,
         max_offsets_per_trigger=max_offsets_per_trigger,
     )
-    v_wire = records_for_kafka(violations_from_telemetry(telemetry))
-    s_wire = records_for_kafka(device_status_from_telemetry(telemetry))
+    v_wire, s_wire = derive_stage(telemetry)
     queries = []
     for wire, topic in ((v_wire, VIOLATIONS_TOPIC), (s_wire, DEVICE_STATUS_TOPIC)):
         q = (
@@ -128,7 +127,6 @@ def run_consumer_stage(
     latency_trigger_seconds: int | None = LATENCY_FLUSH_SECONDS,
     counter_trigger_seconds: int | None = COUNTER_REPORT_SECONDS,
     session_ttl_seconds: int | None = None,
-    session_api: str = "auto",
 ):
     """Start every consumer-side query of the reference topology off one
     streaming ``events`` DataFrame (topic, value, kafka_received_at_ms —
@@ -182,9 +180,7 @@ def run_consumer_stage(
 
     if session_ttl_seconds is not None:
         ses = (
-            consolidate_status_sessions(
-                stage["status"], ttl_seconds=session_ttl_seconds, api=session_api
-            )
+            consolidate_status_sessions(stage["status"], session_ttl_seconds)
             .writeStream.format("json")
             .outputMode("append")
             .option("path", f"{output_root}/sessions")

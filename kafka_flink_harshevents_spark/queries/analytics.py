@@ -124,9 +124,10 @@ def ev_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The frame is bounded (ROWS 20 PRECEDING .. 1 PRECEDING), so window
     state is constant per key and the single user_id exchange is the
-    only wide step — the streaming twin is a transformWithState op with
-    a 20-element ring buffer per device, exactly the reference's
-    last-N-buffer pattern (mqtt_publish.js:80-83) turned into a detector.
+    only wide step — the streaming twin (``streaming/anomaly.py``) is an
+    applyInPandasWithState op with a 20-element ring buffer per device,
+    exactly the reference's last-N-buffer pattern (mqtt_publish.js:80-83)
+    turned into a detector.
     """
     e = load(spark, sf_dir, "events").select(
         "event_id", "user_id", ts_millis("ts").alias("ts_ms"), "value"

@@ -83,9 +83,8 @@ def get_spark(
         # checksums only pay off on eventually-consistent object stores;
         # re-enable there.
         .config("spark.sql.streaming.checkpoint.checksumEnabled", "false")
-        # transformWithState requires the RocksDB state store; it is also
-        # the provider a 100 TB deployment wants (state larger than heap,
-        # changelog checkpointing).
+        # RocksDB is the state store a 100 TB deployment wants (state
+        # larger than heap, changelog checkpointing).
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

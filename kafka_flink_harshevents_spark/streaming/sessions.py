@@ -16,10 +16,13 @@ Semantics ported from ``kafkaConsumer.js:278-347`` (Redis pointer with
 
 State lives in Spark's StateStore keyed by ``device_uuid`` (RocksDB
 provider at scale) instead of an external Redis — the state shuffle on
-``device_uuid`` is the only wide operation in the pipeline. The batch
-twin with identical output is
-``operators.sessions.sessionize_batch`` (lag/gap/cumsum), which the
-DuckDB oracle can run.
+``device_uuid`` is the only wide operation in the pipeline. The one
+backend is ``applyInPandasWithState``, the arbitrary-stateful API every
+other stateful operator in ``streaming/`` uses; ``_advance`` is the one
+spelling of the touch/extend/clear/TTL machine, and the append- and
+update-mode views only format what it returns. The batch twin with
+identical output is ``operators.sessions.sessionize_batch``
+(lag/gap/cumsum), which the DuckDB oracle can run.
 
 Operational note: with ``ProcessingTimeTimeout`` the micro-batch engine
 continuously schedules timer-evaluation batches even when the source is
@@ -39,29 +42,62 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-try:  # Spark ≥ 4.0 transformWithState surface (SURVEY §2.10/§7.5)
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    # The transformWithState Python worker speaks a protobuf-framed state
-    # protocol; without google.protobuf the driver worker crashes at
-    # startup, so "auto" must fall back to applyInPandasWithState.
-    import importlib.util
-
-    _HAS_TWS = importlib.util.find_spec("google.protobuf") is not None
-except ImportError:  # pragma: no cover — older Spark
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    _HAS_TWS = False
-
 from kafka_flink_harshevents_spark import schemas
 from kafka_flink_harshevents_spark.operators.sessions import SESSION_TTL_SECONDS
 
 _OUT_COLS = [f.name for f in schemas.SESSION_ROW.fields]
+_PROGRESS_COLS = [f.name for f in schemas.SESSION_PROGRESS_ROW.fields]
 _STATE_SCHEMA = "start_timestamp LONG, end_timestamp LONG, n_touches LONG"
+
+# (start_timestamp, end_timestamp, n_touches)
+_Session = tuple[int, int, int]
+
+
+def _advance(
+    pdf_iter: Iterator[pd.DataFrame], state: GroupState, ttl_ms: int
+) -> tuple[list[_Session], _Session | None, bool]:
+    """Apply one call's input — or its timeout — to a device's state.
+
+    Returns ``(closed, open, touched)``: the sessions finalized by
+    ``clear`` or TTL expiry, the session still open afterwards (its TTL
+    refreshed, like Redis ``SET ... EX``), and whether a touch reached
+    that open session in this call."""
+    if state.hasTimedOut:
+        closed = []
+        if state.exists:
+            closed.append(tuple(state.get))
+            state.remove()
+        return closed, None, False
+
+    events = pd.concat(list(pdf_iter), ignore_index=True)
+    events = events.sort_values("timestamp", kind="stable")
+
+    closed: list[_Session] = []
+    start, end, n = state.get if state.exists else (None, None, 0)
+    touched = False
+    for action, ts in zip(events["action"], events["timestamp"]):
+        if action == "touch":
+            ts = int(ts)
+            if start is None:
+                start = end = ts
+                n = 1
+            else:
+                end = max(end, ts)
+                n += 1
+            touched = True
+        elif action == "clear" and start is not None:
+            closed.append((start, end, n))
+            start, end, n = None, None, 0
+        # unknown action: log-and-ignore in the reference (F8)
+
+    if start is None:
+        if state.exists:
+            state.remove()
+        return closed, None, False
+    session = (int(start), int(end), int(n))
+    state.update(session)
+    state.setTimeoutDuration(ttl_ms)
+    return closed, session, touched
 
 
 def _final_row(device: str, start: int, end: int, n: int) -> dict[str, Any]:
@@ -78,138 +114,25 @@ def _final_row(device: str, start: int, end: int, n: int) -> dict[str, Any]:
     }
 
 
+def _progress_row(
+    device: str, start: int, end: int, n: int, is_open: bool
+) -> dict[str, Any]:
+    return {**_final_row(device, start, end, n), "is_open": is_open}
+
+
 def _make_session_fn(ttl_ms: int):
+    """Append mode: one row per finalized session."""
+
     def fn(
         key: tuple[str],
         pdf_iter: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        device = key[0]
-        out: list[dict[str, Any]] = []
-
-        if state.hasTimedOut:
-            if state.exists:
-                start, end, n = state.get
-                state.remove()
-                out.append(_final_row(device, start, end, n))
-            yield pd.DataFrame(out, columns=_OUT_COLS)
-            return
-
-        events = pd.concat(list(pdf_iter), ignore_index=True)
-        events = events.sort_values("timestamp", kind="stable")
-
-        start, end, n = state.get if state.exists else (None, None, 0)
-        for action, ts in zip(events["action"], events["timestamp"]):
-            if action == "touch":
-                ts = int(ts)
-                if start is None:
-                    start = end = ts
-                    n = 1
-                else:
-                    end = max(end, ts)
-                    n += 1
-            elif action == "clear" and start is not None:
-                out.append(_final_row(device, start, end, n))
-                start, end, n = None, None, 0
-            # unknown action: log-and-ignore in the reference (F8)
-
-        if start is not None:
-            state.update((int(start), int(end), int(n)))
-            state.setTimeoutDuration(ttl_ms)
-        elif state.exists:
-            state.remove()
-        yield pd.DataFrame(out, columns=_OUT_COLS)
+        closed, _, _ = _advance(pdf_iter, state, ttl_ms)
+        rows = [_final_row(key[0], *s) for s in closed]
+        yield pd.DataFrame(rows, columns=_OUT_COLS)
 
     return fn
-
-
-class _SessionProcessor(StatefulProcessor):
-    """O9 on Spark 4's ``transformWithStateInPandas``: a ``ValueState``
-    plus EXPLICIT processing-time timers replace the legacy GroupState
-    timeout — same touch/extend/clear/TTL machine as ``_make_session_fn``
-    (kafkaConsumer.js:278-347), but on the API that also offers
-    multiple named states, initial state, and schema evolution.
-
-    Timer discipline: every state update re-arms a single TTL timer
-    (delete-then-register), mirroring Redis ``SET ... EX`` refreshing the
-    expiry on each touch (kafkaConsumer.js:304-312)."""
-
-    def __init__(self, ttl_ms: int) -> None:
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._handle = handle
-        self._session = handle.getValueState("session", _STATE_SCHEMA)
-
-    def _rearm_timer(self, now_ms: int) -> None:
-        for t in list(self._handle.listTimers()):
-            self._handle.deleteTimer(t)
-        self._handle.registerTimer(now_ms + self._ttl_ms)
-
-    def _disarm_timers(self) -> None:
-        for t in list(self._handle.listTimers()):
-            self._handle.deleteTimer(t)
-
-    def handleInputRows(
-        self,
-        key: Any,
-        rows: Iterator[pd.DataFrame],
-        timerValues: "TimerValues",
-    ) -> Iterator[pd.DataFrame]:
-        device = key[0]
-        out: list[dict[str, Any]] = []
-        events = pd.concat(list(rows), ignore_index=True)
-        events = events.sort_values("timestamp", kind="stable")
-
-        cur = self._session.get() if self._session.exists() else None
-        start, end, n = (int(cur[0]), int(cur[1]), int(cur[2])) if cur else (None, None, 0)
-        for action, ts in zip(events["action"], events["timestamp"]):
-            if action == "touch":
-                ts = int(ts)
-                if start is None:
-                    start = end = ts
-                    n = 1
-                else:
-                    end = max(end, ts)
-                    n += 1
-            elif action == "clear" and start is not None:
-                out.append(_final_row(device, start, end, n))
-                start, end, n = None, None, 0
-            # unknown action: log-and-ignore in the reference (F8)
-
-        if start is not None:
-            self._session.update((int(start), int(end), int(n)))
-            self._rearm_timer(timerValues.getCurrentProcessingTimeInMs())
-        else:
-            if cur is not None:
-                self._session.clear()
-            self._disarm_timers()
-        yield pd.DataFrame(out, columns=_OUT_COLS)
-
-    def handleExpiredTimer(
-        self,
-        key: Any,
-        timerValues: "TimerValues",
-        expiredTimerInfo: "ExpiredTimerInfo",
-    ) -> Iterator[pd.DataFrame]:
-        out: list[dict[str, Any]] = []
-        if self._session.exists():
-            s = self._session.get()
-            self._session.clear()
-            out.append(_final_row(key[0], int(s[0]), int(s[1]), int(s[2])))
-        yield pd.DataFrame(out, columns=_OUT_COLS)
-
-    def close(self) -> None:
-        pass
-
-
-_PROGRESS_COLS = [f.name for f in schemas.SESSION_PROGRESS_ROW.fields]
-
-
-def _progress_row(
-    device: str, start: int, end: int, n: int, is_open: bool
-) -> dict[str, Any]:
-    return {**_final_row(device, start, end, n), "is_open": is_open}
 
 
 def _make_progress_fn(ttl_ms: int):
@@ -225,47 +148,28 @@ def _make_progress_fn(ttl_ms: int):
         pdf_iter: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        device = key[0]
-        out: list[dict[str, Any]] = []
-
-        if state.hasTimedOut:
-            if state.exists:
-                start, end, n = state.get
-                state.remove()
-                out.append(_progress_row(device, start, end, n, False))
-            yield pd.DataFrame(out, columns=_PROGRESS_COLS)
-            return
-
-        events = pd.concat(list(pdf_iter), ignore_index=True)
-        events = events.sort_values("timestamp", kind="stable")
-
-        start, end, n = state.get if state.exists else (None, None, 0)
-        touched = False
-        for action, ts in zip(events["action"], events["timestamp"]):
-            if action == "touch":
-                ts = int(ts)
-                if start is None:
-                    start = end = ts
-                    n = 1
-                else:
-                    end = max(end, ts)
-                    n += 1
-                touched = True
-            elif action == "clear" and start is not None:
-                out.append(_progress_row(device, start, end, n, False))
-                start, end, n = None, None, 0
-                touched = False
-
-        if start is not None:
-            state.update((int(start), int(end), int(n)))
-            state.setTimeoutDuration(ttl_ms)
-            if touched:
-                out.append(_progress_row(device, start, end, n, True))
-        elif state.exists:
-            state.remove()
-        yield pd.DataFrame(out, columns=_PROGRESS_COLS)
+        closed, session, touched = _advance(pdf_iter, state, ttl_ms)
+        rows = [_progress_row(key[0], *s, False) for s in closed]
+        if touched:
+            rows.append(_progress_row(key[0], *session, True))
+        yield pd.DataFrame(rows, columns=_PROGRESS_COLS)
 
     return fn
+
+
+def _apply(status_events: DataFrame, fn, schema, output_mode: str) -> DataFrame:
+    """The one stateful plan both views share: ``cable-unplugged`` only
+    (F7), keyed by ``device_uuid``, processing-time TTL."""
+    touches = status_events.filter(
+        F.col("status_type") == "cable-unplugged"
+    ).select("device_uuid", "action", "timestamp")
+    return touches.groupBy("device_uuid").applyInPandasWithState(
+        fn,
+        outputStructType=schema,
+        stateStructType=_STATE_SCHEMA,
+        outputMode=output_mode,
+        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    )
 
 
 def status_session_progress(
@@ -277,22 +181,17 @@ def status_session_progress(
     emission (is_open=false) on clear/TTL. Run in ``update`` output
     mode; the append-mode ``consolidate_status_sessions`` (final rows
     only) is unchanged and remains the exactly-once history."""
-    touches = status_events.filter(
-        F.col("status_type") == "cable-unplugged"
-    ).select("device_uuid", "action", "timestamp")
-    return touches.groupBy("device_uuid").applyInPandasWithState(
+    return _apply(
+        status_events,
         _make_progress_fn(ttl_seconds * 1000),
-        outputStructType=schemas.SESSION_PROGRESS_ROW,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        schemas.SESSION_PROGRESS_ROW,
+        "update",
     )
 
 
 def consolidate_status_sessions(
     status_events: DataFrame,
     ttl_seconds: int = SESSION_TTL_SECONDS,
-    api: str = "auto",
 ) -> DataFrame:
     """Streaming session consolidation keyed by ``device_uuid``.
 
@@ -300,27 +199,10 @@ def consolidate_status_sessions(
     shape). Output: one finalized session row per session, emitted on
     ``clear`` or on TTL expiry. Only ``cable-unplugged`` is consolidated
     (F7, kafkaConsumer.js:273-276).
-
-    ``api`` selects the stateful backend: ``"transformWithState"`` (the
-    Spark 4 StatefulProcessor above — the default when available),
-    ``"applyInPandasWithState"`` (the portable fallback), or ``"auto"``.
-    Both produce identical output; the same tests run against each.
     """
-    touches = status_events.filter(
-        F.col("status_type") == "cable-unplugged"
-    ).select("device_uuid", "action", "timestamp")
-    use_tws = _HAS_TWS if api == "auto" else (api == "transformWithState")
-    if use_tws:
-        return touches.groupBy("device_uuid").transformWithStateInPandas(
-            _SessionProcessor(ttl_seconds * 1000),
-            outputStructType=schemas.SESSION_ROW,
-            outputMode="append",
-            timeMode="processingTime",
-        )
-    return touches.groupBy("device_uuid").applyInPandasWithState(
+    return _apply(
+        status_events,
         _make_session_fn(ttl_seconds * 1000),
-        outputStructType=schemas.SESSION_ROW,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        schemas.SESSION_ROW,
+        "append",
     )

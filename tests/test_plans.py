@@ -298,49 +298,74 @@ def test_cbo_column_stats_drive_selectivity(spark, tmp_path):
         _restore_confs(spark, old)
 
 
-@pytest.mark.slow
-def test_catalog_wide_no_cartesian_products(spark):
-    """Global invariant, swept over EVERY catalog entry: no
-    CartesianProduct anywhere — every pair-finding operator must key its
-    join (band hash, signature, block id, prefix rank, bucket).
-    1-row scalar guards use broadcast cross joins, which is fine; an
-    actual CartesianProduct at 100 TB is always a bug."""
+def _empty_partition_windows(node) -> int:
+    hits = 0
+    if node.getClass().getSimpleName() == "Window":
+        if node.partitionSpec().isEmpty():
+            hits += 1
+    it = node.children().iterator()
+    while it.hasNext():
+        hits += _empty_partition_windows(it.next())
+    return hits
+
+
+def _plan_invariant_offenders(spark, names) -> dict[str, list[str]]:
+    """The two catalog-wide plan invariants, checked on each named
+    catalog entry; returns the offending entry names per invariant.
+
+    - No CartesianProduct anywhere in the executed plan: every
+      pair-finding operator must key its join (band hash, signature,
+      block id, prefix rank, bucket). 1-row scalar guards use broadcast
+      cross joins, which is fine; an actual CartesianProduct at 100 TB
+      is always a bug.
+    - No Window with an EMPTY partition spec: Spark moves all rows into
+      ONE partition for such windows (it warns exactly this), the
+      classic 100 TB plan-killer. Global ranks must go through the
+      bucketed exact-rank machine (`operators/ranking.py`); per-group
+      windows must key on the group. This walks the optimized LOGICAL
+      plan, so AQE wrapping can't hide a hit."""
     from kafka_flink_harshevents_spark.queries import all_queries
 
-    offenders = []
-    for name, fn in all_queries().items():
-        plan = _plan(fn(spark, SF_DIR))
-        if "CartesianProduct" in plan:
-            offenders.append(name)
+    queries = all_queries()
+    offenders: dict[str, list[str]] = {"cartesian": [], "unpartitioned_window": []}
+    for name in names:
+        qe = queries[name](spark, SF_DIR)._jdf.queryExecution()
+        if "CartesianProduct" in qe.executedPlan().toString():
+            offenders["cartesian"].append(name)
+        if _empty_partition_windows(qe.optimizedPlan()):
+            offenders["unpartitioned_window"].append(name)
+    return offenders
+
+
+def test_plan_invariants_on_catalog_sample(spark):
+    """Default-tier guard for the catalog-wide invariants: a fixed
+    sample of 20 entries, every Nth by sorted name, so a run is
+    repeatable; the slow sweeps below cover every entry."""
+    from kafka_flink_harshevents_spark.queries import all_queries
+
+    names = sorted(all_queries())
+    sample = names[:: max(1, len(names) // 20)][:20]
+    offenders = _plan_invariant_offenders(spark, sample)
+    assert offenders == {"cartesian": [], "unpartitioned_window": []}, offenders
+
+
+@pytest.mark.slow
+def test_catalog_wide_no_cartesian_products(spark):
+    """Sweeps EVERY catalog entry: no CartesianProduct anywhere."""
+    from kafka_flink_harshevents_spark.queries import all_queries
+
+    offenders = _plan_invariant_offenders(spark, sorted(all_queries()))["cartesian"]
     assert not offenders, f"cartesian products in: {offenders}"
 
 
 @pytest.mark.slow
 def test_catalog_wide_no_unpartitioned_windows(spark):
-    """Global invariant, swept over EVERY catalog entry: no Window
-    with an EMPTY partition spec — Spark moves all rows into ONE
-    partition for such windows (it warns exactly this), which is the
-    classic 100 TB plan-killer. Global ranks must go through the
-    bucketed exact-rank machine (`operators/ranking.py`); per-group
-    windows must key on the group. The sweep walks the optimized
-    LOGICAL plan, so AQE wrapping can't hide a hit."""
+    """Sweeps EVERY catalog entry: no Window with an empty partition
+    spec."""
     from kafka_flink_harshevents_spark.queries import all_queries
 
-    def empty_part_windows(node) -> int:
-        hits = 0
-        if node.getClass().getSimpleName() == "Window":
-            if node.partitionSpec().isEmpty():
-                hits += 1
-        it = node.children().iterator()
-        while it.hasNext():
-            hits += empty_part_windows(it.next())
-        return hits
-
-    offenders = []
-    for name, fn in all_queries().items():
-        plan = fn(spark, SF_DIR)._jdf.queryExecution().optimizedPlan()
-        if empty_part_windows(plan):
-            offenders.append(name)
+    names = sorted(all_queries())
+    offenders = _plan_invariant_offenders(spark, names)["unpartitioned_window"]
     assert not offenders, f"unpartitioned Window in: {offenders}"
 
 

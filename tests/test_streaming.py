@@ -24,22 +24,8 @@ from kafka_flink_harshevents_spark.streaming.consumer import (
     violation_type_counts,
 )
 from kafka_flink_harshevents_spark.streaming.sessions import (
-    _HAS_TWS,
     consolidate_status_sessions,
 )
-
-# Both stateful backends where runnable: transformWithState needs
-# google.protobuf for its worker protocol (absent in this container —
-# the processor itself is complete and exercised wherever protobuf is).
-SESSION_APIS = [
-    pytest.param(
-        "transformWithState",
-        marks=pytest.mark.skipif(
-            not _HAS_TWS, reason="google.protobuf unavailable for transformWithState worker"
-        ),
-    ),
-    "applyInPandasWithState",
-]
 
 
 def _event_rows():
@@ -146,11 +132,9 @@ def _drain(q, timeout=120):
     raise TimeoutError("stream did not drain in time")
 
 
-@pytest.mark.parametrize("api", SESSION_APIS)
-def test_session_consolidation(spark, tmp_path, api):
+def test_session_consolidation(spark, tmp_path):
     """touch/extend within TTL → one session; clear finalizes; a later
-    touch opens a new session (kafkaConsumer.js:278-347 state machine) —
-    identical on both stateful backends."""
+    touch opens a new session (kafkaConsumer.js:278-347 state machine)."""
     src = tmp_path / "status"
     src.mkdir()
     _write_status_batch(
@@ -176,7 +160,7 @@ def test_session_consolidation(spark, tmp_path, api):
     )
     name = f"sessions_{uuid.uuid4().hex[:8]}"
     q = (
-        consolidate_status_sessions(stream, ttl_seconds=300, api=api)
+        consolidate_status_sessions(stream, ttl_seconds=300)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
@@ -229,8 +213,7 @@ def test_session_consolidation(spark, tmp_path, api):
         q.stop()
 
 
-@pytest.mark.parametrize("api", SESSION_APIS)
-def test_session_ttl_timeout(spark, tmp_path, api):
+def test_session_ttl_timeout(spark, tmp_path):
     """No clear ever arrives (the Flink job never emits one) — the
     processing-time TTL finalizes the session, like Redis EX expiry."""
     src = tmp_path / "status_ttl"
@@ -247,7 +230,7 @@ def test_session_ttl_timeout(spark, tmp_path, api):
     )
     name = f"ttl_{uuid.uuid4().hex[:8]}"
     q = (
-        consolidate_status_sessions(stream, ttl_seconds=1, api=api)
+        consolidate_status_sessions(stream, ttl_seconds=1)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
@@ -335,91 +318,90 @@ def test_event_time_window_with_watermark(spark, tmp_path):
         q.stop()
 
 
-def test_tws_processor_state_machine():
-    """The transformWithState backend can't launch its worker in this
-    container (no protobuf), but its state machine is pure Python —
-    drive it directly with fake handle/state/timer objects and assert
-    the same touch/extend/clear/TTL behavior as the legacy backend."""
+def test_session_state_machine():
+    """``_advance`` — the one touch/extend/clear/TTL machine — driven
+    without Spark through a fake GroupState, plus the update-mode view
+    over a batch that closes one session and opens the next."""
     import pandas as pd
 
-    from kafka_flink_harshevents_spark.streaming.sessions import _SessionProcessor
+    from kafka_flink_harshevents_spark.streaming.sessions import (
+        _advance,
+        _make_progress_fn,
+    )
 
     class FakeState:
-        def __init__(self):
-            self.v = None
+        def __init__(self, v=None, timed_out=False):
+            self.v, self.hasTimedOut, self.timeout = v, timed_out, None
 
+        @property
         def exists(self):
             return self.v is not None
 
+        @property
         def get(self):
             return self.v
 
         def update(self, v):
             self.v = v
 
-        def clear(self):
+        def remove(self):
             self.v = None
 
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeState()
-            self.timers = []
+        def setTimeoutDuration(self, ms):
+            self.timeout = ms
 
-        def getValueState(self, name, schema):
-            return self.state
-
-        def listTimers(self):
-            return list(self.timers)
-
-        def deleteTimer(self, t):
-            self.timers.remove(t)
-
-        def registerTimer(self, t):
-            self.timers.append(t)
-
-    class FakeTimerValues:
-        def __init__(self, now):
-            self.now = now
-
-        def getCurrentProcessingTimeInMs(self):
-            return self.now
-
-    proc = _SessionProcessor(ttl_ms=300_000)
-    h = FakeHandle()
-    proc.init(h)
-
-    def feed(rows, now=1_000):
-        pdf = pd.DataFrame(rows, columns=["device_uuid", "action", "timestamp"])
-        return pd.concat(
-            list(proc.handleInputRows(("d-1",), iter([pdf]), FakeTimerValues(now)))
+    def batch(*rows):
+        pdf = pd.DataFrame(
+            [("d-1", a, ts) for a, ts in rows],
+            columns=["device_uuid", "action", "timestamp"],
         )
+        return iter([pdf])
 
-    # touch + extend: no emission, state updated, one timer armed at now+ttl
-    out = feed([("d-1", "touch", 1000), ("d-1", "touch", 1030), ("d-1", "poke", 1040)])
-    assert out.empty
-    assert tuple(h.state.v) == (1000, 1030, 2)
-    assert h.timers == [301_000]
+    ttl = 300_000
+    st = FakeState()
+    # touch + extend (out of order) + unknown action: open, TTL armed
+    got = _advance(batch(("touch", 1030), ("touch", 1000), ("poke", 1040)), st, ttl)
+    assert got == ([], (1000, 1030, 2), True)
+    assert st.v == (1000, 1030, 2) and st.timeout == ttl
 
-    # re-touch re-arms the timer (Redis EX refresh semantics)
-    out = feed([("d-1", "touch", 1050)], now=5_000)
-    assert tuple(h.state.v) == (1000, 1050, 3)
-    assert h.timers == [305_000]
+    # an unknown action alone keeps the session and refreshes its TTL
+    st.timeout = None
+    assert _advance(batch(("poke", 1045)), st, ttl) == ([], (1000, 1030, 2), False)
+    assert st.timeout == ttl
 
-    # clear finalizes: emits the session, clears state, disarms timers
-    out = feed([("d-1", "clear", 1100)], now=9_000)
-    assert len(out) == 1
-    r = out.iloc[0]
-    assert (r["start_timestamp"], r["end_timestamp"], r["n_touches"]) == (1000, 1050, 3)
-    assert r["timestamp"] == 1050 and h.state.v is None and h.timers == []
-
-    # TTL expiry path: open a session, then fire the timer
-    feed([("d-1", "touch", 2000)], now=20_000)
-    expired = pd.concat(
-        list(proc.handleExpiredTimer(("d-1",), FakeTimerValues(320_001), None))
+    # extend, then clear: the session closes and state is removed
+    assert _advance(batch(("touch", 1050), ("clear", 1100)), st, ttl) == (
+        [(1000, 1050, 3)],
+        None,
+        False,
     )
-    assert len(expired) == 1
-    assert (expired.iloc[0]["start_timestamp"], expired.iloc[0]["n_touches"]) == (2000, 1)
-    assert h.state.v is None
+    assert st.v is None
+
+    # a clear with no open session is a no-op
+    assert _advance(batch(("clear", 1200)), st, ttl) == ([], None, False)
+
+    # timeout with state: the TTL finalizes the session
+    st = FakeState((2000, 2010, 2), timed_out=True)
+    assert _advance(iter([]), st, ttl) == ([(2000, 2010, 2)], None, False)
+    assert st.v is None
+
+    # timeout without state: nothing to emit
+    assert _advance(iter([]), FakeState(timed_out=True), ttl) == ([], None, False)
+
+    # update-mode view: touch, clear, touch in ONE batch → one closed row
+    # for the first session and one open row for the second
+    st = FakeState()
+    out = pd.concat(
+        list(
+            _make_progress_fn(ttl)(
+                ("d-1",), batch(("touch", 1000), ("clear", 1010), ("touch", 1020)), st
+            )
+        )
+    )
+    cols = ["is_open", "start_timestamp", "end_timestamp", "n_touches"]
+    got = sorted(out[cols].itertuples(index=False, name=None))
+    assert got == [(False, 1000, 1000, 1), (True, 1020, 1020, 1)]
+    assert st.v == (1020, 1020, 1) and st.timeout == ttl
 
 
 def test_session_progress_view(spark, tmp_path):
