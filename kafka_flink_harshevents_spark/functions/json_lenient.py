@@ -11,12 +11,15 @@ reproduce both, JVM-side (no Python UDF in the hot ingest path):
 2. **Malformed JSON is dropped**, never dead-lettered
    (``TelematicsViolationDeriverJob.java:111-114``).
 
-Both are expressed as column transforms so Catalyst keeps them inside
-WholeStageCodegen and the parse survives a 1000-executor scale-out with
-zero shuffle.
+Both are expressed as column transforms (no shuffle, no Python), and each
+payload is parsed once, inside one ``Generate`` that every downstream
+filter sits above.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -46,11 +49,10 @@ def parse_telemetry(
     df,
     value_col: str = "value",
     schema: T.StructType = schemas.TELEMETRY,
-    drop_malformed: bool = True,
 ):
     """``Kafka value string -> telemetry columns`` (P11 + F1).
 
-    PERMISSIVE ``from_json`` with a corrupt-record column. The drop rule
+    A PERMISSIVE parse with a corrupt-record column. The drop rule
     reproduces Jackson's FIELD-LEVEL leniency, not Spark's default
     record-level strictness: Jackson coerces field-wise (a string-typed
     ``timestamp`` yields 0 via ``asLong``, a bad element is skipped),
@@ -68,20 +70,26 @@ def parse_telemetry(
     with_corrupt = T.StructType(
         list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
     )
-    parsed = df.withColumn(
-        "parsed",
-        F.from_json(
-            raw,
-            with_corrupt,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-        ),
+    parsed = F.from_json(
+        raw,
+        with_corrupt,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
     )
-    if drop_malformed:
-        all_fields_null = None
-        for f in schema.fields:
-            c = F.col(f"parsed.{f.name}").isNull()
-            all_fields_null = c if all_fields_null is None else (all_fields_null & c)
-        wholly_malformed = F.col("parsed._corrupt_record").isNotNull() & all_fields_null
-        parsed = parsed.filter(F.col("parsed").isNotNull() & ~wholly_malformed)
+
+    def ok(p: Column) -> Column:
+        all_fields_null = reduce(and_, (p[f.name].isNull() for f in schema.fields))
+        return p.isNotNull() & ~(p["_corrupt_record"].isNotNull() & all_fields_null)
+
+    # The parse runs inside a generator (explode of a 0-or-1-element
+    # array) rather than behind an alias. Predicate pushdown substitutes
+    # an alias with its definition, so a filter on an aliased parse — the
+    # drop rule here, the derive gates and the consumer's truthiness
+    # checks downstream — would copy the whole parse into itself, once
+    # per reference. Filters on a generator's output stay above it and
+    # read plain columns.
     keep = [c for c in df.columns if c != value_col]
-    return parsed.select(*keep, "parsed.*").drop("_corrupt_record")
+    return (
+        df.select(*keep, F.explode(F.filter(F.array(parsed), ok)).alias("parsed"))
+        .select(*keep, "parsed.*")
+        .drop("_corrupt_record")
+    )

@@ -106,3 +106,18 @@ def test_streaming_topology_matches_batch(spark, wire, tmp_path):
     finally:
         q1.stop()
         q2.stop()
+
+
+def test_one_parse_per_stage(spark):
+    """Each consumer frame parses twice: the telemetry payload once and
+    the wire payload once. Predicate pushdown must not copy either parse
+    into the drop rule, the derive gates or the truthiness checks."""
+    raw = spark.createDataFrame([('{"device_uuid": "d", "timestamp": 1}',)], "value string")
+    v_wire, s_wire = derive_stage(parse_telemetry(raw))
+    events = as_event_stream(v_wire, VIOLATIONS_TOPIC, received_at_ms=1_000).unionByName(
+        as_event_stream(s_wire, DEVICE_STATUS_TOPIC, received_at_ms=1_000)
+    )
+    out = consumer_stage(events)
+    for name in ("latency", "counters", "status"):
+        plan = out[name]._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("from_json(") == 2, name

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -100,9 +101,31 @@ def test_double_encoded_payload_unwrapped(spark):
     assert out[0]["violation_type"] == "harsh_accel"
 
 
-def test_malformed_json_dropped(spark):
-    out = _parse(spark, ["{not json", _telemetry_json()])
-    assert out.count() == 1
+@pytest.mark.parametrize(
+    "payload, kept",
+    [
+        pytest.param("{not json", False, id="malformed"),
+        pytest.param(None, False, id="null-value"),
+        pytest.param("", False, id="empty"),
+        pytest.param("   ", False, id="blank"),
+        pytest.param("null", False, id="json-null"),
+        pytest.param("[]", False, id="empty-array"),
+        pytest.param(json.dumps("{not json"), False, id="double-encoded-malformed"),
+        # one drifting field: Jackson-style field-level leniency keeps it
+        pytest.param(_telemetry_json(timestamp="1760000000"), True, id="string-timestamp"),
+    ],
+)
+def test_malformed_json_dropped(spark, payload, kept):
+    """A record is dropped only when wholly unparseable; a partially-valid
+    one survives with nulls in its drifted fields (json_lenient.py)."""
+    df = spark.createDataFrame(
+        [("edge", payload), ("good", _telemetry_json())], "k string, value string"
+    )
+    rows = {r["k"]: r for r in parse_telemetry(df).collect()}
+    assert sorted(rows) == (["edge", "good"] if kept else ["good"])
+    if kept:
+        assert rows["edge"]["device_uuid"] == "device-1"
+        assert rows["edge"]["timestamp"] is None
 
 
 def test_battery_gate(spark):

@@ -4,7 +4,9 @@ report per-entry row/schema/value matches — the same comparison the
 driver records in CORRECTNESS_r{N}.json, but over the FULL catalog
 instead of the driver's 50-entry window.
 
-Usage: python tools/oracle_audit.py [sf_dir]
+Usage: python tools/oracle_audit.py [sf_dir] [name...]
+
+Names, when given, limit the audit to those entries.
 """
 
 from __future__ import annotations
@@ -45,6 +47,8 @@ def main() -> None:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     queries, oracles = all_queries(), all_oracles()
+    if len(sys.argv) > 2:
+        queries = {name: queries[name] for name in sys.argv[2:]}
     n_pass = n_fail = n_rows_only = 0
     failures: list[str] = []
     for name, fn in queries.items():
