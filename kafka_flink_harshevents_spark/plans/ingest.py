@@ -55,7 +55,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_flink_harshevents_spark.operators.text import (
+    LSH_VERIFY_THRESHOLD,
+    quality_columns,
+    shingles_sql,
+)
 from kafka_flink_harshevents_spark.sources.txlog import TxTable
+from kafka_flink_harshevents_spark.streaming.dedup import doc_fingerprints
 
 __all__ = [
     "create_fingerprint_table",
@@ -68,26 +74,6 @@ __all__ = [
 # with more stored docs than this falls back to the join-against-scan
 # plan (the IN-set itself would be the new bottleneck past here)
 _VERIFY_PRUNE_MAX = 100_000
-
-# store_join="auto" crossover: pick the storage-partitioned probe once
-# the store's live bytes pass this floor. NOT a local-wall measurement
-# — tools/probe_bucketed_store.py shows the local JVM semi-join wins
-# at every locally-testable size (an in-process Exchange is nearly
-# free) — this is the cost-model point where the term the bucketed
-# path eliminates (the store key column shipped through a CLUSTER
-# network exchange every batch) dominates its fixed Arrow round-trip
-# overhead; decision table in PLANS.md §Round 11.
-_BUCKETED_AUTO_MIN_STORE_BYTES = 256 * 1024 * 1024
-
-
-def _store_live_bytes(t: TxTable) -> int:
-    """Live physical bytes of a table, answered from the commit log
-    alone (every add-entry records its file size) — the
-    metadata_aggregate discipline: O(live files) driver-side, zero
-    data files opened."""
-    _, live_map, _, _ = t._replay()
-    return sum(int(e.get("bytes") or 0) for e in live_map.values())
-
 
 def create_fingerprint_table(
     spark: SparkSession,
@@ -125,104 +111,11 @@ def _already(table: TxTable, txn: dict | None) -> bool:
 
 def _shingle_arr(text_col: str):
     """Distinct word-bigram shingle array for one text column — the
-    SAME shingling as ``queries.documents._shingles`` (the Jaccard
-    currency of the whole dedup family), inlined as an array
-    expression so the verify join needs no explode."""
+    batch ``_shingles`` shingling as an array expression, so the
+    verify join needs no explode."""
     s = f"split({text_col}, ' ')"
     return F.expr(
-        f"CASE WHEN size({s}) >= 2 THEN array_distinct(transform("
-        f"sequence(0, size({s}) - 2), "
-        f"i -> concat({s}[i], ' ', {s}[i + 1]))) ELSE array() END"
-    )
-
-
-def _bucketed_store_hits(
-    fingerprints: TxTable, parts: DataFrame
-) -> DataFrame:
-    """Prototype STORAGE-PARTITIONED semi-join: which ``parts`` rows
-    hit the store, computed WITHOUT shuffling a single store row
-    through Spark. The store is hash-bucketed on its key (kind, fp) —
-    the join key — so co-location is free: the batch side
-    repartitions by the SAME bucket function (one batch-sized
-    exchange, exactly what the shuffle path also pays), and each
-    group's task reads ONLY its bucket's store files executor-side
-    (Arrow parquet, key columns only, deletion vectors applied) for
-    an in-memory membership probe. The store-side Exchange the
-    default path pays (store-row-count-sized, the trade documented in
-    the module docstring) disappears from the plan entirely — the
-    store never enters a Spark scan.
-
-    This is the upgrade path the module docstring names: blocked from
-    being AUTOMATIC because the Python DataSource cannot declare its
-    bucketing to Catalyst, so the co-location is hand-held here
-    behind ``corpus_ingest(store_join="bucketed")``. Requires a
-    NON-attributed store (bucket key must equal the join key).
-    Returns the hit subset of ``parts`` (same schema)."""
-    import os
-
-    meta = fingerprints.meta
-    if list(meta["key_cols"]) != ["kind", "fp"]:
-        raise ValueError(
-            "bucketed store join needs the store bucketed on the join "
-            f"key (kind, fp) — this store is keyed {meta['key_cols']}"
-        )
-    n = int(meta["n_buckets"])
-    _, live_map, _, dvs = fingerprints._replay()
-    by_bucket: dict[int, list[tuple[str, list[int]]]] = {}
-    for e in live_map.values():
-        p = e["path"]
-        ap = p if os.path.isabs(p) else os.path.join(
-            fingerprints.table_dir, p
-        )
-        by_bucket.setdefault(int(e["bucket"]), []).append(
-            (ap, sorted(dvs.get(p, ())))
-        )
-    spark = parts.sparkSession
-    bc = spark.sparkContext.broadcast(by_bucket)
-    out_schema = parts.schema
-
-    def probe(key, pdf):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        chunks = []
-        for path, dv in bc.value.get(int(key[0]), ()):
-            t = pq.read_table(path, columns=["kind", "fp"])
-            if dv:
-                mask = np.ones(t.num_rows, dtype=bool)
-                mask[dv] = False
-                t = t.filter(pa.array(mask))
-            chunks.append(t)
-        if not chunks:
-            return pdf.iloc[0:0].drop(columns=["_sb"])
-        # pure-Arrow membership (C++ hash set over one concatenated
-        # key, zero per-row Python objects) — the probe must stay
-        # C-speed or it gives back what the eliminated Exchange saved
-        import pyarrow.compute as pc
-
-        store = pa.concat_tables(chunks)
-        store_key = pc.binary_join_element_wise(
-            pc.cast(store.column("kind"), pa.string()),
-            store.column("fp"),
-            "|",
-        )
-        batch_key = pc.binary_join_element_wise(
-            pc.cast(pa.Array.from_pandas(pdf["kind"]), pa.string()),
-            pa.Array.from_pandas(pdf["fp"]),
-            "|",
-        )
-        hit = pc.is_in(
-            batch_key, value_set=store_key.combine_chunks()
-        ).to_numpy(zero_copy_only=False)
-        return pdf[hit].drop(columns=["_sb"])
-
-    return (
-        parts.withColumn(
-            "_sb", F.pmod(F.xxhash64("kind", "fp"), F.lit(n))
-        )
-        .groupBy("_sb")
-        .applyInPandas(probe, schema=out_schema)
+        f"CASE WHEN size({s}) >= 2 THEN {shingles_sql(s)} ELSE array() END"
     )
 
 
@@ -233,7 +126,6 @@ def corpus_ingest(
     txn: dict | None = None,
     min_quality: float | None = None,
     near_dup_mode: str = "advisory",
-    store_join: str = "auto",
 ) -> dict:
     """Ingest one batch of documents exactly-once. ``new_docs`` is a
     DataFrame carrying at least ``(doc_id, text)`` plus the corpus
@@ -244,7 +136,7 @@ def corpus_ingest(
     to the same end state (the test pins this).
 
     ``min_quality`` routes dedup-surviving docs through the shared
-    quality battery (``queries.documents.quality_columns`` — the same
+    quality battery (``operators.text.quality_columns`` — the same
     scoring the streaming router uses): docs scoring below the floor
     are counted out, not appended, and their fingerprints do NOT enter
     the store (a rejected doc is not in the corpus; a future identical
@@ -272,47 +164,14 @@ def corpus_ingest(
       the scan+join plan) — and the Jaccard is a per-pair array
       intersect, never all-pairs.
 
-    ``store_join`` — how the presence checks reach the store:
-    ``"shuffle"`` is the plain left-semi join (store ships its key
-    column — see the module docstring's trade note); ``"bucketed"``
-    is the storage-partitioned path (:func:`_bucketed_store_hits`):
-    zero store rows enter a Spark plan, each task probes its own
-    bucket's files. Identical verdicts, parity-tested. ``"auto"``
-    (default) picks bucketed once the store is bucketed on the join
-    key AND its live bytes (from the commit log) pass
-    ``_BUCKETED_AUTO_MIN_STORE_BYTES`` — the cost-model point where
-    the store-sized network exchange the bucketed path eliminates
-    outweighs its fixed Arrow overhead (PLANS.md decision table);
-    below the floor, or on an attributed store, auto is shuffle.
-
     Returns ``{"docs_in", "exact_dups", "span_dups", "near_dups",
     "near_dups_verified", "low_quality", "kept", "corpus_version",
     "fingerprint_version", "replayed"}`` — near_dups stays the
     advisory collision count in both modes."""
-    from kafka_flink_harshevents_spark.queries.documents import (
-        LSH_VERIFY_THRESHOLD,
-        quality_columns,
-    )
-    from kafka_flink_harshevents_spark.streaming.dedup import (
-        doc_fingerprints,
-    )
-
     if near_dup_mode not in ("advisory", "verify"):
         raise ValueError(
             f"corpus_ingest: near_dup_mode {near_dup_mode!r} — "
             "expected 'advisory' or 'verify'"
-        )
-    if store_join not in ("auto", "shuffle", "bucketed"):
-        raise ValueError(
-            f"corpus_ingest: store_join {store_join!r} — expected "
-            "'auto', 'shuffle' or 'bucketed'"
-        )
-    if store_join == "bucketed" and near_dup_mode == "verify":
-        raise ValueError(
-            "corpus_ingest: store_join='bucketed' needs the store "
-            "bucketed on (kind, fp), but verify mode needs an "
-            "attributed store keyed (kind, fp, doc) — the two are "
-            "mutually exclusive"
         )
     attributed = "doc" in (fingerprints.meta.get("key_cols") or ())
     if near_dup_mode == "verify" and not attributed:
@@ -334,26 +193,6 @@ def corpus_ingest(
             "fingerprint_version": fingerprints.latest_version(),
             "replayed": True,
         }
-
-    if store_join == "auto":
-        # resolved AFTER the replayed early-return above: a no-op
-        # replay must not pay the store's commit-log replay that
-        # _store_live_bytes performs. Eligible (store bucketed on the
-        # join key) AND past the cost-model floor → storage-
-        # partitioned probe; otherwise the plain semi-join. An
-        # attributed / verify-mode store resolves to shuffle without
-        # raising — auto never refuses.
-        store_join = (
-            "bucketed"
-            if (
-                not attributed
-                and list(fingerprints.meta.get("key_cols") or ())
-                == ["kind", "fp"]
-                and _store_live_bytes(fingerprints)
-                >= _BUCKETED_AUTO_MIN_STORE_BYTES
-            )
-            else "shuffle"
-        )
 
     # Pinned ONCE: the store semi-join, the verify candidate join, and
     # the accepted-doc fingerprint merge below all read this one
@@ -381,14 +220,8 @@ def corpus_ingest(
         # virgin store (no schema recorded yet) — first-ever batch
         store = spark.createDataFrame([], store_cols)
     # keys-only semi-join per kind: which docs hit the store, and how
-    if store_join == "bucketed":
-        matched = _bucketed_store_hits(fingerprints, parts)
-    else:
-        matched = parts.join(
-            store.select("kind", "fp"), ["kind", "fp"], "left_semi"
-        )
     hits = (
-        matched
+        parts.join(store.select("kind", "fp"), ["kind", "fp"], "left_semi")
         .groupBy("doc_id")
         .agg(
             F.max((F.col("kind") == 0).cast("long")).alias("x_exact"),

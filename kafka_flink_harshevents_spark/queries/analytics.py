@@ -35,7 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_flink_harshevents_spark.operators.text import _md5_unit
 from kafka_flink_harshevents_spark.queries._util import load, ts_millis
+from kafka_flink_harshevents_spark.queries.documents import _md5_unit_sql
 
 FUNNEL_STAGES = ("view", "click", "purchase")
 
@@ -337,8 +339,6 @@ def ev_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-statistic. One row out; every aggregate is conditional in a single
     pass over the per-user conversion table.
     """
-    from kafka_flink_harshevents_spark.queries.documents import _md5_unit
-
     e = load(spark, sf_dir, "events").select("user_id", "event_type")
     # conversion = more purchases than clicks: mid-range probability at
     # every SF (everyone has >=1 purchase in the synthetic stream, so a
@@ -698,8 +698,6 @@ QUERIES = {
 }
 
 def _ab_sql() -> str:
-    from kafka_flink_harshevents_spark.queries.documents import _md5_unit_sql
-
     u = _md5_unit_sql("user_id", AB_SALT)
     return f"""
         WITH u AS (

@@ -25,6 +25,24 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_flink_harshevents_spark.operators.text import (
+    LSH_BANDS,
+    LSH_ROWS,
+    LSH_VERIFY_THRESHOLD,
+    MINHASH_PERMS,
+    SAMPLE_FIXED_K,
+    SPAN_WORDS,
+    STOPWORDS,
+    _md5_unit,
+    _nibble_val,
+    band_hash_sql,
+    bigrams_sql,
+    md5_half_sql,
+    quality_columns,
+    seeded_md5_sql,
+    shingles_sql,
+    spans_sql,
+)
 from kafka_flink_harshevents_spark.queries._util import (
     _hilo_total,
     _hilo_total_sql,
@@ -33,16 +51,9 @@ from kafka_flink_harshevents_spark.queries._util import (
     load,
     spread,
 )
+from kafka_flink_harshevents_spark.streaming.dedup import doc_fingerprints
 
-# Stopword list for ratio features + language-ID (subset present in the
-# synthetic vocabulary; real deployments swap in per-language lists).
-STOPWORDS = ("the", "a", "of", "and", "in", "to", "is", "on", "for", "with")
-
-MINHASH_PERMS = 12
-LSH_BANDS = 4  # 12 signatures / 4 bands = 3 rows per band
-LSH_ROWS = MINHASH_PERMS // LSH_BANDS
 JACCARD_THRESHOLD = 0.5
-LSH_VERIFY_THRESHOLD = 0.3
 
 _SQL_STOPSET = ", ".join(f"'{w}'" for w in STOPWORDS)
 
@@ -62,11 +73,7 @@ def _shingles(df: DataFrame) -> DataFrame:
         .filter(F.size("ws") >= 2)
         .select(
             "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.expr("transform(sequence(0, size(ws) - 2), i -> concat(ws[i], ' ', ws[i + 1]))")
-                )
-            ).alias("s"),
+            F.explode(F.expr(shingles_sql())).alias("s"),
         )
     )
 
@@ -102,30 +109,6 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(sum_len / n_tokens, 4).alias("avg_token_len"),
         F.round(n_stop / n_tokens, 4).alias("stop_ratio"),
     )
-
-
-def quality_columns() -> tuple[Column, Column]:
-    """(score, bucket) Column expressions over a frame with ``text`` —
-    the ONE definition of the quality battery, shared by the batch
-    entry (`quality_frame`/`doc_quality_score`) and the streaming
-    router (`streaming/quality.py::with_quality`), so stream and batch
-    scoring can never drift. The expression tree is identical in both
-    engines so the doubles match bit-for-bit before rounding."""
-    ws = F.split("text", " ")
-    n_tokens = F.size(ws).cast("long")
-    n_unique = F.size(F.array_distinct(ws)).cast("long")
-    n_stop = F.size(F.filter(ws, lambda w: w.isin(*STOPWORDS))).cast("long")
-    score = (
-        F.lit(0.4) * F.least(n_tokens / F.lit(100.0), F.lit(1.0))
-        + F.lit(0.3) * (n_unique / n_tokens)
-        + F.lit(0.3) * (F.lit(1.0) - n_stop / n_tokens)
-    )
-    bucket = (
-        F.when(score >= 0.75, F.lit("high"))
-        .when(score >= 0.5, F.lit("medium"))
-        .otherwise(F.lit("low"))
-    )
-    return score, bucket
 
 
 def quality_frame(d: DataFrame) -> DataFrame:
@@ -473,12 +456,13 @@ def _minhash_sigs(sh: DataFrame) -> DataFrame:
     subexpressions). Shared by `doc_minhash_lsh_pairs` and
     `doc_minhash_calibration` — the calibrated pipeline IS the
     production one."""
-    half_cols = []
-    for i in range(MINHASH_PERMS // 2):
-        h = F.md5(F.concat(F.lit(f"{i}|"), F.col("s")))
-        half_cols.append(F.substring(h, 1, 16).alias(f"h{2 * i}"))
-        half_cols.append(F.substring(h, 17, 16).alias(f"h{2 * i + 1}"))
-    halves = sh.select("doc_id", *half_cols)
+    halves = sh.select(
+        "doc_id",
+        *[
+            F.expr(md5_half_sql(seeded_md5_sql(j // 2), j)).alias(f"h{j}")
+            for j in range(MINHASH_PERMS)
+        ],
+    )
     return halves.groupBy("doc_id").agg(
         *[F.min(f"h{i}").alias(f"m{i}") for i in range(MINHASH_PERMS)]
     )
@@ -499,7 +483,7 @@ def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
-            F.md5(F.concat(*[F.col(f"m{b * LSH_ROWS + r}") for r in range(LSH_ROWS)])).alias("bv"),
+            F.expr(band_hash_sql(b, lambda j: f"m{j}")).alias("bv"),
         )
         for b in range(LSH_BANDS)
     ]
@@ -1203,12 +1187,6 @@ def doc_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _nibble_val(ch: Column) -> Column:
-    """Hex char → 0..15 with pure arithmetic (md5 output is lowercase)."""
-    a = F.ascii(ch)
-    return F.when(a <= 57, a - 48).otherwise(a - 87)
-
-
 def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash over the token multiset: per-token md5 nibbles →
     ±1 votes per bit → sign → fingerprint. Explode + one groupBy on
@@ -1240,20 +1218,6 @@ def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 SAMPLE_RATES = {"high": 1.0, "medium": 0.5, "low": 0.125}
 PACK_CAP = 512  # context-window token budget per packed sequence
 PACK_SHARDS = 16
-
-
-def _md5_unit(col: Column, salt: str) -> Column:
-    """Deterministic uniform in [0, 1) from the first 8 md5 nibbles —
-    portable to DuckDB (pure ascii arithmetic, no engine hash builtin,
-    unlike xxhash64) and stable under retries/partition moves, unlike
-    F.rand."""
-    h = F.md5(F.concat(F.lit(salt), col.cast("string")))
-    val = None
-    for i in range(8):
-        nib = _nibble_val(F.substring(h, i + 1, 1)).cast("long")
-        term = nib * (16 ** (7 - i))
-        val = term if val is None else val + term
-    return val / F.lit(float(2**32))
 
 
 def doc_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1421,8 +1385,6 @@ def doc_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SPAN_WORDS = 8  # C4-style span width (words) for cross-corpus span dedup
-
 # PII patterns restricted to syntax both Java regex (Spark) and RE2
 # (DuckDB) treat identically: character classes, bounded repetition, \b.
 PII_EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+"
@@ -1453,8 +1415,7 @@ def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     top = F.expr(
         f"""aggregate(
-            array_sort(transform(sequence(0, size(ws) - 2),
-                                 i -> concat(ws[i], ' ', ws[i + 1]))),
+            array_sort({bigrams_sql()}),
             named_struct('prev', cast(null as string), 'run', 0,
                          'best_c', 0, 'best_bg', cast(null as string)),
             (a, x) -> named_struct(
@@ -1489,12 +1450,7 @@ def _spans(d: DataFrame) -> DataFrame:
     (doc_id, chunk_idx, ch); the tail partial chunk is kept."""
     return d.select(
         "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, cast(ceil(size(ws) / {SPAN_WORDS}.0) as int) - 1), "
-                f"i -> array_join(slice(ws, i * {SPAN_WORDS} + 1, {SPAN_WORDS}), ' '))"
-            )
-        ).alias("chunk_idx", "ch"),
+        F.posexplode(F.expr(spans_sql())).alias("chunk_idx", "ch"),
     )
 
 
@@ -1746,10 +1702,6 @@ def doc_ingest_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprints come from somewhere durable) — one commit per
     # table, skipping the dedup checks an empty store cannot fail;
     # the BATCH call below exercises the full recipe
-    from kafka_flink_harshevents_spark.streaming.dedup import (
-        doc_fingerprints,
-    )
-
     # the two seed appends hit DISJOINT tables with no ordering
     # contract between them — overlap the independent jobs (guide
     # §2.6) so the second append's stages back-fill the first's tail
@@ -1809,9 +1761,6 @@ def doc_ingest_verify_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         create_fingerprint_table,
     )
     from kafka_flink_harshevents_spark.sources.txlog import TxTable
-    from kafka_flink_harshevents_spark.streaming.dedup import (
-        doc_fingerprints,
-    )
 
     # the SAME deterministic subset + sentinels as the dedup gate
     # (_ingest_frames) — so this gate is literally that batch
@@ -2378,9 +2327,7 @@ def doc_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = _words(load(spark, sf_dir, "documents"))
     pairs = d.filter(F.size("ws") >= 2).select(
-        F.explode(
-            F.expr("transform(sequence(0, size(ws) - 2), i -> concat(ws[i], ' ', ws[i + 1]))")
-        ).alias("pair")
+        F.explode(F.expr(bigrams_sql())).alias("pair")
     )
     return (
         pairs.groupBy("pair")
@@ -2450,11 +2397,7 @@ def doc_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     bg = toks.select(
         "doc_id",
         "lang",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, size(ws) - 2), i -> concat(ws[i], ' ', ws[i + 1]))"
-            )
-        ).alias("s"),
+        F.explode(F.expr(bigrams_sql())).alias("s"),
     )
     bk = bg.select(
         "doc_id",
@@ -2571,7 +2514,6 @@ def _dsir_sql() -> str:
     """
 
 
-SAMPLE_FIXED_K = 50  # exact per-stratum sample size
 FIXED_K_SALTS = 64  # two-phase rank fan-out (parallelism per stratum)
 
 
@@ -3678,9 +3620,11 @@ def _simhash_pairs_sql() -> str:
     """
 
 
-def _minhash_ctes() -> str:
-    """Shared CTE chain (shingles → signatures → bands → verified
-    pairs) consumed by `_minhash_sql` and the calibration oracle."""
+def _sql_sig_bands() -> str:
+    """DuckDB twin of `_minhash_sigs` + the LSH banding: the CTEs
+    ``halves`` → ``sig`` (m0..m11 per doc) → ``bands`` (doc_id, band,
+    bv) over the shingle CTE ``sh``, shared by the near-dup and ingest
+    oracles."""
     halves = ", ".join(
         f"substr(md5('{i}|' || s), 1, 16) AS h{2 * i}, "
         f"substr(md5('{i}|' || s), 17, 16) AS h{2 * i + 1}"
@@ -3694,10 +3638,16 @@ def _minhash_ctes() -> str:
         )
         for b in range(LSH_BANDS)
     )
-    return f"""{_SQL_SHINGLES},
-        halves AS (SELECT doc_id, {halves} FROM sh),
+    return f"""halves AS (SELECT doc_id, {halves} FROM sh),
         sig AS (SELECT doc_id, {mins} FROM halves GROUP BY doc_id),
-        bands AS ({band_selects}),
+        bands AS ({band_selects})"""
+
+
+def _minhash_ctes() -> str:
+    """Shared CTE chain (shingles → signatures → bands → verified
+    pairs) consumed by `_minhash_sql` and the calibration oracle."""
+    return f"""{_SQL_SHINGLES},
+        {_sql_sig_bands()},
         cand AS (
             SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
             FROM bands a JOIN bands b
@@ -3765,21 +3715,6 @@ def _ingest_gate_sql(
     form, so the boundary arithmetic matches the Spark side), and the
     keep rule excludes verified near-dups — the
     ``near_dup_mode="verify"`` contract."""
-    halves = ", ".join(
-        f"substr(md5('{i}|' || s), 1, 16) AS h{2 * i}, "
-        f"substr(md5('{i}|' || s), 17, 16) AS h{2 * i + 1}"
-        for i in range(MINHASH_PERMS // 2)
-    )
-    mins = ", ".join(f"min(h{i}) AS m{i}" for i in range(MINHASH_PERMS))
-    band_selects = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, md5({concat}) AS bv FROM sig".format(
-            b=b,
-            concat=" || ".join(
-                f"m{b * LSH_ROWS + r}" for r in range(LSH_ROWS)
-            ),
-        )
-        for b in range(LSH_BANDS)
-    )
     span = (
         f"SELECT doc_id, array_to_string(ws[(i * {SPAN_WORDS} + 1):"
         f"(i * {SPAN_WORDS} + {SPAN_WORDS})], ' ') AS ch "
@@ -3871,9 +3806,7 @@ def _ingest_gate_sql(
             WHERE ch IN (SELECT ch FROM hsp)
         ),
         {shingles},
-        halves AS (SELECT doc_id, {halves} FROM sh),
-        sig AS (SELECT doc_id, {mins} FROM halves GROUP BY doc_id),
-        bands AS ({band_selects}),
+        {_sql_sig_bands()},
         nd AS (
             SELECT DISTINCT bb.doc_id
             FROM bands bb

@@ -54,6 +54,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from kafka_flink_harshevents_spark.operators.text import (
+    LSH_BANDS,
+    MINHASH_PERMS,
+    band_key_sql,
+    md5_half_sql,
+    seeded_md5_sql,
+    shingles_sql,
+    spans_sql,
+)
+
 _OUT_SCHEMA = "doc_id long, kind long, hit long"
 _STATE_SCHEMA = "present long"
 
@@ -86,29 +96,17 @@ def _minhash_band_fps() -> F.Column:
     per-half transform; ``'g'`` sorts after every hex digit, and
     size ≥ 2 guarantees ≥ 1 shingle replaces it).
     """
-    from kafka_flink_harshevents_spark.queries.documents import (
-        LSH_BANDS,
-        LSH_ROWS,
-        MINHASH_PERMS,
-    )
-
-    n_half = MINHASH_PERMS // 2
-    hs = ", ".join(f"md5(concat('{i}|', s))" for i in range(n_half))
+    hs = ", ".join(seeded_md5_sql(i) for i in range(MINHASH_PERMS // 2))
     upd = ", ".join(
-        f"least(acc[{j}], substring(hs[{j // 2}], {1 + 16 * (j % 2)}, 16))"
+        f"least(acc[{j}], {md5_half_sql(f'hs[{j // 2}]', j)})"
         for j in range(MINHASH_PERMS)
     )
     bands = ", ".join(
-        f"concat('{b}|', md5(concat("
-        + ", ".join(f"acc[{b * LSH_ROWS + r}]" for r in range(LSH_ROWS))
-        + ")))"
-        for b in range(LSH_BANDS)
+        band_key_sql(b, lambda j: f"acc[{j}]") for b in range(LSH_BANDS)
     )
     return F.expr(
         "transform(array(split(text, ' ')), ws -> "
-        "CASE WHEN size(ws) >= 2 THEN aggregate("
-        "array_distinct(transform(sequence(0, size(ws) - 2), "
-        "i -> concat(ws[i], ' ', ws[i + 1]))), "
+        f"CASE WHEN size(ws) >= 2 THEN aggregate({shingles_sql()}, "
         f"array_repeat('g', {MINHASH_PERMS}), "
         f"(acc, s) -> transform(array(array({hs})), hs -> array({upd}))[0], "
         f"acc -> array({bands})) "
@@ -122,26 +120,17 @@ def doc_fingerprints(docs: DataFrame) -> DataFrame:
     kind 1 = non-overlapping word span (the batch query's ``_spans``),
     kind 2 = MinHash-LSH band hash (near-dup candidate signal).
     Works on batch and streaming frames alike (pure projection)."""
-    from kafka_flink_harshevents_spark.queries.documents import SPAN_WORDS
-
     exact = docs.select(
         "doc_id", "is_seed", F.lit(0).cast("long").alias("kind"),
         F.md5("text").alias("fp"),
     )
-    # identical chunking expression to queries.documents._spans, inlined
-    # (no join back for is_seed — that would be a stream-stream self-join)
+    # the batch query's span chunking over the row's own words (no join
+    # back for is_seed — that would be a stream-stream self-join)
     spans = docs.select(
         "doc_id",
         "is_seed",
         F.lit(1).cast("long").alias("kind"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, cast(ceil(size(split(text, ' ')) "
-                f"/ {SPAN_WORDS}.0) as int) - 1), "
-                f"i -> array_join(slice(split(text, ' '), "
-                f"i * {SPAN_WORDS} + 1, {SPAN_WORDS}), ' '))"
-            )
-        ).alias("fp"),
+        F.explode(F.expr(spans_sql("split(text, ' ')"))).alias("fp"),
     )
     minhash = docs.select(
         "doc_id",

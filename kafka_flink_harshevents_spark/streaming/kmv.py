@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from kafka_flink_harshevents_spark.operators.text import SAMPLE_FIXED_K, _md5_unit
 from kafka_flink_harshevents_spark.queries.events import KMV_K
 
 _OUT_SCHEMA = (
@@ -171,11 +172,6 @@ def kmv_set_ops_snapshot(latest: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Deterministic fixed-k reservoir — the streaming twin of
 # queries.documents.doc_sample_fixed_k.
-
-from kafka_flink_harshevents_spark.queries.documents import (  # noqa: E402
-    SAMPLE_FIXED_K,
-    _md5_unit,
-)
 
 _RES_OUT_SCHEMA = "lang string, doc_id long, u double, emit_seq long"
 _RES_STATE_SCHEMA = "us array<double>, ids array<long>, emit_seq long"

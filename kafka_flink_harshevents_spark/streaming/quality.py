@@ -2,8 +2,8 @@
 side-output split (kafkaConsumer.js topic routing / O2, see
 `plans/pipeline.py::consumer_stage`) applied to the LLM-data ingest
 path: a continuous crawl scores every arriving document with EXACTLY
-the batch quality battery (`queries.documents.quality_frame` — one
-shared projection, so stream and batch can never drift) and routes it
+the batch quality battery (`operators.text.quality_columns` — one
+shared definition, so stream and batch can never drift) and routes it
 keep / review / drop.
 
 Scale shape: the scorer is a stateless narrow projection (array ops on
@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kafka_flink_harshevents_spark.queries.documents import quality_frame
+from kafka_flink_harshevents_spark.operators.text import quality_columns
 
 # bucket → route: the ingest policy the reference's threshold-derivation
 # operators (F10) use — promote/hold/discard tiers.
@@ -33,15 +33,12 @@ def with_quality(docs: DataFrame) -> DataFrame:
     frame IN PLACE (all original columns kept) — the stateless
     projection both the router and composed ingest pipelines build on.
     The score/bucket expressions come from the ONE shared factory
-    (`queries.documents.quality_columns`), so drift from the batch
+    (`operators.text.quality_columns`), so drift from the batch
     entry is structurally impossible."""
-    from kafka_flink_harshevents_spark.queries.documents import quality_columns
-
     score, bucket = quality_columns()
-    route = (
-        F.when(bucket == "high", F.lit("keep"))
-        .when(bucket == "medium", F.lit("review"))
-        .otherwise(F.lit("drop"))
+    route = F.element_at(
+        F.create_map(*[F.lit(x) for kv in ROUTE_BY_BUCKET.items() for x in kv]),
+        bucket,
     )
     return (
         docs.filter(F.col("text").isNotNull())
@@ -67,5 +64,5 @@ def quality_route_streams(docs: DataFrame) -> dict[str, DataFrame]:
     scored = quality_scored_stream(docs)
     return {
         route: scored.filter(F.col("route") == route)
-        for route in ("keep", "review", "drop")
+        for route in ROUTE_BY_BUCKET.values()
     }

@@ -16,11 +16,11 @@ import re
 
 from pyspark.sql import functions as F
 
+from kafka_flink_harshevents_spark.operators.text import SPAN_WORDS
 from kafka_flink_harshevents_spark.queries.documents import (
     PII_EMAIL_RE,
     PII_IPV4_RE,
     PII_PHONE_RE,
-    SPAN_WORDS,
     pii_counts,
 )
 
@@ -112,15 +112,7 @@ def _span_dedup_on(spark, texts):
     # Rebuild the same plan by monkey-free substitution: call the private
     # pieces directly on the fixture frame.
     d = df.select("doc_id", F.split("text", " ").alias("ws"))
-    chunks = d.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, cast(ceil(size(ws) / {SPAN_WORDS}.0) as int) - 1), "
-                f"i -> array_join(slice(ws, i * {SPAN_WORDS} + 1, {SPAN_WORDS}), ' '))"
-            )
-        ).alias("chunk_idx", "ch"),
-    )
+    chunks = D._spans(d)
     winners = (
         chunks.groupBy("ch")
         .agg(F.min(F.struct("doc_id", "chunk_idx")).alias("w"))
@@ -436,3 +428,48 @@ def test_bpe_encode_matches_reference(spark):
     assert any(
         ref_counts[w] < len(w) + 1 for w in words
     ), "no merge ever fired — encode is vacuous"
+
+
+def test_text_kernels_spelled_once():
+    """Layering guard for the dedup kernels: (a) no package module
+    outside ``queries/`` imports ``queries.documents`` — streaming and
+    plans take their kernels from ``operators/text.py``; (b) the Spark
+    word-bigram lambda ``concat(ws[i], ' ', ws[i + 1])``, over any
+    array name, is written only in ``operators/text.py``. The DuckDB
+    twins spell it ``ws[i] || ' ' || ws[i + 1]`` and are not matched."""
+    import ast
+    import pathlib
+
+    import kafka_flink_harshevents_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    bigram = re.compile(r"concat\((\{?\w+\}?)\[i\], ' ', \1\[i \+ 1\]\)")
+    documents = "kafka_flink_harshevents_spark.queries.documents"
+    importers, spellers = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""] + [
+                    f"{node.module}.{a.name}" for a in node.names
+                ]
+            else:
+                mods = []
+            if documents in mods and not rel.startswith("queries/"):
+                importers.append(rel)
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                text = node.value
+            elif isinstance(node, ast.JoinedStr):
+                text = "".join(
+                    v.value if isinstance(v, ast.Constant)
+                    else "{" + ast.unparse(v.value) + "}"
+                    for v in node.values
+                )
+            else:
+                continue
+            if bigram.search(text):
+                spellers.append(rel)
+    assert importers == []
+    assert sorted(set(spellers)) == ["operators/text.py"]

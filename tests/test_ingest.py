@@ -198,7 +198,7 @@ def test_verify_mode_rejects_verified_near_dups(spark, tmp_path):
     same setup in advisory mode keeps it — and the verified set
     matches a hand Jaccard over the same shingles (parity with
     running the batch dedup after the fact)."""
-    from kafka_flink_harshevents_spark.queries.documents import (
+    from kafka_flink_harshevents_spark.operators.text import (
         LSH_VERIFY_THRESHOLD,
     )
 
@@ -326,76 +326,6 @@ def test_verify_mode_crash_replay(spark, tmp_path):
     got = sorted(x["doc_id"] for x in corpus.read().collect())
     assert got == [1, 11]
     assert fps.last_committed_batch("ing") == 1
-
-
-@pytest.mark.slow
-def test_bucketed_store_join_parity(spark, tmp_path):
-    """store_join='bucketed' (the storage-partitioned prototype) must
-    produce verdicts identical to the shuffle path, with ZERO store
-    rows entering the Spark plan (no parquet scan on the store side),
-    and must honor store deletion vectors."""
-    from kafka_flink_harshevents_spark.plans.ingest import (
-        _bucketed_store_hits,
-    )
-    from kafka_flink_harshevents_spark.streaming.dedup import (
-        doc_fingerprints,
-    )
-
-    hist = spark.createDataFrame(_HIST, _SCHEMA)
-    batch = spark.createDataFrame(
-        [
-            (10, _HIST[0][1], 1),                       # exact dup
-            (11, "the quick brown fox jumps over the lazy "
-                 "entirely novel tail of words here", 1),  # span dup
-            (12, "nothing in common with anything stored here", 1),
-        ],
-        _SCHEMA,
-    )
-    results = {}
-    for mode in ("shuffle", "bucketed"):
-        corpus, fps = _tables(spark, tmp_path / mode)
-        corpus_ingest(corpus, fps, hist, store_join=mode)
-        r = corpus_ingest(corpus, fps, batch, store_join=mode)
-        results[mode] = {
-            k: r[k] for k in
-            ("docs_in", "exact_dups", "span_dups", "near_dups", "kept")
-        }
-        results[mode]["rows"] = sorted(
-            x["doc_id"] for x in corpus.read().collect()
-        )
-    assert results["shuffle"] == results["bucketed"]
-
-    # plan shape: the bucketed probe never scans the store via Spark
-    corpus, fps = _tables(spark, tmp_path / "plan")
-    corpus_ingest(corpus, fps, hist)
-    parts = doc_fingerprints(
-        batch.select("doc_id", "text").withColumn("is_seed", F.lit(0))
-    ).select("doc_id", "kind", "fp")
-    plan = _bucketed_store_hits(fps, parts)._jdf.queryExecution().executedPlan().toString()
-    assert "parquet" not in plan.lower()
-    assert "FlatMapGroupsInPandas" in plan
-
-    # deletion vectors honored: delete the exact-hash row for doc 1's
-    # text, the bucketed probe must stop matching it
-    fp0 = fps.read().filter(F.col("kind") == 0).collect()
-    import hashlib
-
-    target = hashlib.md5(_HIST[0][1].encode()).hexdigest()
-    assert any(r["fp"] == target for r in fp0)
-    fps.delete_where(f"kind = 0 AND fp = '{target}'",
-                     mode="merge_on_read")
-    hit = _bucketed_store_hits(
-        fps, parts.filter(F.col("kind") == 0)
-    ).collect()
-    assert all(r["fp"] != target for r in hit)
-
-    # refusals: attributed store / verify-mode combination
-    corpus_a, fps_a = _tables_attr(spark, tmp_path / "attr")
-    with pytest.raises(ValueError, match="keyed"):
-        _bucketed_store_hits(fps_a, parts)
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        corpus_ingest(corpus_a, fps_a, batch, near_dup_mode="verify",
-                      store_join="bucketed")
 
 
 @pytest.mark.slow
@@ -539,76 +469,3 @@ def test_streaming_verify_ingest_kill_and_restart(spark, tmp_path):
     run()  # nothing new: no commit on either table
     assert corpus.latest_version() == v
     assert fps.latest_version() == fv
-
-
-@pytest.mark.slow
-def test_store_join_auto_selection(spark, tmp_path, monkeypatch):
-    """store_join='auto' (the default): bucketed once the store is
-    join-key-bucketed AND past the size floor; shuffle below it, and
-    always shuffle for attributed / verify-mode stores (auto never
-    raises). Verdict parity holds on whichever path it picks."""
-    import kafka_flink_harshevents_spark.plans.ingest as ing
-
-    hist = spark.createDataFrame(_HIST, _SCHEMA)
-    batch = spark.createDataFrame(
-        [(10, _HIST[0][1], 1),
-         (12, "nothing in common with anything stored here", 1)],
-        _SCHEMA,
-    )
-    picked = []
-    real = ing._bucketed_store_hits
-
-    def spy(fps, parts):
-        picked.append("bucketed")
-        return real(fps, parts)
-
-    monkeypatch.setattr(ing, "_bucketed_store_hits", spy)
-
-    # floor = 0 → every auto call on an eligible store goes bucketed
-    monkeypatch.setattr(ing, "_BUCKETED_AUTO_MIN_STORE_BYTES", 0)
-    corpus, fps = _tables(spark, tmp_path / "low")
-    corpus_ingest(corpus, fps, hist)
-    r = corpus_ingest(corpus, fps, batch)
-    assert picked and r["exact_dups"] == 1 and r["kept"] == 1
-
-    # huge floor → auto resolves to shuffle
-    picked.clear()
-    monkeypatch.setattr(
-        ing, "_BUCKETED_AUTO_MIN_STORE_BYTES", 1 << 60
-    )
-    corpus2, fps2 = _tables(spark, tmp_path / "high")
-    corpus_ingest(corpus2, fps2, hist)
-    r2 = corpus_ingest(corpus2, fps2, batch)
-    assert not picked
-    assert {k: r2[k] for k in ("exact_dups", "span_dups", "kept")} \
-        == {k: r[k] for k in ("exact_dups", "span_dups", "kept")}
-
-    # attributed store + verify mode under auto: shuffle, no refusal
-    monkeypatch.setattr(ing, "_BUCKETED_AUTO_MIN_STORE_BYTES", 0)
-    corpus3, fps3 = _tables_attr(spark, tmp_path / "attr")
-    corpus_ingest(corpus3, fps3, hist, near_dup_mode="verify")
-    r3 = corpus_ingest(corpus3, fps3, batch, near_dup_mode="verify")
-    assert not picked and r3["exact_dups"] == 1
-
-
-def test_auto_resolution_skipped_on_replayed_batch(
-    spark, tmp_path, monkeypatch
-):
-    """A replayed (already-committed) batch returns before the auto
-    store-join resolution — it must not pay the store's commit-log
-    replay in _store_live_bytes."""
-    import kafka_flink_harshevents_spark.plans.ingest as ing
-
-    corpus, fps = _tables(spark, tmp_path)
-    txn = {"app_id": "auto-replay", "batch_id": 1}
-    corpus_ingest(corpus, fps, spark.createDataFrame(_HIST, _SCHEMA),
-                  txn=txn)
-    calls = []
-    real = ing._store_live_bytes
-    monkeypatch.setattr(
-        ing, "_store_live_bytes",
-        lambda t: calls.append(1) or real(t),
-    )
-    r = corpus_ingest(corpus, fps, spark.createDataFrame(_HIST, _SCHEMA),
-                      txn=txn)
-    assert r["replayed"] and calls == []

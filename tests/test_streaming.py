@@ -1044,10 +1044,10 @@ def test_streaming_incremental_dedup_matches_batch(spark, tmp_path):
     doc_incremental_dedup's per-doc verdicts exactly — and a third wave
     re-sending an accepted doc proves the store keeps growing (the
     'runs forever' property a crawl pipeline needs)."""
+    from kafka_flink_harshevents_spark.operators.text import _md5_unit
     from kafka_flink_harshevents_spark.queries._util import load
     from kafka_flink_harshevents_spark.queries.documents import (
         BATCH_FRACTION,
-        _md5_unit,
         doc_incremental_dedup,
     )
     from kafka_flink_harshevents_spark.streaming.dedup import (
@@ -1138,47 +1138,53 @@ def test_streaming_incremental_dedup_matches_batch(spark, tmp_path):
 
 
 def test_minhash_band_fps_match_batch_pipeline(spark):
-    """The stream's per-row array-fold MinHash banding must reproduce the
-    batch doc_minhash_lsh_pairs signature pipeline (shingle explode →
-    groupBy min → band md5) band-for-band on real docs — same seeds,
-    same md5-halves, same band grouping."""
+    """The stream's per-row array-fold MinHash banding
+    (``_minhash_band_fps``) must give exactly the band keys of the batch
+    signature pipeline (``_minhash_sigs`` over ``_shingles``, banded by
+    the shared ``band_key_sql``) on real docs plus three edge rows: a
+    one-word doc and an empty string (no bands on either side) and a
+    doc whose bigrams repeat."""
     from pyspark.sql import functions as F
+    from kafka_flink_harshevents_spark.operators.text import (
+        LSH_BANDS,
+        band_key_sql,
+    )
     from kafka_flink_harshevents_spark.queries._util import load
     from kafka_flink_harshevents_spark.queries.documents import (
-        LSH_BANDS,
-        LSH_ROWS,
-        MINHASH_PERMS,
+        _minhash_sigs,
         _shingles,
     )
     from kafka_flink_harshevents_spark.streaming.dedup import _minhash_band_fps
     from tests.conftest import SF_DIR
 
+    edge = spark.createDataFrame(
+        [(-1, "solo"), (-2, "a b a b a b c"), (-3, "")],
+        "doc_id long, text string",
+    )
     d = load(spark, SF_DIR, "documents").select("doc_id", "text")
+    d = d.unionByName(edge)
     stream_form = {
         (r["doc_id"], r["fp"])
         for r in d.select(
             "doc_id", F.explode(_minhash_band_fps()).alias("fp")
         ).collect()
     }
-    half_cols = []
-    for i in range(MINHASH_PERMS // 2):
-        h = F.md5(F.concat(F.lit(f"{i}|"), F.col("s")))
-        half_cols.append(F.substring(h, 1, 16).alias(f"h{2 * i}"))
-        half_cols.append(F.substring(h, 17, 16).alias(f"h{2 * i + 1}"))
-    sigs = (
-        _shingles(d)
-        .select("doc_id", *half_cols)
-        .groupBy("doc_id")
-        .agg(*[F.min(f"h{i}").alias(f"m{i}") for i in range(MINHASH_PERMS)])
+    keys = F.array(
+        *[F.expr(band_key_sql(b, lambda j: f"m{j}")) for b in range(LSH_BANDS)]
     )
-    batch_form = set()
-    for b in range(LSH_BANDS):
-        bv = F.md5(F.concat(*[F.col(f"m{b * LSH_ROWS + r}") for r in range(LSH_ROWS)]))
-        batch_form |= {
-            (r["doc_id"], f"{b}|" + r["bv"])
-            for r in sigs.select("doc_id", bv.alias("bv")).collect()
-        }
-    assert stream_form == batch_form and stream_form
+    batch_form = {
+        (r["doc_id"], r["fp"])
+        for r in _minhash_sigs(_shingles(d))
+        .select("doc_id", F.explode(keys).alias("fp"))
+        .collect()
+    }
+    assert stream_form == batch_form
+    by_doc = {}
+    for doc, fp in stream_form:
+        by_doc.setdefault(doc, set()).add(fp)
+    assert -1 not in by_doc and -3 not in by_doc
+    assert len(by_doc[-2]) == LSH_BANDS
+    assert len(by_doc) > 100
 
 
 def test_dedup_store_survives_restart(spark, tmp_path):
@@ -1523,10 +1529,10 @@ def test_streaming_delete_propagation_matches_batch(spark, tmp_path):
     reproduce doc_delete_propagation's per-source audit exactly. A
     third wave re-ingesting deleted content must be flagged as
     tombstoned (deleted content cannot re-enter the corpus)."""
+    from kafka_flink_harshevents_spark.operators.text import _md5_unit
     from kafka_flink_harshevents_spark.queries._util import load
     from kafka_flink_harshevents_spark.queries.documents import (
         DELETE_REQUEST_RATE,
-        _md5_unit,
         doc_delete_propagation,
     )
     from kafka_flink_harshevents_spark.streaming.dedup import (
