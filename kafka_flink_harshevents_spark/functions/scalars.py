@@ -43,16 +43,6 @@ def iso8601_ms(epoch_ms: Column) -> Column:
     )
 
 
-def epoch_seconds_now() -> Column:
-    """``Math.floor(Date.now()/1000)`` (``mqtt_publish.js:134-136``)."""
-    return F.unix_timestamp()
-
-
-def epoch_millis_now() -> Column:
-    """``Date.now()`` (``mqtt_publish.js:238``)."""
-    return F.unix_millis(F.current_timestamp())
-
-
 EARTH_RADIUS_KM = 6371.0088  # IUGG mean radius
 
 

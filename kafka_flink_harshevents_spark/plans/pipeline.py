@@ -33,7 +33,6 @@ from kafka_flink_harshevents_spark.sources.kafka import (
     VIOLATIONS_TOPIC,
     read_telemetry_stream,
     records_for_kafka,
-    write_events_stream,
 )
 from kafka_flink_harshevents_spark.streaming.consumer import (
     latency_records,
@@ -233,5 +232,4 @@ __all__ = [
     "run_streaming_pipeline",
     "run_consumer_stage",
     "run_full_topology",
-    "write_events_stream",
 ]

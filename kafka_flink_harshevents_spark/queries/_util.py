@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -18,6 +22,17 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+
+def temp_dir(prefix: str) -> str:
+    """A fresh ``tempfile.mkdtemp`` directory that is removed when the
+    interpreter exits. Entries that build txlog tables return LAZY
+    frames which read the table after the entry returns, so the
+    removal cannot happen sooner; ``atexit`` runs it at process end
+    (``ignore_errors``: the directory may already be gone)."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -50,6 +50,7 @@ from kafka_flink_harshevents_spark.queries._util import (
     hex8_int_sql,
     load,
     spread,
+    temp_dir,
 )
 from kafka_flink_harshevents_spark.streaming.dedup import doc_fingerprints
 
@@ -1674,8 +1675,6 @@ def doc_ingest_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus row count, and the replay-is-a-no-op boolean (versions
     unchanged on the second call) — so the whole loop, not just its
     pieces, is driver-checked."""
-    import tempfile
-
     from kafka_flink_harshevents_spark.plans.ingest import (
         corpus_ingest,
         create_fingerprint_table,
@@ -1690,13 +1689,13 @@ def doc_ingest_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist, batch = _ingest_frames(spark, sf_dir)
     corpus = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="ing-c-"),
+        temp_dir(prefix="ing-c-"),
         key_cols=("doc_id",),
         order_col="ver",
         n_buckets=2,
     )
     fps = create_fingerprint_table(
-        spark, tempfile.mkdtemp(prefix="ing-f-"), n_buckets=2
+        spark, temp_dir(prefix="ing-f-"), n_buckets=2
     )
     # seed by direct append (the documented replay pattern: history
     # fingerprints come from somewhere durable) — one commit per
@@ -1754,8 +1753,6 @@ def doc_ingest_verify_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle states the verified set by re-deriving band candidates and
     their exact Jaccards in SQL — parity with running the batch dedup
     after the fact, which is exactly what verify mode replaces."""
-    import tempfile
-
     from kafka_flink_harshevents_spark.plans.ingest import (
         corpus_ingest,
         create_fingerprint_table,
@@ -1770,7 +1767,7 @@ def doc_ingest_verify_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist, batch = _ingest_frames(spark, sf_dir)
     corpus = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="ingv-c-"),
+        temp_dir(prefix="ingv-c-"),
         key_cols=("doc_id",),
         order_col="ver",
         n_buckets=2,
@@ -1780,7 +1777,7 @@ def doc_ingest_verify_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_cols=("doc_id",),
     )
     fps = create_fingerprint_table(
-        spark, tempfile.mkdtemp(prefix="ingv-f-"), n_buckets=2,
+        spark, temp_dir(prefix="ingv-f-"), n_buckets=2,
         attributed=True,
     )
     # seed by direct append (the documented replay pattern), with doc

@@ -58,7 +58,12 @@ def ev_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-HLL_REL_ERROR = 0.05  # accuracy gate for the sketch path (HLL++ rsd 0.05)
+HLL_REL_ERROR = 0.05  # accuracy gate for the sketch path
+# HLL++ relative standard deviation the sketch runs at. It sits well
+# under the gate: at rsd 0.05 the gate was one standard deviation wide,
+# and at sf0.1 (1,500 distinct users per type) the estimate missed by
+# 6.7%; rsd 0.01 misses by 0.47% there.
+HLL_RSD = 0.01
 
 KMV_K = 64  # k-minimum-values sketch size (stderr ≈ 1/√(k−2) ≈ 12.7%)
 KMV_SALTS = 64  # pre-aggregation fan-in bound for the two-phase top-k
@@ -320,7 +325,7 @@ def ev_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     agg = e.groupBy("event_type").agg(
         F.count_distinct("user_id").cast("long").alias("n_exact"),
-        F.approx_count_distinct("user_id", HLL_REL_ERROR).alias("n_est"),
+        F.approx_count_distinct("user_id", HLL_RSD).alias("n_est"),
     )
     # integer-only gate: |est - exact| * 100 <= 5 * exact  (rel = 0.05)
     pct = int(HLL_REL_ERROR * 100)

@@ -21,12 +21,10 @@ buckets, never table size).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_flink_harshevents_spark.queries._util import load
+from kafka_flink_harshevents_spark.queries._util import load, temp_dir
 from kafka_flink_harshevents_spark.sources.txlog import TxTable
 
 _KEY_CAP = 2000  # constant row universe at every SF (orders keys are dense)
@@ -61,7 +59,7 @@ def _build_mutated_table(
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txq-"),
+        temp_dir(prefix="txq-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,  # entry measures commit semantics, not file fan-out
@@ -180,7 +178,7 @@ def q_txlog_zorder_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txz-"),
+        temp_dir(prefix="txz-"),
         key_cols=("k",),
         order_col="k",
         n_buckets=2,
@@ -249,7 +247,7 @@ def q_txlog_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txw-"),
+        temp_dir(prefix="txw-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=4,
@@ -285,7 +283,7 @@ def q_txlog_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txc-"),
+        temp_dir(prefix="txc-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -334,14 +332,14 @@ def q_txlog_clone_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     src = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txsrc-"),
+        temp_dir(prefix="txsrc-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
         generated_cols={"amount_band": "CAST(amount_c % 97 AS BIGINT)"},
     )
     src.append(base)  # frame lacks amount_band -> computed at write
-    clone = src.clone_to(tempfile.mkdtemp(prefix="txcl-"))
+    clone = src.clone_to(temp_dir(prefix="txcl-"))
     src.delete_where("k % 7 = 0")
     clone.merge_upsert(
         base.filter(F.col("k") % 5 == 0).select(
@@ -372,7 +370,7 @@ def q_txlog_generated_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txg-"),
+        temp_dir(prefix="txg-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -401,7 +399,7 @@ def q_txlog_restore_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txr-"),
+        temp_dir(prefix="txr-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -431,7 +429,7 @@ def q_txlog_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txd-"),
+        temp_dir(prefix="txd-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -463,7 +461,7 @@ def q_txlog_compact_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txb-"),
+        temp_dir(prefix="txb-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -530,7 +528,7 @@ def q_txlog_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txn-"),
+        temp_dir(prefix="txn-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -579,7 +577,7 @@ def q_txlog_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txt-"),
+        temp_dir(prefix="txt-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -624,7 +622,7 @@ def q_txlog_where_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txws-"),
+        temp_dir(prefix="txws-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=4,
@@ -664,7 +662,7 @@ def q_txlog_explain_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txes-"),
+        temp_dir(prefix="txes-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=4,
@@ -704,7 +702,7 @@ def q_txlog_merge_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txmp-"),
+        temp_dir(prefix="txmp-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=4,
@@ -746,7 +744,7 @@ def q_txlog_auto_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txac-"),
+        temp_dir(prefix="txac-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=4,
@@ -784,7 +782,7 @@ def q_txlog_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txrw-"),
+        temp_dir(prefix="txrw-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -819,7 +817,7 @@ def q_txlog_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txm-"),
+        temp_dir(prefix="txm-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -864,7 +862,7 @@ def q_txlog_merge_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txmcl-"),
+        temp_dir(prefix="txmcl-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -916,7 +914,7 @@ def q_txlog_merge_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txme-"),
+        temp_dir(prefix="txme-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -978,7 +976,7 @@ def q_txlog_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txid-"),
+        temp_dir(prefix="txid-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=1,
@@ -1036,7 +1034,7 @@ def q_txlog_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txrt-"),
+        temp_dir(prefix="txrt-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=1,
@@ -1074,13 +1072,13 @@ def q_txlog_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is simply ``orders`` once over: any skip-set drift
     (double-load or missed file) breaks the row count and hash."""
     base = _base_frame(spark, sf_dir)
-    land = tempfile.mkdtemp(prefix="txcp-land-")
+    land = temp_dir(prefix="txcp-land-")
     base.filter(F.col("k") % 2 == 0).coalesce(1).write.parquet(
         f"{land}/even"
     )
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txcp-"),
+        temp_dir(prefix="txcp-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -1104,12 +1102,12 @@ def q_txlog_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     adoption, post-convert merge semantics, and layout adoption are
     all driver-checked."""
     base = _base_frame(spark, sf_dir)
-    land = tempfile.mkdtemp(prefix="txcv-src-")
+    land = temp_dir(prefix="txcv-src-")
     base.repartition(3).write.mode("overwrite").parquet(f"{land}/data")
     t = TxTable.convert_from_parquet(
         spark,
         f"{land}/data",
-        tempfile.mkdtemp(prefix="txcv-"),
+        temp_dir(prefix="txcv-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -1151,7 +1149,7 @@ def q_txlog_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txpart-"),
+        temp_dir(prefix="txpart-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -1175,12 +1173,12 @@ def q_txlog_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep = t.prune_report({}, eq={"st": "O"})
     n_after_delete = t.read().count()
     # zero-copy hive adoption answers the same partition query
-    land = tempfile.mkdtemp(prefix="txpart-src-")
+    land = temp_dir(prefix="txpart-src-")
     base.write.partitionBy("st").parquet(f"{land}/data")
     tc = TxTable.convert_from_parquet(
         spark,
         f"{land}/data",
-        tempfile.mkdtemp(prefix="txpart-cv-"),
+        temp_dir(prefix="txpart-cv-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -1221,7 +1219,7 @@ def q_txlog_sql_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txsqlg-"),
+        temp_dir(prefix="txsqlg-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -1280,7 +1278,7 @@ def q_txlog_show_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txsp-"),
+        temp_dir(prefix="txsp-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -1316,7 +1314,7 @@ def q_txlog_optimize_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txow-"),
+        temp_dir(prefix="txow-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,
@@ -1375,7 +1373,7 @@ def q_txlog_time_travel_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir)
     t = TxTable.create(
         spark,
-        tempfile.mkdtemp(prefix="txtt-"),
+        temp_dir(prefix="txtt-"),
         key_cols=("k",),
         order_col="ver",
         n_buckets=2,

@@ -20,11 +20,3 @@ def read_telemetry_jsonl(spark: SparkSession, path: str) -> DataFrame:
     same lenient parser as the Kafka path (so file-based tests exercise
     the production parse)."""
     return parse_telemetry(spark.read.text(path), value_col="value")
-
-
-def append_json(df: DataFrame, path: str) -> None:
-    """Append-only JSON sink (K7's durable half). The reference's 5 s
-    read-modify-write of one growing array (kafkaConsumer.js:84-102)
-    does not scale past one process; an append of JSONL part-files has
-    the same information content and is safe from any number of writers."""
-    df.write.mode("append").json(path)

@@ -6,7 +6,8 @@ The reference's topology (``README.md:7-15``):
                   --Node consumer--> MongoDB/Redis
 
 Here the derive stage is ``read_telemetry_stream`` → operators →
-``write_events_stream``; the consumer stage is ``read_event_streams``
+``records_for_kafka`` → the Kafka sink (``plans/pipeline.py::
+run_streaming_pipeline``); the consumer stage is ``read_event_streams``
 (both topics in one subscription, topic column kept for routing — O3).
 
 No broker runs in the test container, so these are exercised indirectly:
@@ -109,30 +110,3 @@ def records_for_kafka(df: DataFrame, key_col: str | None = "device_uuid") -> Dat
         F.lit("unknown-device"),
     ).otherwise(F.trim(F.col(key_col)))
     return df.select(key.alias("key"), value.alias("value"))
-
-
-def write_events_stream(
-    df: DataFrame,
-    bootstrap: str,
-    topic: str,
-    checkpoint_dir: str,
-    key_col: str | None = "device_uuid",
-    trigger_seconds: int | None = None,
-):
-    """Start one Kafka sink query (K1): serialize + produce.
-
-    Returns the started ``StreamingQuery``. Two calls (violations /
-    device-status) replace the reference's side-output split (O2) — each
-    query recomputes the narrow parse/derive chain, which is cheaper at
-    scale than coordinating a shared persist across triggers.
-    """
-    writer = (
-        records_for_kafka(df, key_col=key_col)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

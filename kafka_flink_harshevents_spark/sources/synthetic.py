@@ -195,23 +195,3 @@ def synthetic_telemetry(
     """Batch synthetic telemetry: ``n_rows`` deterministic rows."""
     base = spark.range(0, n_rows, numPartitions=num_partitions)
     return telemetry_columns(base, seed=seed, base_ts=base_ts, n_devices=n_devices)
-
-
-def synthetic_telemetry_stream(
-    spark: SparkSession,
-    rows_per_second: int = 10,
-    n_devices: int = 5,
-    seed: int = 42,
-    base_ts: int = 1_760_000_000,
-) -> DataFrame:
-    """Streaming variant off the ``rate`` source — same projection, so
-    batch tests are the oracle for the streaming path."""
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", str(rows_per_second)
-    ).load()
-    return telemetry_columns(
-        rate.select(F.col("value").alias("id")),
-        seed=seed,
-        base_ts=base_ts,
-        n_devices=n_devices,
-    )

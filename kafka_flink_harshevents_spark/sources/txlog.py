@@ -3766,6 +3766,11 @@ class TxTable:
         deterministic given a snapshot, so retries are safe). Returns
         the committed version.
 
+        Ties at equal ``order_col`` resolve deterministically, by the
+        ``apply_cdc`` ordering contract: an incoming row beats the
+        existing one, and equal-rank incoming rows are ordered by a
+        stable content hash, so replaying a batch picks the same winner.
+
         ``merge_schema=True`` is Delta's ``mergeSchema`` ADD-COLUMN
         evolution: incoming rows may carry columns the table lacks (and
         vice versa) — the union is taken by name with NULLs filling
@@ -3781,6 +3786,34 @@ class TxTable:
             self._with_generated(df, "merge_upsert"), "merge_upsert"
         )
         self._check_constraints(df, "merge_upsert batch")
+        return self._after_data_commit(self._keyed_merge(
+            df.withColumn("_del", F.lit(False)),
+            lambda live, incoming, m: self._merge_hit_files(
+                live, incoming, m["key_cols"]
+            ),
+            "merge_upsert", txn, max_retries, merge_schema,
+        ))
+
+    def _keyed_merge(
+        self,
+        df: DataFrame,
+        hit_files,
+        op: str,
+        txn: dict | None,
+        max_retries: int,
+        merge_schema: bool,
+    ) -> int:
+        """The ONE keyed latest-wins body behind ``merge_upsert`` and
+        ``apply_cdc``: ``df`` carries the table columns plus a boolean
+        ``_del`` (TRUE = retract the key; ``merge_upsert`` passes all
+        FALSE). Per attempt: bucket the batch, pick the existing files
+        to rewrite with ``hit_files(live, incoming, meta)``, union them
+        with the batch, keep one row per key — ``order_col`` desc, then
+        incoming before existing, then delete before upsert, then a
+        stable ``xxhash64`` content hash, so replaying a batch always
+        picks the same winner — drop keys whose winner is a delete, and
+        commit ``op="merge"`` (add = the rewritten buckets, remove =
+        the hit files)."""
 
         def attempt():
             # meta and bucketing re-derived PER ATTEMPT: a rebucket()
@@ -3790,18 +3823,13 @@ class TxTable:
             m = self.meta
             incoming = self._with_bucket(df)
             base_v, live_map, snap_schema, dvs = self._replay()
-            live = list(live_map.values())
-            hit = self._merge_hit_files(live, incoming, m["key_cols"])
+            hit = hit_files(list(live_map.values()), incoming, m)
             # validate/widen BEFORE staging — a schema mismatch must not
             # write orphan files first
             schema_rec = self._schema_union_json(
-                incoming, snap_schema, merge_schema, "merge_upsert"
+                incoming.drop("_del"), snap_schema, merge_schema, op
             )
-            idc0 = list(self._identity_specs(m))
-
-            def ex_flag(d, v):
-                return d.withColumn("_ex", F.lit(v)) if idc0 else d
-
+            inc = incoming.withColumn("_src", F.lit(1))
             if hit:
                 # read hit files under the LOG's schema via the DV-aware
                 # reader (deleted rows must not resurrect through the
@@ -3810,13 +3838,14 @@ class TxTable:
                     self._open_files(
                         hit, snap_schema, dvs
                     ).drop("_bucket")
+                ).withColumn("_del", F.lit(False)).withColumn(
+                    "_src", F.lit(0)
                 )
-                merged = ex_flag(existing, 1).unionByName(
-                    ex_flag(incoming, 0),
-                    allowMissingColumns=merge_schema,
+                merged = existing.unionByName(
+                    inc, allowMissingColumns=merge_schema
                 )
             else:
-                merged = ex_flag(incoming, 0)
+                merged = inc
             from pyspark.sql import Window
 
             # ONE exchange for the whole merge (guide §2.4): hash-
@@ -3834,32 +3863,44 @@ class TxTable:
             # info, so that one re-adds only when NULL ids need fills).
             merged = merged.repartition("_bucket")
             bkeys = ["_bucket", *m["key_cols"]]
+            # data_cols intentionally still includes the identity
+            # columns: existing-vs-incoming rows hash differently
+            # there, which only sharpens the deterministic tie-break.
+            # xxhash64 refuses MAP-typed input, so map columns sit out
+            # of the hash (rows differing only there tie unspecified)
+            data_cols = [
+                c for c in merged.columns
+                if c not in ("_del", "_src", "_bucket")
+                and "map<" not in merged.schema[c].dataType.simpleString()
+            ]
 
             # IDENTITY / row tracking: the winner for an EXISTING key
             # is an update — it INHERITS the key's current id, and the
             # EXISTING side's value takes precedence over any explicit
             # BY DEFAULT value the incoming row carries (an update may
-            # not change identity — the merge_into/update_where rule).
-            # Winners for new keys keep their explicit value or stay
-            # NULL for the watermark fill. The inherited id is the one
-            # carried by the LATEST-WINS existing row (max_by over
-            # (order_col, id) — id-desc tie-break, non-null beating
-            # null at equal order), NOT the per-key max id: existing
-            # duplicates for one key (blind appends) must not rewrite
-            # the surviving row's id to some other duplicate's — the
-            # row-tracking contract preserves the survivor's id
-            # byte-identically. Same shuffle key as the latest-wins
-            # window below — one exchange.
-            idc = [c for c in idc0 if c in merged.columns]
+            # not change identity — the merge_into/update_where rule; a
+            # delete+reinsert within one CDC batch keeps the key's id,
+            # since the key existed at the snapshot). Winners for new
+            # keys keep their explicit value or stay NULL for the
+            # watermark fill. The inherited id is the one carried by
+            # the LATEST-WINS existing row (max_by over (order_col, id)
+            # — id-desc tie-break, non-null beating null at equal
+            # order), NOT the per-key max id: existing duplicates for
+            # one key (blind appends) must not rewrite the surviving
+            # row's id to some other duplicate's — the row-tracking
+            # contract preserves the survivor's id byte-identically.
+            # Same shuffle key as the latest-wins window below — one
+            # exchange.
+            idc = [c for c in self._identity_specs(m) if c in merged.columns]
             if idc:
                 kw = Window.partitionBy(*bkeys)
                 for c in idc:
                     merged = merged.withColumn(
                         f"_ih_{c}",
                         F.max_by(
-                            F.when(F.col("_ex") == 1, F.col(c)),
+                            F.when(F.col("_src") == 0, F.col(c)),
                             F.when(
-                                F.col("_ex") == 1,
+                                F.col("_src") == 0,
                                 F.struct(
                                     F.col(m["order_col"]), F.col(c)
                                 ),
@@ -3867,19 +3908,22 @@ class TxTable:
                         ).over(kw),
                     )
             w = Window.partitionBy(*bkeys).orderBy(
-                F.col(m["order_col"]).desc()
+                F.col(m["order_col"]).desc(),
+                F.col("_src").desc(),
+                F.col("_del").desc(),
+                F.xxhash64(*data_cols).desc(),
             )
             latest = (
                 merged.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
-                .drop("_rn")
+                # winner is a delete -> the key leaves the table
+                .filter(~F.col("_del"))
+                .drop("_rn", "_del", "_src")
             )
             for c in idc:
                 latest = latest.withColumn(
                     c, F.coalesce(F.col(f"_ih_{c}"), F.col(c))
                 ).drop(f"_ih_{c}")
-            if idc0:
-                latest = latest.drop("_ex")
             latest, id_upd = self._fill_identity(latest, m)
             added = self._stage(latest, pre_bucketed=True)
             record = {
@@ -3897,7 +3941,7 @@ class TxTable:
                 record["cdf_files"] = self._stage_cdf(base_v + 1, record)
             return record, base_v + 1
 
-        return self._after_data_commit(self._transact(attempt, max_retries))
+        return self._transact(attempt, max_retries)
 
     def merge_into(
         self,
@@ -4585,120 +4629,24 @@ class TxTable:
         )
         self._check_constraints(upserts, "apply_cdc batch")
 
-        def attempt():
-            m = self.meta
-            incoming = self._with_bucket(df.withColumnRenamed(op_col, "_op"))
-            base_v, live_map, snap_schema, dvs = self._replay()
-            live = list(live_map.values())
+        def bucket_hits(live, incoming, m):
+            # every file in a touched bucket (plus unadopted bucket -1):
+            # existing duplicates there consolidate into the winner
             touched = {
                 r["_bucket"]
                 for r in incoming.select("_bucket").distinct().collect()
             }
-            hit = [
+            return [
                 e for e in live
                 if e["bucket"] in touched or e["bucket"] == -1
             ]
-            schema_rec = self._schema_union_json(
-                incoming.drop("_op"), snap_schema, merge_schema,
-                "apply_cdc",
-            )
-            inc = incoming.withColumn("_src", F.lit(1))
-            if hit:
-                existing = self._with_bucket(
-                    self._open_files(
-                        hit, snap_schema, dvs
-                    ).drop("_bucket")
-                ).withColumn("_op", F.lit(None).cast("string")).withColumn(
-                    "_src", F.lit(0)
-                )
-                merged = existing.unionByName(
-                    inc, allowMissingColumns=merge_schema
-                )
-            else:
-                merged = inc
-            from pyspark.sql import Window
 
-            # ONE exchange for the whole CDC apply (guide §2.4, the
-            # merge_upsert convention): repartition by _bucket once;
-            # the windows below prepend _bucket to their partition
-            # keys — identical groups (_bucket is a pure function of
-            # the keys), so no row's window result changes — and
-            # _stage reuses this exchange via pre_bucketed=True.
-            merged = merged.repartition("_bucket")
-            bkeys = ["_bucket", *m["key_cols"]]
-            data_cols = [
-                c for c in merged.columns
-                if c not in ("_op", "_src", "_bucket")
-            ]
-            # IDENTITY / row tracking: an upsert winner for an existing
-            # key is an update — inherit the key's current id (the
-            # merge_upsert convention; a delete+reinsert within one
-            # batch keeps the key's id, since the key existed at the
-            # snapshot). data_cols above intentionally still includes
-            # the identity columns: existing-vs-incoming rows hash
-            # differently there, which only sharpens the deterministic
-            # tie-break.
-            idc = [c for c in self._identity_specs(m) if c in merged.columns]
-            if idc:
-                kw = Window.partitionBy(*bkeys)
-                for c in idc:
-                    # inherit from the LATEST-WINS existing row (see
-                    # merge_upsert): existing duplicates for one key
-                    # must not donate some other duplicate's id
-                    merged = merged.withColumn(
-                        f"_ih_{c}",
-                        F.max_by(
-                            F.when(F.col("_src") == 0, F.col(c)),
-                            F.when(
-                                F.col("_src") == 0,
-                                F.struct(
-                                    F.col(m["order_col"]), F.col(c)
-                                ),
-                            ),
-                        ).over(kw),
-                    )
-            w = Window.partitionBy(*bkeys).orderBy(
-                F.col(m["order_col"]).desc(),
-                F.col("_src").desc(),
-                # deterministic tie-breaks (see docstring): delete
-                # beats upsert at equal order, then a stable content
-                # hash orders remaining equal-rank changes
-                F.col("_op").eqNullSafe(F.lit(delete_label)).desc(),
-                F.xxhash64(*data_cols).desc(),
-            )
-            latest = (
-                merged.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                # winner is a delete -> the key leaves the table
-                .filter(
-                    ~F.col("_op").eqNullSafe(F.lit(delete_label))
-                )
-                .drop("_rn", "_op", "_src")
-            )
-            for c in idc:
-                latest = latest.withColumn(
-                    c, F.coalesce(F.col(f"_ih_{c}"), F.col(c))
-                ).drop(f"_ih_{c}")
-            latest, id_upd = self._fill_identity(latest, m)
-            # _bucket travels in `latest`; partitioning rides the
-            # single bucket exchange above
-            added = self._stage(latest, pre_bucketed=True)
-            record = {
-                "version": base_v + 1,
-                "op": "merge",
-                "add": added,
-                "remove": [e["path"] for e in hit],
-                "schema_json": schema_rec,
-            }
-            if id_upd:
-                record["meta_update"] = id_upd
-            if txn:
-                record["txn"] = txn
-            if m.get("cdf"):
-                record["cdf_files"] = self._stage_cdf(base_v + 1, record)
-            return record, base_v + 1
-
-        return self._transact(attempt, max_retries)
+        return self._keyed_merge(
+            df.withColumn(
+                "_del", F.col(op_col).eqNullSafe(F.lit(delete_label))
+            ).drop(op_col),
+            bucket_hits, "apply_cdc", txn, max_retries, merge_schema,
+        )
 
     def append(self, df: DataFrame, txn: dict | None = None,
                max_retries: int = 5, merge_schema: bool = False,
@@ -5486,115 +5434,24 @@ class TxTable:
         append). At 100 TB cost ∝ touched files, never table size —
         the reason copy-on-write deletes are tractable at all.
         """
-        if prune:
-            # file stats are keyed by PHYSICAL name (column mapping)
-            prune = _map_stat_keys(
-                prune, self.meta.get("column_mapping") or {}
-            )
 
         def attempt():
             base_v, live_map, schema_json, dvs = self._replay()
-            live = list(live_map.values())
-            cand = (
-                [e for e in live if _file_may_match(e, prune)]
-                if prune
-                else list(live)
+            _, dv, touched, n_del = self._find_matches(
+                "delete_where", predicate, prune, live_map, schema_json,
+                dvs, max_dv_rows if mode == "merge_on_read" else None,
             )
-            if not cand:
+            if not n_del:
                 return None, (base_v, 0)
-            cand_paths = [e["path"] for e in cand]
-            by_sfx = {_path_sfx(p): p for p in cand_paths}
-            # only the merge_on_read suffix->path INVERSION needs
-            # uniqueness; copy-on-write merely over-selects touched
-            # files on a collision (the survivor rewrite stays correct)
-            if mode == "merge_on_read" and len(by_sfx) != len(cand_paths):
-                raise ValueError(
-                    "delete_where: adopted file paths collide on their "
-                    "3-component suffix — compact() the table first, "
-                    "or use copy_on_write"
-                )
-            # phase 1: the find-scan (DV-aware — already-deleted rows
-            # must not match again) exposes each match's file + physical
-            # position; predicate pushes into the parquet read
-            scan = self._open_files(
-                cand, schema_json, dvs, keep_meta=True
-            )
-            matches = scan.filter(predicate)
-            if mode == "merge_on_read":
-                # Bound-probe BEFORE materializing positions: collect at
-                # most max_dv_rows+1 rows. A broad predicate (10⁹-row
-                # GDPR miss-estimate) must fall back to copy-on-write
-                # without ever shipping the full position set to the
-                # driver — the limit caps driver memory by construction.
-                pos = (
-                    matches.select("_file", "_rowpos")
-                    .limit(max_dv_rows + 1)
-                    .collect()
-                )
-                if not pos:
-                    return None, (base_v, 0)
-                if len(pos) <= max_dv_rows:
-                    delta: dict[str, list[int]] = {}
-                    for r in pos:
-                        # the scan reports the 3-suffix; the vector
-                        # must key on the STORED entry path or readers
-                        # (which look vectors up by entry path) would
-                        # silently resurrect the rows on adopted files
-                        delta.setdefault(by_sfx[r["_file"]], []).append(
-                            int(r["_rowpos"])
-                        )
-                    record = {
-                        "version": base_v + 1,
-                        "op": "delete",
-                        "add": [],
-                        "remove": [],
-                        "dv": {p: sorted(v) for p, v in delta.items()},
-                        "schema_json": schema_json,
-                        "predicate": predicate,
-                    }
-                    if self.meta.get("cdf"):
-                        record["cdf_files"] = self._stage_cdf(
-                            base_v + 1, record
-                        )
-                    return record, (base_v + 1, len(pos))
-                # too many positions for a vector — rewrite instead
-            # ONE aggregate over the find-scan yields both the touched
-            # file set AND the delete count (its per-file sum) — the
-            # previous distinct-files job + separate count() re-scanned
-            # the candidate/touched files twice more for the same facts
-            per_file = (
-                matches.groupBy("_file")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
-            )
-            hit_files = {r["_file"] for r in per_file}
-            n_del = sum(int(r["_n"]) for r in per_file)
-            touched = [
-                e for e in cand if _path_sfx(e["path"]) in hit_files
-            ]
-            if not touched:
-                return None, (base_v, 0)
-            t_scan = self._open_files(
-                touched, schema_json, dvs
-            )
-            # recompute _bucket from the keys (the recorded schema is
-            # user-facing; same hash → same bucket as the original file).
-            # Survivors are rows where the predicate is NOT TRUE — the
-            # null-safe form keeps condition-NULL rows (SQL DELETE
-            # semantics: unknown never deletes), matching the DV path,
-            # which only removes rows the predicate proved TRUE.
-            survivors = self._with_bucket(
-                t_scan.filter(f"NOT (({predicate}) <=> TRUE)")
-            )
-            # no isEmpty() probe: staging an all-deleted frame writes
-            # no part files (dynamic partitionBy) and returns [] — the
-            # probe cost one extra scan of the touched files per delete
-            added = self._stage(survivors)
             record = {
                 "version": base_v + 1,
                 "op": "delete",
-                "add": added,
+                # a deletion vector touches no data file
+                "add": [] if dv else self._stage_survivors(
+                    touched, schema_json, dvs, predicate
+                ),
                 "remove": [e["path"] for e in touched],
+                **({"dv": dv} if dv else {}),
                 "schema_json": schema_json,
                 "predicate": predicate,
             }
@@ -5603,6 +5460,114 @@ class TxTable:
             return record, (base_v + 1, n_del)
 
         return self._transact(attempt, max_retries)
+
+    def _find_matches(
+        self,
+        op: str,
+        predicate: str,
+        prune: dict[str, tuple] | None,
+        live_map: dict,
+        schema_json: str | None,
+        dvs: dict[str, set] | None,
+        max_dv_rows: int | None = None,
+    ) -> tuple[DataFrame | None, dict | None, list[dict], int]:
+        """The ONE find phase of the predicate-scoped DML
+        (``delete_where``, ``update_where``, ``replace_where``) →
+        ``(matches, dv, touched, n)``.
+
+        ``prune`` (col → (lo, hi), the ``read`` convention) skips
+        provably-unmatchable files at the LOG level, so the find scan
+        opens only candidates; the scan is DV-aware (already-deleted
+        rows must not match again), the predicate pushes into the
+        parquet reader, and ``matches`` carries each match's ``_file``
+        and physical ``_rowpos``. No candidate → ``(None, None, [], 0)``.
+
+        ``max_dv_rows`` set (merge_on_read): collect at most
+        ``max_dv_rows + 1`` positions BEFORE materializing them — a
+        broad predicate falls back to the rewrite path without ever
+        shipping the full position set to the driver (the limit caps
+        driver memory by construction). Within the bound, ``dv`` maps
+        each STORED entry path to its sorted positions and ``n`` is
+        their count; ``touched`` is empty.
+
+        Otherwise ``dv`` is None and ONE aggregate over the find scan
+        yields both the ``touched`` entries and ``n`` (the per-file
+        match counts' sum), so no second job re-scans the files for
+        the count."""
+        if prune:
+            # file stats are keyed by PHYSICAL name (column mapping)
+            prune = _map_stat_keys(
+                prune, self.meta.get("column_mapping") or {}
+            )
+        cand = [
+            e for e in live_map.values()
+            if not prune or _file_may_match(e, prune)
+        ]
+        if not cand:
+            return None, None, [], 0
+        matches = self._open_files(
+            cand, schema_json, dvs, keep_meta=True
+        ).filter(predicate)
+        if max_dv_rows is not None:
+            by_sfx = {_path_sfx(e["path"]): e["path"] for e in cand}
+            # only the suffix->path INVERSION needs uniqueness;
+            # copy-on-write merely over-selects touched files on a
+            # collision (the survivor rewrite stays correct)
+            if len(by_sfx) != len(cand):
+                raise ValueError(
+                    f"{op}: adopted file paths collide on their "
+                    "3-component suffix — compact() the table first, "
+                    "or use copy_on_write"
+                )
+            pos = (
+                matches.select("_file", "_rowpos")
+                .limit(max_dv_rows + 1)
+                .collect()
+            )
+            if len(pos) <= max_dv_rows:
+                dv: dict[str, list[int]] = {}
+                for r in pos:
+                    # the scan reports the 3-suffix; the vector must
+                    # key on the STORED entry path or readers (which
+                    # look vectors up by entry path) would silently
+                    # resurrect the rows on adopted files
+                    dv.setdefault(by_sfx[r["_file"]], []).append(
+                        int(r["_rowpos"])
+                    )
+                return (
+                    matches, {p: sorted(v) for p, v in dv.items()},
+                    [], len(pos),
+                )
+            # too many positions for a vector — rewrite instead
+        per_file = (
+            matches.groupBy("_file")
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .collect()
+        )
+        hit_files = {r["_file"] for r in per_file}
+        touched = [e for e in cand if _path_sfx(e["path"]) in hit_files]
+        return matches, None, touched, sum(int(r["_n"]) for r in per_file)
+
+    def _stage_survivors(
+        self,
+        touched: list[dict],
+        schema_json: str | None,
+        dvs: dict[str, set] | None,
+        predicate: str,
+    ) -> list[dict]:
+        """Rewrite ``touched`` minus the rows ``predicate`` proves TRUE,
+        recomputing ``_bucket`` from the keys (the recorded schema is
+        user-facing; same hash → same bucket as the original file).
+        The null-safe ``NOT ((pred) <=> TRUE)`` keeps condition-NULL
+        rows (SQL semantics: unknown never deletes or replaces),
+        matching the DV path, which only removes rows the predicate
+        proved TRUE. No isEmpty() probe: staging an all-matched frame
+        writes no part files (dynamic partitionBy) and returns [] — the
+        probe cost one extra scan of the touched files per call."""
+        return self._stage(self._with_bucket(
+            self._open_files(touched, schema_json, dvs)
+            .filter(f"NOT (({predicate}) <=> TRUE)")
+        ))
 
     def replace_where(
         self,
@@ -5635,10 +5600,6 @@ class TxTable:
         df = self._managed_entry(
             self._with_generated(df, "replace_where"), "replace_where"
         )
-        if prune:
-            prune = _map_stat_keys(
-                prune, self.meta.get("column_mapping") or {}
-            )
 
         def stage_and_guard(
             meta: dict, ctr: dict
@@ -5707,42 +5668,15 @@ class TxTable:
                 staged_n = mnow["n_buckets"]
                 used_ctr = self._identity_counters(mnow)
                 incoming, id_upd = stage_and_guard(mnow, used_ctr)
-            live = list(live_map.values())
-            cand = (
-                [e for e in live if _file_may_match(e, prune)]
-                if prune
-                else list(live)
+            _, _, touched, _ = self._find_matches(
+                "replace_where", predicate, prune, live_map, schema_json,
+                dvs,
             )
-            touched: list[dict] = []
-            added: list[dict] = list(incoming)
-            if cand:
-                scan = self._open_files(
-                    cand, schema_json, dvs,
-                    keep_meta=True,
-                )
-                hit_files = {
-                    r["_file"]
-                    for r in scan.filter(predicate)
-                    .select("_file").distinct().collect()
-                }
-                touched = [
-                    e for e in cand
-                    if _path_sfx(e["path"]) in hit_files
-                ]
-                if touched:
-                    t_scan = self._open_files(
-                        touched, schema_json, dvs
-                    )
-                    # survivors: predicate NOT TRUE (null-safe — an
-                    # unknown predicate never replaces, SQL semantics).
-                    # No isEmpty() probe (the delete_where rule): an
-                    # all-replaced slice stages no part files and
-                    # contributes [] — the probe cost a full extra
-                    # scan of the touched files per replace
-                    survivors = self._with_bucket(
-                        t_scan.filter(f"NOT (({predicate}) <=> TRUE)")
-                    )
-                    added = self._stage(survivors) + added
+            added = list(incoming)
+            if touched:
+                added = self._stage_survivors(
+                    touched, schema_json, dvs, predicate
+                ) + added
             schema_rec = self._schema_union_json(
                 df, schema_json, False, "replace_where"
             )
@@ -5829,124 +5763,35 @@ class TxTable:
             if any(_expr_mentions(gexpr, a) for a in assignments)
         }
 
-        def with_regenerated(df: DataFrame, flag: str | None) -> DataFrame:
+        def with_regenerated(df: DataFrame) -> DataFrame:
             """Recompute generated columns from the POST-assignment
             values — a second projection, so the expressions see the
-            updated base columns, restricted to matched rows when a
-            `flag` column marks them."""
+            updated base columns, restricted to the matched rows the
+            `_matched` column marks."""
             for gname, gexpr in gen_recompute.items():
                 if gname not in df.columns:
                     continue
                 new = F.expr(gexpr).cast(df.schema[gname].dataType)
                 df = df.withColumn(
                     gname,
-                    F.when(F.col(flag), new).otherwise(F.col(gname))
-                    if flag
-                    else new,
+                    F.when(F.col("_matched"), new).otherwise(F.col(gname)),
                 )
             return df
-        if prune:
-            # file stats are keyed by PHYSICAL name (column mapping)
-            prune = _map_stat_keys(
-                prune, self.meta.get("column_mapping") or {}
-            )
 
         def attempt():
             base_v, live_map, schema_json, dvs = self._replay()
-            live = list(live_map.values())
-            cand = (
-                [e for e in live if _file_may_match(e, prune)]
-                if prune
-                else list(live)
+            matches, dv, touched, n_upd = self._find_matches(
+                "update_where", predicate, prune, live_map, schema_json,
+                dvs, max_dv_rows if mode == "merge_on_read" else None,
             )
-            if not cand:
+            if not n_upd:
                 return None, (base_v, 0)
-            by_sfx = {_path_sfx(e["path"]): e["path"] for e in cand}
-            if mode == "merge_on_read" and len(by_sfx) != len(cand):
-                raise ValueError(
-                    "update_where: adopted file paths collide on their "
-                    "3-component suffix — compact() the table first, "
-                    "or use copy_on_write"
-                )
-            scan = self._open_files(
-                cand, schema_json, dvs, keep_meta=True
-            )
-            if mode == "merge_on_read":
-                # bound-probe BEFORE materializing positions (the
-                # delete path's driver-memory discipline)
-                pos = (
-                    scan.filter(predicate)
-                    .select("_file", "_rowpos")
-                    .limit(max_dv_rows + 1)
-                    .collect()
-                )
-                if not pos:
-                    return None, (base_v, 0)
-                if len(pos) <= max_dv_rows:
-                    delta: dict[str, list[int]] = {}
-                    for r in pos:
-                        # the scan reports the 3-suffix; the vector
-                        # must key on the STORED entry path or readers
-                        # (which look vectors up by entry path) would
-                        # silently resurrect the rows on adopted files
-                        delta.setdefault(by_sfx[r["_file"]], []).append(
-                            int(r["_rowpos"])
-                        )
-                    matched = scan.filter(predicate).drop(
-                        "_file", "_rowpos"
-                    )
-                    post = matched.select(
-                        *[
-                            (
-                                F.expr(assignments[c])
-                                .cast(matched.schema[c].dataType)
-                                .alias(c)
-                                if c in assignments
-                                else F.col(c)
-                            )
-                            for c in matched.columns
-                            if c != "_bucket"
-                        ]
-                    )
-                    post = with_regenerated(post, None)
-                    self._check_constraints(
-                        post, "update_where post-image"
-                    )
-                    added = self._stage(self._with_bucket(post))
-                    record = {
-                        "version": base_v + 1,
-                        "op": "update",
-                        "add": added,
-                        "remove": [],
-                        "dv": {p: sorted(v) for p, v in delta.items()},
-                        "schema_json": schema_json,
-                        "predicate": predicate,
-                        "assignments": assignments,
-                    }
-                    if self.meta.get("cdf"):
-                        record["cdf_files"] = self._stage_cdf(
-                            base_v + 1, record
-                        )
-                    return record, (base_v + 1, len(pos))
-                # too many positions for a vector — rewrite instead
-            # ONE aggregate yields the touched files AND the update
-            # count (its per-file sum) — the delete_where fusion; the
-            # separate count() re-scanned the touched files
-            per_file = (
-                scan.filter(predicate)
-                .groupBy("_file")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
-            )
-            hit_files = {r["_file"] for r in per_file}
-            n_upd = sum(int(r["_n"]) for r in per_file)
-            touched = [
-                e for e in cand if _path_sfx(e["path"]) in hit_files
-            ]
-            if not touched:
-                return None, (base_v, 0)
-            t_scan = self._open_files(
-                touched, schema_json, dvs
+            # merge_on_read: the vector removes the old positions and the
+            # added file holds just the matched rows' post-image;
+            # copy-on-write rewrites every row of the touched files
+            src = (
+                matches.drop("_file", "_rowpos") if dv
+                else self._open_files(touched, schema_json, dvs)
             )
             match = F.expr(predicate)
             # the predicate and the SET expressions both evaluate on
@@ -5954,28 +5799,28 @@ class TxTable:
             # flag rides along so the generated-column recompute (a
             # SECOND projection, over post-assignment values) touches
             # exactly the updated rows
-            updated = t_scan.select(
+            updated = src.select(
                 *[
                     (
                         F.when(match, F.expr(assignments[c]))
                         .otherwise(F.col(c))
-                        .cast(t_scan.schema[c].dataType)
+                        .cast(src.schema[c].dataType)
                         .alias(c)
                         if c in assignments
                         else F.col(c)
                     )
-                    for c in t_scan.columns
+                    for c in src.columns
                 ],
                 match.alias("_matched"),
             )
-            updated = with_regenerated(updated, "_matched").drop("_matched")
+            updated = with_regenerated(updated).drop("_matched")
             self._check_constraints(updated, "update_where post-image")
-            added = self._stage(self._with_bucket(updated))
             record = {
                 "version": base_v + 1,
                 "op": "update",
-                "add": added,
+                "add": self._stage(self._with_bucket(updated)),
                 "remove": [e["path"] for e in touched],
+                **({"dv": dv} if dv else {}),
                 "schema_json": schema_json,
                 "predicate": predicate,
                 "assignments": assignments,

@@ -1047,3 +1047,31 @@ def test_lakehouse_entries_survive_vanilla_session_confs(spark):
             # previously unset: unset it again, or whatever the last
             # lakehouse entry left behind leaks into the shared session
             spark.conf.unset("spark.sql.python.filterPushdown.enabled")
+
+
+def test_temp_dir_removed_at_exit(tmp_path):
+    """``queries._util.temp_dir`` — the one temp-directory helper the
+    catalog's txlog entries build their tables in — leaves the
+    directory in place while the process runs (the returned frames are
+    lazy and read it later) and removes it, contents included, when
+    the process exits."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from kafka_flink_harshevents_spark.queries._util import temp_dir\n"
+        "d = temp_dir('txq-')\n"
+        "open(os.path.join(d, 'part-0.parquet'), 'w').write('x')\n"
+        "assert os.path.isdir(d)\n"
+        "print(d)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True, text=True, check=True, cwd=root,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+    ).stdout.strip()
+    assert out.startswith(str(tmp_path)) and os.path.basename(out).startswith("txq-")
+    assert not os.path.exists(out)

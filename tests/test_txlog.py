@@ -2977,6 +2977,40 @@ def test_apply_cdc_mixed_ops(spark, tmp_path):
     assert sorted(r["k"] for r in t.read().collect()) == [2, 4, 5]
 
 
+
+def test_merge_upsert_equal_order_ties(spark, tmp_path):
+    """merge_upsert resolves equal ``order_col`` ties by apply_cdc's
+    ordering: an incoming row beats the existing one, and equal-rank
+    incoming rows pick one winner by content hash — the same winner
+    on a replay of the batch, and the same one apply_cdc picks. A MAP
+    column (which xxhash64 refuses) stays out of the hash."""
+    schema = "k long, s string, m map<string,int>, ver long"
+    t = TxTable.create(
+        spark, str(tmp_path / "t"), key_cols=("k",), order_col="ver",
+        n_buckets=2,
+    )
+    t.merge_upsert(spark.createDataFrame(
+        [(1, "old", {"a": 1}, 5), (2, "keep", None, 5)], schema))
+    t.merge_upsert(spark.createDataFrame([(1, "new", {"a": 2}, 5)], schema))
+    got = {r["k"]: (r["s"], r["m"]) for r in t.read().collect()}
+    assert got == {1: ("new", {"a": 2}), 2: ("keep", None)}
+
+    tied = [(3, s, {s: 1}, 7) for s in ("a", "b", "c", "d", "e")]
+    winners = []
+    for _ in range(2):  # the second call replays the batch over its result
+        t.merge_upsert(spark.createDataFrame(tied, schema))
+        rows = t.read().filter("k = 3").collect()
+        assert len(rows) == 1
+        winners.append(rows[0]["s"])
+    assert winners[0] == winners[1]
+    c = TxTable.create(
+        spark, str(tmp_path / "c"), key_cols=("k",), order_col="ver",
+        n_buckets=2,
+    )
+    c.apply_cdc(spark.createDataFrame(
+        [(*r, "U") for r in tied], schema + ", op string"))
+    assert [r["s"] for r in c.read().collect()] == [winners[0]]
+
 def test_cdc_sink_streaming_exactly_once(spark, tmp_path):
     """cdc_sink: a live I/U/D change stream maintains the keyed table
     through foreachBatch, exactly-once — replayed batches are no-ops,
@@ -4648,6 +4682,55 @@ def test_one_commit_retry_path():
     ]
     assert sorted(catches) == ["_after_data_commit", "_transact"]
 
+
+
+def test_one_keyed_merge_and_find_phase():
+    """TxTable's row-level DML spells each mechanism once: the keyed
+    latest-wins window of merge_upsert / apply_cdc lives only in
+    ``_keyed_merge``, and the find phase of delete_where / update_where
+    / replace_where — the bounded position probe
+    ``limit(max_dv_rows + 1)`` and the per-file ``groupBy("_file")``
+    match count — only in ``_find_matches``. ``row_number`` is
+    otherwise only the identity fill and the CDF pre-image ranking."""
+    import ast
+
+    import kafka_flink_harshevents_spark.sources.txlog as txmod
+
+    windows, probes, file_aggs = [], [], []
+
+    def attr(node, name):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == name
+        )
+
+    def visit(node, owner):
+        for child in ast.iter_child_nodes(node):
+            own = owner
+            if owner is None and isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                own = child.name
+            if attr(child, "row_number"):
+                windows.append(own)
+            if attr(child, "limit") and ast.unparse(child.args[0]) == (
+                "max_dv_rows + 1"
+            ):
+                probes.append(own)
+            if (
+                attr(child, "agg")
+                and attr(child.func.value, "groupBy")
+                and ast.unparse(child.func.value.args[0]) == "'_file'"
+            ):
+                file_aggs.append(own)
+            visit(child, own)
+
+    with open(txmod.__file__) as f:
+        visit(ast.parse(f.read()), None)
+    assert sorted(windows) == ["_changes_for", "_fill_identity", "_keyed_merge"]
+    assert probes == ["_find_matches"]
+    assert file_aggs == ["_find_matches"]
 
 def test_restore_cdf_refuses_across_type_widening(spark, tmp_path):
     """The cdf=True restore refusal compares TYPES, not just names: a
