@@ -47,6 +47,40 @@ def _norm(a) -> Column:
     return F.sqrt(_dot(a, a))
 
 
+def _cos(a, b) -> Column:
+    """Cosine of ``a`` and ``b``, rounded to 6 dp before anything ranks
+    on it."""
+    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6)
+
+
+def _queries(e: DataFrame, *carry: str) -> DataFrame:
+    """The query vectors (vec_id < N_QUERY_VECS) as ``(qid, qemb)``,
+    plus each ``carry`` column renamed ``q<name>``."""
+    return e.filter(F.col("vec_id") < N_QUERY_VECS).select(
+        F.col("vec_id").alias("qid"),
+        F.col("emb").alias("qemb"),
+        *[F.col(c).alias(f"q{c}") for c in carry],
+    )
+
+
+def _top_k(pairs: DataFrame, sim: Column) -> DataFrame:
+    """Per-query top-TOP_K of ``pairs`` scored by ``sim``: sim
+    descending, ties on vec_id, as ``(qid, vec_id, sim, knn_rank)``."""
+    ranked = pairs.select("qid", "vec_id", sim.alias("sim")).withColumn(
+        "knn_rank",
+        F.row_number()
+        .over(Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id")))
+        .cast("long"),
+    )
+    return ranked.filter(F.col("knn_rank") <= TOP_K)
+
+
+def _all_pairs(e: DataFrame) -> DataFrame:
+    """Every (query, candidate) pair: queries broadcast, candidates
+    stream through one narrow pass."""
+    return e.join(F.broadcast(_queries(e)), F.col("vec_id") != F.col("qid"))
+
+
 def emb_knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-k — the ANN correctness baseline:
     queries broadcast, candidates stream through one narrow scoring
@@ -55,18 +89,7 @@ def emb_knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    q = e.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
-    )
-    pairs = e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-    sim = F.round(_dot("qemb", "emb") / (_norm("qemb") * _norm("emb")), 6)
-    ranked = pairs.select("qid", "vec_id", sim.alias("sim")).withColumn(
-        "knn_rank",
-        F.row_number()
-        .over(Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id")))
-        .cast("long"),
-    )
-    return ranked.filter(F.col("knn_rank") <= TOP_K)
+    return _top_k(_all_pairs(e), _cos("qemb", "emb"))
 
 
 def emb_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -117,19 +140,10 @@ def _lsh_planes() -> list[list[float]]:
     return planes
 
 
-def emb_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-k via multi-table random-hyperplane LSH.
-
-    LSH_TABLES independent signatures of LSH_BITS sign-bits each; a vector
-    is a candidate when ANY table's signature matches the query's
-    (OR-amplification — raises recall exponentially in the table count).
-    At 100 TB the (table, signature) equi-join replaces the all-pairs
-    scan: the shuffle is keyed by signature, ~N/2^bits vectors per bucket,
-    never a cross join."""
+def _lsh_buckets(e: DataFrame, *keep: str) -> DataFrame:
+    """One ``(*keep, tbl, sig)`` row per vector and LSH table: the
+    LSH_BITS sign bits of ``emb`` against that table's hyperplanes."""
     planes = _lsh_planes()
-    e = spread(load(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
     table_sigs = []
     for t in range(LSH_TABLES):
         sig = None
@@ -139,18 +153,27 @@ def emb_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             bit = (_dot(F.col("emb"), plane_col) > 0).cast("long") * (2**b)
             sig = bit if sig is None else sig + bit
         table_sigs.append(F.struct(F.lit(t).alias("tbl"), sig.alias("sig")))
-    eb = e.select(
-        "vec_id", "emb", F.explode(F.array(*table_sigs)).alias("h")
-    ).select("vec_id", "emb", F.col("h.tbl").alias("tbl"), F.col("h.sig").alias("sig"))
-    q = eb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("emb").alias("qemb"),
-        F.col("tbl").alias("qtbl"),
-        F.col("sig").alias("qsig"),
+    return e.select(*keep, F.explode(F.array(*table_sigs)).alias("h")).select(
+        *keep, F.col("h.tbl").alias("tbl"), F.col("h.sig").alias("sig")
     )
+
+
+def emb_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate top-k via multi-table random-hyperplane LSH.
+
+    LSH_TABLES independent signatures of LSH_BITS sign-bits each; a vector
+    is a candidate when ANY table's signature matches the query's
+    (OR-amplification — raises recall exponentially in the table count).
+    At 100 TB the (table, signature) equi-join replaces the all-pairs
+    scan: the shuffle is keyed by signature, ~N/2^bits vectors per bucket,
+    never a cross join."""
+    e = spread(load(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    )
+    eb = _lsh_buckets(e, "vec_id", "emb")
     cands = (
         eb.join(
-            F.broadcast(q),
+            F.broadcast(_queries(eb, "tbl", "sig")),
             (F.col("tbl") == F.col("qtbl"))
             & (F.col("sig") == F.col("qsig"))
             & (F.col("vec_id") != F.col("qid")),
@@ -158,58 +181,7 @@ def emb_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "qemb", "vec_id", "emb")
         .distinct()
     )
-    sim = F.round(_dot("qemb", "emb") / (_norm("qemb") * _norm("emb")), 6)
-    ranked = cands.select("qid", "vec_id", sim.alias("sim")).withColumn(
-        "knn_rank",
-        F.row_number()
-        .over(Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id")))
-        .cast("long"),
-    )
-    return ranked.filter(F.col("knn_rank") <= TOP_K)
-
-
-PQ_RECALL_FLOOR_NUM, PQ_RECALL_FLOOR_DEN = 1, 2  # recall ≥ 1/2, exact integers
-
-
-def emb_knn_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-verifiable gate for the PQ path: a 1-row exact-arithmetic
-    summary of `emb_knn_pq` against `emb_knn_brute` — (n_queries, k,
-    floor_met) where floor_met ⇔ |PQ∩brute| · DEN ≥ rows · NUM, all in
-    integers (no float recall value that could wobble). The DuckDB twin
-    states the spec row (N_QUERY_VECS, TOP_K, TRUE), so the driver's
-    hash comparison goes green exactly when the PQ pipeline returns k
-    rows per query AND clears the recall floor — the property pinned in
-    tests/test_queries.py::test_pq_recall_floor, now machine-checked
-    per round. k-means training itself stays non-SQL (iterative), which
-    is why the raw `emb_knn_pq` rows keep a rows-only check."""
-    pq = emb_knn_pq(spark, sf_dir).select("qid", "vec_id")
-    brute = emb_knn_brute(spark, sf_dir).select("qid", "vec_id")
-    marked = pq.join(
-        brute.withColumn("hit", F.lit(1)), ["qid", "vec_id"], "left"
-    )
-    return marked.agg(
-        F.count_distinct("qid").cast("long").alias("n_queries"),
-        F.count(F.lit(1)).alias("n_rows"),
-        # outer coalesce: sum over ZERO rows is NULL, which would make
-        # the floor comparison NULL instead of the vacuous TRUE the
-        # empty-corpus oracle states
-        F.coalesce(F.sum(F.coalesce("hit", F.lit(0))), F.lit(0)).alias(
-            "n_hits"
-        ),
-    ).select(
-        "n_queries",
-        # ANSI-safe: an empty corpus has 0 queries — emit k=0, no crash
-        F.when(
-            F.col("n_queries") > 0, F.col("n_rows") / F.col("n_queries")
-        )
-        .otherwise(0)
-        .cast("long")
-        .alias("k"),
-        (
-            F.col("n_hits") * F.lit(PQ_RECALL_FLOOR_DEN)
-            >= F.col("n_rows") * F.lit(PQ_RECALL_FLOOR_NUM)
-        ).alias("floor_met"),
-    )
+    return _top_k(cands, _cos("qemb", "emb"))
 
 
 def _knn_lsh_oracle_sql() -> str:
@@ -348,18 +320,7 @@ def _neardup_lsh_blocked(e: DataFrame) -> DataFrame:
     the shuffle width is the colliding vectors only, never all pairs.
     Approximate: recall < 1 by construction (raise LSH_TABLES for more);
     every emitted pair is exact-verified against NEARDUP_COS."""
-    planes = _lsh_planes()
-    table_sigs = []
-    for t in range(LSH_TABLES):
-        sig = None
-        for b in range(LSH_BITS):
-            plane_col = F.array(*[F.lit(v) for v in planes[t * LSH_BITS + b]])
-            bit = (_dot(F.col("emb"), plane_col) > 0).cast("long") * (2**b)
-            sig = bit if sig is None else sig + bit
-        table_sigs.append(F.struct(F.lit(t).alias("tbl"), sig.alias("sig")))
-    eb = e.select("vec_id", F.explode(F.array(*table_sigs)).alias("h")).select(
-        "vec_id", F.col("h.tbl").alias("tbl"), F.col("h.sig").alias("sig")
-    )
+    eb = _lsh_buckets(e, "vec_id")
     cand = (
         eb.alias("a")
         .join(
@@ -373,11 +334,10 @@ def _neardup_lsh_blocked(e: DataFrame) -> DataFrame:
     )
     ea = e.select(F.col("vec_id").alias("va"), F.col("emb").alias("aemb"))
     ebm = e.select(F.col("vec_id").alias("vb"), F.col("emb").alias("bemb"))
-    sim = F.round(_dot("aemb", "bemb") / (_norm("aemb") * _norm("bemb")), 6)
     return (
         cand.join(ea, "va")
         .join(ebm, "vb")
-        .select("va", "vb", sim.alias("cos_sim"))
+        .select("va", "vb", _cos("aemb", "bemb").alias("cos_sim"))
         .filter(F.col("cos_sim") >= NEARDUP_COS)
     )
 
@@ -400,6 +360,36 @@ def emb_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _neardup_block_matmul(e, n_vecs)
 
 
+def _ivf_probe(e: DataFrame, q: DataFrame, nprobe: int) -> DataFrame:
+    """IVF coarse stage: the label centroids of ``e`` (avg per (label,
+    dim), ordered by dim) and, per query, the ``nprobe`` nearest lists
+    by cosine, ties on label — ``(qid, qemb, label)`` rows."""
+    cent = (
+        e.select("label", F.posexplode("emb").alias("pos", "val"))
+        .groupBy("label", "pos")
+        .agg(F.avg("val").alias("avgv"))
+        .groupBy("label")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "avgv"))),
+                lambda s: s["avgv"],
+            ).alias("cemb")
+        )
+    )
+    return (
+        q.join(F.broadcast(cent))
+        .select("qid", "qemb", "label", _cos("qemb", "cemb").alias("csim"))
+        .withColumn(
+            "pr",
+            F.row_number().over(
+                Window.partitionBy("qid").orderBy(F.col("csim").desc(), F.col("label"))
+            ),
+        )
+        .filter(F.col("pr") <= nprobe)
+        .select("qid", "qemb", "label")
+    )
+
+
 def emb_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) ANN: coarse-quantize by label centroid, probe
     the IVF_NPROBE nearest lists, exact search within them.
@@ -413,46 +403,11 @@ def emb_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").cast("long").alias("label"),
         F.col("embedding").cast("array<double>").alias("emb"),
     )
-    # centroids: avg per (label, dim) → array ordered by dim
-    cent = (
-        e.select("label", F.posexplode("emb").alias("pos", "val"))
-        .groupBy("label", "pos")
-        .agg(F.avg("val").alias("avgv"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "avgv"))),
-                lambda s: s["avgv"],
-            ).alias("cemb")
-        )
-    )
-    q = e.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
-    )
-    qc = q.join(F.broadcast(cent))
-    csim = F.round(_dot("qemb", "cemb") / (_norm("qemb") * _norm("cemb")), 6)
-    probe = (
-        qc.select("qid", "qemb", "label", csim.alias("csim"))
-        .withColumn(
-            "pr",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.col("csim").desc(), F.col("label"))
-            ),
-        )
-        .filter(F.col("pr") <= IVF_NPROBE)
-        .select("qid", "qemb", "label")
-    )
+    probe = _ivf_probe(e, _queries(e), IVF_NPROBE)
     cands = e.join(F.broadcast(probe), on="label").filter(
         F.col("vec_id") != F.col("qid")
     )
-    sim = F.round(_dot("qemb", "emb") / (_norm("qemb") * _norm("emb")), 6)
-    ranked = cands.select("qid", "vec_id", sim.alias("sim")).withColumn(
-        "knn_rank",
-        F.row_number()
-        .over(Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id")))
-        .cast("long"),
-    )
-    return ranked.filter(F.col("knn_rank") <= TOP_K)
+    return _top_k(cands, _cos("qemb", "emb"))
 
 
 def emb_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -529,7 +484,18 @@ PQ_SUB_DIM = EMB_DIM // PQ_M
 PQ_TRAIN_CAP = 4096  # codebooks train on a bounded sample, FAISS-style
 
 
-def _pq_train_codebooks(e: DataFrame) -> list[list[list[float]]]:
+def _pq_subvectors(emb: str) -> Column:
+    """``(m, sv)`` rows: the PQ_M contiguous PQ_SUB_DIM-dim subvectors
+    of ``emb`` — training, encode and lookup tables split alike."""
+    return F.posexplode(
+        F.expr(
+            f"transform(sequence(0, {PQ_M - 1}), "
+            f"m -> slice({emb}, m * {PQ_SUB_DIM} + 1, {PQ_SUB_DIM}))"
+        )
+    ).alias("m", "sv")
+
+
+def _pq_train_codebooks(e: DataFrame) -> DataFrame:
     """Deterministic per-subspace k-means (Jégou et al. 2011 product
     quantization): init = the PQ_K smallest-vec_id vectors' subvectors,
     then PQ_ITERS Lloyd rounds.
@@ -543,18 +509,14 @@ def _pq_train_codebooks(e: DataFrame) -> list[list[list[float]]]:
     smallest-vec_id subvectors; empty clusters keep their previous
     centroid; argmin ties break to the smallest k). Driver traffic is
     the final M*K codebook rows — nothing else leaves the executors,
-    and there is no per-round job/collect round-trip at all."""
+    and there is no per-round job/collect round-trip at all. The rows
+    come back as a local ``(m, k, cent)`` relation, so every consumer
+    reads the trained codebook instead of re-running the training."""
     import numpy as np
     import pandas as pd
 
     sub = e.filter(F.col("vec_id") < PQ_TRAIN_CAP).select(
-        "vec_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {PQ_M - 1}), "
-                f"m -> slice(emb, m * {PQ_SUB_DIM} + 1, {PQ_SUB_DIM}))"
-            )
-        ).alias("m", "sv"),
+        "vec_id", _pq_subvectors("emb")
     )
 
     def train(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -573,51 +535,93 @@ def _pq_train_codebooks(e: DataFrame) -> list[list[list[float]]]:
             {"m": m, "k": range(PQ_K), "cent": [list(c[k]) for k in range(PQ_K)]}
         )
 
-    rows = (
-        sub.groupBy("m")
-        .applyInPandas(train, "m int, k int, cent array<double>")
-        .collect()
+    schema = "m int, k int, cent array<double>"
+    rows = sub.groupBy("m").applyInPandas(train, schema).collect()
+    return e.sparkSession.createDataFrame(rows, schema)
+
+
+def _pq_distances(
+    df: DataFrame, emb: str, codebook: DataFrame, *keep: str
+) -> DataFrame:
+    """``(*keep, m, k, d2)``: the squared L2 distance from each
+    subvector of ``emb`` to every centroid of its subspace, against the
+    broadcast codebook (the 8 KB centroid table — never the data)."""
+    d2 = F.aggregate(
+        F.zip_with("sv", "cent", lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
     )
-    cents: list[list[list[float]]] = [[None] * PQ_K for _ in range(PQ_M)]
-    for r in rows:
-        cents[r["m"]][r["k"]] = list(r["cent"])
-    return cents
-
-
-def _collect_queries(q: DataFrame):
-    """Collect the (bounded: vec_id < N_QUERY_VECS) query vectors once
-    and rebuild them as a literal local relation. The declarative
-    spelling embedded the pruned query-scan subtree in every consumer
-    (probe stage, ADC lookup build, re-rank join), and each consumer's
-    evaluation re-ran the scan + normalize; N_QUERY_VECS rows of
-    doubles collect exactly (same IEEE bits), so downstream arithmetic
-    is unchanged."""
-    rows = q.collect()
-    local = q.sparkSession.createDataFrame(
-        [(int(r["qid"]), list(r["qemb"])) for r in rows],
-        "qid long, qemb array<double>",
+    return (
+        df.select(*keep, _pq_subvectors(emb))
+        .join(F.broadcast(codebook), "m")
+        .select(*keep, "m", "k", d2.alias("d2"))
     )
-    return rows, local
 
 
-def _adc_lookup_table(spark: SparkSession, q_rows, cents) -> DataFrame:
-    """Per-query ADC lookup tables ||q_sub − cent||² for every (m, k),
-    computed on the driver from the collected queries and the (already
-    collected) codebooks — PQ_M·PQ_K rows per query. The Python fold
-    (acc = acc + (x−y)·(x−y), left to right) is the bit-exact twin of
-    the F.aggregate/zip_with spelling it replaces, so qd2 doubles are
-    identical and the downstream ADC sums/rankings cannot move."""
-    rows = []
-    for r in q_rows:
-        qid, qemb = int(r["qid"]), list(r["qemb"])
-        for m in range(PQ_M):
-            qsv = qemb[m * PQ_SUB_DIM : (m + 1) * PQ_SUB_DIM]
-            for k in range(PQ_K):
-                acc = 0.0
-                for x, y in zip(qsv, cents[m][k]):
-                    acc = acc + (x - y) * (x - y)
-                rows.append((qid, m, k, acc))
-    return spark.createDataFrame(rows, "qid long, m int, k int, qd2 double")
+def _pq_knn(spark: SparkSession, sf_dir: str, nprobe: int | None) -> DataFrame:
+    """The PQ search body of `emb_knn_pq` (``nprobe`` None: every query
+    scores every code) and `emb_knn_ivfpq` (each query scores only the
+    codes of its ``nprobe`` nearest IVF lists): normalize, train,
+    encode, ADC over the scored codes, PQ_SHORTLIST shortlist, exact
+    re-rank."""
+    raw = spread(load(spark, sf_dir, "embeddings")).select(
+        "vec_id",
+        F.col("label").cast("long").alias("label"),
+        F.col("embedding").cast("array<double>").alias("raw"),
+    )
+    nrm = _norm("raw")
+    e = raw.select(
+        "vec_id", "label", F.transform("raw", lambda x: x / nrm).alias("emb")
+    )
+    codebook = _pq_train_codebooks(e.select("vec_id", "emb"))
+    q = _queries(e)
+
+    # PQ encode the corpus (1 byte/subspace), once. IVF-PQ carries the
+    # label through the encode aggregate (constant per vec_id, so max()
+    # is exact): the probed-list restriction then joins the codes
+    # directly, with no second corpus scan and no vec_id shuffle join
+    carry = () if nprobe is None else ("label",)
+    codes = (
+        _pq_distances(e, "emb", codebook, "vec_id", *carry)
+        .groupBy("vec_id", "m")
+        .agg(
+            F.min_by("k", F.struct("d2", "k")).alias("k"),
+            *[F.max(c).alias(c) for c in carry],
+        )
+    )
+    # per-query ADC lookup tables ||q_sub - cent||² for every (m, k):
+    # the same subvector split and distance fold as the encode
+    qtab = _pq_distances(q, "qemb", codebook, "qid")
+    if nprobe is None:
+        scored = codes.join(F.broadcast(qtab), ["m", "k"])
+    else:
+        # candidates come from the label equi-join against the (tiny)
+        # probe table — each query's scan touches ~nprobe/nlists of
+        # the code stream, the IVF win
+        probe = _ivf_probe(e, q, nprobe).select("qid", "label")
+        scored = codes.join(F.broadcast(probe), "label").join(
+            F.broadcast(qtab), ["qid", "m", "k"]
+        )
+    adc = (
+        scored.filter(F.col("vec_id") != F.col("qid"))
+        .groupBy("qid", "vec_id")
+        .agg(F.sum("d2").alias("adc_d2"))
+    )
+    short = (
+        adc.withColumn(
+            "sr",
+            F.row_number().over(
+                Window.partitionBy("qid").orderBy("adc_d2", "vec_id")
+            ),
+        )
+        .filter(F.col("sr") <= PQ_SHORTLIST)
+        .select("qid", "vec_id")
+    )
+    # exact re-rank of the shortlist only (unit vectors: dot = cosine)
+    cand = short.join(e.select("vec_id", "emb"), "vec_id").join(
+        F.broadcast(q), "qid"
+    )
+    return _top_k(cand, F.round(_dot("qemb", "emb"), 6))
 
 
 def emb_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -644,85 +648,10 @@ def emb_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_queries.py::test_pq_recall_floor and per-round by the
     driver via the `emb_knn_pq_recall` catalog entry.
     """
-    raw = spread(load(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("raw")
-    )
-    nrm = F.sqrt(
-        F.aggregate(F.transform("raw", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    e = raw.select("vec_id", F.transform("raw", lambda x: x / nrm).alias("emb"))
-
-    cents = _pq_train_codebooks(e)
-    cdf = spark.createDataFrame(
-        [(m, k, cents[m][k]) for m in range(PQ_M) for k in range(PQ_K)],
-        "m int, k int, cent array<double>",
-    )
-
-    sub = e.select(
-        "vec_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {PQ_M - 1}), "
-                f"m -> slice(emb, m * {PQ_SUB_DIM} + 1, {PQ_SUB_DIM}))"
-            )
-        ).alias("m", "sv"),
-    )
-    d2 = F.aggregate(
-        F.zip_with("sv", "cent", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    codes = (
-        sub.join(F.broadcast(cdf), "m")
-        .select("vec_id", "m", "k", d2.alias("d2"))
-        .groupBy("vec_id", "m")
-        .agg(F.min_by("k", F.struct("d2", "k")).alias("k"))
-    )
-
-    # per-query ADC lookup tables: ||q_sub - cent||² for every (m, k) —
-    # queries collected once, tables computed driver-side (bit-exact
-    # fold twin), so neither subtree re-scans the corpus
-    q_rows, q = _collect_queries(
-        e.filter(F.col("vec_id") < N_QUERY_VECS).select(
-            F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
-        )
-    )
-    qtab = _adc_lookup_table(spark, q_rows, cents)
-
-    adc = (
-        codes.join(F.broadcast(qtab), ["m", "k"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", "vec_id")
-        .agg(F.sum("qd2").alias("adc_d2"))
-    )
-    short = (
-        adc.withColumn(
-            "sr",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy("adc_d2", "vec_id")
-            ),
-        )
-        .filter(F.col("sr") <= PQ_SHORTLIST)
-        .select("qid", "vec_id")
-    )
-
-    # exact re-rank of the shortlist only
-    cand = (
-        short.join(e, "vec_id")
-        .join(F.broadcast(q), "qid")
-        .select("qid", "vec_id", F.round(_dot("qemb", "emb"), 6).alias("sim"))
-    )
-    return (
-        cand.withColumn(
-            "knn_rank",
-            F.row_number()
-            .over(Window.partitionBy("qid").orderBy(F.col("sim").desc(), "vec_id"))
-            .cast("long"),
-        )
-        .filter(F.col("knn_rank") <= TOP_K)
-    )
+    return _pq_knn(spark, sf_dir, None)
 
 
+PQ_RECALL_FLOOR_NUM, PQ_RECALL_FLOOR_DEN = 1, 2  # recall ≥ 1/2, exact integers
 #: IVF-PQ recall floor vs brute force — lower than the pure-PQ floor
 #: by design: the coarse stage discards (nlists − nprobe)/nlists of
 #: the corpus before ADC ever runs (the accuracy/speed trade the
@@ -754,136 +683,60 @@ def emb_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     against broadcast per-query tables — never an all-pairs anything.
     Iterative k-means training → no SQL oracle for these raw rows; the
     machine-checked contract is ``emb_knn_ivfpq_recall``."""
-    raw = spread(load(spark, sf_dir, "embeddings")).select(
-        "vec_id",
-        F.col("label").cast("long").alias("label"),
-        F.col("embedding").cast("array<double>").alias("raw"),
+    return _pq_knn(spark, sf_dir, IVFPQ_NPROBE)
+
+
+def _recall_gate(
+    ann: DataFrame, brute: DataFrame, num: int, den: int
+) -> DataFrame:
+    """1-row exact-integer recall summary of ``ann`` against ``brute``:
+    (n_queries, k, floor_met) with floor_met ⇔ |ann∩brute| · den ≥
+    rows · num."""
+    marked = ann.select("qid", "vec_id").join(
+        brute.select("qid", "vec_id").withColumn("hit", F.lit(1)),
+        ["qid", "vec_id"],
+        "left",
     )
-    nrm = F.sqrt(
-        F.aggregate(
-            F.transform("raw", lambda x: x * x),
-            F.lit(0.0),
-            lambda a, x: a + x,
+    return marked.agg(
+        F.count_distinct("qid").cast("long").alias("n_queries"),
+        F.count(F.lit(1)).alias("n_rows"),
+        # outer coalesce: sum over ZERO rows is NULL, which would make
+        # the floor comparison NULL instead of the vacuous TRUE the
+        # empty-corpus oracle states
+        F.coalesce(F.sum(F.coalesce("hit", F.lit(0))), F.lit(0)).alias(
+            "n_hits"
+        ),
+    ).select(
+        "n_queries",
+        # ANSI-safe: an empty corpus has 0 queries — emit k=0, no crash
+        F.when(
+            F.col("n_queries") > 0, F.col("n_rows") / F.col("n_queries")
         )
-    )
-    e = raw.select(
-        "vec_id", "label", F.transform("raw", lambda x: x / nrm).alias("emb")
+        .otherwise(0)
+        .cast("long")
+        .alias("k"),
+        (F.col("n_hits") * F.lit(den) >= F.col("n_rows") * F.lit(num)).alias(
+            "floor_met"
+        ),
     )
 
-    cents = _pq_train_codebooks(e.select("vec_id", "emb"))
-    cdf = spark.createDataFrame(
-        [(m, k, cents[m][k]) for m in range(PQ_M) for k in range(PQ_K)],
-        "m int, k int, cent array<double>",
-    )
 
-    # coarse stage: per-label centroids of the normalized vectors,
-    # queries probe the IVF_NPROBE nearest lists (cosine, determinist
-    # tie-break on label — identical shape to emb_knn_ivf)
-    cent = (
-        e.select("label", F.posexplode("emb").alias("pos", "val"))
-        .groupBy("label", "pos")
-        .agg(F.avg("val").alias("avgv"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "avgv"))),
-                lambda s: s["avgv"],
-            ).alias("cemb")
-        )
-    )
-    q_rows, q = _collect_queries(
-        e.filter(F.col("vec_id") < N_QUERY_VECS).select(
-            F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
-        )
-    )
-    csim = F.round(
-        _dot("qemb", "cemb") / (_norm("qemb") * _norm("cemb")), 6
-    )
-    probe = (
-        q.join(F.broadcast(cent))
-        .select("qid", "label", csim.alias("csim"))
-        .withColumn(
-            "pr",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(
-                    F.col("csim").desc(), F.col("label")
-                )
-            ),
-        )
-        .filter(F.col("pr") <= IVFPQ_NPROBE)
-        .select("qid", "label")
-    )
-
-    # PQ encode the corpus (1 byte/subspace), once — the label rides
-    # the encode aggregate (constant per vec_id, so max() is exact),
-    # which lets the probed-list restriction join codes directly and
-    # drops BOTH the second corpus scan that rebuilt (vec_id, label)
-    # and the vec_id shuffle join that married it back to the codes
-    sub = e.select(
-        "vec_id",
-        "label",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {PQ_M - 1}), "
-                f"m -> slice(emb, m * {PQ_SUB_DIM} + 1, {PQ_SUB_DIM}))"
-            )
-        ).alias("m", "sv"),
-    )
-    d2 = F.aggregate(
-        F.zip_with("sv", "cent", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    codes = (
-        sub.join(F.broadcast(cdf), "m")
-        .select("vec_id", "label", "m", "k", d2.alias("d2"))
-        .groupBy("vec_id", "m")
-        .agg(
-            F.min_by("k", F.struct("d2", "k")).alias("k"),
-            F.max("label").alias("label"),
-        )
-    )
-
-    # ADC restricted to the probed lists: candidates come from the
-    # label equi-join against the (tiny) probe table — each query's
-    # scan touches ~nprobe/nlists of the code stream, the IVF win
-    qtab = _adc_lookup_table(spark, q_rows, cents)
-    adc = (
-        codes.join(F.broadcast(probe), "label")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .join(F.broadcast(qtab), ["qid", "m", "k"])
-        .groupBy("qid", "vec_id")
-        .agg(F.sum("qd2").alias("adc_d2"))
-    )
-    short = (
-        adc.withColumn(
-            "sr",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy("adc_d2", "vec_id")
-            ),
-        )
-        .filter(F.col("sr") <= PQ_SHORTLIST)
-        .select("qid", "vec_id")
-    )
-    cand = (
-        short.join(e.select("vec_id", "emb"), "vec_id")
-        .join(F.broadcast(q), "qid")
-        .select(
-            "qid", "vec_id", F.round(_dot("qemb", "emb"), 6).alias("sim")
-        )
-    )
-    return (
-        cand.withColumn(
-            "knn_rank",
-            F.row_number()
-            .over(
-                Window.partitionBy("qid").orderBy(
-                    F.col("sim").desc(), "vec_id"
-                )
-            )
-            .cast("long"),
-        )
-        .filter(F.col("knn_rank") <= TOP_K)
+def emb_knn_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver-verifiable gate for the PQ path: a 1-row exact-arithmetic
+    summary of `emb_knn_pq` against `emb_knn_brute` — (n_queries, k,
+    floor_met) where floor_met ⇔ |PQ∩brute| · DEN ≥ rows · NUM, all in
+    integers (no float recall value that could wobble). The DuckDB twin
+    states the spec row (N_QUERY_VECS, TOP_K, TRUE), so the driver's
+    hash comparison goes green exactly when the PQ pipeline returns k
+    rows per query AND clears the recall floor — the property pinned in
+    tests/test_queries.py::test_pq_recall_floor, now machine-checked
+    per round. k-means training itself stays non-SQL (iterative), which
+    is why the raw `emb_knn_pq` rows keep a rows-only check."""
+    return _recall_gate(
+        emb_knn_pq(spark, sf_dir),
+        emb_knn_brute(spark, sf_dir),
+        PQ_RECALL_FLOOR_NUM,
+        PQ_RECALL_FLOOR_DEN,
     )
 
 
@@ -894,29 +747,11 @@ def emb_knn_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     with |IVFPQ∩brute| · DEN ≥ rows · NUM). The oracle states the spec
     row, so the driver goes green exactly when the composite returns k
     rows per query AND clears the recall floor."""
-    ivfpq = emb_knn_ivfpq(spark, sf_dir).select("qid", "vec_id")
-    brute = emb_knn_brute(spark, sf_dir).select("qid", "vec_id")
-    marked = ivfpq.join(
-        brute.withColumn("hit", F.lit(1)), ["qid", "vec_id"], "left"
-    )
-    return marked.agg(
-        F.count_distinct("qid").cast("long").alias("n_queries"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.coalesce(F.sum(F.coalesce("hit", F.lit(0))), F.lit(0)).alias(
-            "n_hits"
-        ),
-    ).select(
-        "n_queries",
-        F.when(
-            F.col("n_queries") > 0, F.col("n_rows") / F.col("n_queries")
-        )
-        .otherwise(0)
-        .cast("long")
-        .alias("k"),
-        (
-            F.col("n_hits") * F.lit(IVFPQ_RECALL_FLOOR_DEN)
-            >= F.col("n_rows") * F.lit(IVFPQ_RECALL_FLOOR_NUM)
-        ).alias("floor_met"),
+    return _recall_gate(
+        emb_knn_ivfpq(spark, sf_dir),
+        emb_knn_brute(spark, sf_dir),
+        IVFPQ_RECALL_FLOOR_NUM,
+        IVFPQ_RECALL_FLOOR_DEN,
     )
 
 
@@ -1326,25 +1161,7 @@ def emb_knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.element_at(mn, i + 1)),
         )
     re_ = e.select("vec_id", _recon(F.col("emb")).alias("emb"))
-    q = re_.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
-    )
-    pairs = re_.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-    sim = F.round(_dot("qemb", "emb") / (_norm("qemb") * _norm("emb")), 6)
-    return (
-        pairs.select("qid", "vec_id", sim.alias("sim"))
-        .withColumn(
-            "knn_rank",
-            F.row_number()
-            .over(
-                Window.partitionBy("qid").orderBy(
-                    F.col("sim").desc(), F.col("vec_id")
-                )
-            )
-            .cast("long"),
-        )
-        .filter(F.col("knn_rank") <= TOP_K)
-    )
+    return _top_k(_all_pairs(re_), _cos("qemb", "emb"))
 
 
 MRL_TRUNC_DIM = 8  # matryoshka truncation prefix length
@@ -1476,17 +1293,13 @@ def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    q = e.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
-    )
-    pairs = e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
 
     def sim_at(d: int | None) -> Column:
         qe = F.col("qemb") if d is None else F.slice("qemb", 1, d)
         ce = F.col("emb") if d is None else F.slice("emb", 1, d)
-        return F.round(_dot(qe, ce) / (_norm(qe) * _norm(ce)), 6)
+        return _cos(qe, ce)
 
-    scored = pairs.select(
+    scored = _all_pairs(e).select(
         "qid",
         "vec_id",
         sim_at(None).alias("s64"),

@@ -4624,9 +4624,10 @@ class TxTable:
         df = self._managed_entry(
             self._with_generated(df, "apply_cdc"), "apply_cdc"
         )
-        upserts = df.filter(F.col(op_col) != F.lit(delete_label)).drop(
-            op_col
-        )
+        # the body's delete predicate, negated: a NULL op is an upsert
+        upserts = df.filter(
+            ~F.col(op_col).eqNullSafe(F.lit(delete_label))
+        ).drop(op_col)
         self._check_constraints(upserts, "apply_cdc batch")
 
         def bucket_hits(live, incoming, m):

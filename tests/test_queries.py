@@ -127,6 +127,110 @@ def test_pq_recall_floor(spark):
             assert abs(r["sim"] - brute_sim[key]) < 1e-9
 
 
+@pytest.mark.parametrize("name", ["emb_knn_pq", "emb_knn_ivfpq"])
+def test_pq_construction_is_lazy(spark, name):
+    """Building a PQ entry runs exactly one Spark action, the codebook
+    training collect; the query vectors and the ADC lookup tables stay
+    in the lazy plan. AQE is off while counting, so each action is one
+    job, and the parquet schema read that ``load`` schedules is
+    measured alone and subtracted."""
+    import os
+
+    from kafka_flink_harshevents_spark.queries import embeddings
+    from kafka_flink_harshevents_spark.queries._util import load
+
+    sc = spark.sparkContext
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+
+    def jobs(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        read = jobs(f"read-{name}", lambda: load(spark, sf_dir, "embeddings"))
+        built = jobs(
+            f"construct-{name}", lambda: embeddings.QUERIES[name](spark, sf_dir)
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert built - read == 1
+
+
+def test_ann_kernels_spelled_once():
+    """Each kNN mechanism in ``queries/embeddings.py`` is written once:
+    the ``knn_rank`` window, the PQ_SHORTLIST window and the PQ_SUB_DIM
+    subvector slice; and no function the PQ entries reach calls
+    ``.collect(`` except the codebook training."""
+    import ast
+    import pathlib
+
+    from kafka_flink_harshevents_spark.queries import embeddings
+
+    tree = ast.parse(pathlib.Path(embeddings.__file__).read_text())
+    funcs = {
+        n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)
+    }
+
+    def nodes(pred):
+        return [
+            n for f in funcs.values() for n in ast.walk(f) if pred(n)
+        ]
+
+    rank_windows = nodes(
+        lambda n: isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "withColumn"
+        and isinstance(n.args[0], ast.Constant)
+        and n.args[0].value == "knn_rank"
+    )
+    shortlists = nodes(
+        lambda n: isinstance(n, ast.Name) and n.id == "PQ_SHORTLIST"
+    )
+    # a Spark SQL ``slice(`` string, a Python ``[a:b]`` slice or a
+    # ``F.slice`` call, any of them sized by PQ_SUB_DIM
+    slices = nodes(
+        lambda n: "PQ_SUB_DIM" in ast.unparse(n)
+        and (
+            (isinstance(n, ast.JoinedStr) and "slice(" in ast.unparse(n))
+            or (isinstance(n, ast.Subscript) and isinstance(n.slice, ast.Slice))
+            or (
+                isinstance(n, ast.Call)
+                and ast.unparse(n.func).split(".")[-1] == "slice"
+            )
+        )
+    )
+    assert len(rank_windows) == 1
+    assert len(shortlists) == 1
+    assert len(slices) == 1
+
+    # every module function reachable from the PQ entries
+    reach, todo = set(), ["emb_knn_pq_recall", "emb_knn_ivfpq_recall"]
+    while todo:
+        name = todo.pop()
+        if name in reach:
+            continue
+        reach.add(name)
+        todo += [
+            n.id for n in ast.walk(funcs[name])
+            if isinstance(n, ast.Name) and n.id in funcs
+        ]
+    assert {"emb_knn_pq", "emb_knn_ivfpq", "_pq_train_codebooks"} <= reach
+    collectors = sorted(
+        name for name in reach
+        if any(
+            isinstance(n, ast.Attribute) and n.attr == "collect"
+            for n in ast.walk(funcs[name])
+        )
+    )
+    assert collectors == ["_pq_train_codebooks"]
+
+
 def test_neardup_lsh_fallback_subset(spark):
     """The size-guard fallback for emb_neardup_pairs (LSH signature
     blocking) must emit a subset of the exact pair set with identical

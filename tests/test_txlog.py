@@ -2977,6 +2977,31 @@ def test_apply_cdc_mixed_ops(spark, tmp_path):
     assert sorted(r["k"] for r in t.read().collect()) == [2, 4, 5]
 
 
+def test_apply_cdc_null_op_upsert_checks_constraints(spark, tmp_path):
+    """apply_cdc applies a NULL-``op`` row as an upsert, so the
+    constraint check must see it too: the batch is refused and the
+    table is left unchanged."""
+    from kafka_flink_harshevents_spark.sources.txlog import (
+        ConstraintViolation,
+    )
+
+    t = TxTable.create(
+        spark, str(tmp_path / "t"), key_cols=("k",), order_col="ver",
+        n_buckets=2,
+    )
+    t.append(spark.createDataFrame(
+        [(1, "a", 1), (2, "b", 1)], "k long, s string, ver long"))
+    t.add_constraint("s_set", "s IS NOT NULL")
+    version = t.latest_version()
+    with pytest.raises(ConstraintViolation):
+        t.apply_cdc(spark.createDataFrame(
+            [(3, None, 2, None)], "k long, s string, ver long, op string"))
+    assert t.latest_version() == version
+    assert sorted((r["k"], r["s"]) for r in t.read().collect()) == [
+        (1, "a"), (2, "b"),
+    ]
+
+
 
 def test_merge_upsert_equal_order_ties(spark, tmp_path):
     """merge_upsert resolves equal ``order_col`` ties by apply_cdc's
