@@ -111,6 +111,16 @@ def quality_columns() -> tuple[Column, Column]:
     return score, bucket
 
 
+def round_score(score: Column) -> Column:
+    """The quality score at 4 dp, rounded the way DuckDB's
+    ``round(score, 4)`` rounds: half away from zero on the binary
+    product ``score·10⁴``. Spark's ``round(score, 4)`` rounds the
+    double's shortest decimal string instead, so a score that lands
+    exactly on a 4-dp half splits the engines (0.59825 → 0.5983 in
+    Spark, 0.5982 in DuckDB, whose product is 5982.4999…)."""
+    return F.round(score * F.lit(10000.0), 0) / F.lit(10000.0)
+
+
 def _nibble_val(ch: Column) -> Column:
     """Hex char → 0..15 with pure arithmetic (md5 output is lowercase)."""
     a = F.ascii(ch)

@@ -39,6 +39,7 @@ from kafka_flink_harshevents_spark.operators.text import (
     bigrams_sql,
     md5_half_sql,
     quality_columns,
+    round_score,
     seeded_md5_sql,
     shingles_sql,
     spans_sql,
@@ -119,7 +120,7 @@ def quality_frame(d: DataFrame) -> DataFrame:
     score, bucket = quality_columns()
     return d.select(
         "doc_id",
-        F.round(score, 4).alias("quality_score"),
+        round_score(score).alias("quality_score"),
         bucket.alias("quality_bucket"),
     )
 
@@ -1173,7 +1174,7 @@ def doc_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.md5("text").alias("text_hash"),
-        F.round(score, 4).alias("quality_score"),
+        round_score(score).alias("quality_score"),
         bucket.alias("quality_bucket"),
     )
     canon = F.min("doc_id").over(Window.partitionBy("text_hash"))

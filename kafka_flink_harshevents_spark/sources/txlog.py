@@ -62,7 +62,6 @@ from __future__ import annotations
 import datetime
 import glob
 import json
-import math
 import os
 import re
 import shutil
@@ -79,118 +78,16 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from kafka_flink_harshevents_spark.sources.txskip import (
+    _bloom_build,
+    _file_stats,
+    file_predicate,
+    skip_counts,
+)
+
 _LOG_DIR = "_txlog"
 _PAD = 20
 
-# Data-skipping stats: cap the per-file stat payload like Delta's
-# dataSkippingNumIndexedCols — the log stays O(files · STATS_MAX_COLS)
-# however wide the table is.
-STATS_MAX_COLS = 32
-_STATS_MAX_STR = 256  # longer string stats are dropped, never truncated
-
-
-def _stat_scalar(v):
-    """Parquet-footer stat → JSON-safe comparable scalar, or None.
-
-    Timestamps become epoch-microsecond ints (ISO strings would compare
-    wrong across fractional-second formats); non-finite floats and long
-    strings are dropped rather than stored wrong — a missing stat only
-    costs skipping opportunity, a WRONG stat costs correctness. String
-    maxima are kept only un-truncated for the same reason (a truncated
-    max underestimates the file's range and would wrongly skip it).
-    """
-    if isinstance(v, bool) or v is None:
-        return None  # booleans carry no useful range; never skip on them
-    if isinstance(v, int):
-        return v
-    if isinstance(v, float):
-        return v if math.isfinite(v) else None
-    if isinstance(v, datetime.datetime):
-        if v.tzinfo is not None:
-            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-        epoch = datetime.datetime(1970, 1, 1)
-        return int((v - epoch) / datetime.timedelta(microseconds=1))
-    if isinstance(v, datetime.date):
-        return int((v - datetime.date(1970, 1, 1)).days)
-    if isinstance(v, bytes):
-        try:
-            v = v.decode("utf-8")
-        except UnicodeDecodeError:
-            return None
-    if isinstance(v, str):
-        return v if len(v) <= _STATS_MAX_STR else None
-    return None
-
-
-def _file_stats(path: str) -> dict:
-    """Per-file column stats from the parquet FOOTER — the file was just
-    written, its footer already holds row-group min/max/null-count, so
-    stats collection costs one metadata read, not a data scan (the same
-    place Iceberg/Delta get theirs). Returns ``{"rows": n, "cols":
-    {col: [min, max, null_count]}}``; any column or file that can't be
-    read safely simply has no stats (pruning then keeps the file)."""
-    try:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(path).metadata
-    except Exception:
-        return {}
-    per_col: dict[str, list] = {}
-    for rg in range(md.num_row_groups):
-        for ci in range(md.num_columns):
-            col = md.row_group(rg).column(ci)
-            name = col.path_in_schema
-            if "." in name or name.startswith("_"):
-                continue  # nested leaves / internal layout columns
-            st = col.statistics
-            if st is None:
-                per_col[name] = [None, None, None]
-                continue
-            # an all-NULL row group has no min/max but may still carry
-            # an exact null count — keep it (metadata_aggregate needs
-            # it to tell "all NULL" apart from "stat dropped")
-            if st.has_min_max:
-                mn, mx = _stat_scalar(st.min), _stat_scalar(st.max)
-            else:
-                mn = mx = None
-            nulls = st.null_count if st.has_null_count else None
-            cur = per_col.get(name)
-            if cur is None:
-                per_col[name] = [mn, mx, nulls]
-            else:
-                # a row group without min/max poisons the FILE range
-                # only when it isn't provably all-NULL; since we can't
-                # see its row count here, stay conservative: unknown
-                cur[0] = None if (cur[0] is None or mn is None) else min(cur[0], mn)
-                cur[1] = None if (cur[1] is None or mx is None) else max(cur[1], mx)
-                cur[2] = (
-                    None
-                    if (cur[2] is None or nulls is None)
-                    else cur[2] + nulls
-                )
-    cols = {
-        k: v
-        for k, v in sorted(per_col.items())[:STATS_MAX_COLS]
-        if not (v[0] is None and v[1] is None and v[2] is None)
-    }
-    return {"rows": md.num_rows, "cols": cols}
-
-
-# Per-file bloom indexes for point-lookup skipping (the shape of
-# Delta's bloomFilterIndex / Parquet's split-block bloom filters —
-# neither readable from Python, so the bitmap lives in the commit log
-# next to the min/max stats it complements). Min/max prunes RANGES;
-# after enough churn every file's key range overlaps every other's and
-# a point lookup degenerates to a full scan — the bloom answers
-# "definitely not in this file" for equality predicates regardless of
-# range overlap. Sizing: ~12 bits/distinct key, k≈m/n·ln2 probes →
-# ~0.3 % false-positive rate, capped at 4 KiB/bitmap so the log entry
-# stays O(1) however large the file (a saturated bloom only loses
-# skipping, never correctness).
-_BLOOM_MIN_BITS = 1 << 10
-_BLOOM_MAX_BITS = 1 << 15
-_BLOOM_BITS_PER_KEY = 12
-_BLOOM_MAX_K = 8
 # ≤ this many staged bytes per commit → the per-file bloom bitmaps are
 # built from one driver-side pyarrow read of the just-written files
 # (zero scheduled jobs) instead of the distributed scan job; above it
@@ -198,156 +95,6 @@ _BLOOM_MAX_K = 8
 # rule — bpe/pagerank/kmeans). Identical bitmaps either way:
 # _bloom_build dedups and hashes the same native values.
 _BLOOM_DRIVER_MAX_BYTES = 64 * 1024 * 1024
-
-
-def _bloom_key_bytes(v) -> bytes | None:
-    """Canonical hash input for a lookup value — shared by build (in
-    the Arrow-batched stage job) and probe (driver-side skip test), so
-    the two sides agree by construction. Only exact-equality-meaningful
-    types participate: ints, strings, bytes, date/datetime (as the same
-    epoch ints the min/max stats use). Floats/bools/None return None —
-    no bloom bit, the probe then keeps the file."""
-    if v is None or isinstance(v, bool):
-        return None
-    if isinstance(v, int):
-        return b"i:%d" % v
-    if isinstance(v, str):
-        return b"s:" + v.encode("utf-8")
-    if isinstance(v, bytes):
-        return b"b:" + v
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        e = _stat_scalar(v)
-        return None if e is None else b"i:%d" % e
-    return None
-
-
-def _bloom_hashes(data: bytes) -> tuple[int, int]:
-    """(h1, h2) for Kirsch–Mitzenmacher double hashing; h2 forced odd
-    so probe sequences cycle the whole power-of-two bitmap."""
-    import hashlib
-
-    d = hashlib.blake2b(data, digest_size=16).digest()
-    return (
-        int.from_bytes(d[:8], "little"),
-        int.from_bytes(d[8:], "little") | 1,
-    )
-
-
-def _bloom_build(values) -> dict | None:
-    """Distinct hashable values → ``{"m": bits, "k": probes, "b64":
-    bitmap}`` (None when nothing hashable — column all-NULL/floats)."""
-    import base64
-
-    keys = set()
-    for v in values:
-        kb = _bloom_key_bytes(v)
-        if kb is not None:
-            keys.add(kb)
-    if not keys:
-        return None
-    n = len(keys)
-    m = min(
-        _BLOOM_MAX_BITS,
-        max(_BLOOM_MIN_BITS, 1 << (n * _BLOOM_BITS_PER_KEY - 1).bit_length()),
-    )
-    k = max(1, min(_BLOOM_MAX_K, round(0.693 * m / n)))
-    bits = bytearray(m >> 3)
-    for kb in keys:
-        h1, h2 = _bloom_hashes(kb)
-        for i in range(k):
-            idx = (h1 + i * h2) % m
-            bits[idx >> 3] |= 1 << (idx & 7)
-    return {"m": m, "k": k, "b64": base64.b64encode(bytes(bits)).decode()}
-
-
-def _bloom_may_contain(bloom: dict, value) -> bool:
-    """False ONLY when the bitmap proves the value absent."""
-    import base64
-
-    kb = _bloom_key_bytes(value)
-    if kb is None:
-        return True
-    m, k = int(bloom["m"]), int(bloom["k"])
-    bits = base64.b64decode(bloom["b64"])
-    h1, h2 = _bloom_hashes(kb)
-    for i in range(k):
-        idx = (h1 + i * h2) % m
-        if not (bits[idx >> 3] >> (idx & 7)) & 1:
-            return False
-    return True
-
-
-def _file_may_match_eq(entry: dict, eq: dict) -> bool:
-    """Equality skip test: a file survives a point lookup only if BOTH
-    its [min, max] range admits the value AND its bloom (when indexed)
-    may contain it. Missing stats/bloom keep the file."""
-    if not _file_may_match(entry, {c: (v, v) for c, v in eq.items()}):
-        return False
-    blooms = entry.get("bloom") or {}
-    for col, v in eq.items():
-        b = blooms.get(col)
-        if b is not None and not _bloom_may_contain(b, v):
-            return False
-    return True
-
-
-def _file_may_match_isin(entry: dict, isin: dict) -> bool:
-    """Multi-value point-lookup skip test (``col IN (v1..vn)`` — the
-    candidate-pruned read shape, e.g. corpus_ingest verify mode's
-    stored-text fetch): a file survives only if AT LEAST ONE value
-    passes the single-value test — inside the recorded [min, max] AND
-    admitted by the per-file bloom when one is indexed. An empty value
-    list matches nothing (SQL ``IN ()`` semantics). Missing stats /
-    bloom keep the file, like everywhere in the skip stack; the
-    row-level ``isin`` re-application in ``read`` keeps the result
-    exact regardless."""
-    cols = (entry.get("stats") or {}).get("cols") or {}
-    blooms = entry.get("bloom") or {}
-    for col, values in isin.items():
-        s = cols.get(col)
-        alive = []
-        for v in values:
-            c = _stat_scalar(v)
-            if s and c is not None:
-                mn, mx = s[0], s[1]
-                try:
-                    if mx is not None and mx < c:
-                        continue
-                    if mn is not None and mn > c:
-                        continue
-                except TypeError:
-                    pass  # incomparable bound/stat types — keep value
-            alive.append(v)
-        if not alive:
-            return False
-        b = blooms.get(col)
-        if b is not None and not any(
-            _bloom_may_contain(b, v) for v in alive
-        ):
-            return False
-    return True
-
-
-def _file_may_match(entry: dict, prune: dict) -> bool:
-    """Conservative skip test: False ONLY when the file's recorded
-    [min, max] for some pruned column provably misses [lo, hi]. Missing
-    stats always keep the file — skipping is an optimization, the
-    actual predicate is still applied to every surviving row."""
-    cols = (entry.get("stats") or {}).get("cols") or {}
-    for col, (lo, hi) in prune.items():
-        s = cols.get(col)
-        if not s:
-            continue
-        mn, mx = s[0], s[1]
-        lo_c, hi_c = _stat_scalar(lo), _stat_scalar(hi)
-        try:
-            if lo_c is not None and mx is not None and mx < lo_c:
-                return False
-            if hi_c is not None and mn is not None and mn > hi_c:
-                return False
-        except TypeError:
-            continue  # incomparable bound/stat types — keep the file
-    return True
 
 
 def _multiset_delta(pre: DataFrame, post: DataFrame) -> DataFrame:
@@ -406,9 +153,9 @@ _PART_TYPES = {"string", "byte", "short", "integer", "long", "date"}
 
 def _part_scalar_of_dir(token: str, type_name: str):
     """Decode one hive partition-directory VALUE token into the same
-    JSON-safe scalar encoding file stats use (``_stat_scalar``), typed
-    by the column's Spark type name. ``__HIVE_DEFAULT_PARTITION__`` →
-    None (the null partition)."""
+    JSON-safe scalar encoding file stats use
+    (``txskip._stat_scalar``), typed by the column's Spark type name.
+    ``__HIVE_DEFAULT_PARTITION__`` → None (the null partition)."""
     from urllib.parse import unquote
 
     if token == _HIVE_NULL:
@@ -446,81 +193,6 @@ def _infer_part_type(tokens) -> str:
         return "date"
     return "string"
 
-
-def _part_may_match(
-    entry: dict,
-    prune: dict | None = None,
-    eq: dict | None = None,
-    isin: dict | None = None,
-) -> bool:
-    """EXACT partition skip test over an add-entry's recorded ``part``
-    values. Unlike the min/max stats test this is an invariant, not an
-    estimate: every row in the file carries exactly the recorded value,
-    so a NULL partition value skips under any bound or equality (SQL
-    comparison semantics — NULL matches nothing), and a mismatched
-    value skips even where footer stats were dropped. Columns absent
-    from ``part`` (or incomparable bound types) keep the file — the
-    row-level predicate still applies."""
-    part = entry.get("part")
-    if not part:
-        return True
-    for col, (lo, hi) in (prune or {}).items():
-        if col not in part:
-            continue
-        v = part[col]
-        lo_c, hi_c = _stat_scalar(lo), _stat_scalar(hi)
-        if v is None:
-            if lo_c is not None or hi_c is not None:
-                return False
-            continue
-        try:
-            if lo_c is not None and v < lo_c:
-                return False
-            if hi_c is not None and v > hi_c:
-                return False
-        except TypeError:
-            continue
-    for col, val in (eq or {}).items():
-        if col not in part:
-            continue
-        v = part[col]
-        c = _stat_scalar(val)
-        if v is None:
-            return False  # NULL partition: equality matches nothing
-        if c is None:
-            continue  # unencodable lookup value — keep conservatively
-        if isinstance(v, (int, float)) and isinstance(c, (int, float)):
-            if v != c:
-                return False
-        elif type(v) is type(c) and v != c:
-            return False
-    for col, values in (isin or {}).items():
-        if col not in part:
-            continue
-        v = part[col]
-        if v is None:
-            return False  # NULL partition: IN matches nothing
-        if not values:
-            return False  # IN () matches nothing
-        # skip ONLY if every value is provably unequal; an
-        # unencodable or type-mismatched value keeps the file
-        # conservatively, exactly the eq rule above per-value
-        excluded_all = True
-        for val in values:
-            c = _stat_scalar(val)
-            if c is None:
-                excluded_all = False
-                break
-            if isinstance(v, (int, float)) and isinstance(c, (int, float)):
-                if v == c:
-                    excluded_all = False
-                    break
-            elif type(v) is not type(c) or v == c:
-                excluded_all = False
-                break
-        if excluded_all:
-            return False
-    return True
 
 
 # copy_into's directory-walk stray policy: doc/metadata strays
@@ -608,12 +280,6 @@ def _rename_columns(df: DataFrame, pairs) -> DataFrame:
         if a != b and a in df.columns:
             df = df.withColumnRenamed(a, b)
     return df
-
-
-def _map_stat_keys(d: dict, mapping: dict) -> dict:
-    """Translate a prune/eq dict's LOGICAL column keys to the PHYSICAL
-    names file stats and blooms are recorded under."""
-    return {mapping.get(c, c): v for c, v in d.items()}
 
 
 def _expr_mentions(expr: str, col: str) -> bool:
@@ -2663,30 +2329,12 @@ class TxTable:
                 )
             version = self.version_at_timestamp(timestamp)
         _, live_map, schema_json, dvs = self._replay(version)
-        live = list(live_map.values())
         mapping = self.meta_at(version).get("column_mapping") or {}
         # file stats/blooms are keyed by PHYSICAL column name — the
-        # skip tests translate; the row-level re-application below
+        # skip test translates; the row-level re-application below
         # stays on the logical frame
-        if prune:
-            pm = _map_stat_keys(prune, mapping)
-            live = [
-                e for e in live
-                if _file_may_match(e, pm) and _part_may_match(e, prune=pm)
-            ]
-        if eq:
-            em = _map_stat_keys(eq, mapping)
-            live = [
-                e for e in live
-                if _file_may_match_eq(e, em) and _part_may_match(e, eq=em)
-            ]
-        if isin:
-            im = _map_stat_keys(isin, mapping)
-            live = [
-                e for e in live
-                if _file_may_match_isin(e, im)
-                and _part_may_match(e, isin=im)
-            ]
+        keep = file_predicate(prune, eq, isin, mapping)
+        live = [e for e in live_map.values() if keep(e)]
         if not live:
             if schema_json is None:
                 raise ValueError("empty table with no recorded schema")
@@ -2900,39 +2548,13 @@ class TxTable:
         predates stats collection). ``eq`` adds the bloom/point-lookup
         test exactly as ``read(eq=...)`` applies it; ``isin`` the
         multi-value form exactly as ``read(isin=...)``."""
-
-        mapping = self.meta_at(version).get("column_mapping") or {}
-        prune = _map_stat_keys(prune, mapping)
-        eq = _map_stat_keys(eq, mapping) if eq else None
-        isin = _map_stat_keys(isin, mapping) if isin else None
-
-        def keep(e: dict) -> bool:
-            if not _file_may_match(e, prune):
-                return False
-            if not _part_may_match(e, prune=prune, eq=eq, isin=isin):
-                return False
-            if eq and not _file_may_match_eq(e, eq):
-                return False
-            return not isin or _file_may_match_isin(e, isin)
-
+        keep = file_predicate(
+            prune, eq, isin,
+            self.meta_at(version).get("column_mapping") or {},
+        )
         _, live_map, _, dvs = self._replay(version)
         live = list(live_map.values())
-        kept = [e for e in live if keep(e)]
-        skipped = [e for e in live if not keep(e)]
-        rows = [
-            None
-            if e.get("stats", {}).get("rows") is None
-            else e["stats"]["rows"] - len(dvs.get(e["path"], ()))
-            for e in skipped
-        ]
-        return {
-            "files_total": len(live),
-            "files_read": len(kept),
-            "files_skipped": len(skipped),
-            "rows_skipped": (
-                None if any(r is None for r in rows) else sum(rows)
-            ),
-        }
+        return skip_counts(live, [e for e in live if keep(e)], dvs)
 
     def show_partitions(self, version: int | None = None) -> DataFrame:
         """``SHOW PARTITIONS`` — the live partition tuples with per-
@@ -3722,17 +3344,17 @@ class TxTable:
         env = {r["_bucket"]: r for r in stats}
         mapping = self.meta.get("column_mapping") or {}
         always = [e for e in live if e["bucket"] == -1]
-        cand = []
-        for e in live:
-            r = env.get(e["bucket"])
-            if r is None:
-                continue
-            pm = _map_stat_keys(
+        keep_in = {
+            b: file_predicate(
                 {k: (r[f"_lo_{k}"], r[f"_hi_{k}"]) for k in key_cols},
-                mapping,
+                mapping=mapping,
             )
-            if _file_may_match(e, pm) and _part_may_match(e, prune=pm):
-                cand.append(e)
+            for b, r in env.items()
+        }
+        cand = [
+            e for e in live
+            if e["bucket"] in keep_in and keep_in[e["bucket"]](e)
+        ]
         n_keys = sum(r["_nk"] for r in stats)
         # the per-value probe costs one extra collect job per merge;
         # below a handful of candidate files the envelope has already
@@ -3742,14 +3364,11 @@ class TxTable:
         # candidate set is big enough to pay for it
         if len(cand) > 4 and 0 < n_keys <= self._MERGE_PRUNE_MAX_KEYS:
             rows = src_b.select(*key_cols).distinct().collect()
-            im = _map_stat_keys(
-                {k: [r[k] for r in rows] for k in key_cols}, mapping
+            keep = file_predicate(
+                isin={k: [r[k] for r in rows] for k in key_cols},
+                mapping=mapping,
             )
-            cand = [
-                e for e in cand
-                if _file_may_match_isin(e, im)
-                and _part_may_match(e, isin=im)
-            ]
+            cand = [e for e in cand if keep(e)]
         return cand + always
 
     def merge_upsert(
@@ -5307,9 +4926,9 @@ class TxTable:
         (numeric), split into ≤ ``max_rows_per_file``-row files. Each
         file's parquet footer then carries NARROW min/max ranges on
         every z-ordered column, so ``read(prune=...)`` / the log-level
-        ``_file_may_match`` skip most files for a range predicate on
-        ANY of the clustered dimensions — single-column sort only
-        serves its leading column. The row multiset is preserved
+        skip test (``txskip.file_predicate``) skip most files for a
+        range predicate on ANY of the clustered dimensions —
+        single-column sort only serves its leading column. The row multiset is preserved
         exactly; the commit records ``op="compact"`` (plus a zorder
         note), so CDF, time travel and the streaming source treat it
         as the data-preserving rewrite it is, with zero new cases.
@@ -5495,15 +5114,10 @@ class TxTable:
         yields both the ``touched`` entries and ``n`` (the per-file
         match counts' sum), so no second job re-scans the files for
         the count."""
-        if prune:
-            # file stats are keyed by PHYSICAL name (column mapping)
-            prune = _map_stat_keys(
-                prune, self.meta.get("column_mapping") or {}
-            )
-        cand = [
-            e for e in live_map.values()
-            if not prune or _file_may_match(e, prune)
-        ]
+        keep = file_predicate(
+            prune, mapping=self.meta.get("column_mapping") or {}
+        )
+        cand = [e for e in live_map.values() if keep(e)]
         if not cand:
             return None, None, [], 0
         matches = self._open_files(

@@ -38,11 +38,13 @@ Grammar notes (all case-insensitive, whitespace-insensitive):
 
 from __future__ import annotations
 
+import contextlib
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 
 from kafka_flink_harshevents_spark.sources.txlog import TxTable
+from kafka_flink_harshevents_spark.sources.txskip import fold_range, skip_counts
 
 __all__ = ["txsql"]
 
@@ -1156,15 +1158,6 @@ def _conjunct_filters(
     eq: dict = {}
     isin: dict = {}
     prune: dict = {}
-
-    def _fold_range(col, lo=None, hi=None):
-        clo, chi = prune.get(col, (None, None))
-        if lo is not None:
-            clo = lo if clo is None else max(clo, lo)
-        if hi is not None:
-            chi = hi if chi is None else min(chi, hi)
-        prune[col] = (clo, chi)
-
     for c in conjuncts:
         try:
             cm = _SKIP_CMP.match(c)
@@ -1191,15 +1184,15 @@ def _conjunct_filters(
                 if op == "=":
                     eq[col] = v
                 elif op in (">", ">="):
-                    _fold_range(col, lo=v)
+                    fold_range(prune, col, lo=v)
                 else:
-                    _fold_range(col, hi=v)
+                    fold_range(prune, col, hi=v)
             elif bm:
                 lo = _coerce_lit(_skip_lit_val(bm.group("lo")), styp)
                 hi = _coerce_lit(_skip_lit_val(bm.group("hi")), styp)
                 if lo is None or hi is None:
                     continue
-                _fold_range(col, lo=lo, hi=hi)
+                fold_range(prune, col, lo=lo, hi=hi)
             else:
                 vals = [
                     _coerce_lit(_skip_lit_val(x), styp)
@@ -1395,25 +1388,11 @@ def _dml_prune(
         conjuncts, cols, {name} if name else set(), True
     )
     prune = dict(kw.get("prune") or {})
-    for col, v in (kw.get("eq") or {}).items():
-        lo, hi = prune.get(col, (None, None))
-        try:
-            lo = v if lo is None else max(lo, v)
-            hi = v if hi is None else min(hi, v)
-        except TypeError:
-            continue
-        prune[col] = (lo, hi)
-    for col, vals in (kw.get("isin") or {}).items():
-        if not vals:
-            continue
-        try:
-            vlo, vhi = min(vals), max(vals)
-            lo, hi = prune.get(col, (None, None))
-            lo = vlo if lo is None else max(lo, vlo)
-            hi = vhi if hi is None else min(hi, vhi)
-        except TypeError:
-            continue
-        prune[col] = (lo, hi)
+    ins = [(c, [v]) for c, v in (kw.get("eq") or {}).items()]
+    for col, vals in ins + list((kw.get("isin") or {}).items()):
+        if vals:
+            with contextlib.suppress(TypeError):
+                fold_range(prune, col, lo=min(vals), hi=max(vals))
     return prune or None
 
 
@@ -1570,7 +1549,7 @@ def _explain_skipping(
 
     inner = inner.strip().rstrip(";")
     h = inner.split(None, 1)[0].upper() if inner.split() else ""
-    rows = []
+    reports = []  # (table, version, skip_counts, filters)
     if h == "MERGE":
         m = _MERGE_HEAD.match(inner)
         if not m:
@@ -1584,40 +1563,19 @@ def _explain_skipping(
         full_scan = (
             _Scanner.find_kw(inner, "NOT MATCHED BY SOURCE") >= 0
         )
-        if full_scan:
-            hit_paths = {e["path"] for e in live}
-        else:
-            hit = t._merge_hit_files(
-                live, t._with_bucket(src), t.meta["key_cols"]
-            )
-            hit_paths = {e["path"] for e in hit}
-        skipped = [e for e in live if e["path"] not in hit_paths]
-        srows = [
-            None
-            if e.get("stats", {}).get("rows") is None
-            else e["stats"]["rows"] - len(dvs.get(e["path"], ()))
-            for e in skipped
-        ]
-        return spark.createDataFrame(
-            [(
-                m.group("target").strip().strip("`"), None,
-                len(live), len(hit_paths), len(skipped),
-                None if any(r is None for r in srows) else sum(srows),
-                _json.dumps(
-                    {
-                        "merge_find_phase": {
-                            "key_cols": list(t.meta["key_cols"]),
-                            "by_source_full_scan": full_scan,
-                        }
-                    },
-                    sort_keys=True,
-                ),
-            )],
-            "table string, version long, files_total long, "
-            "files_read long, files_skipped long, rows_skipped long, "
-            "filters string",
+        hit = live if full_scan else t._merge_hit_files(
+            live, t._with_bucket(src), t.meta["key_cols"]
         )
-    if h in ("SELECT", "WITH"):
+        reports.append((
+            m.group("target"), None, skip_counts(live, hit, dvs),
+            {
+                "merge_find_phase": {
+                    "key_cols": list(t.meta["key_cols"]),
+                    "by_source_full_scan": full_scan,
+                }
+            },
+        ))
+    elif h in ("SELECT", "WITH"):
         spans = _literal_spans(inner) + _fn_arg_spans(inner)
         ctes = _cte_names(inner)
         sk = _skip_filters_by_ref(spark, inner, spans, ctes, tables)
@@ -1635,13 +1593,7 @@ def _explain_skipping(
                 eq=kw.get("eq"),
                 isin=kw.get("isin"),
             )
-            rows.append((
-                m.group("t").strip().strip("`"),
-                version,
-                rep["files_total"], rep["files_read"],
-                rep["files_skipped"], rep["rows_skipped"],
-                _json.dumps(kw, default=str, sort_keys=True),
-            ))
+            reports.append((m.group("t"), version, rep, kw))
     elif h in ("UPDATE", "DELETE"):
         m = re.match(
             r"(?is)^(?:UPDATE\s+|DELETE\s+FROM\s+)"
@@ -1656,18 +1608,23 @@ def _explain_skipping(
         t = _target_table(spark, m.group("t"), tables)
         prune = _dml_prune(spark, m.group("t"), tables, m.group("w"))
         rep = t.prune_report(prune or {})
-        rows.append((
-            m.group("t").strip().strip("`"), None,
-            rep["files_total"], rep["files_read"],
-            rep["files_skipped"], rep["rows_skipped"],
-            _json.dumps({"prune": prune} if prune else {},
-                        default=str, sort_keys=True),
-        ))
+        reports.append(
+            (m.group("t"), None, rep, {"prune": prune} if prune else {})
+        )
     else:
         raise ValueError(
             "txsql EXPLAIN SKIPPING: expected a SELECT, UPDATE or "
             f"DELETE statement, got {h!r}"
         )
+    rows = [
+        (
+            tok.strip().strip("`"), version,
+            rep["files_total"], rep["files_read"],
+            rep["files_skipped"], rep["rows_skipped"],
+            _json.dumps(filters, default=str, sort_keys=True),
+        )
+        for tok, version, rep, filters in reports
+    ]
     return spark.createDataFrame(
         rows,
         "table string, version long, files_total long, "

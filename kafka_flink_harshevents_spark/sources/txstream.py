@@ -51,6 +51,7 @@ trade Delta makes).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 from collections.abc import Iterator
@@ -59,14 +60,16 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from kafka_flink_harshevents_spark.sources.txlog import (
     _add_entry,
-    _bloom_build,
-    _file_may_match,
-    _file_may_match_eq,
     _list_versions,
     _read_record,
     _replay_log,
     _version_path,
     bucket_batch,
+)
+from kafka_flink_harshevents_spark.sources.txskip import (
+    _bloom_build,
+    file_predicate,
+    fold_range,
 )
 
 try:
@@ -805,13 +808,16 @@ class TxLogBatchReader(DataSourceReader):
     deletion-vector masking, batch CDF, and Catalyst-driven file
     skipping without importing the library. Filter pushdown
     (``pushFilters``, Spark 4.1) maps Catalyst predicates onto the
-    SAME log-level min/max + bloom skip tests ``TxTable.read`` uses:
+    SAME skip decision ``TxTable.read`` makes
+    (``txskip.file_predicate``):
 
-    - ``EqualTo`` / ``In`` → per-file bloom + range test
-      (``_file_may_match_eq`` — tables created with ``bloom_cols``
-      skip on equality regardless of range overlap);
+    - ``EqualTo`` / ``In`` → one IN conjunct each, tested against the
+      footer range, the per-file bloom (tables created with
+      ``bloom_cols`` skip on equality regardless of range overlap) and
+      the exact partition value;
     - ``GreaterThan[OrEqual]`` / ``LessThan[OrEqual]`` → half-open
-      range test against the footer min/max in the add-entry.
+      bounds folded into one range per column, tested against the
+      footer min/max and the partition value.
 
     EVERY filter is returned as unsupported, so Spark re-applies them
     row-level: skipping only drops whole files the predicate would have
@@ -892,11 +898,11 @@ class TxLogBatchReader(DataSourceReader):
             if f.name not in (VERSION_COL, CHANGE_COL)
         )
         self._schema = schema
-        # pushed skip constraints: [(col, lo, hi)] ranges (None = open
+        # pushed skip constraints: {col: (lo, hi)} ranges (None = open
         # bound, non-strict — conservative for the strict comparators)
-        # and [(col, (v, ...))] equality candidate sets
-        self._ranges: list[tuple[str, object, object]] = []
-        self._eq_sets: list[tuple[str, tuple]] = []
+        # and [(col, (v, ...))] IN conjuncts
+        self._prune: dict[str, tuple] = {}
+        self._isin: list[tuple[str, tuple]] = []
         # column mapping for resolving the declared schema to PHYSICAL
         # file columns/stats/blooms. The declared schema is always the
         # LATEST snapshot's logical names (the DataSource schema() API
@@ -904,7 +910,6 @@ class TxLogBatchReader(DataSourceReader):
         # a version-scoped mapping would miss renames that happened
         # after the time-travel target and NULL-fill the column.
         self._cmap = _column_mapping(self.table_dir)
-        self._cmap_dict = dict(self._cmap)
 
     def pushFilters(self, filters):  # noqa: N802 - pyspark API name
         if _HAS_PUSHDOWN and not self.read_change_feed:
@@ -914,29 +919,18 @@ class TxLogBatchReader(DataSourceReader):
                     continue
                 col = attr[0]
                 if isinstance(f, EqualTo):
-                    self._eq_sets.append((col, (f.value,)))
+                    self._isin.append((col, (f.value,)))
                 elif isinstance(f, In):
-                    self._eq_sets.append((col, tuple(f.value)))
+                    self._isin.append((col, tuple(f.value)))
                 elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                    self._ranges.append((col, f.value, None))
+                    with contextlib.suppress(TypeError):
+                        fold_range(self._prune, col, lo=f.value)
                 elif isinstance(f, (LessThan, LessThanOrEqual)):
-                    self._ranges.append((col, None, f.value))
+                    with contextlib.suppress(TypeError):
+                        fold_range(self._prune, col, hi=f.value)
         # hand every filter back: Spark re-applies them row-level, so
         # file skipping stays a pure optimization
         return filters
-
-    def _keep(self, entry: dict) -> bool:
-        cmap = self._cmap_dict
-        for col, lo, hi in self._ranges:
-            if not _file_may_match(entry, {cmap.get(col, col): (lo, hi)}):
-                return False
-        for col, values in self._eq_sets:
-            if not any(
-                _file_may_match_eq(entry, {cmap.get(col, col): v})
-                for v in values
-            ):
-                return False
-        return True
 
     def partitions(self) -> list:
         if self.read_change_feed:
@@ -976,7 +970,10 @@ class TxLogBatchReader(DataSourceReader):
                 "fill; run TxTable.compact() once to materialize the "
                 "partition columns, or read through TxTable.read()"
             )
-        kept = [e for e in live if self._keep(e)]
+        keep = file_predicate(
+            self._prune, isin=self._isin, mapping=dict(self._cmap)
+        )
+        kept = [e for e in live if keep(e)]
         if self.skip_report:
             with open(self.skip_report, "w") as f:
                 json.dump(

@@ -21,7 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kafka_flink_harshevents_spark.operators.text import quality_columns
+from kafka_flink_harshevents_spark.operators.text import (
+    quality_columns,
+    round_score,
+)
 
 # bucket → route: the ingest policy the reference's threshold-derivation
 # operators (F10) use — promote/hold/discard tiers.
@@ -42,7 +45,7 @@ def with_quality(docs: DataFrame) -> DataFrame:
     )
     return (
         docs.filter(F.col("text").isNotNull())
-        .withColumn("quality_score", F.round(score, 4))
+        .withColumn("quality_score", round_score(score))
         .withColumn("quality_bucket", bucket)
         .withColumn("route", route)
     )

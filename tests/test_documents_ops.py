@@ -473,3 +473,54 @@ def test_text_kernels_spelled_once():
                 spellers.append(rel)
     assert importers == []
     assert sorted(set(spellers)) == ["operators/text.py"]
+
+
+# doc 3932 of the sf0.1 corpus: its quality score is exactly the 4-dp
+# half 0.59825, where Spark's round(x, 4) (0.5983) and DuckDB's (0.5982)
+# split unless the score is rounded on the binary product x·10⁴
+HALF_TIE_TEXT = (
+    "batch the part join spark window scan fast filter line fast the "
+    "part join value customer line the hash scan customer part fast "
+    "filter row batch fast window key group batch key part row big fast "
+    "big scan fast a group column join hash part small line agg"
+)
+
+
+def test_quality_score_half_tie_matches_duckdb(spark, tmp_path):
+    """A score on a 4-dp half rounds the same in the batch entry, the
+    streaming scorer and the entry's DuckDB oracle."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_flink_harshevents_spark.queries.documents import (
+        ORACLES,
+        doc_quality_score,
+    )
+    from kafka_flink_harshevents_spark.streaming.quality import with_quality
+
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array([3932], pa.int64()),
+            "text": [HALF_TIE_TEXT],
+            "lang": ["en"],
+            "source": ["src12"],
+            "n_chars": pa.array([len(HALF_TIE_TEXT)], pa.int64()),
+        }),
+        str(tmp_path / "documents.parquet"),
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"'{tmp_path / 'documents.parquet'}'"
+    )
+    (want,) = con.execute(
+        f"SELECT quality_score FROM ({ORACLES['doc_quality_score']})"
+    ).fetchone()
+    assert want == 0.5982
+    (batch,) = doc_quality_score(spark, str(tmp_path)).collect()
+    stream = with_quality(
+        spark.createDataFrame([(3932, HALF_TIE_TEXT)], "doc_id long, text string")
+    ).collect()[0]
+    assert batch["quality_score"] == want
+    assert stream["quality_score"] == want

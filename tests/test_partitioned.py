@@ -23,9 +23,9 @@ from pyspark.sql import functions as F
 from kafka_flink_harshevents_spark.sources.txlog import (
     TxTable,
     _infer_part_type,
-    _part_may_match,
     _part_scalar_of_dir,
 )
+from kafka_flink_harshevents_spark.sources.txskip import _part_may_match
 
 
 def _mkp(spark, tmp_path, name="pt", partition_by=("region",), **kw):
@@ -287,17 +287,17 @@ def test_part_helpers_unit(tmp_path):
     assert _part_scalar_of_dir("a%20b", "string") == "a b"
     assert _part_scalar_of_dir("__HIVE_DEFAULT_PARTITION__", "long") is None
     e = {"part": {"p": 5}}
-    assert _part_may_match(e, eq={"p": 5})
-    assert not _part_may_match(e, eq={"p": 6})
+    assert _part_may_match(e, isin={"p": [5]})
+    assert not _part_may_match(e, isin={"p": [6]})
     assert _part_may_match(e, prune={"p": (0, 10)})
     assert not _part_may_match(e, prune={"p": (6, None)})
     # NULL partition matches nothing
     en = {"part": {"p": None}}
-    assert not _part_may_match(en, eq={"p": 5})
+    assert not _part_may_match(en, isin={"p": [5]})
     assert not _part_may_match(en, prune={"p": (None, 3)})
     assert _part_may_match(en, prune={"p": (None, None)})
     # incomparable types keep the file
-    assert _part_may_match(e, eq={"p": "x"})
+    assert _part_may_match(e, isin={"p": ["x"]})
 
 
 def test_partitioned_copy_into_and_auto_ingest(spark, tmp_path):

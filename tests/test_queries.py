@@ -37,6 +37,28 @@ def test_query_matches_oracle(spark, name):
     assert_matches_duckdb(df, ORACLES[name], SF_DIR)
 
 
+@pytest.mark.slow
+@pytest.mark.parametrize("sf", ["sf0.01", "sf0.1"])
+def test_catalog_oracle_audit(spark, sf):
+    """The full catalog against its DuckDB oracles at the driver's
+    scales (``tools/oracle_audit.py``): no entry fails or errors, and
+    only the three approximate/generator entries have no oracle."""
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(__file__)), "tools", "oracle_audit.py"
+    )
+    spec = importlib.util.spec_from_file_location("oracle_audit", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    status = tool.audit(spark, os.path.join(os.path.dirname(SF_DIR), sf))
+    assert {n: s for n, s in status.items() if s in ("FAIL", "ERROR")} == {}
+    assert {n for n, s in status.items() if s == "rows-only"} == {
+        "emb_knn_pq", "emb_knn_ivfpq", "pipeline_derive",
+    }
+
+
 EXPECTED_SCHEMAS = {
     "emb_knn_lsh": ["qid", "vec_id", "sim", "knn_rank"],
     "emb_knn_pq": ["qid", "vec_id", "sim", "knn_rank"],

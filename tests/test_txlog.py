@@ -4709,6 +4709,121 @@ def test_one_commit_retry_path():
 
 
 
+# (WHERE clause, its read() kwargs, merge-source keys or None,
+# files opened by (read, DELETE find phase, merge) of the 18 live files)
+_SKIP_CASES = [
+    ("val BETWEEN 100 AND 300", {"prune": {"val": (100, 300)}}, None,
+     (6, 6, None)),
+    ("k = 7", {"eq": {"k": 7}}, (7,), (5, 5, 3)),
+    ("k IN (3, 50, 51)", {"isin": {"k": [3, 50, 51]}}, (3, 50, 51),
+     (10, 12, 8)),
+    ("region = 'eu'", {"eq": {"region": "eu"}}, None, (6, 6, None)),
+    ("region IN ('ap') AND k >= 10 AND k <= 30",
+     {"isin": {"region": ["ap"]}, "prune": {"k": (10, 30)}}, None,
+     (2, 2, None)),
+    ("k = 7 AND k IN (7, 8)", {"eq": {"k": 7}, "isin": {"k": [7, 8]}},
+     (7,), (5, 5, 3)),
+    ("k = 999", {"eq": {"k": 999}}, (999,), (0, 0, 0)),
+    ("val >= 500 AND region = 'us'",
+     {"prune": {"val": (500, None)}, "eq": {"region": "us"}}, None,
+     (4, 4, None)),
+]
+
+
+def test_skip_decision_parity_across_readers(spark, tmp_path, monkeypatch):
+    """Every reader makes the same file-skip decision. On a partitioned,
+    bloom-indexed table with a renamed column, each WHERE clause opens
+    the same files through ``read``, ``prune_report``, ``EXPLAIN
+    SKIPPING SELECT`` and a pushed-down ``format("txlog")`` filter; the
+    DML find phase of a DELETE opens what ``EXPLAIN SKIPPING DELETE``
+    reports, and ``merge_upsert`` what ``EXPLAIN SKIPPING MERGE``
+    reports; every pruned read returns the rows of the unpruned read
+    filtered the same way."""
+    import json as _json
+
+    from kafka_flink_harshevents_spark.sources.txsql import txsql
+
+    _register_txlog(spark)
+    t = TxTable.create(
+        spark, str(tmp_path / "t"), key_cols=("k",), order_col="ver",
+        n_buckets=2, bloom_cols=("k",), partition_by=("region",),
+    )
+    regions = ["eu", "us", "ap"]
+    for lo in (0, 40, 80):
+        t.append(spark.createDataFrame(
+            [(k, regions[k % 3], k * 10, 1) for k in range(lo, lo + 40)],
+            "k long, region string, v long, ver long",
+        ))
+    v0 = t.rename_column("v", "val")
+    full = t.read()
+    rep_path = str(tmp_path / "skip.json")
+    scan = (
+        spark.read.format("txlog").option("tabledir", t.table_dir)
+        .option("skipreport", rep_path).load().drop("_commit_version")
+    )
+    opened = []
+    real_open = TxTable._open_files
+
+    def spy(self, rel_paths, *a, **k):
+        opened.append((len(rel_paths), k.get("keep_meta", False)))
+        return real_open(self, rel_paths, *a, **k)
+
+    monkeypatch.setattr(TxTable, "_open_files", spy)
+
+    def n_open(call, find_phase=False):
+        opened.clear()
+        call()
+        return next(
+            (n for n, meta in opened if meta or not find_phase), 0
+        )
+
+    def explain(stmt, **kw):
+        return txsql(
+            spark, f"EXPLAIN SKIPPING {stmt}", tables={"t": t}, **kw
+        ).collect()[0]
+
+    got = []
+    for where, kw, keys, _ in _SKIP_CASES:
+        want = sorted(full.filter(where).collect())
+        pruned = {}
+        n_read = n_open(lambda: pruned.setdefault("df", t.read(**kw)))
+        assert sorted(pruned["df"].collect()) == want, where
+        report = t.prune_report(
+            kw.get("prune") or {}, eq=kw.get("eq"), isin=kw.get("isin")
+        )
+        assert sorted(scan.filter(where).collect()) == want, where
+        assert (
+            report["files_read"],
+            explain(f"SELECT * FROM t WHERE {where}")["files_read"],
+            _json.load(open(rep_path))["files_read"],
+        ) == (n_read,) * 3, where
+
+        n_find = explain(f"DELETE FROM t WHERE {where}")["files_read"]
+        assert n_open(
+            lambda: txsql(spark, f"DELETE FROM t WHERE {where}",
+                          tables={"t": t}),
+            find_phase=True,
+        ) == n_find, where
+        t.restore(v0)
+
+        n_merge = None
+        if keys is not None:
+            src = spark.createDataFrame(
+                [(k, regions[k % 3], -k, 2) for k in keys],
+                "k long, region string, val long, ver long",
+            )
+            n_merge = explain(
+                "MERGE INTO t USING s ON t.k = s.k "
+                "WHEN MATCHED THEN UPDATE SET * "
+                "WHEN NOT MATCHED THEN INSERT *",
+                sources={"s": src},
+            )["files_read"]
+            assert n_open(lambda: t.merge_upsert(src)) == n_merge, where
+            t.restore(v0)
+        got.append((n_read, n_find, n_merge))
+    assert got == [case[-1] for case in _SKIP_CASES]
+
+
 def test_one_keyed_merge_and_find_phase():
     """TxTable's row-level DML spells each mechanism once: the keyed
     latest-wins window of merge_upsert / apply_cdc lives only in
@@ -4756,6 +4871,54 @@ def test_one_keyed_merge_and_find_phase():
     assert sorted(windows) == ["_changes_for", "_fill_identity", "_keyed_merge"]
     assert probes == ["_find_matches"]
     assert file_aggs == ["_find_matches"]
+
+def test_one_file_skip_test():
+    """The file-skip stack is spelled once: the range, IN, partition
+    and bloom tests are called only inside ``sources/txskip.py``, and
+    ``txlog.py``, ``txstream.py`` and ``txsql.py`` reach them only
+    through the one entry point ``file_predicate`` (and fold ranges only
+    through ``fold_range``)."""
+    import ast
+    from pathlib import Path
+
+    import kafka_flink_harshevents_spark.sources.txskip as skipmod
+
+    tests = {
+        "_file_may_match", "_file_may_match_isin", "_part_may_match",
+        "_bloom_may_contain", "_map_stat_keys", "_file_may_match_eq",
+    }
+    root = Path(skipmod.__file__).resolve().parent.parent
+    callers, imports, folds = set(), {}, []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(
+                    f, "attr", None
+                )
+                if name in tests:
+                    callers.add(rel)
+            elif isinstance(node, ast.ImportFrom) and (
+                node.module or ""
+            ).endswith("txskip"):
+                imports.setdefault(rel, set()).update(
+                    a.name for a in node.names
+                )
+            elif isinstance(node, ast.FunctionDef) and "fold" in node.name:
+                folds.append((rel, node.name))
+    assert callers == {"sources/txskip.py"}
+    skip_api = {"file_predicate", "fold_range", "skip_counts"}
+    for rel in ("sources/txlog.py", "sources/txstream.py", "sources/txsql.py"):
+        assert imports[rel] & tests == set(), rel
+        assert imports[rel] - skip_api <= {"_bloom_build", "_file_stats"}, rel
+    assert imports["sources/txlog.py"] >= {"file_predicate"}
+    assert imports["sources/txstream.py"] >= {"file_predicate", "fold_range"}
+    assert imports["sources/txsql.py"] >= {"fold_range"}
+    assert [f for f in folds if f[0].startswith("sources/tx")] == [
+        ("sources/txskip.py", "fold_range")
+    ]
+
 
 def test_restore_cdf_refuses_across_type_widening(spark, tmp_path):
     """The cdf=True restore refusal compares TYPES, not just names: a

@@ -6,15 +6,18 @@ instead of the driver's 50-entry window.
 
 Usage: python tools/oracle_audit.py [sf_dir] [name...]
 
-Names, when given, limit the audit to those entries.
+Names, when given, limit the audit to those entries. ``audit`` is the
+same run as a function (``tests/test_queries.py`` calls it in the slow
+tier).
 """
 
 from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
-sys.path.insert(0, ".")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb  # noqa: E402
 
@@ -39,23 +42,23 @@ def values_equal(x, y) -> bool:
     return str(x) == str(y)
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark(app_name="oracle-audit")
+def audit(spark, sf_dir: str, names=None) -> dict[str, str]:
+    """Entry name → ``PASS`` / ``FAIL`` / ``ERROR`` / ``rows-only``
+    (no oracle) for every catalog entry, or the ``names`` given; each
+    entry's detail line is printed."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     queries, oracles = all_queries(), all_oracles()
-    if len(sys.argv) > 2:
-        queries = {name: queries[name] for name in sys.argv[2:]}
-    n_pass = n_fail = n_rows_only = 0
-    failures: list[str] = []
+    if names:
+        queries = {name: queries[name] for name in names}
+    status: dict[str, str] = {}
     for name, fn in queries.items():
         try:
             sdf = fn(spark, sf_dir).toPandas()
             if name not in oracles:
-                n_rows_only += 1
+                status[name] = "rows-only"
                 print(f"{name}: rows-only ({len(sdf)} rows)")
                 continue
             edf = con.execute(oracles[name]).fetchdf()
@@ -68,21 +71,26 @@ def main() -> None:
                     if not all(values_equal(x, y) for x, y in zip(a[c], b[c])):
                         ok = False
                         break
-            if ok:
-                n_pass += 1
-                print(f"{name}: PASS ({len(sdf)} rows)")
-            else:
-                n_fail += 1
-                failures.append(name)
-                print(f"{name}: FAIL (spark {len(sdf)} rows, duck {len(edf)} rows)")
+            status[name] = "PASS" if ok else "FAIL"
+            print(
+                f"{name}: PASS ({len(sdf)} rows)" if ok else
+                f"{name}: FAIL (spark {len(sdf)} rows, duck {len(edf)} rows)"
+            )
         except Exception as exc:  # keep auditing — report at the end
-            n_fail += 1
-            failures.append(name)
+            status[name] = "ERROR"
             print(f"{name}: ERROR {type(exc).__name__}: {str(exc)[:200]}")
+    return status
 
+
+def main() -> None:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    status = audit(get_spark(app_name="oracle-audit"), sf_dir, sys.argv[2:])
+    failures = [n for n, s in status.items() if s in ("FAIL", "ERROR")]
+    n_rows_only = sum(s == "rows-only" for s in status.values())
     print(
-        f"\nAUDIT @ {sf_dir}: {n_pass} pass, {n_fail} fail, "
-        f"{n_rows_only} rows-only, total {len(queries)}"
+        f"\nAUDIT @ {sf_dir}: {len(status) - len(failures) - n_rows_only} "
+        f"pass, {len(failures)} fail, {n_rows_only} rows-only, "
+        f"total {len(status)}"
     )
     if failures:
         print("failures:", failures)
