@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_flink_harshevents_spark.queries._util import load, temp_dir
-from kafka_flink_harshevents_spark.sources.txlog import TxTable
+from kafka_flink_harshevents_spark.sources.txlog import TxTable, _replay_log
 
 _KEY_CAP = 2000  # constant row universe at every SF (orders keys are dense)
 
@@ -492,7 +492,7 @@ def q_txlog_compact_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = 3 * max(sizes_before) + 1
     t.compact(target_bytes=target)
     _, live_after, _ = t._snapshot()
-    _, _, _, dvs = t._replay()
+    dvs = _replay_log(t.table_dir).dvs
     sizes_after = [int(e["bytes"]) for e in live_after]
     final = t.read()
     agg = final.agg(
@@ -1327,7 +1327,7 @@ def q_txlog_optimize_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ThreadPoolExecutor(max_workers=3) as pool:
         list(pool.map(lambda _: t.append(base, max_retries=16), range(3)))
     t.delete_where("st = 'O' AND k % 11 = 0", mode="merge_on_read")
-    _, live0, _, dvs0 = t._replay()
+    _, live0, _, dvs0, *_ = _replay_log(t.table_dir)
 
     def split(live):
         o = {p for p, e in live.items() if e["part"]["st"] == "O"}
@@ -1336,7 +1336,7 @@ def q_txlog_optimize_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o0, rest0 = split(live0)
     t.compact(where="st = 'O'")
-    _, live1, _, dvs1 = t._replay()
+    _, live1, _, dvs1, *_ = _replay_log(t.table_dir)
     o1, rest1 = split(live1)
     counts = {
         r["st"]: r["n_rows"] for r in t.show_partitions().collect()

@@ -28,21 +28,12 @@ import hashlib
 import json
 from collections.abc import Iterator
 
-try:  # the Python DataSource API needs pyspark >= 4 (present here)
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
-        SimpleDataSourceStreamReader,
-    )
-
-    _HAS_PYDS = True
-except ImportError:  # pragma: no cover - older pyspark
-    DataSource = object  # type: ignore[assignment,misc]
-    DataSourceReader = object  # type: ignore[assignment,misc]
-    InputPartition = object  # type: ignore[assignment,misc]
-    SimpleDataSourceStreamReader = object  # type: ignore[assignment,misc]
-    _HAS_PYDS = False
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    InputPartition,
+    SimpleDataSourceStreamReader,
+)
 
 VIOLATION_PROB = 0.65  # mqtt_publish.js:29
 BATTERY_PROB = 0.15  # mqtt_publish.js:33

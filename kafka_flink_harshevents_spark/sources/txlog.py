@@ -67,6 +67,7 @@ import re
 import shutil
 import struct
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -403,29 +404,72 @@ def _read_record(table_dir: str, version: int) -> dict:
         return json.load(f)
 
 
-def _replay_log(
-    table_dir: str, target: int
-) -> tuple[int, dict[str, dict], str | None, dict[str, set]]:
-    """Log replay to ``target`` → (version, live entries by path,
-    schema json, deletion vectors by path). DV replay rules: a ``dv``
-    field on a commit is a DELTA of newly deleted row positions
-    (unioned in); removing a file drops its vector; ``dv_full``
-    (restore commits) replaces the whole DV state absolutely. Starts
-    from the newest checkpoint ≤ target when one exists, so cost is
-    O(commits since the last checkpoint). Module-level (no
-    SparkSession) so the ``format("txlog")`` DataSource readers can
-    plan partitions from the same authority as :class:`TxTable`."""
+class _Snapshot(NamedTuple):
+    """One replayed table state: the version, live add-entries by
+    path, schema json, deletion vectors by path, merged table meta,
+    CHECK constraints (name → expr) and per-app txn high-water marks
+    (app_id → batch_id)."""
+
+    version: int
+    live: dict[str, dict]
+    schema_json: str | None
+    dvs: dict[str, set]
+    meta: dict
+    constraints: dict[str, str]
+    txns: dict[str, int]
+
+
+#: fields a checkpoint must carry to seed a replay (older layouts
+#: lacking one are skipped for a full replay)
+_CHK_FIELDS = ("live", "schema_json", "dvs", "meta", "constraints", "txns")
+
+
+def _replay_log(table_dir: str, target: int | None = None) -> _Snapshot:
+    """Log replay to ``target`` (default: the latest version, 0 on an
+    empty log) → :class:`_Snapshot` — the ONE checkpoint-aware fold of
+    the commit log; snapshots, meta, constraints and the exactly-once
+    txn marks are all fields of it.
+
+    Replay rules, applied per commit in version order:
+
+    - live files: ``add`` entries enter, ``remove`` paths leave;
+    - deletion vectors: a ``dv`` field is a DELTA of newly deleted
+      row positions (unioned in); adding or removing a file drops its
+      vector; ``dv_full`` (restore commits) replaces the whole DV
+      state absolutely;
+    - schema: the newest ``schema_json``;
+    - meta: the create record's ``meta``, patched by each later
+      ``meta_update`` / ``meta_unset`` (``n_buckets`` evolves via
+      rebucket, properties via set/unset_properties);
+    - constraints: the newest ``constraints`` map;
+    - txns: the running max ``batch_id`` per ``txn.app_id``.
+
+    Starts from the newest readable checkpoint ≤ target when it carries
+    every field (:data:`_CHK_FIELDS`), so cost is O(commits since the
+    last checkpoint); otherwise full replay, which is always correct.
+    Module-level (no SparkSession) so the ``format("txlog")``
+    DataSource readers plan partitions from the same authority as
+    :class:`TxTable`."""
+    versions = _list_versions(table_dir)
+    if target is None:
+        target = versions[-1] if versions else 0
     live: dict[str, dict] = {}
     schema_json: str | None = None
     dvs: dict[str, set] = {}
+    meta: dict = {}
+    constraints: dict[str, str] = {}
+    txns: dict[str, int] = {}
     from_v = 0
     chk = _latest_checkpoint(table_dir, target)
-    if chk is not None:
+    if chk is not None and all(k in chk for k in _CHK_FIELDS):
         from_v = chk["version"]
         live = {e["path"]: e for e in chk["live"]}
-        schema_json = chk.get("schema_json")
-        dvs = {p: set(v) for p, v in chk.get("dvs", {}).items()}
-    for v in _list_versions(table_dir):
+        schema_json = chk["schema_json"]
+        dvs = {p: set(v) for p, v in chk["dvs"].items()}
+        meta = dict(chk["meta"])
+        constraints = dict(chk["constraints"])
+        txns = dict(chk["txns"])
+    for v in versions:
         if v <= from_v:
             continue
         if v > target:
@@ -443,7 +487,43 @@ def _replay_log(
             for p, positions in rec["dv"].items():
                 dvs.setdefault(p, set()).update(positions)
         schema_json = rec.get("schema_json", schema_json)
-    return target, live, schema_json, dvs
+        if "meta" in rec:
+            meta = dict(rec["meta"])
+        meta.update(rec.get("meta_update") or {})
+        for k in rec.get("meta_unset") or ():
+            meta.pop(k, None)
+        if "constraints" in rec:
+            constraints = dict(rec["constraints"])
+        t = rec.get("txn")
+        if t and "app_id" in t:
+            txns[t["app_id"]] = max(
+                int(txns.get(t["app_id"], -1)), int(t["batch_id"])
+            )
+    return _Snapshot(target, live, schema_json, dvs, meta, constraints, txns)
+
+
+def _version_at(table_dir: str, ts: float, inclusive: bool = True) -> int:
+    """Newest version whose commit timestamp, clamped to the running
+    maximum (so skewed writer clocks can never make time travel
+    non-monotonic), is ≤ ``ts`` (``inclusive``) or < ``ts``. An
+    exclusive lookup returns 0 when the history starts at or after
+    ``ts``; an inclusive one (a snapshot must exist) raises. Linear
+    record scan — an interactive / stream-start resolution, not a
+    per-trigger path."""
+    best = 0
+    cummax = float("-inf")
+    for v in _list_versions(table_dir):
+        rec_ts = _read_record(table_dir, v).get("ts")
+        if rec_ts is not None:
+            cummax = max(cummax, float(rec_ts))
+        if cummax > ts or (cummax == ts and not inclusive):
+            break  # clamped stamps are monotone — done
+        best = v
+    if inclusive and not best:
+        raise ValueError(
+            f"{table_dir}: no commit at or before timestamp {ts}"
+        )
+    return best
 
 
 _COPIED_DIRNAME = "copied"
@@ -936,11 +1016,11 @@ class TxTable:
         df = df.localCheckpoint(eager=False)
         if counters is None:
             # FRESH watermark read (not the caller's attempt-top meta
-            # snapshot): OCC attempts read meta before _replay, so a
+            # snapshot): OCC attempts read meta before _replay_log, so a
             # concurrent allocation landing between those reads would
             # be invisible there yet INCLUDED in the version this
             # commit races for. A fresh read taken here — after the
-            # caller's _replay — can only be >= the as-of-snapshot
+            # caller's replay — can only be >= the as-of-snapshot
             # watermark; over-reading wastes ids (gaps, which Delta
             # allows), never collides.
             counters = self._identity_counters()
@@ -1042,21 +1122,7 @@ class TxTable:
 
     def meta_at(self, version: int | None) -> dict:
         target = self.latest_version() if version is None else version
-        m = dict(_read_record(self.table_dir, 1)["meta"])
-        from_v = 1
-        chk = _latest_checkpoint(self.table_dir, target)
-        if chk is not None and "meta" in chk:
-            m = dict(chk["meta"])
-            from_v = chk["version"]
-        for v in _list_versions(self.table_dir):
-            if v <= from_v or v > target:
-                continue
-            rec = _read_record(self.table_dir, v)
-            if "meta_update" in rec:
-                m.update(rec["meta_update"])
-            for k in rec.get("meta_unset") or ():
-                m.pop(k, None)
-        return m
+        return _replay_log(self.table_dir, target).meta
 
     # properties the engine interprets structurally — never settable
     # through the free-form property surface
@@ -1081,7 +1147,7 @@ class TxTable:
         unrecoverable (`_changes_for` special-cases the op)."""
 
         def attempt():
-            base_v, live_map, _, _ = self._replay()
+            base_v, live_map, *_ = _replay_log(self.table_dir)
             missing = sorted(
                 p for p, e in live_map.items()
                 if not os.path.exists(
@@ -1226,7 +1292,7 @@ class TxTable:
         n, tb = cfg
         if n:
             try:
-                _, live_map, _, _ = self._replay()
+                live_map = _replay_log(self.table_dir).live
                 # count only files SMALLER than the target (the ones
                 # compaction would touch) — a bucket of already-
                 # compact files must not re-trigger no-op attempts on
@@ -1313,19 +1379,11 @@ class TxTable:
         (``checkpoint()``), so replay cost is O(commits since the last
         checkpoint), not O(log length) — the Delta ``_last_checkpoint``
         mechanism. Without one, full replay (correct at any length,
-        just slower past ~10⁴ commits)."""
-        target, live, schema_json, _ = self._replay(version)
-        return target, list(live.values()), schema_json
-
-    def _replay(
-        self, version: int | None = None
-    ) -> tuple[int, dict[str, dict], str | None, dict[str, set]]:
-        """Full log replay → (version, live entries by path, schema,
-        deletion vectors by path). Delegates to the module-level
-        :func:`_replay_log` (shared with the spark-session-free
-        DataSource readers in ``txstream.py``)."""
+        just slower past ~10⁴ commits). The 3-tuple view of
+        :func:`_replay_log`."""
         target = self.latest_version() if version is None else version
-        return _replay_log(self.table_dir, target)
+        snap = _replay_log(self.table_dir, target)
+        return snap.version, list(snap.live.values()), snap.schema_json
 
     def checkpoint(self) -> int:
         """Materialize the current live-file list as a log checkpoint so
@@ -1334,27 +1392,10 @@ class TxTable:
         format, is the point). Idempotent and race-safe: the content is
         a pure function of the version, so concurrent writers produce
         identical bytes and either rename winning is correct."""
-        v, live_map, schema_json, dvs = self._replay()
-        # per-app txn high-water marks as of v: previous checkpoint's
-        # map + forward scan (the same incremental shape as the live
-        # set), so checkpointing itself stays O(commits since last)
-        txns: dict[str, int] = {}
-        from_v = 0
-        prev = _latest_checkpoint(self.table_dir, v)
-        if prev is not None and "txns" in prev:
-            txns = dict(prev["txns"])
-            from_v = prev["version"]
-        for vv in _list_versions(self.table_dir):
-            if vv > v:
-                continue
-            if vv > from_v:
-                rec = _read_record(self.table_dir, vv)
-                t = rec.get("txn")
-                if t and "app_id" in t:
-                    txns[t["app_id"]] = max(
-                        int(txns.get(t["app_id"], -1)),
-                        int(t["batch_id"]),
-                    )
+        # one replay from the previous checkpoint yields every field,
+        # so checkpointing itself stays O(commits since last)
+        snap = _replay_log(self.table_dir, self.latest_version())
+        v = snap.version
         # the copied set lives in its own incrementally-compacted side
         # structure (delta segments + periodic fold), NOT in the
         # checkpoint body: embedding the cumulative set made every
@@ -1375,15 +1416,15 @@ class TxTable:
             json.dump(
                 {
                     "version": v,
-                    "live": list(live_map.values()),
-                    "schema_json": schema_json,
-                    "dvs": {p: sorted(s) for p, s in dvs.items()},
+                    "live": list(snap.live.values()),
+                    "schema_json": snap.schema_json,
+                    "dvs": {p: sorted(s) for p, s in snap.dvs.items()},
                     # merged meta / constraints / txn marks as of v, so
                     # meta_at(), constraints() and last_committed_batch()
                     # replay from here instead of walking every record
-                    "meta": self.meta_at(v),
-                    "constraints": self.constraints(v),
-                    "txns": txns,
+                    "meta": snap.meta,
+                    "constraints": snap.constraints,
+                    "txns": snap.txns,
                 },
                 f,
             )
@@ -1406,12 +1447,8 @@ class TxTable:
         ]
         if segs:
             floor, seed = max(sv for sv, _ in segs), set()
-        else:
-            prev = _latest_checkpoint(self.table_dir, v)
-            if prev is not None and "copied" in prev:
-                floor, seed = prev["version"], set(prev["copied"])
-            else:
-                floor, seed = 0, set()
+        else:  # a pre-segment checkpoint's embedded set, if any
+            floor, seed = _copied_base(self.table_dir, v)
         if floor >= v and segs:
             return  # already current
         delta = seed
@@ -1480,8 +1517,9 @@ class TxTable:
         The clone commit is not an append: a stream over the clone
         should start past it (``startingversion``), exactly like a
         RESTORE."""
-        src_v, live_map, schema_json, dvs = self._replay(version)
-        m = self.meta_at(src_v)
+        src_v, live_map, schema_json, dvs, m, *_ = _replay_log(
+            self.table_dir, version
+        )
         cls_row_id = self._ROW_ID
         dest = TxTable.create(
             self.spark,
@@ -1822,13 +1860,17 @@ class TxTable:
             # one replay yields files, schema AND dv state — the
             # _snapshot() convenience would replay the log a second
             # time just to discard the vectors this needs
-            base_v, cur_live_map, cur_schema, cur_dvs = self._replay()
+            base_v, cur_live_map, cur_schema, cur_dvs, *_ = _replay_log(
+                self.table_dir
+            )
             cur_live = list(cur_live_map.values())
             if not 1 <= version <= base_v:
                 raise ValueError(
                     f"cannot restore to {version}: log spans 1..{base_v}"
                 )
-            _, old_live_map, old_schema, old_dvs = self._replay(version)
+            _, old_live_map, old_schema, old_dvs, *_ = _replay_log(
+                self.table_dir, version
+            )
             cur_names = (
                 {f.name for f in
                  StructType.fromJson(json.loads(cur_schema)).fields}
@@ -1876,7 +1918,7 @@ class TxTable:
                 "schema_json": old_schema,
                 "restored_version": version,
             }
-            # _replay returns dict[str, set] on both sides — direct
+            # _replay_log yields dict[str, set] on both sides — direct
             # comparison, no normalization needed
             if old_dvs != cur_dvs:
                 # absolute DV state of the target snapshot — replay
@@ -2266,21 +2308,7 @@ class TxTable:
         record scan — an interactive/admin operation, not a
         per-trigger path (the per-trigger replays are the
         checkpoint-aware ones)."""
-        best: int | None = None
-        cummax = float("-inf")
-        for v in _list_versions(self.table_dir):
-            rec_ts = _read_record(self.table_dir, v).get("ts")
-            if rec_ts is not None:
-                cummax = max(cummax, float(rec_ts))
-            if cummax <= ts:
-                best = v
-            else:
-                break  # clamped stamps are monotone — done
-        if best is None:
-            raise ValueError(
-                f"{self.table_dir}: no commit at or before timestamp {ts}"
-            )
-        return best
+        return _version_at(self.table_dir, ts)
 
     def read(
         self,
@@ -2328,8 +2356,10 @@ class TxTable:
                     "read: pass version OR timestamp, not both"
                 )
             version = self.version_at_timestamp(timestamp)
-        _, live_map, schema_json, dvs = self._replay(version)
-        mapping = self.meta_at(version).get("column_mapping") or {}
+        _, live_map, schema_json, dvs, meta, *_ = _replay_log(
+            self.table_dir, version
+        )
+        mapping = meta.get("column_mapping") or {}
         # file stats/blooms are keyed by PHYSICAL column name — the
         # skip test translates; the row-level re-application below
         # stays on the logical frame
@@ -2548,11 +2578,10 @@ class TxTable:
         predates stats collection). ``eq`` adds the bloom/point-lookup
         test exactly as ``read(eq=...)`` applies it; ``isin`` the
         multi-value form exactly as ``read(isin=...)``."""
+        _, live_map, _, dvs, meta, *_ = _replay_log(self.table_dir, version)
         keep = file_predicate(
-            prune, eq, isin,
-            self.meta_at(version).get("column_mapping") or {},
+            prune, eq, isin, meta.get("column_mapping") or {}
         )
-        _, live_map, _, dvs = self._replay(version)
         live = list(live_map.values())
         return skip_counts(live, [e for e in live if keep(e)], dvs)
 
@@ -2575,12 +2604,12 @@ class TxTable:
         deterministic ascending partition-value order (NULLs last,
         compared in the scalar domain — so numeric partitions sort
         numerically, not as strings)."""
-        pby = list(self.meta_at(version).get("partition_by") or ())
+        _, live_map, _, dvs, meta, *_ = _replay_log(self.table_dir, version)
+        pby = list(meta.get("partition_by") or ())
         if not pby:
             raise ValueError(
                 "show_partitions: table is not partitioned"
             )
-        _, live_map, _, dvs = self._replay(version)
         agg: dict[tuple, list] = {}
         for e in live_map.values():
             part = e.get("part") or {}
@@ -2630,9 +2659,9 @@ class TxTable:
         a live entry missing footer rows / physical bytes nulls the
         aggregate rather than guessing. Timestamps are the in-commit
         stamps (created = v1, last_modified = head)."""
-        v = self.latest_version()
-        _, live, _, dvs = self._replay()
-        meta = self.meta
+        v, live, _, dvs, meta, *_ = _replay_log(
+            self.table_dir, self.latest_version()
+        )
         n_rows: int | None = 0
         size: int | None = 0
         for e in live.values():
@@ -2697,10 +2726,10 @@ class TxTable:
         answering a dashboard COUNT in milliseconds and scanning the
         table.
         """
-        _, live_map, _, dvs = self._replay(version)
+        _, live_map, _, dvs, meta, *_ = _replay_log(self.table_dir, version)
         live = list(live_map.values())
         # stats are keyed by PHYSICAL name — resolve renamed logicals
-        mapping = self.meta_at(version).get("column_mapping") or {}
+        mapping = meta.get("column_mapping") or {}
         # deletion vectors are exact row subtractions; a DV'd file's
         # column stats are NOT trustworthy (a deleted row may have been
         # the min/max or a null), so those columns refuse below
@@ -2762,21 +2791,7 @@ class TxTable:
         sinks, so the full-log walk would become per-trigger driver
         work at 10⁵ commits."""
         target = self.latest_version() if version is None else version
-        out: dict[str, str] = {}
-        from_v = 0
-        chk = _latest_checkpoint(self.table_dir, target)
-        if chk is not None and "constraints" in chk:
-            out = dict(chk["constraints"])
-            from_v = chk["version"]
-        for v in _list_versions(self.table_dir):
-            if v <= from_v:
-                continue
-            if v > target:
-                break
-            rec = _read_record(self.table_dir, v)
-            if "constraints" in rec:
-                out = dict(rec["constraints"])
-        return out
+        return _replay_log(self.table_dir, target).constraints
 
     def add_constraint(self, name: str, expr: str) -> int:
         """ALTER TABLE ADD CONSTRAINT CHECK — a data contract enforced
@@ -3027,7 +3042,7 @@ class TxTable:
         if bloom_cols and entries:
             blooms = self._stage_blooms(out, bloom_cols)
             for e in entries:
-                b = blooms.get(e["path"])
+                b = blooms.get(os.path.basename(e["path"]))
                 if b:
                     e["bloom"] = b
         return entries
@@ -3036,7 +3051,10 @@ class TxTable:
         self, out_dir: str, bloom_cols: tuple[str, ...]
     ) -> dict[str, dict[str, dict]]:
         """One distributed job over the files just staged → per-file,
-        per-indexed-column bloom bitmaps, keyed by table-relative path.
+        per-indexed-column bloom bitmaps, keyed by file name — the
+        ``part-<uuid>.parquet`` name :meth:`_stage` gives every file,
+        unique whatever the partition-directory depth (a partitioned
+        entry's path has more components than the 3-component suffix).
 
         Scale shape: the job is a column-pruned scan of ONLY the new
         files' indexed columns, grouped by physical file (each group is
@@ -3061,10 +3079,9 @@ class TxTable:
 
             out: dict[str, dict[str, dict]] = {}
             for p in paths:
-                # the 3-component key IS the table-relative path (the
-                # same array_join(slice(split(file_path), -3, 3)) the
-                # distributed branch computes)
-                rel = "/".join(p.split(os.sep)[-3:])
+                # the same last path component the distributed branch
+                # takes from _metadata.file_path
+                rel = os.path.basename(p)
                 tbl = pq.read_table(p, columns=list(bloom_cols))
                 for c in bloom_cols:
                     vals = [
@@ -3076,9 +3093,7 @@ class TxTable:
                     if b is not None:
                         out.setdefault(rel, {})[c] = b
             return out
-        rel_of = F.array_join(
-            F.slice(F.split(F.col("_metadata.file_path"), "/"), -3, 3), "/"
-        )
+        rel_of = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
         src = (
             self.spark.read.option("recursiveFileLookup", "true")
             .parquet(out_dir)
@@ -3110,8 +3125,7 @@ class TxTable:
         )
         out: dict[str, dict[str, dict]] = {}
         for r in collected:
-            # the 3-component _file key IS the table-relative path
-            # (_staged-<uuid>/_pb=K/part-*.parquet, uuid-unique)
+            # the _file key is the uuid-unique file name
             out.setdefault(r["_file"], {})[r["col"]] = {
                 "m": r["m"],
                 "k": r["k"],
@@ -3441,7 +3455,9 @@ class TxTable:
             # (rows silently escaping later merges)
             m = self.meta
             incoming = self._with_bucket(df)
-            base_v, live_map, snap_schema, dvs = self._replay()
+            base_v, live_map, snap_schema, dvs, *_ = _replay_log(
+                self.table_dir
+            )
             hit = hit_files(list(live_map.values()), incoming, m)
             # validate/widen BEFORE staging — a schema mismatch must not
             # write orphan files first
@@ -3898,7 +3914,9 @@ class TxTable:
             # apply_cdc convention
             m = self.meta
             src_b = self._with_bucket(source)
-            base_v, live_map, snap_schema, dvs = self._replay()
+            base_v, live_map, snap_schema, dvs, *_ = _replay_log(
+                self.table_dir
+            )
             live = list(live_map.values())
             schema_rec = self._schema_union_json(
                 src_b, snap_schema, merge_schema, "merge_into"
@@ -4576,7 +4594,9 @@ class TxTable:
             raise ValueError("rebucket: n_buckets must be >= 1")
 
         def attempt():
-            base_v, live_map, schema_json, dvs = self._replay()
+            base_v, live_map, schema_json, dvs, *_ = _replay_log(
+                self.table_dir
+            )
             live = list(live_map.values())
             if self.meta["n_buckets"] == n_buckets:
                 return None, base_v  # already there — no-op, no commit
@@ -4679,7 +4699,9 @@ class TxTable:
             return _size_memo[p]
 
         def attempt():
-            base_v, live_map, schema_json, dvs = self._replay()
+            base_v, live_map, schema_json, dvs, *_ = _replay_log(
+                self.table_dir
+            )
             live = self._scope_entries(
                 list(live_map.values()), where, schema_json
             )
@@ -4949,7 +4971,9 @@ class TxTable:
             raise ValueError("optimize_zorder needs at least one column")
 
         def attempt():
-            base_v, live_map, schema_json, dvs = self._replay()
+            base_v, live_map, schema_json, dvs, *_ = _replay_log(
+                self.table_dir
+            )
             live = self._scope_entries(
                 list(live_map.values()), where, schema_json
             )
@@ -5056,7 +5080,9 @@ class TxTable:
         """
 
         def attempt():
-            base_v, live_map, schema_json, dvs = self._replay()
+            base_v, live_map, schema_json, dvs, *_ = _replay_log(
+                self.table_dir
+            )
             _, dv, touched, n_del = self._find_matches(
                 "delete_where", predicate, prune, live_map, schema_json,
                 dvs, max_dv_rows if mode == "merge_on_read" else None,
@@ -5269,7 +5295,9 @@ class TxTable:
             # landing between attempts must gate this write (append's
             # convention)
             self._check_constraints(df, "replace_where batch")
-            base_v, live_map, schema_json, dvs = self._replay()
+            base_v, live_map, schema_json, dvs, *_ = _replay_log(
+                self.table_dir
+            )
             mnow = self.meta  # ONE replay per attempt (n_buckets + watermark)
             if (
                 mnow["n_buckets"] != staged_n
@@ -5394,7 +5422,9 @@ class TxTable:
             return df
 
         def attempt():
-            base_v, live_map, schema_json, dvs = self._replay()
+            base_v, live_map, schema_json, dvs, *_ = _replay_log(
+                self.table_dir
+            )
             matches, dv, touched, n_upd = self._find_matches(
                 "update_where", predicate, prune, live_map, schema_json,
                 dvs, max_dv_rows if mode == "merge_on_read" else None,
@@ -5453,25 +5483,7 @@ class TxTable:
         Checkpoint-aware (checkpoints snapshot the per-app high-water
         marks): this runs once per micro-batch in the exactly-once
         sinks, so it must not walk the whole log."""
-        best = -1
-        from_v = 0
-        target = (
-            _list_versions(self.table_dir)[-1]
-            if _list_versions(self.table_dir)
-            else 0
-        )
-        chk = _latest_checkpoint(self.table_dir, target)
-        if chk is not None and "txns" in chk:
-            best = int(chk["txns"].get(app_id, -1))
-            from_v = chk["version"]
-        for v in _list_versions(self.table_dir):
-            if v <= from_v:
-                continue
-            rec = _read_record(self.table_dir, v)
-            t = rec.get("txn")
-            if t and t.get("app_id") == app_id:
-                best = max(best, int(t["batch_id"]))
-        return best
+        return int(_replay_log(self.table_dir).txns.get(app_id, -1))
 
     def upsert_sink(self, app_id: str):
         """``foreachBatch`` function: idempotent transactional MERGE.
@@ -5743,7 +5755,9 @@ class TxTable:
         if "dv" in rec:
             # merge-on-read delete: the commit's DV DELTA rows ARE the
             # change feed — read them by physical position (no diffing)
-            _, dv_live, _, pre_dvs = self._replay(version - 1)
+            _, dv_live, _, pre_dvs, *_ = _replay_log(
+                self.table_dir, version - 1
+            )
             dv_rows = [
                 # DV commits key on the STORED entry path (absolute
                 # for adopted/cloned files); the scan's `_file` is the
@@ -5797,7 +5811,9 @@ class TxTable:
         prev_live: dict = {}
         pre_dvs = None
         if rec.get("remove"):
-            _, prev_live, _, pre_dvs = self._replay(version - 1)
+            _, prev_live, _, pre_dvs, *_ = _replay_log(
+                self.table_dir, version - 1
+            )
         post = read_files(list(rec["add"]))
         if rec["op"] == "fsck":
             # the removed files are GONE from storage — their rows are
@@ -5946,26 +5962,30 @@ class TxTable:
 
         versions = _list_versions(self.table_dir)
         keep_versions = versions[-retain_versions:]
-        if retain_hours is not None:
-            cut = time.time() - retain_hours * 3600.0
-            in_window = [
-                v
-                for v in versions
-                if _read_record(self.table_dir, v).get("ts", 0) >= cut
-            ]
-            # union of the two forms — time-based retention can only
-            # WIDEN the kept set, never reclaim past retain_versions
-            keep_versions = sorted(set(keep_versions) | set(in_window))
+        cut = None if retain_hours is None else (
+            time.time() - retain_hours * 3600.0
+        )
+        # ONE read per commit record: its stamp (time-based retention),
+        # its adds (every path ANY commit ever added —
+        # committed-then-removed files are safe to reclaim with no age
+        # check) and its change-feed files
+        in_window: list[int] = []
+        ever_committed: set[str] = set()
+        cdf_of: dict[int, list[str]] = {}
+        for v in versions:
+            rec = _read_record(self.table_dir, v)
+            if cut is not None and rec.get("ts", 0) >= cut:
+                in_window.append(v)
+            ever_committed.update(e["path"] for e in rec.get("add", []))
+            if rec.get("cdf_files"):
+                cdf_of[v] = rec["cdf_files"]
+        # union of the two forms — time-based retention can only
+        # WIDEN the kept set, never reclaim past retain_versions
+        keep_versions = sorted(set(keep_versions) | set(in_window))
         referenced: set[str] = set()
         for v in keep_versions:
             _, live, _ = self._snapshot(v)
             referenced.update(e["path"] for e in live)
-        # every path ANY commit ever added — committed-then-removed
-        # files are safe to reclaim with no age check
-        ever_committed: set[str] = set()
-        for v in versions:
-            rec = _read_record(self.table_dir, v)
-            ever_committed.update(e["path"] for e in rec.get("add", []))
         now = time.time()
         deleted: list[str] = []
         for staged in glob.glob(os.path.join(self.table_dir, "_staged-*")):
@@ -6010,9 +6030,8 @@ class TxTable:
         oldest_kept = keep_versions[0] if keep_versions else 0
         cdf_live: set[str] = set()
         cdf_dead: set[str] = set()
-        for v in versions:
-            rec = _read_record(self.table_dir, v)
-            for rel in rec.get("cdf_files", ()):
+        for v, rels in cdf_of.items():
+            for rel in rels:
                 (cdf_live if v >= oldest_kept else cdf_dead).add(rel)
         for rel in sorted(cdf_dead - cdf_live):
             p = os.path.join(self.table_dir, rel)

@@ -43,7 +43,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kafka_flink_harshevents_spark.sources.txlog import TxTable
+from kafka_flink_harshevents_spark.sources.txlog import TxTable, _replay_log
 from kafka_flink_harshevents_spark.sources.txskip import fold_range, skip_counts
 
 __all__ = ["txsql"]
@@ -1558,7 +1558,7 @@ def _explain_skipping(
             )
         t = _target_table(spark, m.group("target"), tables)
         src = _source_frame(spark, m.group("source"), sources, tables)
-        _, live_map, _, dvs = t._replay()
+        _, live_map, _, dvs, *_ = _replay_log(t.table_dir)
         live = list(live_map.values())
         full_scan = (
             _Scanner.find_kw(inner, "NOT MATCHED BY SOURCE") >= 0

@@ -56,13 +56,30 @@ import json
 import os
 from collections.abc import Iterator
 
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceArrowWriter,
+    DataSourceReader,
+    DataSourceStreamReader,
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
+    InputPartition,
+    LessThan,
+    LessThanOrEqual,
+    WriterCommitMessage,
+)
 from pyspark.sql.types import LongType, StructField, StructType
 
 from kafka_flink_harshevents_spark.sources.txlog import (
+    ConstraintViolation,
+    TxTable,
     _add_entry,
     _list_versions,
     _read_record,
     _replay_log,
+    _version_at,
     _version_path,
     bucket_batch,
 )
@@ -71,40 +88,6 @@ from kafka_flink_harshevents_spark.sources.txskip import (
     file_predicate,
     fold_range,
 )
-
-try:
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceArrowWriter,
-        DataSourceReader,
-        DataSourceStreamReader,
-        InputPartition,
-        WriterCommitMessage,
-    )
-
-    _HAS_PYDS = True
-except ImportError:  # pragma: no cover - older pyspark
-    DataSource = object  # type: ignore[assignment,misc]
-    DataSourceArrowWriter = object  # type: ignore[assignment,misc]
-    DataSourceReader = object  # type: ignore[assignment,misc]
-    DataSourceStreamReader = object  # type: ignore[assignment,misc]
-    InputPartition = object  # type: ignore[assignment,misc]
-    WriterCommitMessage = object  # type: ignore[assignment,misc]
-    _HAS_PYDS = False
-
-try:  # typed pushdown filters: pyspark >= 4.1 only
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        In,
-        LessThan,
-        LessThanOrEqual,
-    )
-
-    _HAS_PUSHDOWN = True
-except ImportError:  # pragma: no cover - older pyspark
-    _HAS_PUSHDOWN = False
 
 
 VERSION_COL = "_commit_version"
@@ -241,7 +224,9 @@ def _table_schema(table_dir: str, cdf: bool = False) -> StructType:
     if hit is not None:
         return hit
     schema_json = (
-        _replay_log(table_dir, versions[-1])[2] if versions else None
+        _replay_log(table_dir, versions[-1]).schema_json
+        if versions
+        else None
     )
     if schema_json is None:
         raise ValueError(
@@ -269,27 +254,8 @@ def _column_mapping(table_dir: str) -> tuple[tuple[str, str], ...]:
     version-scoped mapping would miss later renames and NULL-fill the
     column (the bug class pinned in
     test_datasource_time_travel_after_rename)."""
-    from kafka_flink_harshevents_spark.sources.txlog import TxTable
-
-    m = TxTable(None, table_dir).meta.get("column_mapping")
+    m = _replay_log(table_dir).meta.get("column_mapping")
     return tuple(sorted((m or {}).items()))
-
-
-def _newest_version_before(table_dir: str, ts: float) -> int:
-    """Newest version whose skew-clamped commit timestamp is strictly
-    before ``ts`` (0 when the table's history starts at or after it) —
-    the exclusive-start offset for ``startingtimestamp`` reads."""
-    best = 0
-    cummax = float("-inf")
-    for v in _list_versions(table_dir):
-        rec_ts = _read_record(table_dir, v).get("ts")
-        if rec_ts is not None:
-            cummax = max(cummax, float(rec_ts))
-        if cummax < ts:
-            best = v
-        else:
-            break
-    return best
 
 
 class _FilePartition(InputPartition):
@@ -643,8 +609,10 @@ class TxLogStreamReader(DataSourceStreamReader):
             # serve every commit whose (skew-clamped) stamp is >= ts:
             # the exclusive start offset is the newest version strictly
             # BEFORE it (0 = table predates nothing — serve all)
-            self.start_version = _newest_version_before(
-                self.table_dir, float(options["startingtimestamp"])
+            self.start_version = _version_at(
+                self.table_dir,
+                float(options["startingtimestamp"]),
+                inclusive=False,
             )
         self.ignore_changes = (
             str(options.get("ignorechanges", "false")).lower() == "true"
@@ -848,12 +816,8 @@ class TxLogBatchReader(DataSourceReader):
                     "txlog batch read: `timestamp` is a snapshot-read "
                     "option, exclusive with `version`/`readchangefeed`"
                 )
-            from kafka_flink_harshevents_spark.sources.txlog import (
-                TxTable,
-            )
-
-            self.version = TxTable(None, self.table_dir).version_at_timestamp(
-                float(options["timestamp"])
+            self.version = _version_at(
+                self.table_dir, float(options["timestamp"])
             )
         if self.read_change_feed and self.version is not None:
             raise ValueError(
@@ -865,8 +829,10 @@ class TxLogBatchReader(DataSourceReader):
         if options.get("startingtimestamp") is not None:
             # inclusive CDF range start: first commit at/after the stamp
             self.starting_version = (
-                _newest_version_before(
-                    self.table_dir, float(options["startingtimestamp"])
+                _version_at(
+                    self.table_dir,
+                    float(options["startingtimestamp"]),
+                    inclusive=False,
                 )
                 + 1
             )
@@ -884,13 +850,9 @@ class TxLogBatchReader(DataSourceReader):
             # inclusive CDF range end: newest commit at/before the
             # stamp (Delta's endingTimestamp rule — the symmetric twin
             # of startingtimestamp's first-at-or-after)
-            from kafka_flink_harshevents_spark.sources.txlog import (
-                TxTable,
+            self.ending_version = _version_at(
+                self.table_dir, float(options["endingtimestamp"])
             )
-
-            self.ending_version = TxTable(
-                None, self.table_dir
-            ).version_at_timestamp(float(options["endingtimestamp"]))
         self.skip_report = options.get("skipreport")
         self.columns = tuple(
             f.name
@@ -912,7 +874,7 @@ class TxLogBatchReader(DataSourceReader):
         self._cmap = _column_mapping(self.table_dir)
 
     def pushFilters(self, filters):  # noqa: N802 - pyspark API name
-        if _HAS_PUSHDOWN and not self.read_change_feed:
+        if not self.read_change_feed:
             for f in filters:
                 attr = getattr(f, "attribute", None)
                 if not attr or len(attr) != 1:
@@ -959,8 +921,8 @@ class TxLogBatchReader(DataSourceReader):
                 f"no transaction log at {self.table_dir}"
             )
         target = self.version if self.version is not None else versions[-1]
-        _, live_map, _, dvs = _replay_log(self.table_dir, target)
-        live = list(live_map.values())
+        snap = _replay_log(self.table_dir, target)
+        live = list(snap.live.values())
         if any(e.get("pfill") for e in live):
             raise ValueError(
                 "txlog read: this snapshot references hive-adopted "
@@ -991,7 +953,7 @@ class TxLogBatchReader(DataSourceReader):
                 # version being read (not per-file provenance — the
                 # checkpointed replay doesn't retain add-versions)
                 self.columns,
-                dv=tuple(sorted(dvs.get(e["path"], ()))),
+                dv=tuple(sorted(snap.dvs.get(e["path"], ()))),
                 mapping=self._cmap,
                 nbytes=e.get("bytes"),
             )
@@ -1076,8 +1038,6 @@ class TxLogBatchWriter(DataSourceArrowWriter):
                 "app_id": options["txnappid"],
                 "batch_id": int(options.get("txnbatchid", "0")),
             }
-        from kafka_flink_harshevents_spark.sources.txlog import TxTable
-
         t = TxTable(None, self.table_dir)
         meta = t.meta  # REPLAYED meta — n_buckets may have evolved
         if meta.get("generated_cols"):
@@ -1211,10 +1171,6 @@ class TxLogBatchWriter(DataSourceArrowWriter):
         agreement is pinned in tests."""
         import duckdb
 
-        from kafka_flink_harshevents_spark.sources.txlog import (
-            ConstraintViolation,
-        )
-
         con = duckdb.connect()
         con.register("_w", table)
         for name, expr in self.constraints.items():
@@ -1233,8 +1189,6 @@ class TxLogBatchWriter(DataSourceArrowWriter):
         # here is commit-log metadata work (replay, schema union,
         # atomic link), which is exactly why it can be spark-free.
         import shutil
-
-        from kafka_flink_harshevents_spark.sources.txlog import TxTable
 
         entries = [
             e for m in messages if m is not None for e in m.entries

@@ -24,6 +24,7 @@ from kafka_flink_harshevents_spark.sources.txlog import (
     TxTable,
     _infer_part_type,
     _part_scalar_of_dir,
+    _replay_log,
 )
 from kafka_flink_harshevents_spark.sources.txskip import _part_may_match
 
@@ -45,7 +46,7 @@ def _frame(spark, n=30):
 def test_partitioned_layout_entries_and_exact_pruning(spark, tmp_path):
     t = _mkp(spark, tmp_path)
     t.append(_frame(spark))
-    _, live, _, _ = t._replay()
+    live = _replay_log(t.table_dir).live
     ents = list(live.values())
     # one file per (partition value × touched bucket); values recorded
     assert len(ents) == 6
@@ -73,7 +74,7 @@ def test_partitioned_null_and_int_values(spark, tmp_path):
         "k long, day long, v long, ver long",
     )
     t.append(df)
-    _, live, _, _ = t._replay()
+    live = _replay_log(t.table_dir).live
     parts = sorted(
         (e["part"]["day"] is None, e["part"]["day"] or 0)
         for e in live.values()
@@ -141,7 +142,7 @@ def test_partitioned_rewrites_preserve_values(spark, tmp_path):
     t.compact()
     t.optimize_zorder(("v",))
     t.rebucket(4)
-    _, live, _, _ = t._replay()
+    live = _replay_log(t.table_dir).live
     assert all(
         set(e.get("part") or {}) == {"region"} for e in live.values()
     )
@@ -167,7 +168,7 @@ def test_partitioned_suffix_uniqueness_two_cols_with_dvs(spark, tmp_path):
         "k long, a long, b long, v long, ver long",
     )
     t.append(df)
-    _, live, _, _ = t._replay()
+    live = _replay_log(t.table_dir).live
     sfx = {"/".join(p.split("/")[-3:]) for p in live}
     assert len(sfx) == len(live)  # DV join key stays unique
     t.delete_where("k % 5 = 0", mode="merge_on_read")
@@ -177,6 +178,28 @@ def test_partitioned_suffix_uniqueness_two_cols_with_dvs(spark, tmp_path):
     assert got == [
         k for k in range(60) if k % 2 == 1 and k % 3 == 2 and k % 5 != 0
     ]
+
+
+@pytest.mark.parametrize("distributed", [False, True])
+def test_partitioned_bloom_on_every_entry(spark, tmp_path, monkeypatch,
+                                          distributed):
+    """A partitioned, bloom-indexed table records a bitmap on every
+    add-entry, with two partition levels, whether the bitmaps come from
+    the driver-side read of a small stage or from the distributed job
+    past ``_BLOOM_DRIVER_MAX_BYTES``; the bitmaps then skip files."""
+    import kafka_flink_harshevents_spark.sources.txlog as txmod
+
+    if distributed:
+        monkeypatch.setattr(txmod, "_BLOOM_DRIVER_MAX_BYTES", 0)
+    t = _mkp(spark, tmp_path, partition_by=("a", "b"), bloom_cols=("k",))
+    t.append(spark.createDataFrame(
+        [(k, k % 2, k % 3, 1) for k in range(24)],
+        "k long, a long, b long, ver long",
+    ))
+    ents = list(_replay_log(t.table_dir).live.values())
+    assert len(ents) > 6
+    assert all("k" in e.get("bloom", {}) for e in ents)
+    assert t.prune_report({}, eq={"k": 7})["files_read"] == 1
 
 
 def test_convert_hive_partitioned_adopts_and_fills(spark, tmp_path):
@@ -194,7 +217,7 @@ def test_convert_hive_partitioned_adopts_and_fills(spark, tmp_path):
         key_cols=("k",), order_col="ver", n_buckets=2,
     )
     assert t.meta.get("partition_by") == ["region", "day"]
-    _, live, _, _ = t._replay()
+    live = _replay_log(t.table_dir).live
     assert all(
         e["bucket"] == -1 and e.get("pfill") for e in live.values()
     )
@@ -242,7 +265,7 @@ def test_convert_hive_datasource_refuses_until_compact(spark, tmp_path):
     with pytest.raises(Exception, match="log-side fill"):
         spark.read.format("txlog").option("tabledir", d).load().count()
     t.compact()
-    _, live, _, _ = t._replay()
+    live = _replay_log(t.table_dir).live
     assert not any(e.get("pfill") for e in live.values())
     assert (
         spark.read.format("txlog").option("tabledir", d).load().count()
@@ -310,7 +333,7 @@ def test_partitioned_copy_into_and_auto_ingest(spark, tmp_path):
     _frame(spark, 12).write.parquet(str(land / "a"))
     _, n = t.copy_into(str(land / "a") + "/*.parquet")
     assert n >= 1 and t.read().count() == 12
-    _, live, _, _ = t._replay()
+    live = _replay_log(t.table_dir).live
     assert all(e.get("part") for e in live.values())
     rep = t.prune_report({}, eq={"region": "eu"})
     assert rep["files_skipped"] > 0
@@ -322,7 +345,7 @@ def test_partitioned_copy_into_and_auto_ingest(spark, tmp_path):
     q = t.auto_ingest(str(land / "b"), str(tmp_path / "ck"))
     q.awaitTermination(120)
     assert t.read().count() == 14
-    _, live2, _, _ = t._replay()
+    live2 = _replay_log(t.table_dir).live
     assert all(e.get("part") for e in live2.values())
     got = sorted(
         r["k"] for r in t.read(eq={"region": "eu"}).collect()
@@ -349,7 +372,7 @@ def test_show_partitions_log_only(spark, tmp_path):
     assert all(n_f == 2 for n_f, _, _ in rows.values())
     # n_bytes: exact physical bytes per partition (skew detection) —
     # positive, and summing to the live files' total
-    _, live, _, _ = t._replay()
+    live = _replay_log(t.table_dir).live
     assert all(b > 0 for _, _, b in rows.values())
     assert sum(b for _, _, b in rows.values()) == sum(
         e["bytes"] for e in live.values()
@@ -387,7 +410,7 @@ def test_optimize_where_partition_scope(spark, tmp_path):
     for _ in range(3):  # fragment every partition
         t.append(_frame(spark, 30))
     t.delete_where("k = 1 and region = 'us'", mode="merge_on_read")
-    _, live0, _, dvs0 = t._replay()
+    _, live0, _, dvs0, *_ = _replay_log(t.table_dir)
     eu_before = {
         p for p, e in live0.items() if e["part"]["region"] == "eu"
     }
@@ -396,7 +419,7 @@ def test_optimize_where_partition_scope(spark, tmp_path):
     }
     assert dvs0  # the us DV is live
     t.compact(where="region = 'eu'")
-    _, live1, _, dvs1 = t._replay()
+    _, live1, _, dvs1, *_ = _replay_log(t.table_dir)
     eu_after = {
         p for p, e in live1.items() if e["part"]["region"] == "eu"
     }
@@ -421,7 +444,7 @@ def test_optimize_where_partition_scope(spark, tmp_path):
         t2.compact(where="k = 1")
     # txsql forms + scoped zorder
     txsql(spark, "OPTIMIZE t WHERE region = 'us'", tables={"t": t})
-    _, live2, _, dvs2 = t._replay()
+    _, live2, _, dvs2, *_ = _replay_log(t.table_dir)
     assert not dvs2  # the scoped compact materialized the us DV
     txsql(spark, "OPTIMIZE t WHERE region = 'ap' ZORDER BY (v)",
           tables={"t": t})
@@ -436,9 +459,9 @@ def test_optimize_where_partition_scope(spark, tmp_path):
     t3.append(spark.createDataFrame(
         [(k + 10, _dt.date(2024, 1, 1 + k % 2), 1) for k in range(8)],
         "k long, d date, ver long"))
-    _, l0, _, _ = t3._replay()
+    l0 = _replay_log(t3.table_dir).live
     t3.compact(where="d = DATE'2024-01-02'")
-    _, l1, _, _ = t3._replay()
+    l1 = _replay_log(t3.table_dir).live
     kept = {p for p in l0 if p in l1}
     assert kept and all(
         l1[p]["part"]["d"] == 19723 for p in kept  # 2024-01-01 untouched

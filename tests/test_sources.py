@@ -207,11 +207,9 @@ def test_python_datasource_plugs_into_derive_path(spark):
         violations_from_telemetry,
     )
     from kafka_flink_harshevents_spark.sources.pydatasource import (
-        _HAS_PYDS,
         TelemetryWireSource,
     )
 
-    assert _HAS_PYDS
     spark.dataSource.register(TelemetryWireSource)
     rd = (
         spark.read.format("telemetry_wire")

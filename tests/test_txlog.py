@@ -21,6 +21,7 @@ from kafka_flink_harshevents_spark.sources.txlog import (
     _atomic_commit,
     _list_versions,
     _read_record,
+    _replay_log,
 )
 
 
@@ -1304,6 +1305,69 @@ def test_log_checkpoint_replay_equivalence(spark, tmp_path):
         f.write("{corrupt")
     assert TxTable(spark, t.table_dir).read().count() == 60
 
+    # every field of the one fold — live files, schema, DVs, meta,
+    # constraints, txn marks — replays through a checkpoint exactly as
+    # without one, for every version on either side of it
+    import json as _json
+
+    import kafka_flink_harshevents_spark.sources.txlog as txmod
+
+    def row(k, col):
+        return spark.createDataFrame(
+            [(k, 1, 1)], f"k string, {col} long, ver long"
+        )
+
+    t.append(row("t1", "v"), txn={"app_id": "a", "batch_id": 0})
+    t.add_constraint("ver_pos", "ver >= 0")
+    t.rename_column("v", "val")
+    t.append(row("t2", "val"), txn={"app_id": "b", "batch_id": 3})
+    mid = t.checkpoint()
+    t.rebucket(3)
+    t.delete_where("k = 'w2_5'", mode="merge_on_read")
+    t.drop_constraint("ver_pos")
+    t.append(row("t3", "val"), txn={"app_id": "a", "batch_id": 1})
+    t.restore(mid)
+    last = t.latest_version()
+
+    reads = []
+    real_read = txmod._read_record
+
+    def counting_read(table_dir, version):
+        reads.append(version)
+        return real_read(table_dir, version)
+
+    def replay_all():
+        return {v: _replay_log(t.table_dir, v) for v in range(1, last + 1)}
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(txmod, "_latest_checkpoint", lambda d, v: None)
+        full = replay_all()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(txmod, "_read_record", counting_read)
+        assert replay_all() == full
+        reads.clear()
+        assert _replay_log(t.table_dir) == full[last]
+        assert reads == list(range(mid + 1, last + 1))  # from the chk
+    assert full[mid].txns == {"a": 0, "b": 3}
+    assert full[mid].constraints == {"ver_pos": "ver >= 0"}
+    assert full[mid].meta["column_mapping"] == {"val": "v"}
+    assert full[mid + 1].meta["n_buckets"] == 3
+    assert full[mid + 2].dvs and full[last].txns == {"a": 1, "b": 3}
+
+    # a checkpoint lacking any of the newer fields is not a replay
+    # seed: the fold falls back to the full log
+    mid_chk = os.path.join(t.table_dir, "_txlog", f"chk-{mid:020d}.json")
+    with open(mid_chk) as f:
+        body = _json.load(f)
+    for field in ("meta", "constraints", "txns"):
+        with open(mid_chk, "w") as f:
+            _json.dump({k: v for k, v in body.items() if k != field}, f)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(txmod, "_read_record", counting_read)
+            reads.clear()
+            assert _replay_log(t.table_dir) == full[last], field
+            assert reads == list(range(1, last + 1)), field
+
 
 def test_restore_rolls_back_as_new_commit(spark, tmp_path):
     """RESTORE: live state returns to the target snapshot via a NEW
@@ -1494,7 +1558,7 @@ def test_merge_on_read_deletion_vectors(spark, tmp_path):
     vals = {r["v"] for r in t.read().collect()}
     assert vals == {100, 1, 3, 4, 6, 8, 9}
     # the rewrite materialized the vectors for its bucket (files changed)
-    assert t._replay()[3] == {}
+    assert _replay_log(t.table_dir).dvs == {}
 
     # restore across the whole history resurrects vector-deleted rows
     rv = t.restore(v1 - 1)
@@ -1515,7 +1579,7 @@ def test_merge_on_read_falls_back_when_vector_too_big(spark, tmp_path):
     assert n == 40
     _, live1, _ = t._snapshot()
     assert {e["path"] for e in live0} != {e["path"] for e in live1}  # rewritten
-    assert t._replay()[3] == {}  # no vector recorded
+    assert _replay_log(t.table_dir).dvs == {}  # no vector recorded
     assert t.read().count() == 10
 
 
@@ -1745,7 +1809,7 @@ def test_stream_ignorechanges_resumes_past_dv_and_compact(spark, tmp_path):
 
     # DV delete: no files added — the resumed stream emits nothing
     v_dv, n = t.delete_where("k = 'b'", mode="merge_on_read")  # v3
-    assert n == 1 and t._replay()[3] != {}
+    assert n == 1 and _replay_log(t.table_dir).dvs != {}
     assert drain() == []
 
     # the stream keeps flowing past the DV commit
@@ -1756,7 +1820,7 @@ def test_stream_ignorechanges_resumes_past_dv_and_compact(spark, tmp_path):
     # compaction materializes the vectors (rewrite) — still streams
     # NOTHING: the deleted row must not resurrect via the new files
     t.compact()  # v5
-    assert t._replay()[3] == {}  # vectors gone, physically applied
+    assert _replay_log(t.table_dir).dvs == {}  # physically applied
     assert drain() == []
 
     # and the post-compact table keeps streaming appends normally
@@ -2294,7 +2358,7 @@ def test_bloom_survives_rewrites_and_checkpoint(spark, tmp_path):
             "k long, v long, ver long",
         ))
     t.compact()
-    _, live, _, _ = t._replay()
+    live = _replay_log(t.table_dir).live
     assert all("bloom" in e and "k" in e["bloom"] for e in live.values())
     # post-compact: a key now lives in exactly its bucket's single file
     rep = t.prune_report({}, eq={"k": 142})
@@ -2600,7 +2664,7 @@ def test_datasource_writer_two_phase_append(spark, tmp_path):
         map(tuple, df.collect())
     )
     # bucket labels in the log match the JVM bucket of the file's rows
-    _, live, _, _ = t._replay()
+    live = _replay_log(t.table_dir).live
     opened = t._open_files([e["path"] for e in live.values()], None, None)
     bad = (
         opened.withColumn(
@@ -2770,7 +2834,7 @@ def test_rebucket_evolves_bucket_count(spark, tmp_path):
     assert t.meta["n_buckets"] == 8
     assert sorted(map(tuple, t.read().collect())) == before  # multiset
     # files are labeled under the new modulus, and labels are truthful
-    _, live, _, _ = t._replay()
+    live = _replay_log(t.table_dir).live
     assert {e["bucket"] for e in live.values()} <= set(range(8))
     opened = t._open_files([e["path"] for e in live.values()], None, None)
     assert opened.withColumn(
@@ -2838,7 +2902,7 @@ def test_append_restages_after_rebucket_race(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(tx, "_atomic_commit", real)
     assert state["fired"] and t.meta["n_buckets"] == 8
     # every live file's labels are truthful under the NEW modulus
-    _, live, _, _ = t._replay()
+    live = _replay_log(t.table_dir).live
     opened = t._open_files([e["path"] for e in live.values()], None, None)
     assert opened.withColumn(
         "_jvm", F.pmod(F.xxhash64("k"), F.lit(8))
@@ -2862,7 +2926,7 @@ def test_partial_compact_bin_packing(spark, tmp_path):
     # one BIG append (per-bucket files >= threshold) ...
     t.append(spark.createDataFrame(
         [(i, i, 1) for i in range(2000)], "k long, v long, ver long"))
-    _, live0, _, _ = t._replay()
+    live0 = _replay_log(t.table_dir).live
     big_paths = set(live0)
     # ... then several small appends (fragmentation)
     for w in range(3):
@@ -2870,10 +2934,10 @@ def test_partial_compact_bin_packing(spark, tmp_path):
             [(10_000 + w * 10 + i, w, 1) for i in range(6)],
             "k long, v long, ver long"))
     before = sorted(map(tuple, t.read().collect()))
-    _, live1, _, _ = t._replay()
+    live1 = _replay_log(t.table_dir).live
     assert len(live1) > len(big_paths) + 4  # fragmented
     v = t.compact(small_file_rows=500)
-    _, live2, _, _ = t._replay()
+    live2 = _replay_log(t.table_dir).live
     # big files untouched byte-for-byte (same paths still live)
     assert big_paths <= set(live2)
     # small files merged: at most one extra file per bucket now
@@ -2884,10 +2948,10 @@ def test_partial_compact_bin_packing(spark, tmp_path):
     # a DV on a BIG file makes that file (alone) compaction-eligible:
     # the rewrite materializes the vector, other big files stay put
     t.delete_where("k = 5", mode="merge_on_read")
-    _, _, _, dvs = t._replay()
+    dvs = _replay_log(t.table_dir).dvs
     assert dvs  # vector recorded
     t.compact(small_file_rows=500)
-    _, live3, _, dvs3 = t._replay()
+    _, live3, _, dvs3, *_ = _replay_log(t.table_dir)
     assert not dvs3  # materialized
     got = sorted(map(tuple, t.read().collect()))
     assert got == [r for r in before if r[0] != 5]
@@ -3092,11 +3156,11 @@ def test_update_where_merge_on_read(spark, tmp_path):
     )
     t.append(spark.createDataFrame(
         [(i, i * 10, 1) for i in range(100)], "k long, v long, ver long"))
-    _, live0, _, _ = t._replay()
+    live0 = _replay_log(t.table_dir).live
     v, n = t.update_where(
         "k % 10 = 3", {"v": "v + 1"}, mode="merge_on_read")
     assert n == 10
-    _, live1, _, dvs1 = t._replay()
+    _, live1, _, dvs1, *_ = _replay_log(t.table_dir)
     # no original file rewritten; one new file per touched bucket; DVs live
     assert set(live0) <= set(live1) and dvs1
     got = {r["k"]: r["v"] for r in t.read().collect()}
@@ -3109,7 +3173,7 @@ def test_update_where_merge_on_read(spark, tmp_path):
     assert len(ch) == 20
     # compact materializes the vectors; values survive
     t.compact()
-    _, _, _, dvs2 = t._replay()
+    dvs2 = _replay_log(t.table_dir).dvs
     assert not dvs2
     assert {r["k"]: r["v"] for r in t.read().collect()} == got
     # bound fallback: tiny max_dv_rows -> copy-on-write (no dv recorded)
@@ -3261,7 +3325,7 @@ def test_shallow_clone_zero_copy(spark, tmp_path):
     assert sorted(map(tuple, src.read().collect())) == want
     # compact() detaches: no absolute reference survives
     clone.compact()
-    _, live, _, _ = clone._replay()
+    live = _replay_log(clone.table_dir).live
     assert all(not os.path.isabs(p) for p in live)
     assert {r["k"]: r["v"] for r in clone.read().collect()} == got
     # refuse cloning onto a non-fresh table
@@ -4562,7 +4626,7 @@ def test_compact_target_bytes_skips_compact_files_and_cleans_dvs(
     v = t.compact(target_bytes=big["bytes"])
     assert v > v0
     assert _rows(t) == before
-    _, _, _, dvs = t._replay()
+    dvs = _replay_log(t.table_dir).dvs
     assert not dvs  # vector materialized away
     with pytest.raises(ValueError):
         t.compact(small_file_rows=10, target_bytes=100)
@@ -4714,15 +4778,15 @@ def test_one_commit_retry_path():
 _SKIP_CASES = [
     ("val BETWEEN 100 AND 300", {"prune": {"val": (100, 300)}}, None,
      (6, 6, None)),
-    ("k = 7", {"eq": {"k": 7}}, (7,), (5, 5, 3)),
+    ("k = 7", {"eq": {"k": 7}}, (7,), (1, 5, 3)),
     ("k IN (3, 50, 51)", {"isin": {"k": [3, 50, 51]}}, (3, 50, 51),
-     (10, 12, 8)),
+     (3, 12, 3)),
     ("region = 'eu'", {"eq": {"region": "eu"}}, None, (6, 6, None)),
     ("region IN ('ap') AND k >= 10 AND k <= 30",
      {"isin": {"region": ["ap"]}, "prune": {"k": (10, 30)}}, None,
      (2, 2, None)),
     ("k = 7 AND k IN (7, 8)", {"eq": {"k": 7}, "isin": {"k": [7, 8]}},
-     (7,), (5, 5, 3)),
+     (7,), (1, 5, 3)),
     ("k = 999", {"eq": {"k": 999}}, (999,), (0, 0, 0)),
     ("val >= 500 AND region = 'us'",
      {"prune": {"val": (500, None)}, "eq": {"region": "us"}}, None,
@@ -4871,6 +4935,60 @@ def test_one_keyed_merge_and_find_phase():
     assert sorted(windows) == ["_changes_for", "_fill_identity", "_keyed_merge"]
     assert probes == ["_find_matches"]
     assert file_aggs == ["_find_matches"]
+
+def test_one_log_replay():
+    """The commit log has one checkpoint-aware fold and one timestamp
+    walk. ``_latest_checkpoint`` is called only by ``_replay_log`` and
+    by ``_copied_base`` (the copied-set side structure's pre-segment
+    fallback); the running-max stamp clamp ``max(..., float(...))``
+    lives only in ``_version_at``; and ``txstream.py`` opens a
+    ``TxTable(None, ...)`` handle only in its writer, reading the log
+    everywhere else through the module-level folds."""
+    import ast
+
+    import kafka_flink_harshevents_spark.sources.txlog as txmod
+
+    chk_calls, clamps, handles = [], [], []
+
+    def call_to(node, name):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == name
+        )
+
+    def visit(node, owner, cls):
+        for child in ast.iter_child_nodes(node):
+            own, c = owner, cls
+            if isinstance(child, ast.ClassDef):
+                c = child.name
+            elif owner is None and isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                own = child.name
+            if call_to(child, "_latest_checkpoint"):
+                chk_calls.append(own)
+            if call_to(child, "max") and any(
+                call_to(a, "float") for a in child.args
+            ):
+                clamps.append(own)
+            if (
+                call_to(child, "TxTable")
+                and isinstance(child.args[0], ast.Constant)
+                and child.args[0].value is None
+            ):
+                handles.append(c)
+            visit(child, own, c)
+
+    src_dir = os.path.dirname(txmod.__file__)
+    for name in sorted(os.listdir(src_dir)):
+        if name.endswith(".py"):
+            with open(os.path.join(src_dir, name)) as f:
+                visit(ast.parse(f.read()), None, None)
+    assert sorted(chk_calls) == ["_copied_base", "_replay_log"]
+    assert clamps == ["_version_at"]
+    assert set(handles) == {"TxLogBatchWriter"}
+
 
 def test_one_file_skip_test():
     """The file-skip stack is spelled once: the range, IN, partition
@@ -8338,7 +8456,7 @@ def test_stage_blooms_driver_path_matches_distributed(spark, tmp_path):
         + [(1000, None, 0, 1)],
         "k long, tag string, v long, ver long",
     ))
-    _, live, _, _ = t._replay()
+    live = _replay_log(t.table_dir).live
     staged_dir = {e["path"].split("/", 1)[0] for e in live.values()}
     assert len(staged_dir) == 1
     out_dir = str(tmp_path / "t" / staged_dir.pop())
