@@ -671,19 +671,14 @@ class TxTable:
         self.spark = spark
         self.table_dir = table_dir
 
-    def _check_protocol(self, action: str) -> None:
-        """Refuse reads/writes the table's recorded protocol says this
-        engine is too old for. One meta read per handle (cached);
-        tables without a protocol record default to (1, 1)."""
-        p = getattr(self, "_proto", None)
-        if p is None:
-            rec = self.meta.get("protocol") or {}
-            p = (
-                int(rec.get("min_reader", 1)),
-                int(rec.get("min_writer", 1)),
-            )
-            self._proto = p
-        need = p[0] if action == "read" else p[1]
+    def _check_protocol(self, action: str, meta: dict) -> None:
+        """Refuse reads/writes the protocol recorded in ``meta`` (the
+        caller's snapshot) says this engine is too old for; tables
+        without a protocol record default to (1, 1)."""
+        rec = meta.get("protocol") or {}
+        need = int(rec.get(
+            "min_reader" if action == "read" else "min_writer", 1
+        ))
         have = (
             self.READER_VERSION if action == "read"
             else self.WRITER_VERSION
@@ -900,13 +895,15 @@ class TxTable:
         )
         return t
 
-    def _with_generated(self, df: DataFrame, op: str) -> DataFrame:
+    def _with_generated(
+        self, df: DataFrame, op: str, meta: dict
+    ) -> DataFrame:
         """Enforce GENERATED ALWAYS AS on a write frame: compute each
         generated column the frame lacks; refuse a frame carrying one
         whose values diverge from the expression (null-safe compare —
         a generated column is a contract the table guarantees to every
         reader, so a writer may not override it)."""
-        gen = self.meta.get("generated_cols") or {}
+        gen = meta.get("generated_cols") or {}
         for name, expr in gen.items():
             if name not in df.columns:
                 df = df.withColumn(name, F.expr(expr))
@@ -922,35 +919,33 @@ class TxTable:
                 )
         return df
 
-    def _identity_specs(self, meta: dict | None = None) -> dict[str, dict]:
+    def _identity_specs(self, meta: dict) -> dict[str, dict]:
         """Declared IDENTITY columns (row-tracking's ``_row_id``
         included) — name → {start, step, always}."""
-        m = self.meta if meta is None else meta
-        return m.get("identity_cols") or {}
+        return meta.get("identity_cols") or {}
 
-    def _identity_counters(self, meta: dict | None = None) -> dict[str, int]:
+    def _identity_counters(self, meta: dict) -> dict[str, int]:
         """Allocation high watermarks: per identity column, how many
         values have ever been allocated (value = start + step·i for
         i < counter). Monotonic across the table's whole history —
         restore never reverts them, so resurrecting old rows can never
         collide with ids issued after the restore point."""
-        m = self.meta if meta is None else meta
-        nxt = m.get("identity_next") or {}
-        return {
-            k: int(nxt.get(k, 0)) for k in (m.get("identity_cols") or {})
-        }
+        nxt = meta.get("identity_next") or {}
+        return {k: int(nxt.get(k, 0)) for k in self._identity_specs(meta)}
 
     def _managed_entry(
-        self, df: DataFrame, op: str, add_missing: bool = True
+        self, df: DataFrame, op: str, meta: dict, add_missing: bool = True
     ) -> DataFrame:
-        """IDENTITY / row-tracking intake for USER frames: refuse a
-        frame carrying a GENERATED ALWAYS AS IDENTITY column (the
-        table allocates it — Delta refuses explicit inserts the same
-        way; declare ``always=False`` for BY DEFAULT semantics), and
-        add the managed columns the frame lacks as typed NULLs so
+        """The intake of a USER frame under ``meta``: GENERATED columns
+        first (:meth:`_with_generated`), then IDENTITY / row-tracking —
+        refuse a frame carrying a GENERATED ALWAYS AS IDENTITY column
+        (the table allocates it — Delta refuses explicit inserts the
+        same way; declare ``always=False`` for BY DEFAULT semantics),
+        and add the managed columns the frame lacks as typed NULLs so
         downstream unions and schema checks align by name. The NULLs
         are filled by :meth:`_fill_identity` just before staging."""
-        for name, spec in self._identity_specs().items():
+        df = self._with_generated(df, op, meta)
+        for name, spec in self._identity_specs(meta).items():
             if name in df.columns:
                 if spec.get("always", True):
                     raise ValueError(
@@ -980,15 +975,18 @@ class TxTable:
         return df
 
     def _fill_identity(
-        self,
-        df: DataFrame,
-        meta: dict,
-        counters: dict[str, int] | None = None,
+        self, df: DataFrame, meta: dict
     ) -> tuple[DataFrame, dict | None]:
         """Fill NULL identity values with freshly allocated ids →
         ``(df, meta_update | None)``; the caller attaches the
         meta_update (the bumped ``identity_next`` watermarks) to its
         committing record, making allocation atomic with the write.
+
+        ``meta`` is the committing attempt's snapshot meta, so the
+        watermark ``_identity_counters(meta)`` is exact for the version
+        the record claims: a concurrent allocation lands first at that
+        version and fails this commit into a retry against the new
+        watermark — ids can never collide.
 
         Assignment is DETERMINISTIC given the frame and the watermark:
         per bucket, NULL rows take consecutive ids in (key, order)
@@ -996,10 +994,9 @@ class TxTable:
         ONE small aggregation job (per-bucket NULL/non-NULL counts —
         ≤ n_buckets rows collected) plus a per-bucket window
         row_number over the same partitioning ``_stage`` is about to
-        repartition by; no global sort, no driver-side row data. OCC
-        attempts compare ``_identity_counters`` before reusing
-        staged files — a concurrent allocation forces re-fill +
-        restage (the rebucket-race convention)."""
+        repartition by; no global sort, no driver-side row data. Writers
+        that reuse staged files across retries (append, replace_where)
+        restage when the snapshot's counters or modulus moved."""
         specs = meta.get("identity_cols") or {}
         todo = [c for c in specs if c in df.columns]
         if not todo:
@@ -1014,16 +1011,7 @@ class TxTable:
         # pinning convention; replace_where's staged-bytes guard exists
         # for the same frame class)
         df = df.localCheckpoint(eager=False)
-        if counters is None:
-            # FRESH watermark read (not the caller's attempt-top meta
-            # snapshot): OCC attempts read meta before _replay_log, so a
-            # concurrent allocation landing between those reads would
-            # be invisible there yet INCLUDED in the version this
-            # commit races for. A fresh read taken here — after the
-            # caller's replay — can only be >= the as-of-snapshot
-            # watermark; over-reading wastes ids (gaps, which Delta
-            # allows), never collides.
-            counters = self._identity_counters()
+        counters = self._identity_counters(meta)
         aggs = [
             F.sum(F.col(c).isNull().cast("long")).alias(f"_n_{c}")
             for c in todo
@@ -1053,12 +1041,7 @@ class TxTable:
             any_alloc = True
             start = int(specs[c].get("start", 1))
             step = int(specs[c].get("step", 1))
-            # .get(): a drop_columns racing this writer can remove the
-            # column from the FRESH counters while the caller's specs
-            # still carry it — allocate from 0 and let the schema
-            # guard's retired-name refusal surface the race loudly
-            # instead of a KeyError escaping the commit
-            c0 = int(counters.get(c, 0))
+            c0 = counters[c]
             # combined per-bucket shift: cumulative NULL count of all
             # lower buckets MINUS this bucket's non-NULL count (the
             # window row_number counts non-NULL rows first)
@@ -1146,10 +1129,9 @@ class TxTable:
         feed is EMPTY by definition, since the removed rows are
         unrecoverable (`_changes_for` special-cases the op)."""
 
-        def attempt():
-            base_v, live_map, *_ = _replay_log(self.table_dir)
+        def attempt(snap: _Snapshot):
             missing = sorted(
-                p for p, e in live_map.items()
+                p for p, e in snap.live.items()
                 if not os.path.exists(
                     e["path"]
                     if os.path.isabs(e["path"])
@@ -1159,7 +1141,7 @@ class TxTable:
             if dry_run or not missing:
                 return None, missing
             return {
-                "version": base_v + 1,
+                "version": snap.version + 1,
                 "op": "fsck",
                 "add": [],
                 "remove": missing,
@@ -1204,19 +1186,17 @@ class TxTable:
                 f"({self.READER_VERSION}, {self.WRITER_VERSION}) and "
                 "cannot require more than it supports"
             )
-        v = self._meta_commit(
+        return self._meta_commit(
             "upgrade_protocol", max_retries,
             meta_update={"protocol": new}, note=f"protocol -> {new}",
         )
-        self._proto = None
-        return v
 
     def _meta_commit(self, op: str, max_retries: int, **fields) -> int:
         """A metadata-only commit (no file added or removed) at the
         next version; returns that version."""
 
-        def attempt():
-            v = self.latest_version() + 1
+        def attempt(snap: _Snapshot):
+            v = snap.version + 1
             return {
                 "version": v, "op": op, "add": [], "remove": [], **fields
             }, v
@@ -1271,8 +1251,8 @@ class TxTable:
         follow-up commit. The DATA commit's success is already
         durable; losing the compaction race to a concurrent writer
         just defers the cleanup to the next write. The config is
-        CACHED PER HANDLE like ``_ckpt_iv`` (a meta replay per data
-        commit would tax every write ~7% on commit-dense programs);
+        CACHED PER HANDLE (a meta replay per data commit would tax
+        every write ~7% on commit-dense programs);
         set/unset_properties on this handle invalidate it, another
         handle's change is seen by handles opened after it — the
         advisory-cleanup contract tolerates that staleness. Without
@@ -1311,26 +1291,34 @@ class TxTable:
 
     def _transact(self, attempt, max_retries: int = 5):
         """The ONE post-create commit path, and the one optimistic
-        retry loop. ``attempt()`` reads a fresh snapshot and returns
-        ``(record, result)``: ``record`` is the commit for version
-        ``record["version"]`` (snapshot + 1), or None to return
-        ``result`` with no commit (nothing to do). Each attempt passes
-        the write-protocol check, then publishes the record with the
-        atomic log link; losing the version race
-        (:class:`ConcurrentWriteError`) calls ``attempt()`` again
-        against the winner's snapshot — any files a lost attempt
-        staged stay orphaned until vacuum — and after ``max_retries``
-        lost races the last ConcurrentWriteError is re-raised
-        unchanged. Every other exception (validation, constraint,
-        protocol) propagates at once. Post-commit hooks
+        retry loop. Each attempt folds the log ONCE —
+        ``snap = _replay_log(table_dir)`` — and calls ``attempt(snap)``,
+        which returns ``(record, result)``: ``record`` is the commit for
+        version ``snap.version + 1``, or None to return ``result`` with
+        no commit (nothing to do). The attempt body and every helper it
+        calls take meta, constraints, live files, deletion vectors and
+        schema from that one snapshot, never from a second fold — so
+        everything the record is built from is as of ``snap.version``,
+        and any commit landing after the fold claims the version first
+        and fails this attempt into a retry.
+
+        A built record passes the write-protocol check against
+        ``snap.meta``, then publishes with the atomic log link; losing
+        the version race (:class:`ConcurrentWriteError`) re-folds and
+        calls ``attempt`` again against the winner's snapshot — any
+        files a lost attempt staged stay orphaned until vacuum — and
+        after ``max_retries`` lost races the last ConcurrentWriteError
+        is re-raised unchanged. Every other exception (validation,
+        constraint, protocol) propagates at once. Post-commit hooks
         (``_after_data_commit``, per-handle cache resets) stay with
         the callers.
 
-        A won commit then runs the auto-checkpoint cadence. A failed
-        checkpoint never fails the committed write — the checkpoint is
-        DERIVED data (a pure function of the version); losing one costs
-        replay time until the next interval commit retries, nothing
-        else.
+        A won commit then runs the auto-checkpoint cadence
+        (``checkpoint_interval`` from the winning snapshot's meta). A
+        failed checkpoint never fails the committed write — the
+        checkpoint is DERIVED data (a pure function of the version);
+        losing one costs replay time until the next interval commit
+        retries, nothing else.
 
         The only other ``_atomic_commit`` callers are the bootstrap
         commits that cannot conflict: :meth:`create` (v1) and
@@ -1339,23 +1327,17 @@ class TxTable:
         if max_retries < 1:
             raise ValueError("max_retries must be >= 1")
         for _ in range(max_retries):
-            record, result = attempt()
+            snap = _replay_log(self.table_dir, self.latest_version())
+            record, result = attempt(snap)
             if record is None:
                 return result
-            self._check_protocol("write")
+            self._check_protocol("write", snap.meta)
             try:
                 _atomic_commit(self.table_dir, record["version"], record)
             except ConcurrentWriteError as exc:
                 last = exc
                 continue
-            # the interval is create-time-immutable (never in a
-            # meta_update patch), so one meta read per handle suffices
-            # — a per-commit meta replay just to read a constant would
-            # tax every write
-            ci = getattr(self, "_ckpt_iv", None)
-            if ci is None:
-                ci = int(self.meta.get("checkpoint_interval") or 0)
-                self._ckpt_iv = ci
+            ci = int(snap.meta.get("checkpoint_interval") or 0)
             if ci and record["version"] % ci == 0:
                 try:
                     self.checkpoint()
@@ -1856,21 +1838,19 @@ class TxTable:
             "generated_cols", "identity_cols",
         )
 
-        def attempt():
-            # one replay yields files, schema AND dv state — the
-            # _snapshot() convenience would replay the log a second
-            # time just to discard the vectors this needs
-            base_v, cur_live_map, cur_schema, cur_dvs, *_ = _replay_log(
-                self.table_dir
-            )
+        # the target snapshot is immutable history: fold it once, not
+        # per attempt
+        _, old_live_map, old_schema, old_dvs, old_meta, *_ = _replay_log(
+            self.table_dir, version
+        )
+
+        def attempt(snap: _Snapshot):
+            base_v, cur_live_map, cur_schema, cur_dvs, cur_meta, *_ = snap
             cur_live = list(cur_live_map.values())
             if not 1 <= version <= base_v:
                 raise ValueError(
                     f"cannot restore to {version}: log spans 1..{base_v}"
                 )
-            _, old_live_map, old_schema, old_dvs, *_ = _replay_log(
-                self.table_dir, version
-            )
             cur_names = (
                 {f.name for f in
                  StructType.fromJson(json.loads(cur_schema)).fields}
@@ -1885,7 +1865,7 @@ class TxTable:
             # one referencing a column the restored schema LACKS would
             # fail every subsequent write; refuse up front (the same
             # drop-the-rule-first position as rename/drop_columns)
-            for cname, expr in self.constraints().items():
+            for cname, expr in snap.constraints.items():
                 gone = [
                     c for c in cur_names - restored_names
                     if _expr_mentions(expr, c)
@@ -1932,8 +1912,6 @@ class TxTable:
                 record["dv_full"] = {
                     p: sorted(s) for p, s in old_dvs.items()
                 }
-            cur_meta = self.meta
-            old_meta = self.meta_at(version)
             revert = {
                 k: old_meta.get(k)
                 for k in _SCHEMA_META
@@ -1972,7 +1950,7 @@ class TxTable:
                         "widening history must be restored on non-CDF "
                         "tables"
                     )
-                record["cdf_files"] = self._stage_cdf(base_v + 1, record)
+                record["cdf_files"] = self._stage_cdf(record, snap)
             return record, base_v + 1
 
         return self._transact(attempt, max_retries)
@@ -2036,13 +2014,13 @@ class TxTable:
         column-mapping physical ids."""
         cols = tuple(cols)
 
-        def attempt():
-            # Validation runs INSIDE each attempt against fresh meta:
+        def attempt(snap: _Snapshot):
+            # Validation runs INSIDE each attempt against its snapshot:
             # a concurrent commit (e.g. another drop_columns retiring a
             # different generated column, or add_constraint) must be
             # re-checked on retry, or the losing writer would commit a
             # meta_update built from its stale pre-race snapshot.
-            meta = self.meta
+            v, meta, snap_schema = snap.version, snap.meta, snap.schema_json
             protected = set(meta["key_cols"]) | {meta["order_col"]}
             badp = set(cols) & set(meta.get("partition_by") or ())
             if badp:
@@ -2056,7 +2034,7 @@ class TxTable:
                 raise ValueError(
                     f"cannot drop key/order column(s) {sorted(bad)}"
                 )
-            for name, expr in self.constraints().items():
+            for name, expr in snap.constraints.items():
                 hit = [c for c in cols if _expr_mentions(expr, c)]
                 if hit:
                     raise ValueError(
@@ -2086,7 +2064,6 @@ class TxTable:
                 n: s for n, s in ident.items() if n not in cols
             }
             ident_changed = surviving_ident != ident
-            v, _, snap_schema = self._snapshot()
             if snap_schema is None:
                 raise ValueError("no recorded schema to drop from")
             old = StructType.fromJson(json.loads(snap_schema))
@@ -2152,15 +2129,14 @@ class TxTable:
                 f"add_columns: unparseable column spec {cols!r}: {exc}"
             ) from exc
 
-        def attempt():
-            v, _, snap_schema = self._snapshot()
+        def attempt(snap: _Snapshot):
+            v, meta, snap_schema = snap.version, snap.meta, snap.schema_json
             if snap_schema is None:
                 raise ValueError(
                     "add_columns: the table has no recorded schema "
                     "yet — append a first (possibly empty) batch or "
                     "CREATE TABLE with a column list"
                 )
-            meta = self.meta
             logical = StructType.fromJson(json.loads(snap_schema))
             names = {f.name.lower() for f in logical.fields}
             dropped = {
@@ -2229,8 +2205,8 @@ class TxTable:
         if old == new:
             raise ValueError("rename_column: old and new are the same")
 
-        def attempt():
-            meta = self.meta
+        def attempt(snap: _Snapshot):
+            v, meta, snap_schema = snap.version, snap.meta, snap.schema_json
             protected = set(meta["key_cols"]) | {meta["order_col"]}
             protected |= set(meta.get("bloom_cols") or ())
             if old in protected:
@@ -2250,14 +2226,13 @@ class TxTable:
                     f"{old!r} — its allocation rule and watermark are "
                     "keyed by name"
                 )
-            for name, expr in {**self.constraints(), **gen}.items():
+            for name, expr in {**snap.constraints, **gen}.items():
                 if _expr_mentions(expr, old):
                     raise ValueError(
                         f"column {old!r} is referenced by {name} "
                         f"({expr}) — drop the rule first"
                     )
             mapping = dict(meta.get("column_mapping") or {})
-            v, _, snap_schema = self._snapshot()
             if snap_schema is None:
                 raise ValueError("no recorded schema to rename in")
             sch = StructType.fromJson(json.loads(snap_schema))
@@ -2349,7 +2324,6 @@ class TxTable:
         depend on the skip. Keep the value list driver-bounded (it
         travels in the plan as an IN-set); above ~10^5 values a join
         is the right tool instead."""
-        self._check_protocol("read")
         if timestamp is not None:
             if version is not None:
                 raise ValueError(
@@ -2359,6 +2333,7 @@ class TxTable:
         _, live_map, schema_json, dvs, meta, *_ = _replay_log(
             self.table_dir, version
         )
+        self._check_protocol("read", meta)
         mapping = meta.get("column_mapping") or {}
         # file stats/blooms are keyed by PHYSICAL column name — the
         # skip test translates; the row-level re-application below
@@ -2841,12 +2816,11 @@ class TxTable:
         return self._commit_constraints(lambda cur, v: cur.pop(name, None))
 
     def _commit_constraints(self, edit) -> int:
-        """Commit the rule map as of a fresh snapshot ``v`` after
+        """Commit the rule map as of the attempt's snapshot ``v`` after
         ``edit(rules, v)`` changed it in place (or raised)."""
 
-        def attempt():
-            v = self.latest_version()
-            cur = self.constraints(v)
+        def attempt(snap: _Snapshot):
+            v, cur = snap.version, dict(snap.constraints)
             edit(cur, v)
             return {
                 "version": v + 1,
@@ -2858,16 +2832,16 @@ class TxTable:
 
         return self._transact(attempt)
 
-    def _check_constraints(self, df: DataFrame, what: str) -> None:
-        """Reject ``df`` if any row fails any current constraint. The
-        null-safe ``<=> TRUE`` comparison makes NULL-valued predicates
+    def _check_constraints(
+        self, df: DataFrame, what: str, constraints: dict[str, str]
+    ) -> None:
+        """Reject ``df`` if any row fails any of ``constraints`` (the
+        committing attempt's snapshot rules). The null-safe
+        ``<=> TRUE`` comparison makes NULL-valued predicates
         violations (SQL CHECK semantics treat unknown as pass; a data
         CONTRACT must not — a NULL in ``v >= 0`` is exactly the bad
         row the gate exists to stop)."""
-        cons = self.constraints()
-        if not cons:
-            return
-        for name, expr in cons.items():
+        for name, expr in constraints.items():
             bad = df.filter(f"NOT (({expr}) <=> TRUE)").limit(1).collect()
             if bad:
                 raise ConstraintViolation(
@@ -2880,6 +2854,7 @@ class TxTable:
     def _stage(
         self,
         df: DataFrame,
+        meta: dict,
         order_cols: tuple | None = None,
         max_rows_per_file: int | None = None,
         bin_col: str | None = None,
@@ -2887,7 +2862,9 @@ class TxTable:
         pre_bucketed: bool = False,
     ) -> list[dict]:
         """Write `df` (already carrying ``_bucket``) as invisible data
-        files; return add-entries [{path, bucket}...].
+        files under the layout ``meta`` declares (key sort, partition
+        columns, column mapping, bloom columns); return add-entries
+        [{path, bucket}...].
 
         ``order_cols`` overrides the default within-bucket key sort
         (the OPTIMIZE ZORDER path passes its Morton value);
@@ -2908,7 +2885,6 @@ class TxTable:
         layout (one file per partition-tuple per bucket) is identical,
         one exchange cheaper. Incompatible with ``bin_col`` (bins are
         a different grouping)."""
-        meta = self.meta
         staged = f"_staged-{uuid.uuid4().hex}"
         out = os.path.join(self.table_dir, staged)
         # `_pb` is a copy of `_bucket` (or the bin id) consumed by
@@ -3133,9 +3109,10 @@ class TxTable:
             }
         return out
 
-    def _stage_cdf(self, version: int, record: dict) -> list[str]:
+    def _stage_cdf(self, record: dict, snap: _Snapshot) -> list[str]:
         """Materialize a pending rewrite commit's change feed (cdf=True
-        tables): derive the rows from the staged record and write them
+        tables): derive the rows from the staged record — built against
+        ``snap``, the attempt's snapshot — and write them
         under ``_cdf-<uuid>/`` — OUTSIDE the ``_staged-*`` namespace so
         vacuum's staged-orphan reclamation never touches committed
         change files. Returns table-relative parquet paths to record as
@@ -3144,12 +3121,12 @@ class TxTable:
         batches like it budgets add files). Cost ∝ the commit's touched
         buckets — the write-time price Delta's enableChangeDataFeed
         pays."""
-        changes = self._changes_for(version, record)
+        changes = self._changes_for(record["version"], record, snap, snap)
         # change files follow the same contract as data files: PHYSICAL
         # column names on disk, so the DataSource change-feed reader
         # resolves renamed columns through the one mapping
         changes = _rename_columns(
-            changes, (self.meta.get("column_mapping") or {}).items()
+            changes, (snap.meta.get("column_mapping") or {}).items()
         )
         out_rel = f"_cdf-{uuid.uuid4().hex}"
         out = os.path.join(self.table_dir, out_rel)
@@ -3164,12 +3141,12 @@ class TxTable:
         }
         return paths
 
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
-        # NULL business keys are dropped JVM-side (the stream-store NULL
-        # hygiene convention): a NULL key is a malformed row the K4 path
-        # validates away upstream, and xxhash64(NULL) would otherwise
-        # produce a NULL bucket (an unparseable _pb partition dir).
-        m = self.meta
+    def _with_bucket(self, df: DataFrame, m: dict) -> DataFrame:
+        # bucket ids under meta ``m``'s modulus. NULL business keys are
+        # dropped JVM-side (the stream-store NULL hygiene convention): a
+        # NULL key is a malformed row the K4 path validates away
+        # upstream, and xxhash64(NULL) would otherwise produce a NULL
+        # bucket (an unparseable _pb partition dir).
         clean = df
         for c in m["key_cols"]:
             clean = clean.filter(F.col(c).isNotNull())
@@ -3183,28 +3160,28 @@ class TxTable:
     def _schema_union_json(
         self,
         df: DataFrame | StructType,
-        snap_schema: str | None,
+        snap: _Snapshot,
         merge_schema: bool,
         op: str,
     ) -> str:
-        """The schema a commit must RECORD: the table's current schema
-        widened by the incoming frame's new columns (add-column
-        evolution) and, under ``merge_schema``, by safe TYPE WIDENINGS
-        (int ladder → long, float → double — Delta's typeWidening):
-        the log records the wide type and old files keep their narrow
-        physical encoding, upcast losslessly at scan time by Spark's
-        parquet readers and the DataSource's Arrow cast. An incoming
-        frame NARROWER than the table needs no schema change at all
-        (its files read under the wide log schema). Key/order columns
-        never widen — the bucket hash is width-dispatched, so a widened
-        key would silently re-bucket. Any other same-name type change
-        is refused outright (narrowing or incompatible types would
-        corrupt old files at read time — the Delta position). Accepts a
-        DataFrame or a bare StructType (the DataSource writer has only
-        the latter)."""
+        """The schema a commit must RECORD: the schema of ``snap`` (the
+        attempt's snapshot) widened by the incoming frame's new columns
+        (add-column evolution) and, under ``merge_schema``, by safe TYPE
+        WIDENINGS (int ladder → long, float → double — Delta's
+        typeWidening): the log records the wide type and old files keep
+        their narrow physical encoding, upcast losslessly at scan time
+        by Spark's parquet readers and the DataSource's Arrow cast. An
+        incoming frame NARROWER than the table needs no schema change at
+        all (its files read under the wide log schema). Key/order
+        columns never widen — the bucket hash is width-dispatched, so a
+        widened key would silently re-bucket. Any other same-name type
+        change is refused outright (narrowing or incompatible types
+        would corrupt old files at read time — the Delta position).
+        Accepts a DataFrame or a bare StructType (the DataSource writer
+        has only the latter)."""
         schema = df if isinstance(df, StructType) else df.schema
         user_fields = [f for f in schema.fields if f.name != "_bucket"]
-        meta = self.meta
+        meta, snap_schema = snap.meta, snap.schema_json
         retired = set(meta.get("dropped_cols") or ())
         resurrect = [f.name for f in user_fields if f.name in retired]
         if resurrect:
@@ -3316,7 +3293,7 @@ class TxTable:
     _MERGE_PRUNE_MAX_KEYS = 100_000
 
     def _merge_hit_files(
-        self, live: list, src_b: DataFrame, key_cols: list
+        self, live: list, src_b: DataFrame, meta: dict
     ) -> list:
         """The files a merge must rewrite — Delta's two-phase merge
         find-phase, at FILE granularity: of the source's touched
@@ -3345,7 +3322,9 @@ class TxTable:
         them (driver-bounded) AND the envelope left >1 candidate.
         Bucket ``-1`` (unadopted/converted) files are ALWAYS hit:
         every keyed write re-adopts them into real buckets, and
-        pruning must not stall that migration."""
+        pruning must not stall that migration. ``src_b`` is bucketed
+        under ``meta``, the snapshot ``live`` comes from."""
+        key_cols = meta["key_cols"]
         aggs = []
         for k in key_cols:
             aggs += [F.min(k).alias(f"_lo_{k}"),
@@ -3356,7 +3335,7 @@ class TxTable:
         )
         stats = src_b.groupBy("_bucket").agg(*aggs).collect()
         env = {r["_bucket"]: r for r in stats}
-        mapping = self.meta.get("column_mapping") or {}
+        mapping = meta.get("column_mapping") or {}
         always = [e for e in live if e["bucket"] == -1]
         keep_in = {
             b: file_predicate(
@@ -3415,15 +3394,9 @@ class TxTable:
         the flag a schema mismatch fails fast (the default guards
         against typo'd column names silently forking the schema).
         """
-        df = self._managed_entry(
-            self._with_generated(df, "merge_upsert"), "merge_upsert"
-        )
-        self._check_constraints(df, "merge_upsert batch")
+        df = self._managed_entry(df, "merge_upsert", self.meta)
         return self._after_data_commit(self._keyed_merge(
-            df.withColumn("_del", F.lit(False)),
-            lambda live, incoming, m: self._merge_hit_files(
-                live, incoming, m["key_cols"]
-            ),
+            df.withColumn("_del", F.lit(False)), self._merge_hit_files,
             "merge_upsert", txn, max_retries, merge_schema,
         ))
 
@@ -3439,30 +3412,27 @@ class TxTable:
         """The ONE keyed latest-wins body behind ``merge_upsert`` and
         ``apply_cdc``: ``df`` carries the table columns plus a boolean
         ``_del`` (TRUE = retract the key; ``merge_upsert`` passes all
-        FALSE). Per attempt: bucket the batch, pick the existing files
-        to rewrite with ``hit_files(live, incoming, meta)``, union them
-        with the batch, keep one row per key — ``order_col`` desc, then
-        incoming before existing, then delete before upsert, then a
-        stable ``xxhash64`` content hash, so replaying a batch always
-        picks the same winner — drop keys whose winner is a delete, and
-        commit ``op="merge"`` (add = the rewritten buckets, remove =
-        the hit files)."""
+        FALSE). Per attempt, all against the attempt's snapshot: check
+        the batch's upsert rows (``_del`` FALSE — the only ones that can
+        land) against its CHECK constraints, bucket the batch under its
+        modulus, pick the existing files to rewrite with
+        ``hit_files(live, incoming, meta)``, union them with the batch,
+        keep one row per key — ``order_col`` desc, then incoming before
+        existing, then delete before upsert, then a stable ``xxhash64``
+        content hash, so replaying a batch always picks the same winner
+        — drop keys whose winner is a delete, and commit ``op="merge"``
+        (add = the rewritten buckets, remove = the hit files)."""
+        upserts = df.filter(~F.col("_del")).drop("_del")
 
-        def attempt():
-            # meta and bucketing re-derived PER ATTEMPT: a rebucket()
-            # landing between attempts changes n_buckets, and a retry
-            # that kept the old bucket ids would mislabel its files
-            # (rows silently escaping later merges)
-            m = self.meta
-            incoming = self._with_bucket(df)
-            base_v, live_map, snap_schema, dvs, *_ = _replay_log(
-                self.table_dir
-            )
+        def attempt(snap: _Snapshot):
+            base_v, live_map, snap_schema, dvs, m, cons, _ = snap
+            self._check_constraints(upserts, f"{op} batch", cons)
+            incoming = self._with_bucket(df, m)
             hit = hit_files(list(live_map.values()), incoming, m)
             # validate/widen BEFORE staging — a schema mismatch must not
             # write orphan files first
             schema_rec = self._schema_union_json(
-                incoming.drop("_del"), snap_schema, merge_schema, op
+                incoming.drop("_del"), snap, merge_schema, op
             )
             inc = incoming.withColumn("_src", F.lit(1))
             if hit:
@@ -3471,8 +3441,10 @@ class TxTable:
                 # rewrite) and recompute _bucket from the keys
                 existing = self._with_bucket(
                     self._open_files(
-                        hit, snap_schema, dvs
-                    ).drop("_bucket")
+                        hit, snap_schema, dvs,
+                        mapping=m.get("column_mapping") or {},
+                    ).drop("_bucket"),
+                    m,
                 ).withColumn("_del", F.lit(False)).withColumn(
                     "_src", F.lit(0)
                 )
@@ -3560,7 +3532,7 @@ class TxTable:
                     c, F.coalesce(F.col(f"_ih_{c}"), F.col(c))
                 ).drop(f"_ih_{c}")
             latest, id_upd = self._fill_identity(latest, m)
-            added = self._stage(latest, pre_bucketed=True)
+            added = self._stage(latest, m, pre_bucketed=True)
             record = {
                 "version": base_v + 1,
                 "op": "merge",
@@ -3573,7 +3545,7 @@ class TxTable:
             if txn:
                 record["txn"] = txn
             if m.get("cdf"):
-                record["cdf_files"] = self._stage_cdf(base_v + 1, record)
+                record["cdf_files"] = self._stage_cdf(record, snap)
             return record, base_v + 1
 
         return self._transact(attempt, max_retries)
@@ -3876,8 +3848,7 @@ class TxTable:
         # checkpoint materializes at the first job and every later
         # job (including commit retries) reads the materialization
         source = self._managed_entry(
-            self._with_generated(source, "merge_into"),
-            "merge_into",
+            source, "merge_into", m0,
             add_missing=False,  # the clause plan NULL-aligns both sides
         ).localCheckpoint(eager=False)
         # Delta's multiple-matches error fires only when several
@@ -3907,19 +3878,16 @@ class TxTable:
             if cl["values"] is not None
         ]
 
-        def attempt():
+        def attempt(snap: _Snapshot):
             # constraints are checked on the RESULT below (the only
             # rows that get written) — source rows that never land
             # (deletes, condition-gated) may carry any values, the
             # apply_cdc convention
-            m = self.meta
-            src_b = self._with_bucket(source)
-            base_v, live_map, snap_schema, dvs, *_ = _replay_log(
-                self.table_dir
-            )
+            base_v, live_map, snap_schema, dvs, m, *_ = snap
+            src_b = self._with_bucket(source, m)
             live = list(live_map.values())
             schema_rec = self._schema_union_json(
-                src_b, snap_schema, merge_schema, "merge_into"
+                src_b, snap, merge_schema, "merge_into"
             )
             rec_schema = StructType.fromJson(json.loads(schema_rec))
             cols = [f.name for f in rec_schema.fields if f.name != "_bucket"]
@@ -3942,11 +3910,12 @@ class TxTable:
             if when_not_matched_by_source:
                 hit = live
             else:
-                hit = self._merge_hit_files(live, src_b, key_cols)
+                hit = self._merge_hit_files(live, src_b, m)
             s_m = src_b.drop("_bucket").withColumn("_s", F.lit(1))
             if hit:
                 t_m = self._open_files(
-                    hit, snap_schema, dvs
+                    hit, snap_schema, dvs,
+                    mapping=m.get("column_mapping") or {},
                 ).drop("_bucket").withColumn("_t", F.lit(1))
             else:
                 # empty/untouched target side: synthesize the s-only
@@ -4088,9 +4057,9 @@ class TxTable:
                             ).otherwise(F.col(gname)),
                         )
             out = out.drop("_upd")
-            self._check_constraints(out, "merge_into result")
-            outb, id_upd = self._fill_identity(self._with_bucket(out), m)
-            added = self._stage(outb)
+            self._check_constraints(out, "merge_into result", snap.constraints)
+            outb, id_upd = self._fill_identity(self._with_bucket(out, m), m)
+            added = self._stage(outb, m)
             record = {
                 "version": base_v + 1,
                 "op": "merge_into",
@@ -4108,7 +4077,7 @@ class TxTable:
             if txn:
                 record["txn"] = txn
             if m.get("cdf"):
-                record["cdf_files"] = self._stage_cdf(base_v + 1, record)
+                record["cdf_files"] = self._stage_cdf(record, snap)
             return record, base_v + 1
 
         return self._after_data_commit(self._transact(attempt, max_retries))
@@ -4258,14 +4227,7 @@ class TxTable:
         is simply absent from the post-image and the key-paired diff
         emits its ``delete`` row. Cost ∝ touched buckets, like every
         keyed write."""
-        df = self._managed_entry(
-            self._with_generated(df, "apply_cdc"), "apply_cdc"
-        )
-        # the body's delete predicate, negated: a NULL op is an upsert
-        upserts = df.filter(
-            ~F.col(op_col).eqNullSafe(F.lit(delete_label))
-        ).drop(op_col)
-        self._check_constraints(upserts, "apply_cdc batch")
+        df = self._managed_entry(df, "apply_cdc", self.meta)
 
         def bucket_hits(live, incoming, m):
             # every file in a touched bucket (plus unadopted bucket -1):
@@ -4280,6 +4242,7 @@ class TxTable:
             ]
 
         return self._keyed_merge(
+            # null-safe: a NULL op is an upsert
             df.withColumn(
                 "_del", F.col(op_col).eqNullSafe(F.lit(delete_label))
             ).drop(op_col),
@@ -4304,51 +4267,36 @@ class TxTable:
         fields + incoming's new ones), so the table never silently
         narrows when an append carries fewer columns than the snapshot.
         """
-        df = self._managed_entry(
-            self._with_generated(df, "append"), "append"
-        )
-        m0 = self.meta  # ONE replay for n_buckets + watermark + fill
-        staged_n = m0["n_buckets"]
-        used_ctr = self._identity_counters(m0)
-        bucketed = self._with_bucket(df)
-        filled, id_upd = self._fill_identity(bucketed, m0, used_ctr)
-        staged = self._stage(filled)  # position-independent: stage once
+        df = self._managed_entry(df, "append", self.meta)
+        staged_as, filled, id_upd, staged = None, None, None, None
 
-        def attempt():
-            nonlocal staged_n, used_ctr, filled, id_upd, staged
-            # Schema and constraints are re-derived from the LATEST
-            # snapshot on every attempt: an append racing a concurrent
+        def attempt(snap: _Snapshot):
+            nonlocal staged_as, filled, id_upd, staged
+            # Schema and constraints are re-derived from the attempt's
+            # snapshot: an append racing a concurrent
             # merge_upsert(merge_schema=True) must not re-commit a
             # schema_json computed before the race — replay treats the
             # newest commit's schema as authoritative, so a stale
             # narrower record would silently drop the column the other
             # writer just added.
-            v, _, snap_schema = self._snapshot()
-            mnow = self.meta  # ONE replay per attempt (n_buckets + watermark)
-            if (
-                mnow["n_buckets"] != staged_n
-                or self._identity_counters(mnow) != used_ctr
-            ):
-                # a rebucket() or a concurrent identity allocation won
-                # a race: the staged files carry bucket labels under
-                # the OLD modulus / ids under the OLD watermark —
-                # restage (old files become vacuumable orphans). The
-                # check runs AFTER the snapshot read: counters are
-                # monotonic, so equality here proves the staged ids
-                # were allocated under the watermark as of v — and any
-                # later concurrent allocation claims v+1 first, failing
-                # this commit into the next retry.
-                staged_n = mnow["n_buckets"]
-                used_ctr = self._identity_counters(mnow)
-                bucketed = self._with_bucket(df)
+            v, m = snap.version, snap.meta
+            layout = (m["n_buckets"], self._identity_counters(m))
+            if staged_as != layout:
+                # stage when missing, or when a rebucket() or a
+                # concurrent identity allocation won a race since: the
+                # staged files carry bucket labels under the OLD
+                # modulus / ids under the OLD watermark — restage (old
+                # files become vacuumable orphans). Staged files are
+                # position-independent otherwise, so an unrelated lost
+                # race reuses them.
                 filled, id_upd = self._fill_identity(
-                    bucketed, mnow, used_ctr
+                    self._with_bucket(df, m), m
                 )
-                staged = self._stage(filled)
+                staged, staged_as = self._stage(filled, m), layout
             schema_rec = self._schema_union_json(
-                filled, snap_schema, merge_schema, "append"
+                filled, snap, merge_schema, "append"
             )
-            self._check_constraints(df, "append batch")
+            self._check_constraints(df, "append batch", snap.constraints)
             if _precommit is not None:
                 # per-attempt validator (copy_into's duplicate-load
                 # guard): runs AFTER the snapshot read, so a commit it
@@ -4593,15 +4541,14 @@ class TxTable:
         if n_buckets < 1:
             raise ValueError("rebucket: n_buckets must be >= 1")
 
-        def attempt():
-            base_v, live_map, schema_json, dvs, *_ = _replay_log(
-                self.table_dir
-            )
+        def attempt(snap: _Snapshot):
+            base_v, live_map, schema_json, dvs, m, *_ = snap
             live = list(live_map.values())
-            if self.meta["n_buckets"] == n_buckets:
+            if m["n_buckets"] == n_buckets:
                 return None, base_v  # already there — no-op, no commit
             df = self._open_files(
-                live, schema_json, dvs
+                live, schema_json, dvs,
+                mapping=m.get("column_mapping") or {},
             ).drop("_bucket") if live else None
             if df is None:
                 added = []
@@ -4609,17 +4556,15 @@ class TxTable:
                 rebucketed = df.withColumn(
                     "_bucket",
                     F.pmod(
-                        F.xxhash64(
-                            *[F.col(c) for c in self.meta["key_cols"]]
-                        ),
+                        F.xxhash64(*[F.col(c) for c in m["key_cols"]]),
                         F.lit(n_buckets),
                     ),
                 )
-                added = self._stage(rebucketed)
+                added = self._stage(rebucketed, m)
             record = {
                 "version": base_v + 1,
                 "op": "compact",  # layout-only: multiset preserved
-                "note": f"rebucket {self.meta['n_buckets']} -> {n_buckets}",
+                "note": f"rebucket {m['n_buckets']} -> {n_buckets}",
                 "add": added,
                 "remove": [e["path"] for e in live],
                 "schema_json": schema_json,
@@ -4698,13 +4643,10 @@ class TxTable:
                     _size_memo[p] = 0
             return _size_memo[p]
 
-        def attempt():
-            base_v, live_map, schema_json, dvs, *_ = _replay_log(
-                self.table_dir
-            )
-            live = self._scope_entries(
-                list(live_map.values()), where, schema_json
-            )
+        def attempt(snap: _Snapshot):
+            base_v, _, schema_json, dvs, m, *_ = snap
+            mapping = m.get("column_mapping") or {}
+            live = self._scope_entries(snap, where)
             if not live:
                 return None, base_v
             bins: list[tuple[int, list[dict]]] | None = None
@@ -4790,7 +4732,7 @@ class TxTable:
                             )
                     src = self._open_files(
                         bin_touched, schema_json,
-                        dvs, keep_meta=True,
+                        dvs, keep_meta=True, mapping=mapping,
                     )
                     bindf = self.spark.createDataFrame(
                         file_to_bin, "_file string, _bin int"
@@ -4803,24 +4745,26 @@ class TxTable:
                     # the data) — recompute it like the per-bucket path
                     # does, so bin outputs stay explicit-file-list
                     # readable
-                    df = self._with_bucket(df.drop("_bucket"))
+                    df = self._with_bucket(df.drop("_bucket"), m)
                     added = self._stage(
-                        df, bin_col="_bin", bin_to_bucket=bin_to_bucket
+                        df, m, bin_col="_bin", bin_to_bucket=bin_to_bucket
                     )
                 if adopt:
                     adf = self._with_bucket(
                         self._open_files(
-                            adopt, schema_json, dvs
-                        ).drop("_bucket")
+                            adopt, schema_json, dvs, mapping=mapping
+                        ).drop("_bucket"),
+                        m,
                     )
-                    added = added + self._stage(adf)
+                    added = added + self._stage(adf, m)
             else:
                 df = self._with_bucket(
                     self._open_files(
-                        touched, schema_json, dvs
-                    ).drop("_bucket")
+                        touched, schema_json, dvs, mapping=mapping
+                    ).drop("_bucket"),
+                    m,
                 )
-                added = self._stage(df)
+                added = self._stage(df, m)
             record = {
                 "version": base_v + 1,
                 "op": "compact",
@@ -4835,29 +4779,32 @@ class TxTable:
         return self._transact(attempt, max_retries)
 
     def _scope_entries(
-        self, live: list[dict], where: str | None, schema_json: str | None
+        self, snap: _Snapshot, where: str | None
     ) -> list[dict]:
         """Delta's ``OPTIMIZE/ZORDER ... WHERE``: restrict a
-        maintenance rewrite to files whose PARTITION VALUES satisfy
-        ``where`` — partition columns only (Delta's rule: a row-level
-        predicate cannot scope a whole-file rewrite). The predicate is
-        evaluated by SPARK over the distinct partition tuples (typed
+        maintenance rewrite of ``snap``'s live files to those whose
+        PARTITION VALUES satisfy ``where`` — partition columns only
+        (Delta's rule: a row-level predicate cannot scope a whole-file
+        rewrite). The predicate is evaluated by SPARK over the distinct
+        partition tuples (typed
         through the table schema — real SQL semantics, no hand-rolled
         comparator), a metadata-sized frame of O(live partitions)
         rows. Tuples missing a recorded value for some column (the
         hive string-null adoption case) evaluate with NULL — SQL's
         three-valued WHERE keeps them out of scope unless the
         predicate is null-true."""
+        live = list(snap.live.values())
         if where is None:
             return live
-        pby = list(self.meta.get("partition_by") or ())
+        schema_json = snap.schema_json
+        pby = list(snap.meta.get("partition_by") or ())
         if not pby:
             raise ValueError(
                 "compact/zorder WHERE requires a partitioned table — "
                 "a predicate can only scope whole files via their "
                 "partition values"
             )
-        mapping = self.meta.get("column_mapping") or {}
+        mapping = snap.meta.get("column_mapping") or {}
         rev = {ph: lg for lg, ph in mapping.items()}
         logical_pby = [rev.get(p, p) for p in pby]
         if schema_json is not None:
@@ -4970,19 +4917,17 @@ class TxTable:
         if not cols:
             raise ValueError("optimize_zorder needs at least one column")
 
-        def attempt():
-            base_v, live_map, schema_json, dvs, *_ = _replay_log(
-                self.table_dir
-            )
-            live = self._scope_entries(
-                list(live_map.values()), where, schema_json
-            )
+        def attempt(snap: _Snapshot):
+            base_v, _, schema_json, dvs, m, *_ = snap
+            live = self._scope_entries(snap, where)
             if not live:
                 return None, base_v
             df = self._with_bucket(
                 self._open_files(
-                    live, schema_json, dvs
-                ).drop("_bucket")
+                    live, schema_json, dvs,
+                    mapping=m.get("column_mapping") or {},
+                ).drop("_bucket"),
+                m,
             )
             # global [min, max] per dimension — one broadcast row
             mm = df.agg(
@@ -5019,6 +4964,7 @@ class TxTable:
                     *[f"__mn_{c}" for c in cols],
                     *[f"__mx_{c}" for c in cols],
                 ),
+                m,
                 order_cols=("_zv",),
                 max_rows_per_file=max_rows_per_file,
             )
@@ -5079,13 +5025,11 @@ class TxTable:
         the reason copy-on-write deletes are tractable at all.
         """
 
-        def attempt():
-            base_v, live_map, schema_json, dvs, *_ = _replay_log(
-                self.table_dir
-            )
+        def attempt(snap: _Snapshot):
+            base_v = snap.version
             _, dv, touched, n_del = self._find_matches(
-                "delete_where", predicate, prune, live_map, schema_json,
-                dvs, max_dv_rows if mode == "merge_on_read" else None,
+                "delete_where", predicate, prune, snap,
+                max_dv_rows if mode == "merge_on_read" else None,
             )
             if not n_del:
                 return None, (base_v, 0)
@@ -5094,15 +5038,15 @@ class TxTable:
                 "op": "delete",
                 # a deletion vector touches no data file
                 "add": [] if dv else self._stage_survivors(
-                    touched, schema_json, dvs, predicate
+                    touched, snap, predicate
                 ),
                 "remove": [e["path"] for e in touched],
                 **({"dv": dv} if dv else {}),
-                "schema_json": schema_json,
+                "schema_json": snap.schema_json,
                 "predicate": predicate,
             }
-            if self.meta.get("cdf"):
-                record["cdf_files"] = self._stage_cdf(base_v + 1, record)
+            if snap.meta.get("cdf"):
+                record["cdf_files"] = self._stage_cdf(record, snap)
             return record, (base_v + 1, n_del)
 
         return self._transact(attempt, max_retries)
@@ -5112,13 +5056,12 @@ class TxTable:
         op: str,
         predicate: str,
         prune: dict[str, tuple] | None,
-        live_map: dict,
-        schema_json: str | None,
-        dvs: dict[str, set] | None,
+        snap: _Snapshot,
         max_dv_rows: int | None = None,
     ) -> tuple[DataFrame | None, dict | None, list[dict], int]:
         """The ONE find phase of the predicate-scoped DML
-        (``delete_where``, ``update_where``, ``replace_where``) →
+        (``delete_where``, ``update_where``, ``replace_where``) over
+        the live files of ``snap``, the attempt's snapshot →
         ``(matches, dv, touched, n)``.
 
         ``prune`` (col → (lo, hi), the ``read`` convention) skips
@@ -5140,14 +5083,14 @@ class TxTable:
         yields both the ``touched`` entries and ``n`` (the per-file
         match counts' sum), so no second job re-scans the files for
         the count."""
-        keep = file_predicate(
-            prune, mapping=self.meta.get("column_mapping") or {}
-        )
-        cand = [e for e in live_map.values() if keep(e)]
+        mapping = snap.meta.get("column_mapping") or {}
+        keep = file_predicate(prune, mapping=mapping)
+        cand = [e for e in snap.live.values() if keep(e)]
         if not cand:
             return None, None, [], 0
         matches = self._open_files(
-            cand, schema_json, dvs, keep_meta=True
+            cand, snap.schema_json, snap.dvs, keep_meta=True,
+            mapping=mapping,
         ).filter(predicate)
         if max_dv_rows is not None:
             by_sfx = {_path_sfx(e["path"]): e["path"] for e in cand}
@@ -5190,25 +5133,26 @@ class TxTable:
         return matches, None, touched, sum(int(r["_n"]) for r in per_file)
 
     def _stage_survivors(
-        self,
-        touched: list[dict],
-        schema_json: str | None,
-        dvs: dict[str, set] | None,
-        predicate: str,
+        self, touched: list[dict], snap: _Snapshot, predicate: str
     ) -> list[dict]:
-        """Rewrite ``touched`` minus the rows ``predicate`` proves TRUE,
-        recomputing ``_bucket`` from the keys (the recorded schema is
-        user-facing; same hash → same bucket as the original file).
+        """Rewrite ``touched`` (live files of ``snap``) minus the rows
+        ``predicate`` proves TRUE, recomputing ``_bucket`` from the keys
+        (the recorded schema is user-facing; same hash → same bucket as
+        the original file).
         The null-safe ``NOT ((pred) <=> TRUE)`` keeps condition-NULL
         rows (SQL semantics: unknown never deletes or replaces),
         matching the DV path, which only removes rows the predicate
         proved TRUE. No isEmpty() probe: staging an all-matched frame
         writes no part files (dynamic partitionBy) and returns [] — the
         probe cost one extra scan of the touched files per call."""
+        m = snap.meta
         return self._stage(self._with_bucket(
-            self._open_files(touched, schema_json, dvs)
-            .filter(f"NOT (({predicate}) <=> TRUE)")
-        ))
+            self._open_files(
+                touched, snap.schema_json, snap.dvs,
+                mapping=m.get("column_mapping") or {},
+            ).filter(f"NOT (({predicate}) <=> TRUE)"),
+            m,
+        ), m)
 
     def replace_where(
         self,
@@ -5238,23 +5182,16 @@ class TxTable:
         size. ``prune`` skips provably-unmatchable files at the log
         level before the find-scan, exactly the ``delete_where``
         convention."""
-        df = self._managed_entry(
-            self._with_generated(df, "replace_where"), "replace_where"
-        )
+        df = self._managed_entry(df, "replace_where", self.meta)
 
-        def stage_and_guard(
-            meta: dict, ctr: dict
-        ) -> tuple[list[dict], dict | None]:
+        def stage_and_guard(meta: dict) -> tuple[list[dict], dict | None]:
             # incoming rows are INSERTS for identity/row-tracking
             # purposes — the replaced slice's old rows leave with their
-            # ids (replaceWhere is delete+insert, Delta's position);
-            # staging under the SAME (meta, counters) each attempt
-            # validates against keeps the check and the staged bytes
-            # coherent (no spurious restage, no extra replay)
+            # ids (replaceWhere is delete+insert, Delta's position)
             filled, id_upd = self._fill_identity(
-                self._with_bucket(df), meta, ctr
+                self._with_bucket(df, meta), meta
             )
-            staged = self._stage(filled)
+            staged = self._stage(filled, meta)
             if not staged:
                 return staged, id_upd
             # The slice-ownership guard runs on the STAGED bytes, not
@@ -5268,7 +5205,8 @@ class TxTable:
                 [f for f in filled.schema.fields if f.name != "_bucket"]
             )
             staged_df = self._open_files(
-                staged, logical.json(), None
+                staged, logical.json(), None,
+                mapping=meta.get("column_mapping") or {},
             )
             outside = (
                 staged_df.filter(f"NOT (({predicate}) <=> TRUE)")
@@ -5284,44 +5222,34 @@ class TxTable:
                 )
             return staged, id_upd
 
-        m0 = self.meta
-        staged_n = m0["n_buckets"]
-        used_ctr = self._identity_counters(m0)
-        incoming, id_upd = stage_and_guard(m0, used_ctr)
+        staged_as, incoming, id_upd = None, None, None
 
-        def attempt():
-            nonlocal staged_n, used_ctr, incoming, id_upd
-            # constraints re-checked per attempt: an add_constraint
-            # landing between attempts must gate this write (append's
+        def attempt(snap: _Snapshot):
+            nonlocal staged_as, incoming, id_upd
+            base_v, m = snap.version, snap.meta
+            # the attempt's own rules gate the write: an add_constraint
+            # landing before its snapshot must apply (append's
             # convention)
-            self._check_constraints(df, "replace_where batch")
-            base_v, live_map, schema_json, dvs, *_ = _replay_log(
-                self.table_dir
+            self._check_constraints(
+                df, "replace_where batch", snap.constraints
             )
-            mnow = self.meta  # ONE replay per attempt (n_buckets + watermark)
-            if (
-                mnow["n_buckets"] != staged_n
-                or self._identity_counters(mnow) != used_ctr
-            ):
-                # a rebucket or a concurrent identity allocation won a
-                # race — restage (append's convention; old files become
-                # orphans). Checked AFTER the replay, the append-loop
-                # ordering argument: monotonic counters + the version
-                # claim make a stale-watermark commit impossible.
-                staged_n = mnow["n_buckets"]
-                used_ctr = self._identity_counters(mnow)
-                incoming, id_upd = stage_and_guard(mnow, used_ctr)
+            layout = (m["n_buckets"], self._identity_counters(m))
+            if staged_as != layout:
+                # stage when missing, or restage when a rebucket or a
+                # concurrent identity allocation won a race (append's
+                # convention; old files become orphans)
+                incoming, id_upd = stage_and_guard(m)
+                staged_as = layout
             _, _, touched, _ = self._find_matches(
-                "replace_where", predicate, prune, live_map, schema_json,
-                dvs,
+                "replace_where", predicate, prune, snap
             )
             added = list(incoming)
             if touched:
                 added = self._stage_survivors(
-                    touched, schema_json, dvs, predicate
+                    touched, snap, predicate
                 ) + added
             schema_rec = self._schema_union_json(
-                df, schema_json, False, "replace_where"
+                df, snap, False, "replace_where"
             )
             record = {
                 "version": base_v + 1,
@@ -5333,8 +5261,8 @@ class TxTable:
             }
             if id_upd:
                 record["meta_update"] = id_upd
-            if self.meta.get("cdf"):
-                record["cdf_files"] = self._stage_cdf(base_v + 1, record)
+            if snap.meta.get("cdf"):
+                record["cdf_files"] = self._stage_cdf(record, snap)
             return record, base_v + 1
 
         return self._transact(attempt, max_retries)
@@ -5421,13 +5349,11 @@ class TxTable:
                 )
             return df
 
-        def attempt():
-            base_v, live_map, schema_json, dvs, *_ = _replay_log(
-                self.table_dir
-            )
+        def attempt(snap: _Snapshot):
+            base_v, _, schema_json, dvs, m, *_ = snap
             matches, dv, touched, n_upd = self._find_matches(
-                "update_where", predicate, prune, live_map, schema_json,
-                dvs, max_dv_rows if mode == "merge_on_read" else None,
+                "update_where", predicate, prune, snap,
+                max_dv_rows if mode == "merge_on_read" else None,
             )
             if not n_upd:
                 return None, (base_v, 0)
@@ -5436,7 +5362,10 @@ class TxTable:
             # copy-on-write rewrites every row of the touched files
             src = (
                 matches.drop("_file", "_rowpos") if dv
-                else self._open_files(touched, schema_json, dvs)
+                else self._open_files(
+                    touched, schema_json, dvs,
+                    mapping=m.get("column_mapping") or {},
+                )
             )
             match = F.expr(predicate)
             # the predicate and the SET expressions both evaluate on
@@ -5459,19 +5388,21 @@ class TxTable:
                 match.alias("_matched"),
             )
             updated = with_regenerated(updated).drop("_matched")
-            self._check_constraints(updated, "update_where post-image")
+            self._check_constraints(
+                updated, "update_where post-image", snap.constraints
+            )
             record = {
                 "version": base_v + 1,
                 "op": "update",
-                "add": self._stage(self._with_bucket(updated)),
+                "add": self._stage(self._with_bucket(updated, m), m),
                 "remove": [e["path"] for e in touched],
                 **({"dv": dv} if dv else {}),
                 "schema_json": schema_json,
                 "predicate": predicate,
                 "assignments": assignments,
             }
-            if self.meta.get("cdf"):
-                record["cdf_files"] = self._stage_cdf(base_v + 1, record)
+            if snap.meta.get("cdf"):
+                record["cdf_files"] = self._stage_cdf(record, snap)
             return record, (base_v + 1, n_upd)
 
         return self._transact(attempt, max_retries)
@@ -5492,15 +5423,24 @@ class TxTable:
         (T6); the txn marker makes the replay a no-op, so the sink is
         exactly-once end-to-end even though delivery is at-least-once.
         """
+        return self._txn_sink(
+            app_id, lambda df, txn: self.merge_upsert(df, txn=txn)
+        )
+
+    def _txn_sink(self, app_id: str, write):
+        """The ONE idempotent ``foreachBatch`` body behind every
+        exactly-once sink: a batch at or below ``app_id``'s committed
+        high-water mark is a checkpoint-recovery replay and an empty
+        batch has nothing to commit — both return without a commit;
+        any other batch lands through ``write(batch_df, txn)``, whose
+        one commit carries the txn marker."""
 
         def apply(batch_df: DataFrame, batch_id: int) -> None:
             if batch_id <= self.last_committed_batch(app_id):
                 return  # replayed batch — already committed
             if batch_df.isEmpty():
                 return
-            self.merge_upsert(
-                batch_df, txn={"app_id": app_id, "batch_id": int(batch_id)}
-            )
+            write(batch_df, {"app_id": app_id, "batch_id": int(batch_id)})
 
         return apply
 
@@ -5508,17 +5448,9 @@ class TxTable:
         """``foreachBatch`` function: idempotent transactional APPEND —
         ``upsert_sink``'s keep-duplicates sibling for event-log tables.
         Replayed micro-batches are txn-marker no-ops."""
-
-        def apply(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_id <= self.last_committed_batch(app_id):
-                return  # replayed batch — already committed
-            if batch_df.isEmpty():
-                return
-            self.append(
-                batch_df, txn={"app_id": app_id, "batch_id": int(batch_id)}
-            )
-
-        return apply
+        return self._txn_sink(
+            app_id, lambda df, txn: self.append(df, txn=txn)
+        )
 
     def auto_ingest(
         self,
@@ -5549,7 +5481,9 @@ class TxTable:
         checkpoint) to own the loaded-file set."""
         if mode not in ("append", "merge"):
             raise ValueError("auto_ingest: mode must be append|merge")
-        _, _, schema_json = self._snapshot()
+        _, _, schema_json, _, meta, *_ = _replay_log(
+            self.table_dir, self.latest_version()
+        )
         if schema_json is None:
             raise ValueError(
                 "auto_ingest: the table has no recorded schema yet — "
@@ -5564,9 +5498,9 @@ class TxTable:
         # exactly as copy_into honors them
         skip = {
             n
-            for n, s in self._identity_specs().items()
+            for n, s in self._identity_specs(meta).items()
             if s.get("always", True)
-        } | set(self.meta.get("generated_cols") or ())
+        } | set(meta.get("generated_cols") or ())
         reader = self.spark.readStream.format(file_format).schema(
             StructType(
                 [
@@ -5604,20 +5538,9 @@ class TxTable:
         exactly-once: checkpoint-recovery replays are no-ops via the
         txn marker, and each micro-batch lands as ONE atomic
         :meth:`apply_cdc` commit with full late-CDC ordering."""
-
-        def apply(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_id <= self.last_committed_batch(app_id):
-                return  # replayed batch — already committed
-            if batch_df.isEmpty():
-                return
-            self.apply_cdc(
-                batch_df,
-                op_col=op_col,
-                delete_label=delete_label,
-                txn={"app_id": app_id, "batch_id": int(batch_id)},
-            )
-
-        return apply
+        return self._txn_sink(app_id, lambda df, txn: self.apply_cdc(
+            df, op_col=op_col, delete_label=delete_label, txn=txn
+        ))
 
     def merge_into_sink(self, app_id: str, **merge_kwargs):
         """``foreachBatch`` function: idempotent transactional
@@ -5626,19 +5549,10 @@ class TxTable:
         (``when_matched`` / ``update_set`` / conditions forwarded
         verbatim); checkpoint-recovery replays are no-ops via the txn
         marker, the ``upsert_sink`` exactly-once contract."""
-
-        def apply(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_id <= self.last_committed_batch(app_id):
-                return  # replayed batch — already committed
-            if batch_df.isEmpty():
-                return
-            self.merge_into(
-                batch_df,
-                txn={"app_id": app_id, "batch_id": int(batch_id)},
-                **merge_kwargs,
-            )
-
-        return apply
+        return self._txn_sink(
+            app_id,
+            lambda df, txn: self.merge_into(df, txn=txn, **merge_kwargs),
+        )
 
     # -- change data feed --------------------------------------------
 
@@ -5676,7 +5590,8 @@ class TxTable:
         commit keeps its commit-time name (it has no latest name).
         """
         rec = _read_record(self.table_dir, version)
-        latest_map = self.meta.get("column_mapping") or {}
+        latest = _replay_log(self.table_dir, self.latest_version())
+        latest_map = latest.meta.get("column_mapping") or {}
         if rec.get("cdf_files"):
             df = self.spark.read.parquet(
                 *[os.path.join(self.table_dir, p) for p in rec["cdf_files"]]
@@ -5686,7 +5601,9 @@ class TxTable:
             return _rename_columns(
                 df, [(ph, lg) for lg, ph in latest_map.items()]
             )
-        df = self._changes_for(version, rec)
+        df = self._changes_for(
+            version, rec, latest, _replay_log(self.table_dir, version - 1)
+        )
         # the derived feed carries the commit-time logical names —
         # translate commit-logical → physical → latest-logical. The
         # as-of meta replay is O(version); skip it when the latest
@@ -5711,14 +5628,21 @@ class TxTable:
                 pairs.append((c, tgt))
         return _rename_columns(df, pairs)
 
-    def _changes_for(self, version: int, rec: dict) -> DataFrame:
-        """Derive the commit's change rows from its record. Callable
+    def _changes_for(
+        self, version: int, rec: dict, snap: _Snapshot, pre: _Snapshot
+    ) -> DataFrame:
+        """Derive the commit's change rows from its record. ``snap``
+        supplies the table meta (key/order columns, column mapping) and
+        the schema of last resort; ``pre`` is the snapshot at
+        ``version - 1`` (the pre-image files and vectors). Callable
         BEFORE the commit lands (files are staged first), which is how
         ``cdf=True`` materializes the feed at write time with zero
         duplicated diff logic — ``version`` is then the version being
-        attempted and ``version - 1`` the current snapshot."""
-        m = self.meta
+        attempted and the attempt's snapshot is both ``snap`` and
+        ``pre``."""
+        m = snap.meta
         key_cols = m["key_cols"]
+        mapping = m.get("column_mapping") or {}
         # change types follow Delta's CDF contract: updates emit BOTH
         # an update_preimage and an update_postimage row — downstream
         # incremental aggregation needs the preimage to subtract.
@@ -5732,7 +5656,7 @@ class TxTable:
             # columns in pre-image files, so update_preimage rows carry
             # NULL where the old row had no value — the CDF contract
             return self._open_files(
-                paths, rec.get("schema_json"), dvs
+                paths, rec.get("schema_json"), dvs, mapping=mapping
             ).drop("_bucket")
 
         if rec.get("op") == "clone" and rec.get("add"):
@@ -5747,6 +5671,7 @@ class TxTable:
                     list(rec["add"]),
                     rec.get("schema_json"),
                     dv_full,
+                    mapping=mapping,
                 )
                 .drop("_bucket")
                 .withColumn("_change_type", F.lit("insert"))
@@ -5755,9 +5680,7 @@ class TxTable:
         if "dv" in rec:
             # merge-on-read delete: the commit's DV DELTA rows ARE the
             # change feed — read them by physical position (no diffing)
-            _, dv_live, _, pre_dvs, *_ = _replay_log(
-                self.table_dir, version - 1
-            )
+            dv_live, pre_dvs = pre.live, pre.dvs
             dv_rows = [
                 # DV commits key on the STORED entry path (absolute
                 # for adopted/cloned files); the scan's `_file` is the
@@ -5773,7 +5696,7 @@ class TxTable:
                 # values filled
                 [dv_live.get(p, p) for p in sorted(rec["dv"])],
                 rec.get("schema_json"), pre_dvs,
-                keep_meta=True,
+                keep_meta=True, mapping=mapping,
             )
             dvdf = self.spark.createDataFrame(
                 dv_rows, "_file string, _rowpos long"
@@ -5808,18 +5731,13 @@ class TxTable:
 
         # pre-images exclude rows already deleted by vectors BEFORE
         # this commit — they left the table in an earlier version
-        prev_live: dict = {}
-        pre_dvs = None
-        if rec.get("remove"):
-            _, prev_live, _, pre_dvs, *_ = _replay_log(
-                self.table_dir, version - 1
-            )
+        prev_live, pre_dvs = pre.live, pre.dvs
         post = read_files(list(rec["add"]))
         if rec["op"] == "fsck":
             # the removed files are GONE from storage — their rows are
             # unrecoverable, so the repair's feed is empty by contract
             # (emitting deletes would require reading the lost data)
-            schema_json = rec.get("schema_json") or self._snapshot()[2]
+            schema_json = rec.get("schema_json") or snap.schema_json
             empty = self.spark.createDataFrame(
                 [], StructType.fromJson(json.loads(schema_json))
             )
@@ -5839,8 +5757,8 @@ class TxTable:
             # create commits carry no schema: borrow the nearest one
             schema_json = (
                 rec.get("schema_json")
-                or self._snapshot(version)[2]
-                or self._snapshot()[2]
+                or pre.schema_json
+                or snap.schema_json
             )
             if schema_json is None:
                 raise ValueError(f"version {version} has no readable schema")

@@ -1558,19 +1558,19 @@ def _explain_skipping(
             )
         t = _target_table(spark, m.group("target"), tables)
         src = _source_frame(spark, m.group("source"), sources, tables)
-        _, live_map, _, dvs, *_ = _replay_log(t.table_dir)
+        _, live_map, _, dvs, meta, *_ = _replay_log(t.table_dir)
         live = list(live_map.values())
         full_scan = (
             _Scanner.find_kw(inner, "NOT MATCHED BY SOURCE") >= 0
         )
         hit = live if full_scan else t._merge_hit_files(
-            live, t._with_bucket(src), t.meta["key_cols"]
+            live, t._with_bucket(src, meta), meta
         )
         reports.append((
             m.group("target"), None, skip_counts(live, hit, dvs),
             {
                 "merge_find_phase": {
-                    "key_cols": list(t.meta["key_cols"]),
+                    "key_cols": list(meta["key_cols"]),
                     "by_source_full_scan": full_scan,
                 }
             },

@@ -1204,13 +1204,12 @@ class TxLogBatchWriter(DataSourceArrowWriter):
             )
             return
 
-        def attempt():
-            v, _, snap_schema = t._snapshot()
+        def attempt(snap):
             schema_rec = t._schema_union_json(
-                self.schema, snap_schema, self.merge_schema,
+                self.schema, snap, self.merge_schema,
                 "txlog datasource write",
             )
-            if entries and t.constraints() != self.constraints:
+            if entries and snap.constraints != self.constraints:
                 # a constraint landed between plan and commit: the
                 # task-side checks ran against a stale rule set —
                 # refuse rather than admit unchecked rows (rare race;
@@ -1223,7 +1222,7 @@ class TxLogBatchWriter(DataSourceArrowWriter):
                     "txlog datasource write: table constraints changed "
                     "during the write; staged files discarded — retry"
                 )
-            if entries and t.meta["n_buckets"] != self.n_buckets:
+            if entries and snap.meta["n_buckets"] != self.n_buckets:
                 # a rebucket() landed between plan and commit: the
                 # tasks bucketed rows under the OLD modulus, and
                 # committing mislabeled files would let rows escape
@@ -1237,7 +1236,7 @@ class TxLogBatchWriter(DataSourceArrowWriter):
                     "during the write; staged files discarded — retry"
                 )
             record = {
-                "version": v + 1,
+                "version": snap.version + 1,
                 "op": "append",
                 "add": entries,
                 "remove": [],

@@ -17,6 +17,7 @@ import pytest
 
 from kafka_flink_harshevents_spark.sources.txlog import (
     ConcurrentWriteError,
+    ConstraintViolation,
     TxTable,
     _atomic_commit,
     _list_versions,
@@ -1665,7 +1666,7 @@ def test_vacuum_spares_fresh_uncommitted_stage(spark, tmp_path):
         [("a", 1, 1)], "k string, v long, ver long"))
     # simulate a concurrent writer mid-commit: stage without committing
     staged = t._stage(t._with_bucket(spark.createDataFrame(
-        [("z", 9, 9)], "k string, v long, ver long")))
+        [("z", 9, 9)], "k string, v long, ver long"), t.meta), t.meta)
     assert staged
     fresh = os.path.join(t.table_dir, staged[0]["path"])
     deleted = t.vacuum(retain_versions=1)
@@ -1684,7 +1685,7 @@ def test_vacuum_spares_fresh_uncommitted_stage(spark, tmp_path):
     t2.merge_upsert(spark.createDataFrame(
         [("a", 1, 1)], "k string, v long, ver long"))
     orphan = t2._stage(t2._with_bucket(spark.createDataFrame(
-        [("q", 7, 7)], "k string, v long, ver long")))
+        [("q", 7, 7)], "k string, v long, ver long"), t2.meta), t2.meta)
     gone = t2.vacuum(retain_versions=1, grace_seconds=0)
     assert orphan[0]["path"] in gone
 
@@ -2111,8 +2112,10 @@ def test_cdf_materialization_matches_derived(spark, tmp_path):
     for v in versions:
         rec = _read_record(t.table_dir, v)
         assert rec.get("cdf_files"), f"version {v} did not materialize"
-        derived = t._changes_for(v, {k: x for k, x in rec.items()
-                                     if k != "cdf_files"})
+        derived = t._changes_for(
+            v, {k: x for k, x in rec.items() if k != "cdf_files"},
+            _replay_log(t.table_dir), _replay_log(t.table_dir, v - 1),
+        )
         assert multiset(t.table_changes(v)) == multiset(derived), v
     # appends and compactions never materialize
     va = t.append(spark.createDataFrame(
@@ -4990,6 +4993,82 @@ def test_one_log_replay():
     assert set(handles) == {"TxLogBatchWriter"}
 
 
+def test_one_snapshot_per_attempt():
+    """Every commit attempt reads ONE snapshot — the one ``_transact``
+    folds and passes in. No nested ``attempt`` body and none of the
+    staging/validation helpers an attempt calls re-fold the log: none
+    calls ``_replay_log(``, reads ``self.meta`` / ``t.meta``, or calls
+    ``.constraints()``, ``._snapshot(`` or ``.latest_version(``; they
+    take meta, constraints, live files, vectors and schema from the
+    snapshot their caller hands them. ``_fill_identity`` takes no
+    separate watermark: it allocates from its meta's counters."""
+    import ast
+
+    import kafka_flink_harshevents_spark.sources.txlog as txmod
+
+    helpers = {
+        "_with_bucket", "_stage", "_stage_cdf", "_changes_for",
+        "_schema_union_json", "_check_constraints", "_merge_hit_files",
+        "_find_matches", "_scope_entries", "_fill_identity",
+    }
+    refolds = {"constraints", "_snapshot", "latest_version"}
+    attempts, checked, bad = [], set(), []
+
+    def scan(fn, where):
+        for n in ast.walk(fn):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Name)
+                and n.func.id == "_replay_log"
+            ):
+                bad.append((where, "_replay_log"))
+            elif (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in refolds
+            ):
+                bad.append((where, n.func.attr))
+            elif (
+                isinstance(n, ast.Attribute)
+                and n.attr == "meta"
+                and isinstance(n.value, ast.Name)
+                and n.value.id in ("self", "t")
+            ):
+                bad.append((where, f"{n.value.id}.meta"))
+
+    def visit(node, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.FunctionDef):
+                if owner is not None and child.name == "attempt":
+                    attempts.append(owner)
+                    scan(child, f"{owner}.attempt")
+                elif owner is None and child.name in helpers:
+                    checked.add(child.name)
+                    scan(child, child.name)
+                    if child.name == "_fill_identity":
+                        assert "counters" not in [
+                            a.arg for a in child.args.args
+                        ]
+                visit(child, child.name if owner is None else owner)
+            else:
+                visit(child, owner)
+
+    src_dir = os.path.dirname(txmod.__file__)
+    for name in sorted(os.listdir(src_dir)):
+        if name.endswith(".py"):
+            with open(os.path.join(src_dir, name)) as f:
+                visit(ast.parse(f.read()), None)
+    assert checked == helpers
+    assert sorted(attempts) == sorted([
+        "_commit_constraints", "_keyed_merge", "_meta_commit",
+        "add_columns", "append", "commit", "compact", "delete_where",
+        "drop_columns", "fsck", "merge_into", "optimize_zorder",
+        "rebucket", "rename_column", "replace_where", "restore",
+        "update_where",
+    ])
+    assert bad == []
+
+
 def test_one_file_skip_test():
     """The file-skip stack is spelled once: the range, IN, partition
     and bloom tests are called only inside ``sources/txskip.py``, and
@@ -6374,7 +6453,7 @@ def test_identity_append_allocates_and_refuses(spark, tmp_path):
     got = {r["k"]: r["rid"] for r in t.read().collect()}
     # unique, on the (start, step) lattice, exactly 7 allocations
     assert sorted(got.values()) == [100 + 3 * i for i in range(7)]
-    assert t._identity_counters() == {"rid": 7}
+    assert t._identity_counters(t.meta) == {"rid": 7}
     # GENERATED ALWAYS: a frame carrying the column is refused
     with pytest.raises(ValueError, match="GENERATED ALWAYS AS IDENTITY"):
         t.append(df.withColumn("rid", df.v))
@@ -6399,7 +6478,7 @@ def test_identity_by_default_fills_only_nulls(spark, tmp_path):
     got = {r["k"]: r["rid"] for r in t.read().collect()}
     assert got[1] == 555                      # explicit value kept
     assert sorted([got[2], got[3]]) == [1, 2]  # NULLs filled from watermark
-    assert t._identity_counters() == {"rid": 2}
+    assert t._identity_counters(t.meta) == {"rid": 2}
 
 
 def test_identity_merge_upsert_inherits_existing_key(spark, tmp_path):
@@ -6484,7 +6563,7 @@ def test_identity_concurrent_appends_never_collide(spark, tmp_path):
     vals = [r["rid"] for r in t.read().collect()]
     assert len(vals) == 45 and len(set(vals)) == 45
     # watermark covers every issued id (gaps allowed, reuse never)
-    assert max(vals) <= 1 + (t._identity_counters()["rid"] - 1)
+    assert max(vals) <= 1 + (t._identity_counters(t.meta)["rid"] - 1)
 
 
 def test_row_tracking_preserved_across_rewrites(spark, tmp_path):
@@ -6562,7 +6641,7 @@ def test_row_tracking_restore_never_reverts_watermark(spark, tmp_path):
     t.append(spark.createDataFrame([(3, 3, 1)], "k long, v long, ver long"))
     got = {r["k"]: r["_row_id"] for r in t.read().collect()}
     assert got == {1: 0, 3: 2}
-    assert t._identity_counters()["_row_id"] == 3
+    assert t._identity_counters(t.meta)["_row_id"] == 3
 
 
 def test_identity_guards(spark, tmp_path):
@@ -6756,7 +6835,7 @@ def test_identity_never_reuses_ids_under_concurrency(
             assert got == r["k"], (
                 f"id {r['_row_id']} reused: key {got} then {r['k']}"
             )
-    assert max(owner) < t._identity_counters()["_row_id"]
+    assert max(owner) < t._identity_counters(t.meta)["_row_id"]
 
 
 def test_identity_merge_into_insert_only_fast_path(spark, tmp_path):
@@ -6875,7 +6954,7 @@ def test_identity_nondeterministic_frame_allocates_exactly(spark, tmp_path):
     rids = [r["rid"] for r in rows]
     assert all(r is not None for r in rids)
     assert len(set(rids)) == len(rids)
-    assert t._identity_counters()["rid"] == len(rows)
+    assert t._identity_counters(t.meta)["rid"] == len(rows)
     assert sorted(rids) == list(range(1, len(rows) + 1))
 
 
@@ -6986,9 +7065,9 @@ def test_row_tracking_upsert_sink_ids_stable_across_replay(spark, tmp_path):
     sink(b1, 1)
     ids1 = {r["k"]: r["_row_id"] for r in t.read().collect()}
     assert ids1[2] == ids0[2] and ids1[3] == 2
-    wm = t._identity_counters()["_row_id"]
+    wm = t._identity_counters(t.meta)["_row_id"]
     sink(b1, 1)  # replay — must be a complete no-op
-    assert t._identity_counters()["_row_id"] == wm
+    assert t._identity_counters(t.meta)["_row_id"] == wm
     assert {r["k"]: r["_row_id"] for r in t.read().collect()} == ids1
 
 
@@ -7643,7 +7722,7 @@ def test_copy_into_races_identity_appends(spark, tmp_path):
     assert len(rows) == 23  # 20 copied + 3 appended
     ids = [r["_row_id"] for r in rows]
     assert len(set(ids)) == 23
-    assert max(ids) < t._identity_counters()["_row_id"]
+    assert max(ids) < t._identity_counters(t.meta)["_row_id"]
 
 
 def test_identity_inherit_follows_latest_existing_duplicate(
@@ -8469,3 +8548,192 @@ def test_stage_blooms_driver_path_matches_distributed(spark, tmp_path):
     finally:
         tx._BLOOM_DRIVER_MAX_BYTES = old
     assert driver == dist
+
+
+# -- one snapshot per commit attempt -----------------------------------
+
+_SWEEP_SCHEMA = "k long, v long, ver long"
+
+
+def _sweep_writes(spark):
+    """name → write(t), each touching key 3 (existing) and/or key 50
+    (new) with v = 333."""
+    def rows(*ks, op=None):
+        extra = "" if op is None else ", op string"
+        return spark.createDataFrame(
+            [(k, 333, 9) + (() if op is None else (op,)) for k in ks],
+            _SWEEP_SCHEMA + extra,
+        )
+
+    return {
+        "merge_upsert": lambda t: t.merge_upsert(rows(3, 50)),
+        "apply_cdc": lambda t: t.apply_cdc(rows(3, 50, op="U")),
+        "merge_into": lambda t: t.merge_into(rows(3, 50)),
+        "append": lambda t: t.append(rows(50)),
+        "update_where": lambda t: t.update_where("k = 3", {"v": "333"}),
+        "replace_where": lambda t: t.replace_where(rows(3), "k = 3"),
+    }
+
+
+def _interleaving_sweep(spark, tmp_path, monkeypatch, write, other):
+    """Run ``write`` on copies of one 20-row, 2-bucket table, once
+    uncontended to count the ``_replay_log`` calls it makes, then for
+    every k up to that count with ``other(table_dir)`` run by another
+    handle just before the write's k-th call. Yields each k's table."""
+    import shutil
+
+    import kafka_flink_harshevents_spark.sources.txlog as txmod
+
+    base = TxTable.create(
+        spark, str(tmp_path / "base"), key_cols=("k",), order_col="ver",
+        n_buckets=2,
+    )
+    base.append(spark.createDataFrame(
+        [(k, k, 1) for k in range(20)], _SWEEP_SCHEMA
+    ))
+    real = txmod._replay_log
+
+    def run(k, dst):
+        shutil.copytree(base.table_dir, dst)
+        state = {"n": 0, "busy": False}
+
+        def wrapped(*a, **kw):
+            if not state["busy"]:
+                state["n"] += 1
+                if state["n"] == k:
+                    state["busy"] = True
+                    try:
+                        other(dst)
+                    finally:
+                        state["busy"] = False
+            return real(*a, **kw)
+
+        with monkeypatch.context() as mp:
+            mp.setattr(txmod, "_replay_log", wrapped)
+            try:
+                write(TxTable(spark, dst))
+            except ConstraintViolation:
+                pass  # the rule the write ran into is the gate working
+        return state["n"]
+
+    n_calls = run(0, str(tmp_path / "k0"))
+    assert n_calls >= 1
+    for k in range(1, n_calls + 1):
+        dst = str(tmp_path / f"k{k}")
+        run(k, dst)
+        yield k, TxTable(spark, dst)
+
+
+@pytest.mark.parametrize("op", ["merge_upsert", "apply_cdc", "merge_into"])
+def test_rebucket_interleaving_sweep(spark, tmp_path, monkeypatch, op):
+    """A keyed merge against a ``rebucket(8)`` landing before any of its
+    log reads still commits against ONE snapshot: every live file's
+    rows carry (and the add-entry records) ``pmod(xxhash64(k), n)``
+    under the table's current modulus, and every key has exactly one
+    row — no merge file labelled under the old modulus, no key left
+    duplicated by a merge that read meta and files at two versions."""
+    from pyspark.sql import functions as F
+
+    write = _sweep_writes(spark)[op]
+    for k, t in _interleaving_sweep(
+        spark, tmp_path, monkeypatch, write,
+        lambda d: TxTable(spark, d).rebucket(8),
+    ):
+        snap = _replay_log(t.table_dir)
+        n = snap.meta["n_buckets"]
+        assert n == 8, k
+        label = {
+            os.path.basename(p): e["bucket"] for p, e in snap.live.items()
+        }
+        rows = spark.read.option("recursiveFileLookup", "true").parquet(
+            *[os.path.join(t.table_dir, p) for p in snap.live]
+        ).select(
+            "k", "_bucket",
+            F.element_at(F.split("_metadata.file_path", "/"), -1)
+            .alias("file"),
+            F.pmod(F.xxhash64("k"), F.lit(n)).alias("want"),
+        ).collect()
+        for r in rows:
+            assert r["_bucket"] == r["want"] == label[r["file"]], (k, r)
+        keys = [r["k"] for r in t.read().collect()]
+        assert sorted(keys) == sorted(set(range(20)) | {50}), k
+
+
+@pytest.mark.parametrize("op", [
+    "merge_upsert", "apply_cdc", "append", "merge_into", "update_where",
+    "replace_where",
+])
+def test_constraint_interleaving_sweep(spark, tmp_path, monkeypatch, op):
+    """A write racing ``add_constraint("small", "v < 100")`` — landing
+    before any of its log reads — never leaves the table holding a row
+    that fails a constraint it carries: either the write is checked
+    against the rule (ConstraintViolation) or the rule is refused
+    because the write landed first."""
+    write = _sweep_writes(spark)[op]
+
+    def add_rule(d):
+        try:
+            TxTable(spark, d).add_constraint("small", "v < 100")
+        except ConstraintViolation:
+            pass  # the write committed first: existing rows violate
+
+    for k, t in _interleaving_sweep(
+        spark, tmp_path, monkeypatch, write, add_rule
+    ):
+        df = t.read()
+        for name, expr in t.constraints().items():
+            assert df.filter(f"NOT (({expr}) <=> TRUE)").count() == 0, (
+                k, name
+            )
+
+
+def test_one_fold_per_attempt(spark, tmp_path, monkeypatch):
+    """An uncontended write on a warm handle folds the log at most
+    twice — one intake read before the retry loop and the one snapshot
+    of its attempt — on a table with cdf, an identity column, a
+    constraint, 4 buckets and a checkpoint, at a version off the
+    checkpoint cadence."""
+    import kafka_flink_harshevents_spark.sources.txlog as txmod
+
+    t = TxTable.create(
+        spark, str(tmp_path / "t"), key_cols=("k",), order_col="ver",
+        n_buckets=4, cdf=True, checkpoint_interval=10,
+        identity_cols={"rid": {"start": 1, "step": 1}},
+    )
+    t.add_constraint("v_pos", "v >= 0")
+    pad = TxTable(spark, t.table_dir)
+    while t.latest_version() < 20:
+        pad.set_properties({"owner": f"o{t.latest_version()}"})
+    write = _sweep_writes(spark)
+    t.append(spark.createDataFrame(
+        [(k, k, 1) for k in range(10)], _SWEEP_SCHEMA
+    ))  # v21, and the handle's per-handle caches are warm
+    assert t.latest_version() == 21
+    assert txmod._latest_checkpoint(t.table_dir, 21)["version"] == 20
+    real = txmod._replay_log
+    calls = []
+
+    def counting(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(txmod, "_replay_log", counting)
+    writes = [
+        ("append", write["append"]),
+        ("merge_upsert", write["merge_upsert"]),
+        ("apply_cdc", write["apply_cdc"]),
+        ("merge_into", lambda t: t.merge_into(spark.createDataFrame(
+            [(4, 9, 4), (300, 1, 1)], _SWEEP_SCHEMA
+        ))),
+        ("delete_where", lambda t: t.delete_where("k = 5")),
+        ("update_where", lambda t: t.update_where("k = 6", {"v": "7"})),
+        ("replace_where", lambda t: t.replace_where(
+            spark.createDataFrame([(7, 70, 9)], _SWEEP_SCHEMA), "k = 7"
+        )),
+    ]
+    for name, fn in writes:
+        calls.clear()
+        v0 = real(t.table_dir).version
+        fn(t)
+        assert real(t.table_dir).version == v0 + 1, name
+        assert len(calls) <= 2, (name, len(calls))
