@@ -103,12 +103,6 @@ def create_fingerprint_table(
     )
 
 
-def _already(table: TxTable, txn: dict | None) -> bool:
-    return bool(txn) and int(txn["batch_id"]) <= table.last_committed_batch(
-        txn["app_id"]
-    )
-
-
 def _shingle_arr(text_col: str):
     """Distinct word-bigram shingle array for one text column — the
     batch ``_shingles`` shingling as an array expression, so the
@@ -184,7 +178,13 @@ def corpus_ingest(
     spark = corpus.spark
     if isinstance(new_docs, str):
         new_docs = spark.read.parquet(new_docs)
-    if _already(corpus, txn) and _already(fingerprints, txn):
+    if txn and all(
+        # read-only fast path: both commits already landed, so skip the
+        # fingerprint work — whether each table still commits is
+        # decided inside its own commit (TxTable._transact)
+        int(txn["batch_id"]) <= t.last_committed_batch(txn["app_id"])
+        for t in (corpus, fingerprints)
+    ):
         return {
             "docs_in": 0, "exact_dups": 0, "span_dups": 0,
             "near_dups": 0, "near_dups_verified": 0,
@@ -359,15 +359,13 @@ def corpus_ingest(
     accepted = verdict.filter(F.col("_keep") == 1).drop(
         "_exact", "_span", "_near", "_nearv", "_lowq", "_keep"
     )
-    if _already(corpus, txn):
-        corpus_v = corpus.latest_version()
-    elif int(c["keep"] or 0) > 0:
+    # with a txn, a table that already holds this batch (the crash-
+    # between-commits replay) commits nothing and returns its version
+    if int(c["keep"] or 0) > 0:
         corpus_v = corpus.append(accepted, txn=txn)
     else:
         corpus_v = corpus.latest_version()
-    if _already(fingerprints, txn):
-        fp_v = fingerprints.latest_version()
-    elif int(c["keep"] or 0) > 0:
+    if int(c["keep"] or 0) > 0:
         sel = ["kind", "fp"] + (
             [F.col("doc_id").alias("doc")] if attributed else []
         )

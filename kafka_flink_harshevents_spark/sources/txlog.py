@@ -42,8 +42,9 @@ staged directory and/or tmp file — never a torn commit. Readers ignore
 both (they only follow the log); ``vacuum`` reclaims them.
 
 Exactly-once streaming: commit records carry an optional
-``txn: {app_id, batch_id}`` marker. ``upsert_sink`` checks the latest
-committed batch_id for its app_id before writing — a replayed
+``txn: {app_id, batch_id}`` marker. The commit itself checks the
+batch against the latest batch_id committed for its app_id in the
+snapshot it claims its version on (``TxTable._transact``) — a replayed
 micro-batch (checkpoint recovery, T5/T6 in SURVEY §2.10) becomes a
 no-op instead of a duplicate MERGE, upgrading the sink from
 at-least-once to exactly-once without a broker-side transaction.
@@ -645,6 +646,22 @@ def _atomic_commit(table_dir: str, version: int, record: dict) -> None:
         os.unlink(tmp)
 
 
+def _fresh_v2(table_dir: str, op: str, record: dict):
+    """The ``_transact`` attempt of a bootstrap commit (``clone_to`` /
+    ``convert_from_parquet``): ``record`` lands as v2 of the table the
+    caller just created, and any other commit landing there first makes
+    the directory not fresh — refused, never retried over."""
+
+    def attempt(snap: _Snapshot):
+        if snap.version != 1:
+            raise ValueError(
+                f"{op}: {table_dir} is not a fresh table directory"
+            )
+        return record, None
+
+    return attempt
+
+
 class TxTable:
     """A keyed, hash-bucketed table with atomic MERGE and time travel.
 
@@ -1141,9 +1158,7 @@ class TxTable:
             if dry_run or not missing:
                 return None, missing
             return {
-                "version": snap.version + 1,
                 "op": "fsck",
-                "add": [],
                 "remove": missing,
                 "note": f"fsck dropped {len(missing)} missing",
             }, missing
@@ -1196,10 +1211,7 @@ class TxTable:
         next version; returns that version."""
 
         def attempt(snap: _Snapshot):
-            v = snap.version + 1
-            return {
-                "version": v, "op": op, "add": [], "remove": [], **fields
-            }, v
+            return {"op": op, **fields}, snap.version + 1
 
         return self._transact(attempt, max_retries)
 
@@ -1217,12 +1229,10 @@ class TxTable:
                 f"set_properties: {sorted(bad)} are structural — use "
                 "the dedicated DDL (rebucket/add_constraint/...)"
             )
-        v = self._meta_commit(
+        return self._meta_commit(
             "set_properties", max_retries,
             meta_update=dict(props), note=f"set {sorted(props)}",
         )
-        self._auto_compact_cfg = None
-        return v
 
     def unset_properties(self, names, max_retries: int = 5) -> int:
         """``ALTER TABLE ... UNSET TBLPROPERTIES`` — removes free
@@ -1234,103 +1244,113 @@ class TxTable:
             raise ValueError(
                 f"unset_properties: {sorted(bad)} are structural"
             )
-        v = self._meta_commit(
+        return self._meta_commit(
             "unset_properties", max_retries,
             meta_unset=names, note=f"unset {sorted(names)}",
         )
-        self._auto_compact_cfg = None
-        return v
 
-    def _after_data_commit(self, version: int) -> int:
+    def _after_data_commit(self, snap: _Snapshot, record: dict) -> None:
         """Post-commit hook on the high-frequency write paths (append
         / merge_upsert / merge_into): Delta autoCompact. When the
-        table property ``auto_compact_files`` is set and some
-        bucket's live file count has reached it, run a size-aware
-        partial compaction (``compact(target_bytes=...)`` — rewrite
-        cost ∝ fragmented bytes only) as a separate, best-effort
-        follow-up commit. The DATA commit's success is already
-        durable; losing the compaction race to a concurrent writer
-        just defers the cleanup to the next write. The config is
-        CACHED PER HANDLE (a meta replay per data commit would tax
-        every write ~7% on commit-dense programs);
-        set/unset_properties on this handle invalidate it, another
-        handle's change is seen by handles opened after it — the
-        advisory-cleanup contract tolerates that staleness. Without
-        the property (the default) the hook is one cached-attribute
-        check and nothing else — the small-file problem stays an
-        explicit OPTIMIZE call, exactly as before."""
-        cfg = getattr(self, "_auto_compact_cfg", None)
-        if cfg is None:
-            m = self.meta
-            cfg = (
-                int(m.get("auto_compact_files") or 0),
-                int(
-                    m.get("auto_compact_target_bytes") or (128 << 20)
-                ),
-            )
-            self._auto_compact_cfg = cfg
-        n, tb = cfg
-        if n:
+        property ``auto_compact_files`` is set and some bucket's live
+        file count has reached it, run a size-aware partial compaction
+        (``compact(target_bytes=...)`` — rewrite cost ∝ fragmented
+        bytes only) as a separate, best-effort follow-up commit. The
+        DATA commit's success is already durable; losing the compaction
+        race to a concurrent writer just defers the cleanup to the next
+        write. Properties come from ``snap`` (the snapshot the commit
+        was built on) and the live set is ``snap.live`` minus
+        ``remove`` plus ``add`` — no second fold. Without the property
+        (the default) the hook is one dict lookup."""
+        n = int(snap.meta.get("auto_compact_files") or 0)
+        if not n:
+            return
+        tb = int(snap.meta.get("auto_compact_target_bytes") or (128 << 20))
+        removed = set(record["remove"])
+        live = [
+            e for p, e in snap.live.items() if p not in removed
+        ] + list(record["add"])
+        # count only files SMALLER than the target (the ones compaction
+        # would touch) — a bucket of already-compact files must not
+        # re-trigger no-op attempts on every subsequent write
+        counts: dict = {}
+        for e in live:
+            if not e.get("bytes") or int(e["bytes"]) < tb:
+                counts[e["bucket"]] = counts.get(e["bucket"], 0) + 1
+        if counts and max(counts.values()) >= n:
             try:
-                live_map = _replay_log(self.table_dir).live
-                # count only files SMALLER than the target (the ones
-                # compaction would touch) — a bucket of already-
-                # compact files must not re-trigger no-op attempts on
-                # every subsequent write
-                counts: dict = {}
-                for e in live_map.values():
-                    if not e.get("bytes") or int(e["bytes"]) < tb:
-                        counts[e["bucket"]] = (
-                            counts.get(e["bucket"], 0) + 1
-                        )
-                if counts and max(counts.values()) >= int(n):
-                    self.compact(target_bytes=tb)
+                self.compact(target_bytes=tb)
             except ConcurrentWriteError:
                 pass  # advisory: next write retries the cleanup
-        return version
 
-    def _transact(self, attempt, max_retries: int = 5):
-        """The ONE post-create commit path, and the one optimistic
-        retry loop. Each attempt folds the log ONCE —
-        ``snap = _replay_log(table_dir)`` — and calls ``attempt(snap)``,
-        which returns ``(record, result)``: ``record`` is the commit for
-        version ``snap.version + 1``, or None to return ``result`` with
-        no commit (nothing to do). The attempt body and every helper it
-        calls take meta, constraints, live files, deletion vectors and
-        schema from that one snapshot, never from a second fold — so
-        everything the record is built from is as of ``snap.version``,
-        and any commit landing after the fold claims the version first
-        and fails this attempt into a retry.
+    def _transact(
+        self,
+        attempt,
+        max_retries: int = 5,
+        txn: dict | None = None,
+        auto_compact: bool = False,
+    ):
+        """The ONE post-create commit path, the one optimistic retry
+        loop, and the one place a commit record is finished. Each
+        attempt folds the log ONCE — ``snap = _replay_log(table_dir)`` —
+        and calls ``attempt(snap)``, which returns ``(record, result)``:
+        ``record`` is the commit's op and payload, or None to return
+        ``result`` with no commit (nothing to do). The attempt body and
+        every helper it calls take meta, constraints, live files,
+        deletion vectors and schema from that one snapshot, never from a
+        second fold — so any commit landing after the fold claims the
+        version first and fails this attempt into a retry.
 
-        A built record passes the write-protocol check against
+        The envelope is decided here, against ``snap``: ``version`` is
+        ``snap.version + 1`` and ``add``/``remove`` default to ``[]``;
+        with ``txn = {"app_id", "batch_id"}`` a batch at or below
+        ``snap``'s mark for ``app_id`` already landed, so ``snap.version``
+        returns WITHOUT calling ``attempt`` — otherwise the record
+        carries ``txn``, and a concurrent commit of the same batch wins
+        the version race and the retry sees its mark; on a ``cdf=True``
+        table a record that rewrites rows (``txstream._rewrites_rows``)
+        gets its change files staged (``_stage_cdf``).
+
+        The record passes the write-protocol check against
         ``snap.meta``, then publishes with the atomic log link; losing
         the version race (:class:`ConcurrentWriteError`) re-folds and
         calls ``attempt`` again against the winner's snapshot — any
         files a lost attempt staged stay orphaned until vacuum — and
         after ``max_retries`` lost races the last ConcurrentWriteError
         is re-raised unchanged. Every other exception (validation,
-        constraint, protocol) propagates at once. Post-commit hooks
-        (``_after_data_commit``, per-handle cache resets) stay with
-        the callers.
+        constraint, protocol) propagates at once.
 
         A won commit then runs the auto-checkpoint cadence
-        (``checkpoint_interval`` from the winning snapshot's meta). A
-        failed checkpoint never fails the committed write — the
-        checkpoint is DERIVED data (a pure function of the version);
-        losing one costs replay time until the next interval commit
-        retries, nothing else.
-
-        The only other ``_atomic_commit`` callers are the bootstrap
-        commits that cannot conflict: :meth:`create` (v1) and
-        :meth:`clone_to` / :meth:`convert_from_parquet` (v2 of a table
-        they just created)."""
+        (``checkpoint_interval`` from the winning snapshot's meta; a
+        failed checkpoint never fails the committed write — it is
+        DERIVED data, and losing one costs replay time until the next
+        interval commit) and, with ``auto_compact``, the advisory hook
+        ``_after_data_commit(snap, record)``. The only other
+        ``_atomic_commit`` caller is :meth:`create` (v1)."""
         if max_retries < 1:
             raise ValueError("max_retries must be >= 1")
         for _ in range(max_retries):
             snap = _replay_log(self.table_dir, self.latest_version())
+            if txn and int(txn["batch_id"]) <= snap.txns.get(
+                txn["app_id"], -1
+            ):
+                return snap.version  # replayed batch — already landed
             record, result = attempt(snap)
             if record is None:
                 return result
+            record = {
+                "version": snap.version + 1, "add": [], "remove": [],
+                **record,
+            }
+            if txn:
+                record["txn"] = txn
+            if snap.meta.get("cdf"):
+                from kafka_flink_harshevents_spark.sources.txstream import (
+                    _rewrites_rows,
+                )
+
+                if _rewrites_rows(record):
+                    record["cdf_files"] = self._stage_cdf(record, snap)
             self._check_protocol("write", snap.meta)
             try:
                 _atomic_commit(self.table_dir, record["version"], record)
@@ -1343,6 +1363,8 @@ class TxTable:
                     self.checkpoint()
                 except (OSError, ValueError):
                     pass
+            if auto_compact:
+                self._after_data_commit(snap, record)
             return result
         raise last
 
@@ -1530,10 +1552,6 @@ class TxTable:
             # and the cloned entries' `part` values keep pruning exact
             partition_by=tuple(m.get("partition_by") or ()),
         )
-        if _list_versions(dest_dir) != [1]:
-            raise ValueError(
-                f"clone_to: {dest_dir} is not a fresh table directory"
-            )
         entries = []
         for e in live_map.values():
             e2 = dict(e)
@@ -1542,10 +1560,8 @@ class TxTable:
             )
             entries.append(e2)
         record = {
-            "version": 2,
             "op": "clone",
             "add": entries,
-            "remove": [],
             "schema_json": schema_json,
             "note": f"shallow clone of {self.table_dir}@{src_v}",
         }
@@ -1572,7 +1588,7 @@ class TxTable:
             inherit_meta["column_mapping"] = dict(m["column_mapping"])
         if inherit_meta:
             record["meta_update"] = inherit_meta
-        _atomic_commit(dest_dir, 2, record)
+        dest._transact(_fresh_v2(dest_dir, "clone_to", record))
         return dest
 
     @classmethod
@@ -1789,19 +1805,13 @@ class TxTable:
                     if v is not None and c not in cols:
                         cols[c] = [v, v, 0]
             entries.append(e)
-        _atomic_commit(
-            table_dir,
-            2,
-            {
-                "version": 2,
-                "op": "convert",
-                "add": entries,
-                "remove": [],
-                "schema_json": schema.json(),
-                "note": f"convert {len(entries)} parquet files from "
-                        f"{source_dir}",
-            },
-        )
+        t._transact(_fresh_v2(table_dir, "convert_from_parquet", {
+            "op": "convert",
+            "add": entries,
+            "schema_json": schema.json(),
+            "note": f"convert {len(entries)} parquet files from "
+                    f"{source_dir}",
+        }))
         return t
 
     def restore(self, version: int, max_retries: int = 5) -> int:
@@ -1891,7 +1901,6 @@ class TxTable:
             cur_paths = {e["path"] for e in cur_live}
             old_paths = {e["path"] for e in old_live}
             record = {
-                "version": base_v + 1,
                 "op": "restore",
                 "add": [e for e in old_live if e["path"] not in cur_paths],
                 "remove": sorted(cur_paths - old_paths),
@@ -1950,7 +1959,6 @@ class TxTable:
                         "widening history must be restored on non-CDF "
                         "tables"
                     )
-                record["cdf_files"] = self._stage_cdf(record, snap)
             return record, base_v + 1
 
         return self._transact(attempt, max_retries)
@@ -2087,10 +2095,7 @@ class TxTable:
                 # entry stays — names are retired permanently anyway
                 meta_update["identity_cols"] = surviving_ident
             record = {
-                "version": v + 1,
                 "op": "drop_columns",
-                "add": [],
-                "remove": [],
                 "schema_json": narrowed.json(),
                 "meta_update": meta_update,
                 "note": f"drop columns {sorted(cols)}",
@@ -2168,10 +2173,7 @@ class TxTable:
                         "columns with one parquet name"
                     )
             record = {
-                "version": v + 1,
                 "op": "add_columns",
-                "add": [],
-                "remove": [],
                 "schema_json": StructType(
                     list(logical.fields) + list(added.fields)
                 ).json(),
@@ -2263,10 +2265,7 @@ class TxTable:
                 ]
             )
             record = {
-                "version": v + 1,
                 "op": "rename_column",
-                "add": [],
-                "remove": [],
                 "schema_json": renamed.json(),
                 "meta_update": {"column_mapping": mapping},
                 "note": f"rename column {old} -> {new}",
@@ -2822,13 +2821,7 @@ class TxTable:
         def attempt(snap: _Snapshot):
             v, cur = snap.version, dict(snap.constraints)
             edit(cur, v)
-            return {
-                "version": v + 1,
-                "op": "set_constraints",
-                "add": [],
-                "remove": [],
-                "constraints": cur,
-            }, v + 1
+            return {"op": "set_constraints", "constraints": cur}, v + 1
 
         return self._transact(attempt)
 
@@ -3395,10 +3388,10 @@ class TxTable:
         against typo'd column names silently forking the schema).
         """
         df = self._managed_entry(df, "merge_upsert", self.meta)
-        return self._after_data_commit(self._keyed_merge(
+        return self._keyed_merge(
             df.withColumn("_del", F.lit(False)), self._merge_hit_files,
             "merge_upsert", txn, max_retries, merge_schema,
-        ))
+        )
 
     def _keyed_merge(
         self,
@@ -3534,7 +3527,6 @@ class TxTable:
             latest, id_upd = self._fill_identity(latest, m)
             added = self._stage(latest, m, pre_bucketed=True)
             record = {
-                "version": base_v + 1,
                 "op": "merge",
                 "add": added,
                 "remove": [e["path"] for e in hit],
@@ -3542,13 +3534,11 @@ class TxTable:
             }
             if id_upd:
                 record["meta_update"] = id_upd
-            if txn:
-                record["txn"] = txn
-            if m.get("cdf"):
-                record["cdf_files"] = self._stage_cdf(record, snap)
             return record, base_v + 1
 
-        return self._transact(attempt, max_retries)
+        return self._transact(
+            attempt, max_retries, txn, auto_compact=op == "merge_upsert"
+        )
 
     def merge_into(
         self,
@@ -4061,7 +4051,6 @@ class TxTable:
             outb, id_upd = self._fill_identity(self._with_bucket(out, m), m)
             added = self._stage(outb, m)
             record = {
-                "version": base_v + 1,
                 "op": "merge_into",
                 "add": added,
                 "remove": [e["path"] for e in hit],
@@ -4074,13 +4063,9 @@ class TxTable:
             }
             if id_upd:
                 record["meta_update"] = id_upd
-            if txn:
-                record["txn"] = txn
-            if m.get("cdf"):
-                record["cdf_files"] = self._stage_cdf(record, snap)
             return record, base_v + 1
 
-        return self._after_data_commit(self._transact(attempt, max_retries))
+        return self._transact(attempt, max_retries, txn, auto_compact=True)
 
     @staticmethod
     def _merge_clause_plan(
@@ -4304,21 +4289,17 @@ class TxTable:
                 # claims v+1 first and fails this attempt
                 _precommit()
             record = {
-                "version": v + 1,
                 "op": "append",
                 "add": staged,
-                "remove": [],
                 "schema_json": schema_rec,
             }
             if id_upd:
                 record["meta_update"] = id_upd
-            if txn:
-                record["txn"] = txn
             if _record_extra:
                 record.update(_record_extra)
             return record, v + 1
 
-        return self._after_data_commit(self._transact(attempt, max_retries))
+        return self._transact(attempt, max_retries, txn, auto_compact=True)
 
     def copied_files(self) -> set[str]:
         """Absolute source paths every earlier :meth:`copy_into`
@@ -4562,7 +4543,6 @@ class TxTable:
                 )
                 added = self._stage(rebucketed, m)
             record = {
-                "version": base_v + 1,
                 "op": "compact",  # layout-only: multiset preserved
                 "note": f"rebucket {m['n_buckets']} -> {n_buckets}",
                 "add": added,
@@ -4766,7 +4746,6 @@ class TxTable:
                 )
                 added = self._stage(df, m)
             record = {
-                "version": base_v + 1,
                 "op": "compact",
                 "add": added,
                 "remove": [e["path"] for e in touched],
@@ -4969,7 +4948,6 @@ class TxTable:
                 max_rows_per_file=max_rows_per_file,
             )
             record = {
-                "version": base_v + 1,
                 "op": "compact",
                 "zorder": {"cols": list(cols), "bits": bits},
                 "add": staged,
@@ -4987,6 +4965,8 @@ class TxTable:
         max_retries: int = 5,
         mode: str = "copy_on_write",
         max_dv_rows: int = 100_000,
+        eq: dict | None = None,
+        isin: dict | None = None,
     ) -> tuple[int, int]:
         """Row-level ``DELETE WHERE`` — both lakehouse strategies:
 
@@ -5010,9 +4990,10 @@ class TxTable:
         Two phases, like Delta:
         1. find touched files — one scan with the predicate pushed into
            the parquet reader (row-group stats skip most files' data);
-           ``prune`` (col → (lo, hi), the ``read`` convention) skips
-           provably-unmatchable files at the LOG level first, so the
-           find scan opens only candidates;
+           ``prune`` / ``eq`` / ``isin`` (the ``read`` arguments, with
+           their meaning: ranges, point lookups with bloom probes,
+           value lists) skip provably-unmatchable files at the LOG
+           level first, so the find scan opens only candidates;
         2. rewrite the touched files minus matching rows, preserving
            each row's bucket (``_bucket`` travels in the data).
 
@@ -5028,13 +5009,12 @@ class TxTable:
         def attempt(snap: _Snapshot):
             base_v = snap.version
             _, dv, touched, n_del = self._find_matches(
-                "delete_where", predicate, prune, snap,
+                "delete_where", predicate, (prune, eq, isin), snap,
                 max_dv_rows if mode == "merge_on_read" else None,
             )
             if not n_del:
                 return None, (base_v, 0)
             record = {
-                "version": base_v + 1,
                 "op": "delete",
                 # a deletion vector touches no data file
                 "add": [] if dv else self._stage_survivors(
@@ -5045,8 +5025,6 @@ class TxTable:
                 "schema_json": snap.schema_json,
                 "predicate": predicate,
             }
-            if snap.meta.get("cdf"):
-                record["cdf_files"] = self._stage_cdf(record, snap)
             return record, (base_v + 1, n_del)
 
         return self._transact(attempt, max_retries)
@@ -5055,7 +5033,7 @@ class TxTable:
         self,
         op: str,
         predicate: str,
-        prune: dict[str, tuple] | None,
+        skip: tuple[dict | None, dict | None, dict | None],
         snap: _Snapshot,
         max_dv_rows: int | None = None,
     ) -> tuple[DataFrame | None, dict | None, list[dict], int]:
@@ -5064,9 +5042,10 @@ class TxTable:
         the live files of ``snap``, the attempt's snapshot →
         ``(matches, dv, touched, n)``.
 
-        ``prune`` (col → (lo, hi), the ``read`` convention) skips
-        provably-unmatchable files at the LOG level, so the find scan
-        opens only candidates; the scan is DV-aware (already-deleted
+        ``skip = (prune, eq, isin)`` — the ``read`` arguments of those
+        names, with their meaning — skips provably-unmatchable files at
+        the LOG level (stats, partition values, blooms), so the find
+        scan opens only candidates; the scan is DV-aware (already-deleted
         rows must not match again), the predicate pushes into the
         parquet reader, and ``matches`` carries each match's ``_file``
         and physical ``_rowpos``. No candidate → ``(None, None, [], 0)``.
@@ -5084,7 +5063,7 @@ class TxTable:
         match counts' sum), so no second job re-scans the files for
         the count."""
         mapping = snap.meta.get("column_mapping") or {}
-        keep = file_predicate(prune, mapping=mapping)
+        keep = file_predicate(*skip, mapping=mapping)
         cand = [e for e in snap.live.values() if keep(e)]
         if not cand:
             return None, None, [], 0
@@ -5160,6 +5139,8 @@ class TxTable:
         predicate: str,
         prune: dict[str, tuple] | None = None,
         max_retries: int = 5,
+        eq: dict | None = None,
+        isin: dict | None = None,
     ) -> int:
         """``INSERT OVERWRITE ... replaceWhere`` (Delta's
         predicate-scoped overwrite): atomically replace EXACTLY the
@@ -5179,9 +5160,9 @@ class TxTable:
         stream refuses it like any rewrite unless ``ignorechanges``).
         An empty matched slice degrades to a plain atomic append of
         ``df``. Cost ∝ touched files + incoming bytes, never table
-        size. ``prune`` skips provably-unmatchable files at the log
-        level before the find-scan, exactly the ``delete_where``
-        convention."""
+        size. ``prune`` / ``eq`` / ``isin`` skip provably-unmatchable
+        files at the log level before the find-scan, exactly the
+        ``delete_where`` convention."""
         df = self._managed_entry(df, "replace_where", self.meta)
 
         def stage_and_guard(meta: dict) -> tuple[list[dict], dict | None]:
@@ -5241,7 +5222,7 @@ class TxTable:
                 incoming, id_upd = stage_and_guard(m)
                 staged_as = layout
             _, _, touched, _ = self._find_matches(
-                "replace_where", predicate, prune, snap
+                "replace_where", predicate, (prune, eq, isin), snap
             )
             added = list(incoming)
             if touched:
@@ -5252,7 +5233,6 @@ class TxTable:
                 df, snap, False, "replace_where"
             )
             record = {
-                "version": base_v + 1,
                 "op": "replace",
                 "add": added,
                 "remove": [e["path"] for e in touched],
@@ -5261,8 +5241,6 @@ class TxTable:
             }
             if id_upd:
                 record["meta_update"] = id_upd
-            if snap.meta.get("cdf"):
-                record["cdf_files"] = self._stage_cdf(record, snap)
             return record, base_v + 1
 
         return self._transact(attempt, max_retries)
@@ -5275,6 +5253,8 @@ class TxTable:
         max_retries: int = 5,
         mode: str = "copy_on_write",
         max_dv_rows: int = 100_000,
+        eq: dict | None = None,
+        isin: dict | None = None,
     ) -> tuple[int, int]:
         """Row-level ``UPDATE ... SET ... WHERE`` — the update twin of
         :meth:`delete_where`, with BOTH lakehouse strategies:
@@ -5352,7 +5332,7 @@ class TxTable:
         def attempt(snap: _Snapshot):
             base_v, _, schema_json, dvs, m, *_ = snap
             matches, dv, touched, n_upd = self._find_matches(
-                "update_where", predicate, prune, snap,
+                "update_where", predicate, (prune, eq, isin), snap,
                 max_dv_rows if mode == "merge_on_read" else None,
             )
             if not n_upd:
@@ -5392,7 +5372,6 @@ class TxTable:
                 updated, "update_where post-image", snap.constraints
             )
             record = {
-                "version": base_v + 1,
                 "op": "update",
                 "add": self._stage(self._with_bucket(updated, m), m),
                 "remove": [e["path"] for e in touched],
@@ -5401,8 +5380,6 @@ class TxTable:
                 "predicate": predicate,
                 "assignments": assignments,
             }
-            if snap.meta.get("cdf"):
-                record["cdf_files"] = self._stage_cdf(record, snap)
             return record, (base_v + 1, n_upd)
 
         return self._transact(attempt, max_retries)
@@ -5429,15 +5406,15 @@ class TxTable:
 
     def _txn_sink(self, app_id: str, write):
         """The ONE idempotent ``foreachBatch`` body behind every
-        exactly-once sink: a batch at or below ``app_id``'s committed
-        high-water mark is a checkpoint-recovery replay and an empty
-        batch has nothing to commit — both return without a commit;
-        any other batch lands through ``write(batch_df, txn)``, whose
-        one commit carries the txn marker."""
+        exactly-once sink: an empty batch has nothing to commit and
+        returns; any other batch lands through ``write(batch_df,
+        txn)``, whose one ``_transact`` commit decides idempotency — a
+        batch at or below ``app_id``'s mark in the snapshot the commit
+        claims its version against is a checkpoint-recovery replay and
+        commits nothing, and of two handles applying the same batch
+        concurrently one commits and the other's retry sees the mark."""
 
         def apply(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_id <= self.last_committed_batch(app_id):
-                return  # replayed batch — already committed
             if batch_df.isEmpty():
                 return
             write(batch_df, {"app_id": app_id, "batch_id": int(batch_id)})

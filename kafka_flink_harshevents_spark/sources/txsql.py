@@ -38,7 +38,6 @@ Grammar notes (all case-insensitive, whitespace-insensitive):
 
 from __future__ import annotations
 
-import contextlib
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1365,35 +1364,28 @@ def _dml_prune(
     tok: str,
     tables: dict | None,
     predicate: str | None,
-) -> dict | None:
+) -> dict:
     """Log-level file skipping for DML: an UPDATE/DELETE/replaceWhere
     predicate binds to its one table by construction, so its literal
-    conjuncts fold into the RANGES-ONLY ``prune`` dict the mutation
-    methods accept (equality → the degenerate [v, v] range, IN → the
-    [min, max] envelope) — the find-phase then skips whole files the
-    commit-log stats prove unmatchable, on top of the parquet
-    row-group pushdown it already does. Pure skip: the predicate
-    itself still decides matches row-level, so this is exact."""
+    conjuncts fold into the ``prune`` / ``eq`` / ``isin`` kwargs the
+    mutation methods accept with ``read``'s meaning — the find-phase
+    then skips whole files the commit-log stats, partition values and
+    blooms prove unmatchable, on top of the parquet row-group pushdown
+    it already does. Pure skip: the predicate itself still decides
+    matches row-level, so this is exact. Nothing extractable → ``{}``."""
     if not predicate:
-        return None
+        return {}
     conjuncts = _split_conjuncts(predicate)
     if not conjuncts:
-        return None
+        return {}
     cols = _table_cols(spark, tok, tables)
     if cols is None:
-        return None
+        return {}
     tok = tok.strip()
     name = None if tok.startswith("'") else tok.strip("`").lower()
-    kw = _conjunct_filters(
+    return _conjunct_filters(
         conjuncts, cols, {name} if name else set(), True
     )
-    prune = dict(kw.get("prune") or {})
-    ins = [(c, [v]) for c, v in (kw.get("eq") or {}).items()]
-    for col, vals in ins + list((kw.get("isin") or {}).items()):
-        if vals:
-            with contextlib.suppress(TypeError):
-                fold_range(prune, col, lo=min(vals), hi=max(vals))
-    return prune or None
 
 
 def _parse_select(
@@ -1606,11 +1598,11 @@ def _explain_skipping(
                 "txsql EXPLAIN SKIPPING: malformed UPDATE/DELETE"
             )
         t = _target_table(spark, m.group("t"), tables)
-        prune = _dml_prune(spark, m.group("t"), tables, m.group("w"))
-        rep = t.prune_report(prune or {})
-        reports.append(
-            (m.group("t"), None, rep, {"prune": prune} if prune else {})
+        kw = _dml_prune(spark, m.group("t"), tables, m.group("w"))
+        rep = t.prune_report(
+            kw.get("prune") or {}, eq=kw.get("eq"), isin=kw.get("isin")
         )
+        reports.append((m.group("t"), None, rep, kw))
     else:
         raise ValueError(
             "txsql EXPLAIN SKIPPING: expected a SELECT, UPDATE or "
@@ -1895,8 +1887,7 @@ def txsql(
             return t.replace_where(df, "true")
         if rw:
             return t.replace_where(
-                df, rw,
-                prune=_dml_prune(spark, m.group("t"), tables, rw),
+                df, rw, **_dml_prune(spark, m.group("t"), tables, rw)
             )
         return t.append(df)
 
@@ -1933,7 +1924,7 @@ def txsql(
         return t.update_where(
             m.group("w") or "true",
             assignments,
-            prune=_dml_prune(spark, m.group("t"), tables, m.group("w")),
+            **_dml_prune(spark, m.group("t"), tables, m.group("w")),
         )
 
     if two == "DELETE FROM":
@@ -1947,7 +1938,7 @@ def txsql(
         t = _target_table(spark, m.group("t"), tables)
         return t.delete_where(
             m.group("w") or "true",
-            prune=_dml_prune(spark, m.group("t"), tables, m.group("w")),
+            **_dml_prune(spark, m.group("t"), tables, m.group("w")),
         )
 
     if two == "COPY INTO":

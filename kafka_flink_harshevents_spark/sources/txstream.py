@@ -349,6 +349,18 @@ def _is_add_only(rec: dict) -> bool:
     ) and "dv_full" not in rec
 
 
+def _rewrites_rows(rec: dict) -> bool:
+    """Does this commit change or retract rows, so a ``cdf=True`` table
+    must materialize its feed (``TxTable._transact`` stages
+    ``cdf_files`` exactly then)? It removes files or carries ``dv`` /
+    ``dv_full`` — what the planner cannot serve from add files — and
+    is not ``compact`` or ``fsck`` (empty feeds by contract) or
+    ``clone`` (served from its add files under its ``dv_full``)."""
+    return (
+        bool(rec.get("remove") or rec.get("dv")) or "dv_full" in rec
+    ) and rec.get("op") not in ("compact", "fsck", "clone")
+
+
 def _change_partitions(
     table_dir: str,
     versions: list[int],
@@ -1010,9 +1022,11 @@ class TxLogBatchWriter(DataSourceArrowWriter):
     Options: ``tabledir`` (required, table must exist —
     ``TxTable.create`` owns keys/bucketing/constraints metadata);
     ``mergeschema`` (add-column evolution, the append contract);
-    ``txnappid``/``txnbatchid`` (idempotent writes: a replayed
-    (app, batch) commits nothing, the foreachBatch exactly-once
-    convention). ``mode("overwrite")`` is refused — rewrites belong to
+    ``txnappid``/``txnbatchid`` (idempotent writes, the foreachBatch
+    exactly-once convention: ``TxTable._transact`` checks the txn
+    inside the commit, so a replayed (app, batch) commits nothing and
+    its stage is removed, and two writers racing one batch commit it
+    once). ``mode("overwrite")`` is refused — rewrites belong to
     ``delete_where``/``merge_upsert``, which keep CDF/time-travel
     semantics honest.
 
@@ -1188,21 +1202,10 @@ class TxLogBatchWriter(DataSourceArrowWriter):
         # Runs in a Python worker with NO SparkSession — everything
         # here is commit-log metadata work (replay, schema union,
         # atomic link), which is exactly why it can be spark-free.
-        import shutil
-
         entries = [
             e for m in messages if m is not None for e in m.entries
         ]
         t = TxTable(None, self.table_dir)
-        if self.txn is not None and self.txn[
-            "batch_id"
-        ] <= t.last_committed_batch(self.txn["app_id"]):
-            # replayed idempotent write: drop the stage, commit nothing
-            shutil.rmtree(
-                os.path.join(self.table_dir, self.staged),
-                ignore_errors=True,
-            )
-            return
 
         def attempt(snap):
             schema_rec = t._schema_union_json(
@@ -1214,10 +1217,7 @@ class TxLogBatchWriter(DataSourceArrowWriter):
                 # task-side checks ran against a stale rule set —
                 # refuse rather than admit unchecked rows (rare race;
                 # the stage is reclaimed, the caller retries)
-                shutil.rmtree(
-                    os.path.join(self.table_dir, self.staged),
-                    ignore_errors=True,
-                )
+                self.abort(messages)
                 raise RuntimeError(
                     "txlog datasource write: table constraints changed "
                     "during the write; staged files discarded — retry"
@@ -1227,29 +1227,22 @@ class TxLogBatchWriter(DataSourceArrowWriter):
                 # tasks bucketed rows under the OLD modulus, and
                 # committing mislabeled files would let rows escape
                 # later merges — discard and make the caller retry
-                shutil.rmtree(
-                    os.path.join(self.table_dir, self.staged),
-                    ignore_errors=True,
-                )
+                self.abort(messages)
                 raise RuntimeError(
                     "txlog datasource write: table was rebucketed "
                     "during the write; staged files discarded — retry"
                 )
-            record = {
-                "version": snap.version + 1,
-                "op": "append",
-                "add": entries,
-                "remove": [],
-                "schema_json": schema_rec,
-            }
-            if self.txn is not None:
-                record["txn"] = self.txn
-            return record, None
+            return {
+                "op": "append", "add": entries, "schema_json": schema_rec,
+            }, None
 
-        # the shared commit path: atomic link + the table's
-        # auto-checkpoint cadence (checkpoint() is log-only, so it runs
-        # fine in this spark-less commit worker)
-        t._transact(attempt)
+        # the shared commit path: txn idempotency, atomic link and the
+        # table's auto-checkpoint cadence (checkpoint() is log-only, so
+        # it runs fine in this spark-less commit worker). A replayed
+        # (app, batch) returns the version without calling attempt —
+        # nothing committed, so the stage is dropped
+        if t._transact(attempt, txn=self.txn) is not None:
+            self.abort(messages)
 
     def abort(self, messages) -> None:
         import shutil

@@ -1164,40 +1164,43 @@ def test_select_where_file_skipping(spark, tmp_path, monkeypatch):
 
 
 def test_dml_predicate_file_pruning(spark, tmp_path, monkeypatch):
-    """DML predicates fold into the mutation methods' ranges-only
-    prune dict (equality → [v,v], IN → [min,max] envelope, ranges
-    merged) — attribution is trivial (one table) and results are
-    unchanged."""
+    """DML predicates fold into the mutation methods' ``prune`` /
+    ``eq`` / ``isin`` kwargs with ``read``'s meaning (ranges merged,
+    equality a point lookup, IN a value list) — attribution is trivial
+    (one table) and results are unchanged."""
     t = _mk(spark, tmp_path, "t")
     seen = {}
     real_del = TxTable.delete_where
     real_upd = TxTable.update_where
 
-    def spy_del(self, pred, prune=None, **k):
-        seen["delete"] = prune
-        return real_del(self, pred, prune=prune, **k)
+    def skip_kw(k):
+        return {n: k[n] for n in ("prune", "eq", "isin") if k.get(n)}
 
-    def spy_upd(self, pred, assignments, prune=None, **k):
-        seen["update"] = prune
-        return real_upd(self, pred, assignments, prune=prune, **k)
+    def spy_del(self, pred, **k):
+        seen["delete"] = skip_kw(k)
+        return real_del(self, pred, **k)
+
+    def spy_upd(self, pred, assignments, **k):
+        seen["update"] = skip_kw(k)
+        return real_upd(self, pred, assignments, **k)
 
     monkeypatch.setattr(TxTable, "delete_where", spy_del)
     monkeypatch.setattr(TxTable, "update_where", spy_upd)
 
     txsql(spark, "UPDATE t SET v = v + 1 WHERE k IN (1, 3)",
           tables={"t": t})
-    assert seen["update"] == {"k": (1, 3)}
+    assert seen["update"] == {"isin": {"k": [1, 3]}}
     st = _state(t)
     assert st[1] == (11, 1) and st[3] == (31, 1) and st[2] == (20, 1)
 
     txsql(spark, "DELETE FROM t WHERE k > 5 AND v = 90",
           tables={"t": t})
-    assert seen["delete"] == {"k": (5, None), "v": (90, 90)}
+    assert seen["delete"] == {"prune": {"k": (5, None)}, "eq": {"v": 90}}
     assert 9 not in _state(t) and 8 in _state(t)
 
-    # OR predicate: no prune, correct result
+    # OR predicate: no skip kwargs, correct result
     txsql(spark, "DELETE FROM t WHERE k = 0 OR k = 8", tables={"t": t})
-    assert seen["delete"] is None
+    assert seen["delete"] == {}
     st = _state(t)
     assert 0 not in st and 8 not in st and 7 in st
 
