@@ -405,6 +405,59 @@ def _read_record(table_dir: str, version: int) -> dict:
         return json.load(f)
 
 
+class _RowChange(NamedTuple):
+    """:func:`_row_change`'s answer: the ``kind`` (``"none"`` /
+    ``"insert"`` / ``"rewrite"``), the commit's ``op`` upper-cased as
+    refusals print it, and ``hidden`` — add path → the sorted row
+    positions the commit's ``dv_full`` masks in that file."""
+
+    kind: str
+    op: str
+    hidden: dict[str, tuple[int, ...]]
+
+
+def _row_change(rec: dict) -> _RowChange:
+    """What a commit did to the table's ROWS — the one change-feed rule
+    every reader asks: ``TxTable.table_changes``, ``cdf=True`` staging
+    in ``TxTable._transact``, and the ``format("txlog")`` stream and
+    batch change-feed planner and its pacing (``sources/txstream.py``).
+    One of three kinds:
+
+    - ``"none"``: ``create``; ``compact`` (a layout rewrite — the row
+      multiset is preserved); ``fsck`` (its removed files are gone
+      from storage, so their rows are unrecoverable and the feed is
+      empty by contract); and every commit that adds, removes and
+      vectors nothing (metadata-only commits, a no-op restore).
+    - ``"insert"``: ``append``, ``clone`` and every other ADD-ONLY
+      commit — no ``remove``, no ``dv`` delta and no ``dv_full`` state
+      replacement, whatever the op name (Delta's remove-based rule:
+      an insert-only ``merge_into``, a restore resurrecting whole
+      files). Its rows are the add files' rows masked by ``dv_full``
+      (a clone's cloned deletion vectors — unmasked reads would
+      resurrect rows the clone never showed): inserts in the change
+      feed, appends in a table stream.
+    - ``"rewrite"``: everything else — it changes or retracts existing
+      rows. A ``cdf=True`` table materializes its feed at commit time
+      (``cdf_files``); without them the change-feed DataSource refuses
+      it, and a table stream refuses it unless ``ignorechanges``
+      (then its add files serve, carried-over rows included).
+      ``dv_full`` is a key-presence test: an EMPTY map still replaces
+      the DV state and can resurrect rows."""
+    op = rec.get("op")
+    if op in ("create", "compact", "fsck"):
+        kind = "none"
+    elif rec.get("remove") or rec.get("dv") or (
+        "dv_full" in rec and op != "clone"
+    ):
+        kind = "rewrite"
+    else:
+        kind = "insert" if rec.get("add") else "none"
+    hidden = {
+        p: tuple(sorted(v)) for p, v in (rec.get("dv_full") or {}).items()
+    }
+    return _RowChange(kind, str(op).upper(), hidden)
+
+
 class _Snapshot(NamedTuple):
     """One replayed table state: the version, live add-entries by
     path, schema json, deletion vectors by path, merged table meta,
@@ -419,25 +472,34 @@ class _Snapshot(NamedTuple):
     constraints: dict[str, str]
     txns: dict[str, int]
 
+    def copy(self) -> "_Snapshot":
+        """The same state in containers :func:`_apply_commit` may update
+        without touching this snapshot's."""
+        return self._replace(
+            live=dict(self.live),
+            dvs={p: set(s) for p, s in self.dvs.items()},
+            meta=dict(self.meta),
+            txns=dict(self.txns),
+        )
+
 
 #: fields a checkpoint must carry to seed a replay (older layouts
 #: lacking one are skipped for a full replay)
 _CHK_FIELDS = ("live", "schema_json", "dvs", "meta", "constraints", "txns")
 
 
-def _replay_log(table_dir: str, target: int | None = None) -> _Snapshot:
-    """Log replay to ``target`` (default: the latest version, 0 on an
-    empty log) → :class:`_Snapshot` — the ONE checkpoint-aware fold of
-    the commit log; snapshots, meta, constraints and the exactly-once
-    txn marks are all fields of it.
-
-    Replay rules, applied per commit in version order:
+def _apply_commit(snap: _Snapshot, rec: dict) -> _Snapshot:
+    """One commit's replay step: the table state at ``rec["version"]``
+    from ``snap``, the state just before it. :func:`_replay_log` loops
+    over it, and ``TxTable._transact`` folds a won record onto its
+    attempt's snapshot to checkpoint the new version without a second
+    replay. The rules:
 
     - live files: ``add`` entries enter, ``remove`` paths leave;
     - deletion vectors: a ``dv`` field is a DELTA of newly deleted
       row positions (unioned in); adding or removing a file drops its
-      vector; ``dv_full`` (restore commits) replaces the whole DV
-      state absolutely;
+      vector; ``dv_full`` (restore and clone commits) replaces the
+      whole DV state absolutely;
     - schema: the newest ``schema_json``;
     - meta: the create record's ``meta``, patched by each later
       ``meta_update`` / ``meta_unset`` (``n_buckets`` evolves via
@@ -445,7 +507,51 @@ def _replay_log(table_dir: str, target: int | None = None) -> _Snapshot:
     - constraints: the newest ``constraints`` map;
     - txns: the running max ``batch_id`` per ``txn.app_id``.
 
-    Starts from the newest readable checkpoint ≤ target when it carries
+    ``snap``'s containers are updated IN PLACE, so a step costs
+    O(record), not O(table); a caller still holding ``snap`` folds
+    ``snap.copy()``."""
+    live, dvs, meta, txns = snap.live, snap.dvs, snap.meta, snap.txns
+    for entry in rec["add"]:
+        live[entry["path"]] = entry
+        dvs.pop(entry["path"], None)  # fresh file: clean vector
+    for path in rec["remove"]:
+        live.pop(path, None)
+        dvs.pop(path, None)
+    if "dv_full" in rec:
+        dvs = {p: set(v) for p, v in rec["dv_full"].items()}
+    elif "dv" in rec:
+        for p, positions in rec["dv"].items():
+            dvs.setdefault(p, set()).update(positions)
+    if "meta" in rec:
+        meta = dict(rec["meta"])
+    meta.update(rec.get("meta_update") or {})
+    for k in rec.get("meta_unset") or ():
+        meta.pop(k, None)
+    t = rec.get("txn")
+    if t and "app_id" in t:
+        txns[t["app_id"]] = max(
+            int(txns.get(t["app_id"], -1)), int(t["batch_id"])
+        )
+    return _Snapshot(
+        rec["version"],
+        live,
+        rec.get("schema_json", snap.schema_json),
+        dvs,
+        meta,
+        dict(rec["constraints"]) if "constraints" in rec
+        else snap.constraints,
+        txns,
+    )
+
+
+def _replay_log(table_dir: str, target: int | None = None) -> _Snapshot:
+    """Log replay to ``target`` (default: the latest version, 0 on an
+    empty log) → :class:`_Snapshot` — the ONE checkpoint-aware fold of
+    the commit log: :func:`_apply_commit` over every record after the seed.
+    Snapshots, meta, constraints and the exactly-once txn marks are
+    all fields of it.
+
+    Seeds from the newest readable checkpoint ≤ target when it carries
     every field (:data:`_CHK_FIELDS`), so cost is O(commits since the
     last checkpoint); otherwise full replay, which is always correct.
     Module-level (no SparkSession) so the ``format("txlog")``
@@ -454,53 +560,25 @@ def _replay_log(table_dir: str, target: int | None = None) -> _Snapshot:
     versions = _list_versions(table_dir)
     if target is None:
         target = versions[-1] if versions else 0
-    live: dict[str, dict] = {}
-    schema_json: str | None = None
-    dvs: dict[str, set] = {}
-    meta: dict = {}
-    constraints: dict[str, str] = {}
-    txns: dict[str, int] = {}
-    from_v = 0
+    snap = _Snapshot(0, {}, None, {}, {}, {}, {})
     chk = _latest_checkpoint(table_dir, target)
     if chk is not None and all(k in chk for k in _CHK_FIELDS):
-        from_v = chk["version"]
-        live = {e["path"]: e for e in chk["live"]}
-        schema_json = chk["schema_json"]
-        dvs = {p: set(v) for p, v in chk["dvs"].items()}
-        meta = dict(chk["meta"])
-        constraints = dict(chk["constraints"])
-        txns = dict(chk["txns"])
+        snap = _Snapshot(
+            chk["version"],
+            {e["path"]: e for e in chk["live"]},
+            chk["schema_json"],
+            {p: set(v) for p, v in chk["dvs"].items()},
+            dict(chk["meta"]),
+            dict(chk["constraints"]),
+            dict(chk["txns"]),
+        )
+    from_v = snap.version
     for v in versions:
-        if v <= from_v:
-            continue
         if v > target:
             break
-        rec = _read_record(table_dir, v)
-        for entry in rec["add"]:
-            live[entry["path"]] = entry
-            dvs.pop(entry["path"], None)  # fresh file: clean vector
-        for path in rec["remove"]:
-            live.pop(path, None)
-            dvs.pop(path, None)
-        if "dv_full" in rec:
-            dvs = {p: set(v) for p, v in rec["dv_full"].items()}
-        elif "dv" in rec:
-            for p, positions in rec["dv"].items():
-                dvs.setdefault(p, set()).update(positions)
-        schema_json = rec.get("schema_json", schema_json)
-        if "meta" in rec:
-            meta = dict(rec["meta"])
-        meta.update(rec.get("meta_update") or {})
-        for k in rec.get("meta_unset") or ():
-            meta.pop(k, None)
-        if "constraints" in rec:
-            constraints = dict(rec["constraints"])
-        t = rec.get("txn")
-        if t and "app_id" in t:
-            txns[t["app_id"]] = max(
-                int(txns.get(t["app_id"], -1)), int(t["batch_id"])
-            )
-    return _Snapshot(target, live, schema_json, dvs, meta, constraints, txns)
+        if v > from_v:
+            snap = _apply_commit(snap, _read_record(table_dir, v))
+    return snap._replace(version=target)
 
 
 def _version_at(table_dir: str, ts: float, inclusive: bool = True) -> int:
@@ -1144,7 +1222,7 @@ class TxTable:
         and time travel to pre-repair versions still reference the
         lost files (and fail if read — the honest answer); its change
         feed is EMPTY by definition, since the removed rows are
-        unrecoverable (`_changes_for` special-cases the op)."""
+        unrecoverable (its :func:`_row_change` kind is ``none``)."""
 
         def attempt(snap: _Snapshot):
             missing = sorted(
@@ -1308,7 +1386,7 @@ class TxTable:
         returns WITHOUT calling ``attempt`` — otherwise the record
         carries ``txn``, and a concurrent commit of the same batch wins
         the version race and the retry sees its mark; on a ``cdf=True``
-        table a record that rewrites rows (``txstream._rewrites_rows``)
+        table a record of :func:`_row_change` kind ``"rewrite"``
         gets its change files staged (``_stage_cdf``).
 
         The record passes the write-protocol check against
@@ -1321,10 +1399,12 @@ class TxTable:
         constraint, protocol) propagates at once.
 
         A won commit then runs the auto-checkpoint cadence
-        (``checkpoint_interval`` from the winning snapshot's meta; a
-        failed checkpoint never fails the committed write — it is
-        DERIVED data, and losing one costs replay time until the next
-        interval commit) and, with ``auto_compact``, the advisory hook
+        (``checkpoint_interval`` from the winning snapshot's meta),
+        writing ``_apply_commit(snap, record)`` — exactly the table state at
+        the new version, so no second replay. A failed checkpoint never
+        fails the committed write — it is DERIVED data, and losing one
+        costs replay time until the next interval commit. With
+        ``auto_compact`` the commit then runs the advisory hook
         ``_after_data_commit(snap, record)``. The only other
         ``_atomic_commit`` caller is :meth:`create` (v1)."""
         if max_retries < 1:
@@ -1344,13 +1424,10 @@ class TxTable:
             }
             if txn:
                 record["txn"] = txn
-            if snap.meta.get("cdf"):
-                from kafka_flink_harshevents_spark.sources.txstream import (
-                    _rewrites_rows,
-                )
-
-                if _rewrites_rows(record):
-                    record["cdf_files"] = self._stage_cdf(record, snap)
+            if snap.meta.get("cdf") and (
+                _row_change(record).kind == "rewrite"
+            ):
+                record["cdf_files"] = self._stage_cdf(record, snap)
             self._check_protocol("write", snap.meta)
             try:
                 _atomic_commit(self.table_dir, record["version"], record)
@@ -1360,7 +1437,7 @@ class TxTable:
             ci = int(snap.meta.get("checkpoint_interval") or 0)
             if ci and record["version"] % ci == 0:
                 try:
-                    self.checkpoint()
+                    self._write_checkpoint(_apply_commit(snap.copy(), record))
                 except (OSError, ValueError):
                     pass
             if auto_compact:
@@ -1398,7 +1475,14 @@ class TxTable:
         identical bytes and either rename winning is correct."""
         # one replay from the previous checkpoint yields every field,
         # so checkpointing itself stays O(commits since last)
-        snap = _replay_log(self.table_dir, self.latest_version())
+        return self._write_checkpoint(
+            _replay_log(self.table_dir, self.latest_version())
+        )
+
+    def _write_checkpoint(self, snap: _Snapshot) -> int:
+        """Write ``snap`` as the checkpoint of its version — the one
+        writer behind :meth:`checkpoint` and ``_transact``'s cadence
+        checkpoint."""
         v = snap.version
         # the copied set lives in its own incrementally-compacted side
         # structure (delta segments + periodic fold), NOT in the
@@ -5548,11 +5632,11 @@ class TxTable:
         incremental consumers (a materialized aggregate, a replica)
         apply commits in order without rescanning the table.
 
-        Scale shape: one full-outer join keyed on the business key,
-        bounded by the commit's touched buckets — never the table.
-        ``append`` commits short-circuit to pure inserts (no pre-image
-        read at all); layout-only ``compact`` commits return an empty
-        feed by definition.
+        Which commits feed which rows is :func:`_row_change`'s rule,
+        shared with the ``format("txlog")`` change-feed readers. Scale
+        shape: a rewrite costs one full-outer join keyed on the
+        business key, bounded by the commit's touched buckets — never
+        the table.
 
         On a ``cdf=True`` table, rewrite commits carry MATERIALIZED
         change files (written at commit time by the same derivation
@@ -5608,7 +5692,11 @@ class TxTable:
     def _changes_for(
         self, version: int, rec: dict, snap: _Snapshot, pre: _Snapshot
     ) -> DataFrame:
-        """Derive the commit's change rows from its record. ``snap``
+        """Derive the commit's change rows from its record, by its
+        :func:`_row_change` kind: ``none`` is one empty frame,
+        ``insert`` the add files' rows; a ``rewrite`` is a DV delta, a
+        restore, a pure removal, a full-row multiset delta, or — for a
+        ``merge`` commit — the key-paired update feed. ``snap``
         supplies the table meta (key/order columns, column mapping) and
         the schema of last resort; ``pre`` is the snapshot at
         ``version - 1`` (the pre-image files and vectors). Callable
@@ -5626,9 +5714,7 @@ class TxTable:
 
         def read_files(
             paths: list[str], dvs: dict[str, set] | None = None
-        ) -> DataFrame | None:
-            if not paths:
-                return None
+        ) -> DataFrame:
             # the commit's recorded (widened) schema NULL-fills evolved
             # columns in pre-image files, so update_preimage rows carry
             # NULL where the old row had no value — the CDF contract
@@ -5636,28 +5722,30 @@ class TxTable:
                 paths, rec.get("schema_json"), dvs, mapping=mapping
             ).drop("_bucket")
 
-        if rec.get("op") == "clone" and rec.get("add"):
-            # a clone's feed is its VISIBLE initial state: the
-            # referenced files with the cloned deletion vectors applied
-            # (unmasked reads would resurrect hidden rows as inserts)
-            dv_full = {
-                p: set(v) for p, v in (rec.get("dv_full") or {}).items()
-            }
-            return (
-                self._open_files(
-                    list(rec["add"]),
-                    rec.get("schema_json"),
-                    dv_full,
-                    mapping=mapping,
-                )
-                .drop("_bucket")
-                .withColumn("_change_type", F.lit("insert"))
+        change = _row_change(rec)
+        if change.kind == "none":
+            # create commits carry no schema: borrow the nearest one
+            schema_json = (
+                rec.get("schema_json")
+                or pre.schema_json
+                or snap.schema_json
+            )
+            if schema_json is None:
+                raise ValueError(f"version {version} has no readable schema")
+            empty = self.spark.createDataFrame(
+                [], StructType.fromJson(json.loads(schema_json))
+            )
+            return empty.withColumn("_change_type", F.lit("insert")).limit(0)
+        if change.kind == "insert":
+            # the add files' rows, masked by dv_full (a clone's cloned
+            # vectors), need no pre-image read at all
+            return read_files(list(rec["add"]), change.hidden).withColumn(
+                "_change_type", F.lit("insert")
             )
 
-        if "dv" in rec:
+        if rec.get("dv"):
             # merge-on-read delete: the commit's DV DELTA rows ARE the
             # change feed — read them by physical position (no diffing)
-            dv_live, pre_dvs = pre.live, pre.dvs
             dv_rows = [
                 # DV commits key on the STORED entry path (absolute
                 # for adopted/cloned files); the scan's `_file` is the
@@ -5671,14 +5759,14 @@ class TxTable:
                 # resolve paths to the prior snapshot's ENTRIES so
                 # hive-adopted (pfill) files read with their partition
                 # values filled
-                [dv_live.get(p, p) for p in sorted(rec["dv"])],
-                rec.get("schema_json"), pre_dvs,
+                [pre.live.get(p, p) for p in sorted(rec["dv"])],
+                rec.get("schema_json"), pre.dvs,
                 keep_meta=True, mapping=mapping,
             )
             dvdf = self.spark.createDataFrame(
                 dv_rows, "_file string, _rowpos long"
             )
-            pre = src.join(
+            vectored = src.join(
                 F.broadcast(dvdf), ["_file", "_rowpos"]
             ).drop("_file", "_rowpos", "_bucket")
             if rec.get("add"):
@@ -5686,9 +5774,10 @@ class TxTable:
                 # pre-images, the added file holds the post-images —
                 # emit the exact full-row multiset delta (the same
                 # convention as copy-on-write update/delete rewrites)
-                post = read_files(list(rec["add"]))
-                return _multiset_delta(pre, post)
-            return pre.withColumn("_change_type", F.lit("delete"))
+                return _multiset_delta(
+                    vectored, read_files(list(rec["add"]))
+                )
+            return vectored.withColumn("_change_type", F.lit("delete"))
 
         if rec["op"] == "restore":
             # a restore can change data through files AND vectors at
@@ -5706,56 +5795,24 @@ class TxTable:
                 self.read(version=version - 1), self.read(version=post_v)
             )
 
-        # pre-images exclude rows already deleted by vectors BEFORE
-        # this commit — they left the table in an earlier version
-        prev_live, pre_dvs = pre.live, pre.dvs
-        post = read_files(list(rec["add"]))
-        if rec["op"] == "fsck":
-            # the removed files are GONE from storage — their rows are
-            # unrecoverable, so the repair's feed is empty by contract
-            # (emitting deletes would require reading the lost data)
-            schema_json = rec.get("schema_json") or snap.schema_json
-            empty = self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(schema_json))
-            )
-            return empty.withColumn(
-                "_change_type", F.lit("delete")
-            ).limit(0)
-        if post is None and rec["op"] not in ("create", "compact") and rec["remove"]:
-            # pure-removal rewrite: a whole-file DELETE, or a RESTORE
-            # rolling back appends — every pre-image row is a delete
-            # (an empty post here previously read as "no changes",
-            # silently dropping the feed's retractions)
-            pre_only = read_files(
-                [prev_live.get(p, p) for p in rec["remove"]], pre_dvs
-            )
-            return pre_only.withColumn("_change_type", F.lit("delete"))
-        if rec["op"] in ("create", "compact") or post is None:
-            # create commits carry no schema: borrow the nearest one
-            schema_json = (
-                rec.get("schema_json")
-                or pre.schema_json
-                or snap.schema_json
-            )
-            if schema_json is None:
-                raise ValueError(f"version {version} has no readable schema")
-            empty = self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(schema_json))
-            )
-            return empty.withColumn("_change_type", F.lit("insert")).limit(0)
-        if rec["op"] == "append" or not rec["remove"]:
-            return post.withColumn("_change_type", F.lit("insert"))
-
-        pre = read_files(
-            [prev_live.get(p, p) for p in rec["remove"]], pre_dvs
+        # every other rewrite removes files. Pre-images exclude rows
+        # already deleted by vectors BEFORE this commit — they left
+        # the table in an earlier version
+        old = read_files(
+            [pre.live.get(p, p) for p in rec["remove"]], pre.dvs
         )
+        if not rec["add"]:
+            # pure-removal rewrite: a whole-file DELETE — every
+            # pre-image row is a delete
+            return old.withColumn("_change_type", F.lit("delete"))
+        post = read_files(list(rec["add"]))
         if rec["op"] != "merge":
             # delete / update rewrites: the key-based pairing below
             # assumes the post-image holds ONE row per key (true only
             # for merge commits); append-allowed duplicate keys would
             # multiply through the join. These ops need no update
             # pairing — emit the exact FULL-ROW multiset delta instead.
-            return _multiset_delta(pre, post)
+            return _multiset_delta(old, post)
         val_cols = [c for c in post.columns if c not in key_cols]
         # A merge commit's POST side holds exactly one row per key (the
         # merge's latest-wins output), but the PRE side may hold
@@ -5771,7 +5828,7 @@ class TxTable:
         wk = Window.partitionBy(*key_cols).orderBy(
             F.col(m["order_col"]).desc()
         )
-        pre_ranked = pre.withColumn("_prn", F.row_number().over(wk))
+        pre_ranked = old.withColumn("_prn", F.row_number().over(wk))
         extra_deletes = (
             pre_ranked.filter(F.col("_prn") > 1)
             .drop("_prn")

@@ -24,20 +24,9 @@ ALSO a source — downstream jobs (IVM consumers, replication, training
 ingest) tail the same ACID table the ingest pipeline writes, with
 exactly-once progress tracking for free from the checkpoint.
 
-Semantics per commit op (mirrors Delta's streaming-source contract):
-- ``append``  → the added files' rows are served, stamped with the
-  commit version (``_commit_version``);
-- ``compact`` → skipped entirely (data-preserving rewrite, no change);
-- add-only commits (no removed files, no deletion-vector delta, no
-  ``dv_full`` state replacement — e.g. an insert-only ``merge_into``)
-  → served as appends whatever the op name (Delta's remove-based
-  rule); restores never qualify — their DV-state replacement can
-  resurrect/retract rows even with an empty map;
-- ``merge`` / ``delete`` → refused by default (a rewrite is not an
-  append-only change); ``ignorechanges=true`` serves the rewritten
-  files' rows — which include carried-over unchanged rows of the
-  touched buckets/files, so downstream must dedupe on the business key
-  (Delta's documented ignoreChanges caveat, reproduced deliberately).
+What each commit serves is the one change-feed rule, documented at
+``sources/txlog.py::_row_change`` (Delta's streaming-source contract,
+its ignoreChanges caveat included).
 
 Scale shape: offsets are a single integer; ``partitions(start, end)``
 emits ONE InputPartition per staged file, so the actual parquet reads
@@ -79,6 +68,7 @@ from kafka_flink_harshevents_spark.sources.txlog import (
     _list_versions,
     _read_record,
     _replay_log,
+    _row_change,
     _version_at,
     _version_path,
     bucket_batch,
@@ -275,9 +265,9 @@ class _FilePartition(InputPartition):
         # None = plain table stream (no change column); "@file" = read
         # the materialized _change_type column; else a constant label
         self.ctype = ctype
-        # physical row positions deleted by merge-on-read vectors —
-        # applied by the BATCH reader only (the stream refuses/skips DV
-        # commits, so its partitions always carry an empty tuple)
+        # physical row positions hidden by deletion vectors: the
+        # snapshot's vectors in a batch read, a commit's dv_full
+        # (a clone's cloned vectors) in a stream or change feed
         self.dv = dv
         # column-mapping pairs (logical, physical) for renamed columns
         # — tuple-of-pairs so the partition stays picklable/hashable
@@ -306,22 +296,37 @@ _PACK_MAX_BYTES = 128 * 1024 * 1024
 _PACK_OPEN_COST = 4 * 1024 * 1024
 
 
+def _file_size(
+    path: str, recorded=None, memo: dict | None = None
+) -> int | None:
+    """A served file's bytes, for packing and pacing: the entry's
+    recorded ``bytes`` / ``cdf_bytes``, else — an entry committed
+    before those fields existed — one driver-side stat, memoized in
+    ``memo`` when given. None when the file cannot be stat'ed."""
+    if recorded:
+        return int(recorded)
+    if memo is not None and path in memo:
+        return memo[path]
+    try:
+        n = os.path.getsize(path)
+    except OSError:
+        n = None
+    if memo is not None:
+        memo[path] = n
+    return n
+
+
 def _pack_partitions(parts: list) -> list:
     """Pack per-file partitions into ≤128 MB groups (consecutive
     files only — preserves version grouping and global row order).
-    Unknown sizes fall back to one driver-side stat; a missing file
+    Sizes come from :func:`_file_size`; a file it cannot stat
     (foreign filesystem) packs alone."""
     groups: list[list] = []
     cur: list = []
     cum = 0
     for p in parts:
-        sz = p.nbytes
-        if sz is None:
-            try:
-                sz = os.path.getsize(p.path)
-            except OSError:
-                sz = _PACK_MAX_BYTES
-        eff = int(sz) + _PACK_OPEN_COST
+        sz = _file_size(p.path, p.nbytes)
+        eff = (_PACK_MAX_BYTES if sz is None else sz) + _PACK_OPEN_COST
         if cur and cum + eff > _PACK_MAX_BYTES:
             groups.append(cur)
             cur, cum = [], 0
@@ -334,31 +339,82 @@ def _pack_partitions(parts: list) -> list:
     ]
 
 
-def _is_add_only(rec: dict) -> bool:
-    """Append-EQUIVALENT commit test, shared verbatim by the partition
-    planner and its pacing twin (the two must never disagree on what a
-    commit serves): a commit that only ADDS files — no removed files,
-    no deletion-vector delta, and no ``dv_full`` STATE REPLACEMENT —
-    cannot have changed or retracted an existing row, whatever its op
-    name (Delta's remove-based rule). ``dv_full`` is a key-presence
-    test, not truthiness: a restore always records the key and an
-    EMPTY map still replaces the current DV state, which can resurrect
-    rows — not an append."""
-    return bool(rec.get("add")) and not (
-        rec.get("remove") or rec.get("dv")
-    ) and "dv_full" not in rec
+def _commit_plan(
+    table_dir: str,
+    v: int,
+    rec: dict,
+    columns: tuple[str, ...],
+    read_change_feed: bool,
+    ignore_changes: bool,
+    mapping: tuple[tuple[str, str], ...] = (),
+) -> tuple[list[_FilePartition], str | None]:
+    """One commit → ``(partitions, refusal)``: the files it serves once
+    admitted, one partition per file, and why it must be refused (None
+    when it may be served). The stream's ``partitions`` and its
+    ``latestOffset`` pacing and the batch change-feed reader all read
+    this one plan, so pacing budgets exactly the files a batch serves.
+    What the commit did to rows is :func:`~.txlog._row_change`:
 
+    - ``none`` serves nothing;
+    - ``insert`` serves its add files, masked by ``dv_full`` — as
+      inserts in change-feed mode, as appends in table mode;
+    - ``rewrite`` serves its materialized ``cdf_files`` in change-feed
+      mode (refused when there are none: the table was created
+      without ``cdf=True``), and its add files in table mode (refused
+      unless ``ignorechanges`` — the rewritten files carry unchanged
+      rows of the touched buckets too, so downstream dedupes on the
+      business key).
 
-def _rewrites_rows(rec: dict) -> bool:
-    """Does this commit change or retract rows, so a ``cdf=True`` table
-    must materialize its feed (``TxTable._transact`` stages
-    ``cdf_files`` exactly then)? It removes files or carries ``dv`` /
-    ``dv_full`` — what the planner cannot serve from add files — and
-    is not ``compact`` or ``fsck`` (empty feeds by contract) or
-    ``clone`` (served from its add files under its ``dv_full``)."""
-    return (
-        bool(rec.get("remove") or rec.get("dv")) or "dv_full" in rec
-    ) and rec.get("op") not in ("compact", "fsck", "clone")
+    A commit adopting hive-partitioned files is refused in both modes:
+    the per-file Arrow reader has no log-side partition fill."""
+    change = _row_change(rec)
+    refusal = None
+    if any(e.get("pfill") for e in rec.get("add") or ()):
+        refusal = (
+            f"txlog stream over {table_dir}: version {v} adopts "
+            "hive-partitioned files whose partition values live "
+            "only in the commit log — the per-file Arrow reader "
+            "has no log-side fill; TxTable.compact() the table "
+            "and start the stream past the convert commit"
+        )
+    if change.kind == "none":
+        return [], refusal
+    if read_change_feed and change.kind == "rewrite":
+        cb = rec.get("cdf_bytes") or {}
+        parts = [
+            _FilePartition(
+                os.path.join(table_dir, p), v, columns,
+                ctype=_CTYPE_FROM_FILE, mapping=mapping, nbytes=cb.get(p),
+            )
+            for p in rec.get("cdf_files") or ()
+        ]
+        if not parts:
+            refusal = refusal or (
+                f"txlog change feed over {table_dir}: version {v} is "
+                f"a {change.op} rewrite with no materialized change "
+                "files — create the table with cdf=True (or start "
+                "past this version)"
+            )
+        return parts, refusal
+    parts = [
+        _FilePartition(
+            os.path.join(table_dir, e["path"]), v, columns,
+            ctype="insert" if read_change_feed else None,
+            dv=change.hidden.get(e["path"], ()),
+            mapping=mapping, nbytes=e.get("bytes"),
+        )
+        for e in rec["add"]
+    ]
+    if change.kind == "rewrite" and not ignore_changes:
+        refusal = refusal or (
+            f"txlog stream over {table_dir}: version {v} is a "
+            f"{change.op} rewrite, not an append — it removes files "
+            "or carries a deletion vector. Set ignorechanges=true to "
+            "stream its added files' rows (vector-only commits serve "
+            "nothing; downstream must dedupe on the business key), or "
+            "start past this version."
+        )
+    return parts, refusal
 
 
 def _change_partitions(
@@ -368,174 +424,26 @@ def _change_partitions(
     ignore_changes: bool,
     read_change_feed: bool,
     mapping: tuple[tuple[str, str], ...] = (),
-) -> list[_FilePartition]:
-    """Commit versions → file partitions, one per data/change file —
-    the single derivation both the STREAM reader (offset range,
-    exclusive start) and the BATCH change-feed reader (inclusive
-    version range, Delta's ``table_changes`` batch contract) plan
-    from, so the two surfaces can never disagree on which commits
-    yield which rows."""
+) -> list:
+    """Commit versions → packed file partitions, concatenating each
+    commit's :func:`_commit_plan` and raising its refusal — the single
+    derivation both the STREAM reader (offset range, exclusive start)
+    and the BATCH change-feed reader (inclusive version range, Delta's
+    ``table_changes`` batch contract) plan from, so the two surfaces
+    can never disagree on which commits yield which rows."""
     parts: list[_FilePartition] = []
     for v in versions:
-        rec = _read_record(table_dir, v)
-        op = rec.get("op")
-        if any(e.get("pfill") for e in rec.get("add") or ()):
-            raise ValueError(
-                f"txlog stream over {table_dir}: version {v} adopts "
-                "hive-partitioned files whose partition values live "
-                "only in the commit log — the per-file Arrow reader "
-                "has no log-side fill; TxTable.compact() the table "
-                "and start the stream past the convert commit"
-            )
-        # append-EQUIVALENT commits (e.g. the insert-only merge_into
-        # fast path) stream like any append instead of killing the
-        # query; restores never qualify — they carry a dv_full state
-        # replacement that can resurrect/retract rows (_is_add_only)
-        add_only = _is_add_only(rec)
-        if read_change_feed:
-            if (op in ("append", "clone") or add_only) and rec.get("add"):
-                # inserts are synthesized from the add files — no
-                # materialization needed (Delta's rule). A clone's
-                # initial state serves the same way, with its cloned
-                # deletion vectors masked per file (unmasked reads
-                # would resurrect rows the clone never showed).
-                dvf = rec.get("dv_full") or {}
-                for entry in rec["add"]:
-                    parts.append(_FilePartition(
-                        os.path.join(table_dir, entry["path"]),
-                        v, columns, ctype="insert",
-                        dv=tuple(sorted(dvf.get(entry["path"], ()))),
-                        mapping=mapping,
-                        nbytes=entry.get("bytes"),
-                    ))
-            elif rec.get("cdf_files"):
-                cb = rec.get("cdf_bytes") or {}
-                for p in rec["cdf_files"]:
-                    parts.append(_FilePartition(
-                        os.path.join(table_dir, p),
-                        v, columns, ctype=_CTYPE_FROM_FILE,
-                        mapping=mapping,
-                        nbytes=cb.get(p),
-                    ))
-            elif op in ("create", "compact") or not (
-                rec.get("add") or rec.get("remove") or rec.get("dv")
-                or "dv_full" in rec
-            ):
-                # no data change (incl. metadata commits). A dv_full
-                # key IS a data change even with no add/remove — a
-                # dv-only restore resurrects/retracts rows by state
-                # replacement and must not be silently skipped
-                continue
-            else:
-                raise ValueError(
-                    f"txlog change feed over {table_dir}: "
-                    f"version {v} is a {str(op).upper()} with no "
-                    "materialized change files — create the table "
-                    "with cdf=True (or start past this version)"
-                )
-            continue
-        if rec.get("dv") or "dv_full" in rec:
-            # deletion-vector commits change data without touching
-            # files — a non-append change (refuse), and with
-            # ignorechanges there are no new files to serve (skip).
-            # Key-presence for dv_full: an EMPTY map still REPLACES
-            # the current DV state (a restore clearing vectors
-            # resurrects rows), so it must refuse like any rewrite
-            if not ignore_changes:
-                raise ValueError(
-                    f"txlog stream over {table_dir}: version "
-                    f"{v} carries a deletion vector, not an append. "
-                    "Set ignorechanges=true to continue (vector-only "
-                    "commits are skipped; any ADDED files are served "
-                    "and downstream must dedupe on the business key), "
-                    "or start past this version."
-                )
-            if not rec.get("add"):
-                continue
-        if op in ("create", "compact") or not (
-            rec.get("add") or rec.get("remove")
-        ):
-            continue  # no data change to stream (incl. metadata-only
-            # commits like set_constraints)
-        if op != "append" and not add_only and not ignore_changes:
-            # merge / delete / restore / any future rewrite op that
-            # REMOVES files: not an append-only change — refuse,
-            # don't guess (add-only commits passed above)
-            raise ValueError(
-                f"txlog stream over {table_dir}: version {v} is a "
-                f"{str(op).upper()} rewrite, not an append. Set "
-                "ignorechanges=true to stream the rewritten rows "
-                "(downstream must dedupe on the business key), or "
-                "start past this version."
-            )
-        for entry in rec["add"]:
-            parts.append(
-                _FilePartition(
-                    os.path.join(table_dir, entry["path"]),
-                    v,
-                    columns,
-                    # a clone commit served under ignorechanges must
-                    # mask its cloned vectors; plain appends have none
-                    dv=tuple(sorted(
-                        (rec.get("dv_full") or {}).get(entry["path"], ())
-                    )),
-                    mapping=mapping,
-                    nbytes=entry.get("bytes"),
-                )
-            )
+        served, refusal = _commit_plan(
+            table_dir, v, _read_record(table_dir, v), columns,
+            read_change_feed, ignore_changes, mapping,
+        )
+        if refusal:
+            raise ValueError(refusal)
+        parts.extend(served)
     # pack small consecutive files into shared tasks (identical rows
     # AND order — see _FileGroup); whole commits stay whole because
     # packing never reorders, so offset semantics are untouched
     return _pack_partitions(parts)
-
-
-def _served_sizes(
-    table_dir: str,
-    rec: dict,
-    read_change_feed: bool,
-    size_cache: dict | None = None,
-) -> tuple[int, int]:
-    """(files, bytes) the stream will SERVE from this commit — the
-    pacing twin of :func:`_change_partitions`, with the branch order
-    mirrored exactly (append/clone add-files take precedence over
-    cdf_files in change-feed mode, layout commits serve nothing), so
-    ``maxfilespertrigger``/``maxbytespertrigger`` always budget the
-    same file set the batch actually reads.
-
-    Entries committed before the ``bytes``/``cdf_bytes`` fields
-    existed are lazily ``os.path.getsize``-backfilled (one stat per
-    legacy file, memoized in ``size_cache``), so a byte-only cap
-    paces pre-upgrade history instead of admitting the whole backlog
-    as 0 bytes."""
-
-    def fsize(relpath: str, recorded) -> int:
-        if recorded:
-            return int(recorded)
-        if size_cache is not None and relpath in size_cache:
-            return size_cache[relpath]
-        try:
-            n = os.path.getsize(os.path.join(table_dir, relpath))
-        except OSError:
-            n = 0
-        if size_cache is not None:
-            size_cache[relpath] = n
-        return n
-
-    op = rec.get("op")
-    if op in ("create", "compact"):
-        return 0, 0
-    # the SAME _is_add_only predicate the partition planner applies —
-    # an add-only commit serves its add files in BOTH modes, whatever
-    # the op name
-    if read_change_feed and not (
-        (op in ("append", "clone") or _is_add_only(rec))
-        and rec.get("add")
-    ):
-        cdf = rec.get("cdf_files") or []
-        cb = rec.get("cdf_bytes") or {}
-        return len(cdf), sum(fsize(p, cb.get(p)) for p in cdf)
-    add = rec.get("add") or []
-    return len(add), sum(fsize(e["path"], e.get("bytes")) for e in add)
 
 
 class TxLogStreamSource(DataSource):
@@ -659,7 +567,7 @@ class TxLogStreamReader(DataSourceStreamReader):
         # already-committed commits.
         self._floor: int | None = None
         self._known_latest: int | None = None  # incremental-tail cache
-        self._size_cache: dict[str, int] = {}  # legacy-entry stat memo
+        self._size_cache: dict[str, int | None] = {}  # legacy-entry stat memo
         # column mapping frozen at stream start, matching the frozen
         # schema: renamed logicals resolve to the physical parquet
         # names (which never change), pre-rename logicals ARE physical
@@ -703,17 +611,21 @@ class TxLogStreamReader(DataSourceStreamReader):
             self._floor = self.start_version
         end, files, size = self._floor, 0, 0
         for v in range(self._floor + 1, latest + 1):
-            rec = _read_record(self.table_dir, v)
-            # count what THIS stream mode will actually serve — the
-            # shared _served_sizes mirror of _change_partitions'
-            # branch order (layout commits serve nothing; change feed
-            # prefers an append/clone's add files over cdf_files;
-            # legacy entries without recorded sizes are lazily
-            # stat-backfilled so byte-only pacing still bounds
-            # pre-upgrade history)
-            n, nb = _served_sizes(
-                self.table_dir, rec, self.read_change_feed,
-                self._size_cache,
+            # budget the files partitions() will serve — the same
+            # _commit_plan. Its refusal is ignored: a refused commit
+            # is budgeted by what it serves once admitted (pacing must
+            # not under-count), and partitions() raises it. Legacy
+            # entries without recorded sizes are stat-backfilled once
+            # each, so byte-only pacing bounds pre-upgrade history
+            served, _refusal = _commit_plan(
+                self.table_dir, v, _read_record(self.table_dir, v),
+                self.columns, self.read_change_feed,
+                self.ignore_changes, self._mapping,
+            )
+            n = len(served)
+            nb = sum(
+                _file_size(p.path, p.nbytes, self._size_cache) or 0
+                for p in served
             )
             if files > 0 and (
                 (self.max_files and files + n > self.max_files)

@@ -23,6 +23,7 @@ from kafka_flink_harshevents_spark.sources.txlog import (
     _list_versions,
     _read_record,
     _replay_log,
+    _row_change,
 )
 
 
@@ -31,6 +32,18 @@ def _mk(spark, tmp_path, n_buckets=8) -> TxTable:
         spark, str(tmp_path / "table"), key_cols=("k",), order_col="ver",
         n_buckets=n_buckets,
     )
+
+
+def _plan_sizes(table_dir: str, v: int, rec: dict, cdf: bool):
+    """(files, bytes) stream pacing budgets for commit ``v`` — the
+    partitions of its ``_commit_plan``, refusal ignored."""
+    from kafka_flink_harshevents_spark.sources.txstream import (
+        _commit_plan,
+        _file_size,
+    )
+
+    parts, _refusal = _commit_plan(table_dir, v, rec, (), cdf, False)
+    return len(parts), sum(_file_size(p.path, p.nbytes) or 0 for p in parts)
 
 
 def _rows(t: TxTable, version=None):
@@ -1115,7 +1128,6 @@ def test_stream_serves_insert_only_merge_as_append(spark, tmp_path):
     a merge that actually rewrites still refuses."""
     from kafka_flink_harshevents_spark.sources.txstream import (
         TxLogStreamReader,
-        _served_sizes,
         _table_schema,
     )
 
@@ -1139,10 +1151,10 @@ def test_stream_serves_insert_only_merge_as_append(spark, tmp_path):
         for r in b.to_pylist()
     }
     assert rows == {("b", 2, 2, v_ins), ("c", 3, 2, v_ins)}
-    # pacing twin mirrors: add files counted in BOTH modes
-    n, nb = _served_sizes(t.table_dir, rec, False)
+    # pacing reads the same plan: add files counted in BOTH modes
+    n, nb = _plan_sizes(t.table_dir, v_ins, rec, False)
     assert n == len(rec["add"]) and nb > 0
-    assert _served_sizes(t.table_dir, rec, True) == (n, nb)
+    assert _plan_sizes(t.table_dir, v_ins, rec, True) == (n, nb)
     # change-feed mode synthesizes inserts from the add files (no
     # cdf=True needed for an insert-only commit)
     cfs = _table_schema(t.table_dir, cdf=True)
@@ -1178,8 +1190,6 @@ def test_stream_restore_dv_state_replacement_contract(spark, tmp_path):
     append-equivalent and serves its rows."""
     from kafka_flink_harshevents_spark.sources.txstream import (
         TxLogStreamReader,
-        _is_add_only,
-        _served_sizes,
         _table_schema,
     )
 
@@ -1197,14 +1207,14 @@ def test_stream_restore_dv_state_replacement_contract(spark, tmp_path):
     assert rec6["op"] == "restore"
     assert rec6["add"] and not rec6["remove"]
     assert "dv_full" in rec6 and rec6["dv_full"] == {}
-    assert not _is_add_only(rec6)
+    assert _row_change(rec6).kind == "rewrite"
     schema = _table_schema(t.table_dir)
     rd = TxLogStreamReader({"tabledir": t.table_dir}, schema)
     with pytest.raises(ValueError, match="deletion vector"):
         rd.partitions({"version": v6 - 1}, {"version": v6})
-    # pacing twin still budgets the refusing commit by its add files
+    # pacing still budgets the refusing commit by its add files
     # (ignorechanges would serve them; pacing must not under-count)
-    n, _nb = _served_sizes(t.table_dir, rec6, False)
+    n, _nb = _plan_sizes(t.table_dir, v6, rec6, False)
     assert n == len(rec6["add"])
     # ignorechanges: the resurrected file serves
     rd_ok = TxLogStreamReader(
@@ -1248,7 +1258,7 @@ def test_stream_restore_dv_state_replacement_contract(spark, tmp_path):
     rec_w5 = _read_record(t2.table_dir, w5)
     assert rec_w5["add"] and not rec_w5["remove"]
     assert "dv_full" not in rec_w5
-    assert _is_add_only(rec_w5)
+    assert _row_change(rec_w5).kind == "insert"
     rd2 = TxLogStreamReader(
         {"tabledir": t2.table_dir}, _table_schema(t2.table_dir))
     rows2 = [
@@ -2809,9 +2819,9 @@ def test_cdf_parity_across_writes(spark, tmp_path):
     restore across a deletion vector, and fsck — yields the pinned
     change rows through ``table_changes(v)`` and the ``readchangefeed``
     stream, and every commit without change files is add-only or one
-    whose feed needs none (create, compact, fsck)."""
-    from kafka_flink_harshevents_spark.sources.txstream import _is_add_only
-
+    whose feed needs none (create, compact, fsck). After the fsck, the
+    batch ``readchangefeed`` read over the whole history equals the
+    union of ``table_changes(v)`` over every version, row for row."""
     _register_txlog(spark)
     S = _SWEEP_SCHEMA
     frame = spark.createDataFrame
@@ -2854,20 +2864,41 @@ def test_cdf_parity_across_writes(spark, tmp_path):
     )
     q.awaitTermination(300)
     assert sorted(got) == _CDF_PARITY_STREAM
-    # fsck after an out-of-band loss: its feed is empty by contract
+    # fsck after an out-of-band loss: its feed is empty by contract. The
+    # lost file is a compaction output, which no commit's feed reads,
+    # so every version's feed stays readable
     va = t.append(frame([(20, 200, 1)], S))
-    lost = _read_record(t.table_dir, va)["add"][0]["path"]
+    vc = t.compact()
+    assert vc == va + 1
+    lost = _read_record(t.table_dir, vc)["add"][0]["path"]
     os.remove(os.path.join(t.table_dir, lost))
-    t.fsck()
-    for v in _CDF_PARITY_CHANGES:
-        assert sorted(
+    assert t.fsck() == [lost]
+    versions = _list_versions(t.table_dir)
+    changes = {
+        v: sorted(
             tuple(r) for r in t.table_changes(v)
             .select("k", "v", "ver", "_change_type").collect()
-        ) == _CDF_PARITY_CHANGES[v], v
-    for v in _list_versions(t.table_dir):
+        )
+        for v in versions
+    }
+    for v in _CDF_PARITY_CHANGES:
+        assert changes[v] == _CDF_PARITY_CHANGES[v], v
+    assert changes[versions[-1]] == []  # the fsck
+    feed = (
+        spark.read.format("txlog").option("tabledir", t.table_dir)
+        .option("readchangefeed", "true").load()
+    )
+    assert sorted(
+        tuple(r) for r in feed.select(
+            "k", "v", "ver", "_change_type", "_commit_version"
+        ).collect()
+    ) == sorted(row + (v,) for v in versions for row in changes[v])
+    # change files are staged for exactly the commits the rule calls
+    # rewrites
+    for v in versions:
         rec = _read_record(t.table_dir, v)
-        assert rec.get("cdf_files") or _is_add_only(rec) or rec["op"] in (
-            "create", "compact", "fsck",
+        assert bool(rec.get("cdf_files")) == (
+            _row_change(rec).kind == "rewrite"
         ), (v, rec["op"])
 
 
@@ -3577,10 +3608,11 @@ def test_datasource_writer_guards_and_empty_write(spark, tmp_path):
 
 
 def test_clone_serves_through_datasource_feeds(spark, tmp_path):
-    """A clone's initial commit must serve through the DataSource CDF
-    (as masked inserts — parity with library table_changes) and
-    through an ignorechanges stream without resurrecting rows its
-    cloned deletion vectors hide."""
+    """A clone's initial commit is an insert: it must serve through the
+    DataSource CDF (as masked inserts — parity with library
+    table_changes) and through a table stream, with or without
+    ignorechanges, without resurrecting rows its cloned deletion
+    vectors hide."""
     _register_txlog(spark)
     src = TxTable.create(
         spark, str(tmp_path / "src"), key_cols=("k",), order_col="ver",
@@ -3610,22 +3642,23 @@ def test_clone_serves_through_datasource_feeds(spark, tmp_path):
     assert got.count() == 19 and 3 not in {r["k"] for r in got.collect()}
     import uuid as _uuid
 
-    name = f"cl_{_uuid.uuid4().hex[:8]}"
-    q = (
-        spark.readStream.format("txlog")
-        .option("tabledir", clone.table_dir)
-        .option("ignorechanges", "true")
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        srows = spark.table(name).collect()
-    finally:
-        q.stop()
-    assert len(srows) == 19 and 3 not in {r["k"] for r in srows}
+    for opts in ({"ignorechanges": "true"}, {}):
+        name = f"cl_{_uuid.uuid4().hex[:8]}"
+        q = (
+            spark.readStream.format("txlog")
+            .option("tabledir", clone.table_dir)
+            .options(**opts)
+            .load()
+            .writeStream.format("memory")
+            .queryName(name)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            srows = spark.table(name).collect()
+        finally:
+            q.stop()
+        assert len(srows) == 19 and 3 not in {r["k"] for r in srows}, opts
 
 
 def test_clone_inherits_retired_column_names(spark, tmp_path):
@@ -4973,6 +5006,61 @@ def test_one_commit_envelope():
     assert versioned == []
     assert stage_cdf == ["_transact"]
     assert lcb == [("plans", "ingest.py", "corpus_ingest")]
+
+
+def test_one_change_rule():
+    """What a commit did to rows is decided once, by
+    ``txlog._row_change``: the retired twins ``_served_sizes``,
+    ``_is_add_only`` and ``_rewrites_rows`` are defined nowhere in the
+    package, ``sources/txlog.py`` imports nothing from ``txstream``,
+    and no function in ``sources/txstream.py`` reads a record's
+    ``"op"``, ``"dv"`` or ``"dv_full"`` — the planner asks the rule."""
+    import ast
+    from pathlib import Path
+
+    import kafka_flink_harshevents_spark.sources.txlog as txmod
+
+    src = Path(txmod.__file__).parent
+    retired = {"_served_sizes", "_is_add_only", "_rewrites_rows"}
+    defined = [
+        (path.name, n.name)
+        for path in sorted(src.parent.rglob("*.py"))
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and n.name in retired
+    ]
+    assert defined == []
+    txlog_imports = [
+        ast.unparse(n)
+        for n in ast.walk(ast.parse((src / "txlog.py").read_text()))
+        if (isinstance(n, ast.ImportFrom) and "txstream" in (n.module or ""))
+        or (isinstance(n, ast.Import)
+            and any("txstream" in a.name for a in n.names))
+    ]
+    assert txlog_imports == []
+
+    fields = {"op", "dv", "dv_full"}
+
+    def is_field(node):
+        return isinstance(node, ast.Constant) and node.value in fields
+
+    reads = []
+    for fn in ast.walk(ast.parse((src / "txstream.py").read_text())):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for n in ast.walk(fn):
+            if (
+                (isinstance(n, ast.Subscript) and is_field(n.slice))
+                or (isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr in ("get", "pop")
+                    and n.args and is_field(n.args[0]))
+                or (isinstance(n, ast.Compare) and is_field(n.left)
+                    and any(isinstance(o, (ast.In, ast.NotIn))
+                            for o in n.ops))
+            ):
+                reads.append((fn.name, ast.unparse(n)))
+    assert reads == []
 
 
 # (WHERE clause, its read() kwargs, merge-source keys or None,
@@ -6594,16 +6682,13 @@ def test_vacuum_dry_run_lists_without_deleting(spark, tmp_path):
         assert not os.path.exists(os.path.join(t.table_dir, rel)), rel
 
 
-def test_served_sizes_mirrors_change_partition_branch_order(tmp_path):
-    """Pacing must budget the SAME file set `_change_partitions`
-    serves. The sharp edge: in change-feed mode an append/clone with
-    add files is served from the ADD files (inserts) even if the
-    record also carried `cdf_files` — the pacing twin must prefer the
-    same branch, not count the cdf side."""
-    from kafka_flink_harshevents_spark.sources.txstream import (
-        _served_sizes,
-    )
-
+def test_commit_plan_budgets_the_served_file_set(tmp_path):
+    """Pacing budgets the SAME file set ``_change_partitions`` serves —
+    both read one ``_commit_plan``. The sharp edge: in change-feed mode
+    an append with add files is served from the ADD files (inserts)
+    even if the record also carried ``cdf_files`` — the plan must not
+    count the cdf side."""
+    d = str(tmp_path)
     rec = {
         "op": "append",
         "add": [{"path": "a.parquet", "bytes": 10},
@@ -6611,19 +6696,18 @@ def test_served_sizes_mirrors_change_partition_branch_order(tmp_path):
         "cdf_files": ["c1.parquet", "c2.parquet", "c3.parquet"],
         "cdf_bytes": {"c1.parquet": 7, "c2.parquet": 7, "c3.parquet": 7},
     }
-    # change-feed mode: add branch wins (2 files / 30 bytes), exactly
-    # as _change_partitions serves it
-    assert _served_sizes(str(tmp_path), rec, True) == (2, 30)
-    assert _served_sizes(str(tmp_path), rec, False) == (2, 30)
+    # change-feed mode: add files win (2 files / 30 bytes)
+    assert _plan_sizes(d, 2, rec, True) == (2, 30)
+    assert _plan_sizes(d, 2, rec, False) == (2, 30)
     # a rewrite (no add) serves its materialized feed
     rw = {"op": "merge", "add": [], "remove": ["x"],
           "cdf_files": ["c1.parquet"], "cdf_bytes": {"c1.parquet": 7}}
-    assert _served_sizes(str(tmp_path), rw, True) == (1, 7)
+    assert _plan_sizes(d, 3, rw, True) == (1, 7)
     # layout commits serve nothing in either mode
     for op in ("create", "compact"):
         lay = {"op": op, "add": [{"path": "z.parquet", "bytes": 99}]}
-        assert _served_sizes(str(tmp_path), lay, True) == (0, 0)
-        assert _served_sizes(str(tmp_path), lay, False) == (0, 0)
+        assert _plan_sizes(d, 4, lay, True) == (0, 0)
+        assert _plan_sizes(d, 4, lay, False) == (0, 0)
 
 
 # ---------------------------------------------------------------------------
@@ -8945,8 +9029,9 @@ def test_one_fold_per_attempt(spark, tmp_path, monkeypatch):
     read before the retry loop and the one snapshot of its attempt — on
     a warm handle and, for append / merge_upsert / merge_into, on a
     fresh one; on a table with cdf, an identity column, a constraint,
-    4 buckets and a checkpoint, at a version off the checkpoint
-    cadence."""
+    4 buckets and a checkpoint, including the write that lands on the
+    checkpoint cadence (version 30): its checkpoint is folded from the
+    committed record, not replayed."""
     import kafka_flink_harshevents_spark.sources.txlog as txmod
 
     t = TxTable.create(
@@ -8993,11 +9078,18 @@ def test_one_fold_per_attempt(spark, tmp_path, monkeypatch):
         if name in ("append", "merge_upsert", "merge_into")
     ]
     for name, fn in writes + fresh:
-        if (real(t.table_dir).version + 1) % 10 == 0:
-            # keep the measured write off the checkpoint cadence
-            pad.set_properties({"owner": f"o{t.latest_version()}"})
         calls.clear()
         v0 = real(t.table_dir).version
         fn(t)
         assert real(t.table_dir).version == v0 + 1, name
         assert len(calls) <= 2, (name, len(calls))
+    # the checkpoint folded from the version-30 record is the state a
+    # replay of the log reaches at version 30
+    assert real(t.table_dir).version > 30
+    chk_path = os.path.join(t.table_dir, "_txlog", f"chk-{30:020d}.json")
+    with open(chk_path) as f:
+        folded = json.load(f)
+    os.remove(chk_path)
+    t._write_checkpoint(real(t.table_dir, 30))
+    with open(chk_path) as f:
+        assert json.load(f) == folded
